@@ -2,12 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.plans._
+import graft.plans.{GraftFunctions, NanosPredicatePushdown}
 
-/** Standard Spark library entry point: wire every graft native expression,
-  * aggregate, and optimizer rule into a session at build time via
+/** Standard Spark library entry point: wire every graft native function
+  * and optimizer rule into a session at build time via
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions
   *
@@ -15,91 +14,20 @@ import graft.plans._
   * the deployment path for clusters where user code never touches the
   * builder — e.g. a shared Thrift/Connect server — and makes every kernel
   * callable from PLAIN SQL (`SELECT graft_simhash_long(text) FROM docs`),
-  * not just the Column API. The Column-API helpers (GraftFunctions.dotLong
-  * etc.) self-register lazily into the active session and remain the
-  * zero-config path for notebook/library use; both routes register the same
-  * (name -> builder) pairs idempotently.
+  * not just the Column API.
+  *
+  * The functions come from ONE table, [[GraftFunctions.all]]: a row per
+  * `graft_*` name with its arguments and guarded builder. This class
+  * injects every row; the Column-API helpers (`GraftFunctions.dotLong`,
+  * `WordWindowsLong.wordWindows`, ...) register the same rows lazily into
+  * the active session, so the two routes cannot drift. A new kernel is a
+  * compute function named after its SQL function plus one table row, and
+  * is reachable from both routes with no change here.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def fn(name: String, clazz: Class[_],
-                 builder: Seq[Expression] => Expression)
-      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), builder)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => NanosPredicatePushdown)
-
-    // Every builder is the companion's guarded fromChildren — the SAME
-    // function register() uses, so SQL callers through either route get
-    // named arity/NULL errors, never IndexOutOfBounds/NPE.
-    ext.injectFunction(fn(GraftFunctions.DotLongName, classOf[DotProductLong],
-      GraftFunctions.dotFromChildren))
-    ext.injectFunction(fn(GraftFunctions.MisraGriesName, classOf[MisraGriesSketch],
-      MisraGriesSketch.fromChildren))
-    ext.injectFunction(fn(KmvSketch.Name, classOf[KmvSketch],
-      KmvSketch.fromChildren))
-    ext.injectFunction(fn(CountMinSketch.Name, classOf[CountMinSketch],
-      CountMinSketch.fromChildren))
-    ext.injectFunction(fn(GraftFunctions.LshBucketsName, classOf[LshBucketsLong],
-      GraftFunctions.lshFromChildren))
-    ext.injectFunction(fn(GraftFunctions.PqAdcName, classOf[PqAdcLong],
-      GraftFunctions.pqAdcFromChildren))
-    ext.injectFunction(fn(GraftFunctions.PqAdcDirectName, classOf[PqAdcDirectLong],
-      GraftFunctions.pqAdcDirectFromChildren))
-    ext.injectFunction(fn(GraftFunctions.PqEncodeName, classOf[PqEncodeLong],
-      GraftFunctions.pqEncodeFromChildren))
-    ext.injectFunction(fn(LnFpFunctions.LnMicroName, classOf[LnMicroLong],
-      LnFpFunctions.lnMicroFromChildren))
-    ext.injectFunction(fn(LnFpFunctions.GumbelMicroName, classOf[GumbelMicroLong],
-      LnFpFunctions.gumbelFromChildren))
-    ext.injectFunction(fn(Md5PrefixLong.Name, classOf[Md5PrefixLong],
-      Md5PrefixLong.fromChildren))
-    ext.injectFunction(fn(SimhashLong.Name, classOf[SimhashLong],
-      SimhashLong.fromChildren))
-    ext.injectFunction(fn(MinhashSigLong.Name, classOf[MinhashSigLong],
-      MinhashSigLong.fromChildren))
-    ext.injectFunction(fn(VectorSumLong.Name, classOf[VectorSumLong],
-      VectorSumLong.fromChildren))
-    ext.injectFunction(fn(WinnowLong.Name, classOf[WinnowLong],
-      WinnowLong.fromChildren))
-    ext.injectFunction(fn(AhoCorasickCount.Name, classOf[AhoCorasickCount],
-      AhoCorasickCount.fromChildren))
-    ext.injectFunction(fn(SubwordCount.Name, classOf[SubwordCount],
-      SubwordCount.fromChildren))
-    ext.injectFunction(fn(CdcBoundariesLong.Name, classOf[CdcBoundariesLong],
-      CdcBoundariesLong.fromChildren))
-    ext.injectFunction(fn(LcsTokensLong.Name, classOf[LcsTokensLong],
-      LcsTokensLong.fromChildren))
-    ext.injectFunction(fn(BpeSegment.Name, classOf[BpeSegment],
-      BpeSegment.fromChildren))
-    ext.injectFunction(fn(UnigramSegment.Name, classOf[UnigramSegment],
-      UnigramSegment.fromChildren))
-    ext.injectFunction(fn(HtmlStrip.Name, classOf[HtmlStrip],
-      HtmlStrip.fromChildren))
-    ext.injectFunction(fn(WordSetCountLong.Name, classOf[WordSetCountLong],
-      (children: Seq[Expression]) => WordSetCountLong.fromChildren(children)))
-    ext.injectFunction(fn(ChrfStatsLong.Name, classOf[ChrfStatsLong],
-      ChrfStatsLong.fromChildren))
-    ext.injectFunction(fn(ShingleHashesLong.Name, classOf[ShingleHashesLong],
-      ShingleHashesLong.fromChildren))
-    ext.injectFunction(fn(ShingleHashesLong.AllName, classOf[ShingleHashesLong],
-      ShingleHashesLong.fromChildrenAll))
-    ext.injectFunction(fn(WordGramStatsLong.Name, classOf[WordGramStatsLong],
-      WordGramStatsLong.fromChildren))
-    ext.injectFunction(fn(NgramRowsLong.Name, classOf[NgramRowsLong],
-      NgramRowsLong.fromChildren))
-    ext.injectFunction(fn(RankCellsLong.Name, classOf[RankCellsLong],
-      RankCellsLong.fromChildren))
-    ext.injectFunction(fn(PqLutLong.Name, classOf[PqLutLong],
-      PqLutLong.fromChildren))
-    ext.injectFunction(fn(QuantizeLong.Name, classOf[QuantizeLong],
-      QuantizeLong.fromChildren))
-    ext.injectFunction(fn(LangIdLong.Name, classOf[LangIdLong],
-      LangIdLong.fromChildren))
-    ext.injectFunction(fn(Sq8CodesLong.Name, classOf[Sq8CodesLong],
-      Sq8CodesLong.fromChildren))
-    ext.injectFunction(fn(WordWindowsLong.Name, classOf[WordWindowsLong],
-      WordWindowsLong.fromChildren))
+    GraftFunctions.all.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.builder)))
   }
 }

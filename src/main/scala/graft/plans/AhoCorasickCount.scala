@@ -2,13 +2,12 @@ package graft.plans
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, typedlit}
+import org.apache.spark.sql.functions.typedlit
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -124,25 +123,11 @@ object AhoCorasickCount {
   val Name = "graft_aho_corasick"
 
   def fromChildren(children: Seq[Expression]): AhoCorasickCount = {
-    Builders.arity(Name, "(text, patterns array)", 2, children)
     val pats = Builders.litStrings(Name, "patterns argument", children(1))
     AhoCorasickCount(children.head, pats)
   }
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[AhoCorasickCount].getName, Name),
-        (children: Seq[Expression]) => fromChildren(children))
-    }
-  }
-
   /** Column API. `patterns` is embedded in the plan (a per-query constant). */
-  def multiMatchCounts(text: Column, patterns: Seq[String]): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, text, typedlit(patterns))
-  }
+  def multiMatchCounts(text: Column, patterns: Seq[String]): Column =
+    GraftFunctions.call(Name, text, typedlit(patterns))
 }

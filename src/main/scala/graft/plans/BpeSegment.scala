@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, typedlit}
+import org.apache.spark.sql.functions.typedlit
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -148,7 +147,6 @@ object BpeSegment {
   // SQL callers reach this builder directly — fail with the function's
   // name, not IndexOutOfBounds/NPE (ADVICE r14)
   val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(word, merges array)", 2, children)
     val flat = Builders.litStrings(Name, "merges argument", children(1))
     require(flat.length % 2 == 0,
       s"$Name merges must be (lft, rgt) pairs flattened; got ${flat.length} strings")
@@ -156,23 +154,10 @@ object BpeSegment {
     BpeSegment(children(0), pairs)
   }
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[BpeSegment].getName, Name),
-        fromChildren)
-    }
-  }
-
   /** Column API. `merges` ride the plan flattened [l1, r1, l2, r2, ...]
     * in RANK ORDER (a per-query constant, the SubwordCount posture).
     */
-  def bpeSegment(word: Column, merges: Seq[(String, String)]): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, word,
+  def bpeSegment(word: Column, merges: Seq[(String, String)]): Column =
+    GraftFunctions.call(Name, word,
       typedlit(merges.flatMap(t => Seq(t._1, t._2))))
-  }
 }

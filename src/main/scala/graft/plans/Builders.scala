@@ -34,11 +34,29 @@ object Builders {
     v
   }
 
+  /** Literal int argument in [lo, hi] (a plan-time constant of a kernel). */
+  def litInt(name: String, what: String, e: Expression, lo: Int,
+             hi: Int = Int.MaxValue): Int =
+    litValue(name, what, e) match {
+      case n: Int if n >= lo && n <= hi => n
+      case other =>
+        val range = if (hi == Int.MaxValue) s">= $lo" else s"in [$lo, $hi]"
+        throw new IllegalArgumentException(
+          s"$name $what must be a literal int $range, got $other")
+    }
+
   /** Literal array<string> argument, decoded to Scala strings. */
   def litStrings(name: String, what: String, e: Expression): Seq[String] =
-    litValue(name, what, e).asInstanceOf[ArrayData]
-      .toObjectArray(StringType)
-      .map(_.asInstanceOf[UTF8String].toString).toSeq
+    strings(name, what, litValue(name, what, e))
+
+  /** A non-NULL array<string> value as Scala strings; a NULL element is a
+    * named error, not an NPE.
+    */
+  private def strings(name: String, what: String, arr: Any): Seq[String] =
+    arr.asInstanceOf[ArrayData].toObjectArray(StringType).map { w =>
+      require(w != null, s"$name $what must not contain NULL elements")
+      w.asInstanceOf[UTF8String].toString
+    }.toSeq
 
   /** Literal array<array<string>> argument, decoded to nested Scala
     * strings (the multi-word-set shape of graft_lang_id).
@@ -49,7 +67,6 @@ object Builders {
       .toObjectArray(org.apache.spark.sql.types.ArrayType(StringType))
       .map { inner =>
         require(inner != null, s"$name $what must not contain NULL sets")
-        inner.asInstanceOf[ArrayData].toObjectArray(StringType)
-          .map(_.asInstanceOf[UTF8String].toString).toSeq
+        strings(name, what, inner)
       }.toSeq
 }

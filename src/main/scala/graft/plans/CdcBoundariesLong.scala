@@ -1,14 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Content-defined chunk boundaries of one document as a NATIVE expression:
@@ -25,59 +20,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * substring of the original document between those token boundaries
   * (split-on-single-space round-trips, empty tokens included), so each
   * digest runs over (bytes, offset, length) with no per-gram copy and the
-  * hash equals `Md5PrefixLong(gram, 6)` — the SAME value the SQL oracle's
-  * `md5(w[i] || ' ' || ...)` mirror computes.
+  * hash equals `graft_md5_prefix_long(gram, 6)` — the SAME value the SQL
+  * oracle's `md5(w[i] || ' ' || ...)` mirror computes.
   *
   * Documents with fewer than n tokens return an empty array (one whole-doc
   * chunk downstream).
   */
-case class CdcBoundariesLong(child: Expression, n: Int, divisor: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (n < 2 || divisor < 2)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs n >= 2 and divisor >= 2, got (n=$n, divisor=$divisor)")
-    else child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs string input, got ${other.simpleString}")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = CdcBoundariesLong.Name
-
-  override def nullSafeEval(input: Any): Any =
-    CdcBoundariesLong.compute(input.asInstanceOf[UTF8String], n, divisor)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = CdcBoundariesLong.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, c => s"$cls.compute($c, $n, $divisor)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object CdcBoundariesLong {
   val Name = "graft_cdc_boundaries"
-
-  val fromChildren: Seq[Expression] => Expression = children =>
-    (Builders.arity(Name, "(text, n, divisor)", 3, children)(1),
-      children(2)) match {
-      case (Literal(n: Int, IntegerType), Literal(d: Int, IntegerType)) =>
-        CdcBoundariesLong(children(0), n, d)
-      case other => throw new IllegalArgumentException(
-        s"$Name (n, divisor) arguments must be literal ints, got $other")
-    }
 
   private val digests = ThreadLocal.withInitial[java.security.MessageDigest](
     () => java.security.MessageDigest.getInstance("MD5"))
 
   private val Empty = UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
 
-  /** One pass over one document; public because codegen calls it
-    * statically. Token j spans bytes [starts(j), starts(j+1) - 2]; gram g
+  /** One pass over one document, behind graft_cdc_boundaries (n >= 2 and
+    * divisor >= 2 are checked literals).
+    * Token j spans bytes [starts(j), starts(j+1) - 2]; gram g
     * (tokens g..g+n-1, 0-based) spans [starts(g), starts(g+n) - 2] — the
     * single interior spaces are part of the gram text, matching the
     * `w[i] || ' ' || w[i+1] || ...` concatenation byte for byte.
@@ -117,20 +76,7 @@ object CdcBoundariesLong {
     else UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(buf, cnt))
   }
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[CdcBoundariesLong].getName, Name),
-        fromChildren)
-    }
-  }
-
   /** 1-based CDC boundary gram positions of `text` as array<bigint>. */
-  def cdcBoundaries(text: Column, n: Int, divisor: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, text, lit(n), lit(divisor))
-  }
+  def cdcBoundaries(text: Column, n: Int, divisor: Int): Column =
+    GraftFunctions.call(Name, text, lit(n), lit(divisor))
 }

@@ -1,14 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, Literal, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The complete per-pair chrF sufficient statistic (Popović 2015) in ONE
@@ -41,41 +38,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * every path. Stripping removes exactly space/tab/LF/CR (the enumerated
   * class the relational form used — NOT `\s`).
   */
-case class ChrfStatsLong(first: Expression, second: Expression,
-                         third: Expression)
-    extends TernaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType, third) match {
-      case (StringType, StringType, IntegerType, Literal(n: Int, _))
-          if n >= 1 && n <= 8 =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, string, literal int in [1, 8]), got " +
-          s"(${first.dataType.simpleString}, ${second.dataType.simpleString}, " +
-          s"${third.dataType.simpleString})")
-    }
-
-  override def dataType: DataType = ChrfStatsLong.OutType
-  override def nullable: Boolean = true
-  override def prettyName: String = ChrfStatsLong.Name
-
-  override def nullSafeEval(cand: Any, ref: Any, n: Any): Any =
-    ChrfStatsLong.compute(cand.asInstanceOf[UTF8String],
-      ref.asInstanceOf[UTF8String], n.asInstanceOf[Int])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = ChrfStatsLong.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, (c, r, n) =>
-      s"(org.apache.spark.sql.catalyst.util.ArrayData) $cls.compute($c, $r, $n)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object ChrfStatsLong {
   val Name = "graft_chrf_stats"
 
@@ -101,7 +63,8 @@ object ChrfStatsLong {
     java.util.Arrays.copyOf(out, n)
   }
 
-  /** The per-pair kernel; public because generated code calls it. */
+  /** The per-pair kernel behind graft_chrf_stats
+    * (max_order is a checked literal in [1, 8]). */
   def compute(cand: UTF8String, ref: UTF8String, maxOrder: Int)
       : GenericArrayData = {
     val c = stripCps(cand.toString)
@@ -136,26 +99,7 @@ object ChrfStatsLong {
     new GenericArrayData(rows)
   }
 
-  val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(candidate_text, reference_text, max_order)", 3,
-      children)
-    ChrfStatsLong(children(0), children(1), children(2))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[ChrfStatsLong].getName, Name),
-        fromChildren)
-    }
-  }
-
   /** Per-pair chrF statistic rows for `inline()`. */
-  def chrfStats(cand: Column, ref: Column, maxOrder: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, cand, ref, lit(maxOrder))
-  }
+  def chrfStats(cand: Column, ref: Column, maxOrder: Int): Column =
+    GraftFunctions.call(Name, cand, ref, lit(maxOrder))
 }

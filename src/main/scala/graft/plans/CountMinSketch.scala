@@ -124,7 +124,6 @@ object CountMinSketch {
 
   /** Builder for FunctionRegistry: (column, w literal, d literal). */
   def fromChildren(children: Seq[Expression]): CountMinSketch = {
-    require(children.length == 3, s"$Name expects (column, w, d)")
     (children(1), children(2)) match {
       case (Literal(w: Int, IntegerType), Literal(d: Int, IntegerType)) =>
         CountMinSketch(children.head, w, d)

@@ -1,12 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Exact integer dot product of two `array<long>` columns as a native
@@ -75,121 +72,4 @@ case class DotProductLong(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Runtime registration of graft's native expressions (no spark-submit
-  * `--conf spark.sql.extensions` needed; idempotent per session).
-  */
-object GraftFunctions {
-  val DotLongName = "graft_dot_long"
-  val MisraGriesName = "graft_misra_gries"
-  val LshBucketsName = "graft_lsh_buckets"
-  val PqAdcName = "graft_pq_adc"
-  val PqAdcDirectName = "graft_pq_adc_direct"
-  val PqEncodeName = "graft_pq_encode"
-
-  // Single guarded builder per function — register() below AND
-  // GraftExtensions share these, so the SQL path can never bypass the
-  // arity/null guards.
-  val dotFromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(DotLongName, "(vec_a, vec_b)", 2, children)
-    DotProductLong(children(0), children(1))
-  }
-  val pqAdcFromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(PqAdcName, "(codes, lut)", 2, children)
-    PqAdcLong(children(0), children(1))
-  }
-  val pqAdcDirectFromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(PqAdcDirectName, "(codes, centroids, query)", 3, children)
-    PqAdcDirectLong(children(0), children(1), children(2))
-  }
-  val pqEncodeFromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(PqEncodeName, "(vec, centroids)", 2, children)
-    PqEncodeLong(children(0), children(1))
-  }
-  val lshFromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(LshBucketsName, "(vec, planes, nBands)", 3, children)
-    LshBucketsLong(children(0), children(1), children(2))
-  }
-
-  private def reg(spark: SparkSession, name: String, clazz: Class[_],
-                  builder: Seq[Expression] => Expression): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(id,
-        new ExpressionInfo(clazz.getName, name), builder)
-    }
-  }
-
-  def register(spark: SparkSession): Unit = {
-    reg(spark, DotLongName, classOf[DotProductLong], dotFromChildren)
-    reg(spark, PqAdcName, classOf[PqAdcLong], pqAdcFromChildren)
-    reg(spark, PqAdcDirectName, classOf[PqAdcDirectLong], pqAdcDirectFromChildren)
-    reg(spark, PqEncodeName, classOf[PqEncodeLong], pqEncodeFromChildren)
-    reg(spark, LshBucketsName, classOf[LshBucketsLong], lshFromChildren)
-    reg(spark, MisraGriesName, classOf[MisraGriesSketch],
-      MisraGriesSketch.fromChildren)
-    reg(spark, KmvSketch.Name, classOf[KmvSketch], KmvSketch.fromChildren)
-    reg(spark, CountMinSketch.Name, classOf[CountMinSketch],
-      CountMinSketch.fromChildren)
-  }
-
-  /** Column-level API; registers into the active session on first use. */
-  def dotLong(a: Column, b: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(DotLongName, a, b)
-  }
-
-  /** Misra-Gries sketch aggregate: map<string,bigint> of ~k candidates. */
-  def misraGries(c: Column, k: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(MisraGriesName, c, lit(k))
-  }
-
-  /** KMV bottom-k sketch aggregate over an already-hashed long column:
-    * ascending array of the k smallest distinct hashes.
-    */
-  def kmvSketch(hashed: Column, k: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(KmvSketch.Name, hashed, lit(k))
-  }
-
-  /** Count-min sketch aggregate: the full d x w counter matrix as
-    * array<array<bigint>> — order-insensitive sums, so bit-deterministic.
-    */
-  def countMin(c: Column, w: Int, d: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(CountMinSketch.Name, c, lit(w), lit(d))
-  }
-
-  /** Per-table LSH sign-bucket ids (array<long>, one per table); `planes` is
-    * the flat nTables x nPlanes x dim plane concatenation (a literal).
-    */
-  def lshBuckets(vec: Column, planes: Column, nPlanes: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(LshBucketsName, vec, planes, lit(nPlanes))
-  }
-
-  /** PQ asymmetric distance: sum_m lut[m][codes[m]] (native codegen). */
-  def pqAdc(codes: Column, lut: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(PqAdcName, codes, lut)
-  }
-
-  /** PQ encode: codes[mm] = argmin_k d2(vec_sub_mm, cb[mm][k]), ties ->
-    * lowest code (native codegen).
-    */
-  def pqEncode(vec: Column, cb: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(PqEncodeName, vec, cb)
-  }
-
-  /** PQ asymmetric distance direct from (query vector, codes, codebook):
-    * sum_mm sum_j (qv[mm*sub+j] - cb[mm][codes[mm]][j])^2 (native codegen).
-    */
-  def pqAdcDirect(qv: Column, codes: Column, cb: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(PqAdcDirectName, qv, codes, cb)
-  }
 }

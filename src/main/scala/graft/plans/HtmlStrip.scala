@@ -1,12 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** HTML tag strip + entity decode in ONE per-row kernel — the text a
@@ -44,32 +38,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Codegen'd via a static kernel call (the SimhashLong pattern), so the
   * scan stays inside whole-stage codegen.
   */
-case class HtmlStrip(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs a string input, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_html_strip"
-
-  override def nullSafeEval(input: Any): Any =
-    HtmlStrip.strip(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = HtmlStrip.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, c => s"$cls.strip($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object HtmlStrip {
 
-  /** The per-row kernel; public so generated code can call it. */
+  /** The per-row kernel behind graft_html_strip. */
   def strip(html: UTF8String): UTF8String = {
     val s = html.toString
     val sb = new java.lang.StringBuilder(s.length)
@@ -145,24 +116,6 @@ object HtmlStrip {
 
   val Name = "graft_html_strip"
 
-  val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(html string)", 1, children)
-    HtmlStrip(children.head)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[HtmlStrip].getName, Name),
-        fromChildren)
-    }
-  }
-
-  def htmlStrip(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, c)
-  }
+  def htmlStrip(c: Column): Column =
+    GraftFunctions.call(Name, c)
 }

@@ -113,7 +113,6 @@ object KmvSketch {
 
   /** Builder for FunctionRegistry: (hashed long column, k literal). */
   def fromChildren(children: Seq[Expression]): KmvSketch = {
-    require(children.length == 2, "graft_kmv expects (column, k)")
     val k = children(1) match {
       case Literal(v: Int, IntegerType) => v
       case other => throw new IllegalArgumentException(

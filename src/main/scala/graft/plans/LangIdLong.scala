@@ -1,11 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.functions.{call_function, typedlit}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.functions.typedlit
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -46,6 +45,9 @@ case class LangIdLong(child: Expression, labels: Seq[String],
   require(labels.nonEmpty && labels.length == sets.length,
     s"${LangIdLong.Name} needs one word set per label " +
       s"(got ${labels.length} labels, ${sets.length} sets)")
+  require(sets.length <= 64,
+    s"${LangIdLong.Name} takes at most 64 word sets (one bitmask bit each); " +
+      s"got ${sets.length}")
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -86,7 +88,6 @@ object LangIdLong {
     */
   final class MultiMatcher(labels: Seq[String], sets: Seq[Seq[String]])
       extends Serializable {
-    require(sets.length <= 64, "at most 64 word sets (bitmask)")
     private val out: Array[UTF8String] =
       labels.map(UTF8String.fromString).toArray
     private val nSets = sets.length
@@ -154,29 +155,15 @@ object LangIdLong {
   val Name = "graft_lang_id"
 
   def fromChildren(children: Seq[Expression]): LangIdLong = {
-    Builders.arity(Name, "(text, labels array, sets array<array>)", 3, children)
     val labels = Builders.litStrings(Name, "labels argument", children(1))
     val sets = Builders.litStringLists(Name, "sets argument", children(2))
     LangIdLong(children.head, labels, sets)
   }
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[LangIdLong].getName, Name),
-        (children: Seq[Expression]) => fromChildren(children))
-    }
-  }
-
   /** Column API. `labeled` is (label, words) in priority order — baked
     * into the plan as constants (per-query language inventory).
     */
-  def langId(text: Column, labeled: Seq[(String, Seq[String])]): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, text, typedlit(labeled.map(_._1)),
+  def langId(text: Column, labeled: Seq[(String, Seq[String])]): Column =
+    GraftFunctions.call(Name, text, typedlit(labeled.map(_._1)),
       typedlit(labeled.map(_._2)))
-  }
 }

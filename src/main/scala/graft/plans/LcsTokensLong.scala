@@ -1,12 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Token-level LONGEST COMMON SUBSEQUENCE length of two texts as a NATIVE
@@ -28,43 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * counts, like any exact edit kernel — the d13 discipline), embarrassingly
   * parallel across pairs; nothing about the corpus enters.
   */
-case class LcsTokensLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs two string inputs, got $other")
-    }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = LcsTokensLong.Name
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    LcsTokensLong.compute(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = LcsTokensLong.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, (a, b) => s"$cls.compute($a, $b)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object LcsTokensLong {
   val Name = "graft_lcs_tokens"
 
-  val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(candidate_text, reference_text)", 2, children)
-    LcsTokensLong(children(0), children(1))
-  }
-
-  /** LCS length over space-split tokens; public because codegen calls it
-    * statically.
-    */
+  /** LCS length over space-split tokens. */
   def compute(a: UTF8String, b: UTF8String): Long = {
     val aw = a.toString.split(" ", -1)
     val bw = b.toString.split(" ", -1)
@@ -105,20 +66,7 @@ object LcsTokensLong {
     prev(bi.length).toLong
   }
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[LcsTokensLong].getName, Name),
-        fromChildren)
-    }
-  }
-
   /** Token-level LCS length of two text columns as bigint. */
-  def lcsTokens(cand: Column, ref: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, cand, ref)
-  }
+  def lcsTokens(cand: Column, ref: Column): Column =
+    GraftFunctions.call(Name, cand, ref)
 }

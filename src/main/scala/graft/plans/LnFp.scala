@@ -2,13 +2,7 @@ package graft.plans
 
 import java.math.BigInteger
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.Column
 
 /** Deterministic INTEGER fixed-point natural log — ln with zero libm
   * dependence, so Spark and any SQL oracle engine agree BIT-FOR-BIT on every
@@ -121,87 +115,15 @@ object LnFp {
   }
 }
 
-/** Native expression: deterministic integer fixed-point micro-nats of
-  * ln(p/q) (see [[LnFp]]). Codegen emits a static call — the work is the
-  * integer recurrence, not expression-tree overhead.
-  */
-case class LnMicroLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (bigint, bigint), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_ln_micro"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    LnFp.lnMicro(a.asInstanceOf[Long], b.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.LnFp.lnMicro($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Native expression: deterministic integer micro-nat Gumbel noise
-  * -ln(-ln((2h+1)/2^33)) for a 32-bit hash (see [[LnFp.gumbelMicro]]).
-  */
-case class GumbelMicroLong(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires bigint, got ${child.dataType.simpleString}")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_gumbel_micro"
-  override def nullSafeEval(h: Any): Any =
-    LnFp.gumbelMicro(h.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, h => s"graft.plans.LnFp.gumbelMicro($h)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+/** Column API of the two LnFp kernels (rows of [[GraftFunctions.all]]). */
 object LnFpFunctions {
   val LnMicroName = "graft_ln_micro"
   val GumbelMicroName = "graft_gumbel_micro"
 
-  val lnMicroFromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(LnMicroName, "(p, q)", 2, children)
-    LnMicroLong(children(0), children(1))
-  }
-  val gumbelFromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(GumbelMicroName, "(hash64)", 1, children)
-    GumbelMicroLong(children(0))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val lnId = FunctionIdentifier(LnMicroName)
-    if (!registry.functionExists(lnId)) {
-      registry.registerFunction(
-        lnId,
-        new ExpressionInfo(classOf[LnMicroLong].getName, LnMicroName),
-        lnMicroFromChildren)
-    }
-    val guId = FunctionIdentifier(GumbelMicroName)
-    if (!registry.functionExists(guId)) {
-      registry.registerFunction(
-        guId,
-        new ExpressionInfo(classOf[GumbelMicroLong].getName, GumbelMicroName),
-        gumbelFromChildren)
-    }
-  }
-
   /** Column API: integer fixed-point micro-nats of ln(p/q). */
-  def lnMicro(p: Column, q: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(LnMicroName, p, q)
-  }
+  def lnMicro(p: Column, q: Column): Column =
+    GraftFunctions.call(LnMicroName, p, q)
 
   /** Column API: integer micro-nat Gumbel noise for a 32-bit hash. */
-  def gumbelMicro(h: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(GumbelMicroName, h)
-  }
+  def gumbelMicro(h: Column): Column = GraftFunctions.call(GumbelMicroName, h)
 }

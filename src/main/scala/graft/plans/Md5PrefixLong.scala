@@ -1,13 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
-import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.lit
 
 /** First `nBytes` of md5(input) as an unsigned big-endian long — the
   * engine-portable string hash used by minhash/simhash (equals
@@ -18,39 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * digest, substrings it, and string-parses the result PER ROW — on the
   * shingle-explode path that's hundreds of millions of avoidable string ops
   * at sf0.1 and beyond. Here: one digest, one big-endian fold, no strings.
+  * A string or binary input works; `n_bytes` is a literal in [1, 7] so the
+  * value stays positive in a long.
   */
-case class Md5PrefixLong(child: Expression, nBytes: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (nBytes < 1 || nBytes > 7)
-      TypeCheckResult.TypeCheckFailure("nBytes must be in [1,7] to stay positive in a long")
-    else child.dataType match {
-      case StringType | BinaryType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs string/binary input, got ${other.simpleString}")
-    }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_md5_prefix_long"
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input match {
-      case s: UTF8String => s.getBytes
-      case b: Array[Byte] => b
-    }
-    Md5PrefixLong.prefix(bytes, nBytes)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Md5PrefixLong.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val conv = if (child.dataType == StringType) ".getBytes()" else ""
-    defineCodeGen(ctx, ev, c => s"$cls.prefix($c$conv, $nBytes)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object Md5PrefixLong {
   private val digests = ThreadLocal.withInitial[java.security.MessageDigest](
     () => java.security.MessageDigest.getInstance("MD5"))
@@ -74,26 +38,6 @@ object Md5PrefixLong {
 
   val Name = "graft_md5_prefix_long"
 
-  val fromChildren: Seq[Expression] => Expression = children =>
-    Builders.arity(Name, "(text, n_bytes)", 2, children)(1) match {
-      case Literal(n: Int, IntegerType) => Md5PrefixLong(children(0), n)
-      case other => throw new IllegalArgumentException(
-        s"$Name second argument must be a literal int, got $other")
-    }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[Md5PrefixLong].getName, Name),
-        fromChildren)
-    }
-  }
-
-  def md5PrefixLong(c: Column, nBytes: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, c, lit(nBytes))
-  }
+  def md5PrefixLong(c: Column, nBytes: Int): Column =
+    GraftFunctions.call(Name, c, lit(nBytes))
 }

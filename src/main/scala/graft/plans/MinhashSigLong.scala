@@ -1,13 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The full 32-wide minhash signature of a document in ONE per-row pass:
@@ -28,45 +23,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * corpus dedup, incremental dedup, edit-distance verify). Minima are
   * multiset-invariant, so shingle multiplicity needs no dedup.
   */
-case class MinhashSigLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType, right) match {
-      case (StringType, IntegerType, Literal(n: Int, _)) if n >= 1 =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, literal int >= 1), got " +
-          s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_minhash_sig"
-
-  override def nullSafeEval(text: Any, n: Any): Any =
-    MinhashSigLong.signature(text.asInstanceOf[UTF8String], n.asInstanceOf[Int])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = MinhashSigLong.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    nullSafeCodeGen(ctx, ev, (t, n) => {
-      s"""
-         |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $cls.signature($t, $n);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object MinhashSigLong {
   import graft.operators.Dedup.{MinhashPrime, NumHashes, hashA, hashB}
 
-  /** The per-document kernel; public so generated code can call it.
-    * Returns null when the document has fewer than n words.
+  /** The per-document kernel behind graft_minhash_sig (shingle_n is a
+    * checked literal >= 1). Returns null when the document has fewer than n
+    * words.
     */
   def signature(text: UTF8String, n: Int): GenericArrayData = {
     val words = text.toString.split(" ", -1)
@@ -96,24 +58,6 @@ object MinhashSigLong {
 
   val Name = "graft_minhash_sig"
 
-  val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(text, shingle_n)", 2, children)
-    MinhashSigLong(children(0), children(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[MinhashSigLong].getName, Name),
-        fromChildren)
-    }
-  }
-
-  def minhashSig(c: Column, n: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, c, lit(n))
-  }
+  def minhashSig(c: Column, n: Int): Column =
+    GraftFunctions.call(Name, c, lit(n))
 }

@@ -130,8 +130,6 @@ case class MisraGriesSketch(
 object MisraGriesSketch {
   /** Builder for FunctionRegistry: (column, k literal). */
   def fromChildren(children: Seq[Expression]): MisraGriesSketch = {
-    require(children.length == 2,
-      "graft_misra_gries expects (column, k)")
     val k = children(1) match {
       case Literal(v: Int, IntegerType) => v
       case other => throw new IllegalArgumentException(

@@ -1,14 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, GenericInternalRow, Literal}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Every word n-gram of orders 1..maxOrder as (ord, gram, prev) structs in
@@ -28,36 +25,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * across the whole lm family (lm1/lm3–lm9, lm5's ingest). Here the pass
   * stays inside whole-stage codegen and allocates only the output structs.
   */
-case class NgramRowsLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType, right) match {
-      case (StringType, IntegerType, Literal(n: Int, _)) if n >= 1 && n <= 8 =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, literal int in [1, 8]), got " +
-          s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-    }
-
-  override def dataType: DataType = NgramRowsLong.OutType
-  override def nullable: Boolean = true
-  override def prettyName: String = NgramRowsLong.Name
-
-  override def nullSafeEval(text: Any, n: Any): Any =
-    NgramRowsLong.compute(text.asInstanceOf[UTF8String], n.asInstanceOf[Int])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = NgramRowsLong.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, (t, n) =>
-      s"(org.apache.spark.sql.catalyst.util.ArrayData) $cls.compute($t, $n)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object NgramRowsLong {
   val Name = "graft_ngram_rows"
 
@@ -67,7 +34,8 @@ object NgramRowsLong {
     StructField("prev", StringType, nullable = true))),
     containsNull = false)
 
-  /** The per-document kernel; public because generated code calls it. */
+  /** The per-document kernel behind graft_ngram_rows
+    * (max_order is a checked literal in [1, 8]). */
   def compute(text: UTF8String, maxOrder: Int): GenericArrayData = {
     // getBytes copies unless the string spans its whole base array, and a
     // spanning base array is owned by this string alone — either way `b`
@@ -111,25 +79,7 @@ object NgramRowsLong {
     new GenericArrayData(out)
   }
 
-  val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(text, max_order)", 2, children)
-    NgramRowsLong(children(0), children(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[NgramRowsLong].getName, Name),
-        fromChildren)
-    }
-  }
-
   /** (ord, gram, prev) rows of orders 1..maxOrder for `inline()`. */
-  def ngramRows(text: Column, maxOrder: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, text, lit(maxOrder))
-  }
+  def ngramRows(text: Column, maxOrder: Int): Column =
+    GraftFunctions.call(Name, text, lit(maxOrder))
 }

@@ -1,13 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, QuaternaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** The per-query PQ ADC lookup table as ONE native expression —
   * `Similarity.pqLut`: lut[mm][kk] = exact integer squared L2 between the
@@ -28,49 +25,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * mismatch error exactly as the composed form did (slice truncation at
   * the vector end included).
   */
-case class PqLutLong(first: Expression, second: Expression,
-                     third: Expression, fourth: Expression)
-    extends QuaternaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType, fourth.dataType,
-      third, fourth) match {
-      case (ArrayType(LongType, _),
-            ArrayType(ArrayType(ArrayType(LongType, _), _), _),
-            IntegerType, IntegerType, Literal(d: Int, _), Literal(m: Int, _))
-          if m >= 1 && d >= m && d % m == 0 =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<bigint>, array<array<array<bigint>>>, " +
-          s"literal int dim, literal int m) with m >= 1 and m | dim, got " +
-          s"(${first.dataType.simpleString}, ${second.dataType.simpleString}, " +
-          s"${third.dataType.simpleString}, ${fourth.dataType.simpleString})")
-    }
-
-  override def dataType: DataType =
-    ArrayType(ArrayType(LongType, containsNull = false), containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = PqLutLong.Name
-
-  override def nullSafeEval(vec: Any, cb: Any, dim: Any, m: Any): Any =
-    PqLutLong.compute(vec.asInstanceOf[ArrayData], cb.asInstanceOf[ArrayData],
-      dim.asInstanceOf[Int], m.asInstanceOf[Int])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = PqLutLong.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, (v, c, d, m) =>
-      s"(org.apache.spark.sql.catalyst.util.ArrayData) $cls.compute($v, $c, $d, $m)")
-  }
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): Expression =
-    copy(first = f, second = s, third = t, fourth = q)
-}
-
 object PqLutLong {
   val Name = "graft_pq_lut"
 
-  /** The per-query kernel; public because generated code calls it. */
+  val OutType: DataType =
+    ArrayType(ArrayType(LongType, containsNull = false), containsNull = false)
+
+  /** Plan-time guard on the literal (dim, m) pair: m must divide dim. */
+  def checkShape(children: Seq[Expression]): Seq[Any] = {
+    val dim = children(2).eval().asInstanceOf[Int]
+    val m = children(3).eval().asInstanceOf[Int]
+    require(dim >= m && dim % m == 0,
+      s"$Name needs m | dim, got (dim=$dim, m=$m)")
+    Nil
+  }
+
+  /** The per-query kernel behind graft_pq_lut. */
   def compute(vec: ArrayData, cb: ArrayData, dim: Int, m: Int): GenericArrayData = {
     val sub = dim / m
     val vLen = vec.numElements()
@@ -112,25 +82,7 @@ object PqLutLong {
     new GenericArrayData(out)
   }
 
-  val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(query_vec, codebook, dim, m)", 4, children)
-    PqLutLong(children(0), children(1), children(2), children(3))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[PqLutLong].getName, Name),
-        fromChildren)
-    }
-  }
-
   /** m x k ADC lookup table of a quantized query against the codebook. */
-  def pqLut(vec: Column, cb: Column, dim: Int, m: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, vec, cb, lit(dim), lit(m))
-  }
+  def pqLut(vec: Column, cb: Column, dim: Int, m: Int): Column =
+    GraftFunctions.call(Name, vec, cb, lit(dim), lit(m))
 }

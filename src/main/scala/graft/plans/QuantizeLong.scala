@@ -1,13 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.functions.lit
 
 /** Exact integer quantization of a float/double vector in ONE pass —
   * `Similarity.quantize`: element → CAST(ROUND(x * scale, 0) AS BIGINT),
@@ -22,48 +17,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * GenericArrayData frames on the serve paths). Null elements pass
   * through as nulls, exactly like the transform.
   */
-case class QuantizeLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType, right) match {
-      case (ArrayType(FloatType | DoubleType, _), IntegerType,
-            Literal(s: Int, _)) if s >= 1 =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<float|double>, literal int scale >= 1), " +
-          s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-    }
-
-  // lazy: children may be unresolved at construction (SQL route)
-  @transient private lazy val elemIsFloat = left.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def nullable: Boolean = true
-  override def prettyName: String = QuantizeLong.Name
-
-  override def nullSafeEval(vec: Any, scale: Any): Any =
-    QuantizeLong.compute(vec.asInstanceOf[ArrayData],
-      scale.asInstanceOf[Int], elemIsFloat)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = QuantizeLong.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, (v, s) =>
-      s"(org.apache.spark.sql.catalyst.util.ArrayData) $cls.compute($v, $s, $elemIsFloat)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object QuantizeLong {
   val Name = "graft_quantize"
 
-  /** The per-row kernel; public because generated code calls it. */
+  /** The per-row kernel behind graft_quantize
+    * (scale is a checked literal >= 1; `isFloat` is the element type). */
   def compute(vec: ArrayData, scale: Int, isFloat: Boolean): GenericArrayData = {
     val n = vec.numElements()
     val out = new Array[Any](n)
@@ -80,25 +38,7 @@ object QuantizeLong {
     new GenericArrayData(out)
   }
 
-  val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(vec, scale)", 2, children)
-    QuantizeLong(children(0), children(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[QuantizeLong].getName, Name),
-        fromChildren)
-    }
-  }
-
   /** round(x * scale) per element as bigint, Spark ROUND semantics. */
-  def quantize(vec: Column, scale: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, vec, lit(scale))
-  }
+  def quantize(vec: Column, scale: Int): Column =
+    GraftFunctions.call(Name, vec, lit(scale))
 }

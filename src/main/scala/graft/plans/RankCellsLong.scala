@@ -1,13 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
 
 /** The IVF cell-ranking inner loop as ONE native expression — the
@@ -35,52 +31,21 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   * (ccos desc, cid asc) with no NaN/−0.0 exposure (dots are long-exact,
   * denominators nonnegative).
   */
-case class RankCellsLong(first: Expression, second: Expression,
-                         third: Expression)
-    extends TernaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(LongType, _), DoubleType,
-            ArrayType(StructType(Array(
-              StructField("cid", LongType, _, _),
-              StructField("cv", ArrayType(LongType, _), _, _),
-              StructField("cnrm", DoubleType, _, _))), _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<bigint>, double, " +
-          s"array<struct<cid:bigint, cv:array<bigint>, cnrm:double>>), got $other")
-    }
-
-  override def dataType: DataType = RankCellsLong.OutType
-  override def nullable: Boolean = true
-  override def prettyName: String = RankCellsLong.Name
-
-  override def nullSafeEval(qv: Any, nrm: Any, cells: Any): Any =
-    RankCellsLong.compute(qv.asInstanceOf[ArrayData],
-      nrm.asInstanceOf[Double], cells.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = RankCellsLong.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, (q, n, c) =>
-      s"(org.apache.spark.sql.catalyst.util.ArrayData) $cls.compute($q, $n, $c)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object RankCellsLong {
   val Name = "graft_rank_cells"
+
+  /** The packed centroid row: array<struct<cid, cv, cnrm>>. */
+  val CellsType: DataType = ArrayType(StructType(Seq(
+    StructField("cid", LongType),
+    StructField("cv", ArrayType(LongType)),
+    StructField("cnrm", DoubleType))))
 
   val OutType: DataType = ArrayType(StructType(Seq(
     StructField("ccos", DoubleType, nullable = false),
     StructField("cid", LongType, nullable = false))),
     containsNull = false)
 
-  /** The per-row kernel; public because generated code calls it. */
+  /** The per-row kernel behind graft_rank_cells. */
   def compute(qv: ArrayData, nrm: Double, cells: ArrayData): GenericArrayData = {
     val n = cells.numElements()
     val ccos = new Array[Double](n)
@@ -117,25 +82,7 @@ object RankCellsLong {
     new GenericArrayData(out)
   }
 
-  val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(query_vec, query_norm, packed_cells)", 3, children)
-    RankCellsLong(children(0), children(1), children(2))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[RankCellsLong].getName, Name),
-        fromChildren)
-    }
-  }
-
   /** Sorted (ccos, cid) cell ranking of a quantized vector. */
-  def rankCells(qv: Column, nrm: Column, cells: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, qv, nrm, cells)
-  }
+  def rankCells(qv: Column, nrm: Column, cells: Column): Column =
+    GraftFunctions.call(Name, qv, nrm, cells)
 }

@@ -1,13 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, TernaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.unsafe.types.UTF8String
 
 /** md5-prefix hashes of a document's DISTINCT word n-grams in ONE per-row
@@ -35,52 +31,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * Returns empty array for documents with fewer than n words (the
   * `when(size(w) >= n, ...).otherwise(array())` contract).
   */
-case class ShingleHashesLong(first: Expression, second: Expression,
-                             third: Expression, distinct: Boolean = true)
-    extends TernaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType, second, third) match {
-      case (StringType, IntegerType, IntegerType,
-            Literal(n: Int, _), Literal(b: Int, _))
-          if n >= 1 && b >= 1 && b <= 7 =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, literal int n >= 1, literal int " +
-          s"hash bytes in [1, 7]), got (${first.dataType.simpleString}, " +
-          s"${second.dataType.simpleString}, ${third.dataType.simpleString})")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String =
-    if (distinct) ShingleHashesLong.Name else ShingleHashesLong.AllName
-
-  override def nullSafeEval(text: Any, n: Any, nBytes: Any): Any =
-    ShingleHashesLong.compute(text.asInstanceOf[UTF8String],
-      n.asInstanceOf[Int], nBytes.asInstanceOf[Int], distinct)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = ShingleHashesLong.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, (t, n, b) =>
-      s"(org.apache.spark.sql.catalyst.util.ArrayData) $cls.compute($t, $n, $b, $distinct)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object ShingleHashesLong {
   val Name = "graft_shingle_hashes"
 
   private val Empty = UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
 
-  /** The per-document kernel; public because generated code calls it.
-    * `distinct = false` emits one hash per gram OCCURRENCE in window order
-    * (the `wordShinglesAll` multiplicity contract) and skips the dedup
-    * table entirely.
+  /** The per-document kernel (n >= 1 and hash bytes in [1, 7] are checked
+    * literals). `distinct = false` emits one hash per gram OCCURRENCE in
+    * window order (the `wordShinglesAll` multiplicity contract) and skips
+    * the dedup table entirely.
     */
   def compute(text: UTF8String, n: Int, nBytes: Int,
               distinct: Boolean): ArrayData = {
@@ -155,39 +114,11 @@ object ShingleHashesLong {
 
   val AllName = "graft_shingle_hashes_all"
 
-  val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(text, n, hash_bytes)", 3, children)
-    ShingleHashesLong(children(0), children(1), children(2))
-  }
-
-  val fromChildrenAll: Seq[Expression] => Expression = children => {
-    Builders.arity(AllName, "(text, n, hash_bytes)", 3, children)
-    ShingleHashesLong(children(0), children(1), children(2), distinct = false)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    Seq((Name, fromChildren), (AllName, fromChildrenAll)).foreach {
-      case (name, builder) =>
-        val id = FunctionIdentifier(name)
-        if (!registry.functionExists(id)) {
-          registry.registerFunction(
-            id,
-            new ExpressionInfo(classOf[ShingleHashesLong].getName, name),
-            builder)
-        }
-    }
-  }
-
   /** Distinct word-n-gram md5-prefix hashes of a text column. */
-  def shingleHashes(text: Column, n: Int, nBytes: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, text, lit(n), lit(nBytes))
-  }
+  def shingleHashes(text: Column, n: Int, nBytes: Int): Column =
+    GraftFunctions.call(Name, text, lit(n), lit(nBytes))
 
   /** Word-n-gram md5-prefix hashes WITH multiplicity, in window order. */
-  def shingleHashesAll(text: Column, n: Int, nBytes: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(AllName, text, lit(n), lit(nBytes))
-  }
+  def shingleHashesAll(text: Column, n: Int, nBytes: Int): Column =
+    GraftFunctions.call(AllName, text, lit(n), lit(nBytes))
 }

@@ -1,12 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 48-bit simhash of a document in ONE per-row pass: split on single spaces
@@ -24,33 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * scalar. Here the whole signature is a tight JVM loop per document —
   * the map-side-only shape a 100 TB corpus scan needs.
   */
-case class SimhashLong(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs a string input, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash_long"
-
-  override def nullSafeEval(input: Any): Any =
-    SimhashLong.simhash(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = SimhashLong.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, c => s"$cls.simhash($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SimhashLong {
   val Bits = 48
 
-  /** The per-document kernel; public so generated code can call it. */
+  /** The per-document kernel behind graft_simhash_long. */
   def simhash(text: UTF8String): Long = {
     // UTF8String.split keeps empty tokens (limit -1), matching
     // `split(text, ' ')` in both engines; a single space is a literal under
@@ -75,24 +46,6 @@ object SimhashLong {
 
   val Name = "graft_simhash_long"
 
-  val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(text)", 1, children)
-    SimhashLong(children.head)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[SimhashLong].getName, Name),
-        fromChildren)
-    }
-  }
-
-  def simhashLong(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, c)
-  }
+  def simhashLong(c: Column): Column =
+    GraftFunctions.call(Name, c)
 }

@@ -1,14 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** SQ8 scalar-quantization codes in ONE pass — `Similarity.sq8Codes`:
   *
@@ -19,7 +13,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * discipline: `BigDecimal.valueOf(double).setScale(0, HALF_UP)` — ties
   * away from zero). A constant dimension (hi == lo → division NULL) and a
   * NULL element both collapse to code 0, exactly like the coalesce in the
-  * transform this replaces.
+  * transform this replaces. A NULL `vec`, `lo` or `hi` ARRAY returns NULL:
+  * the call is null-propagating, so the kernel never sees it.
   *
   * Why native (round 19): the Column form was an interpreted
   * `transform(vec, (x, i) => ...)` lambda with TWO boxed `element_at`
@@ -28,50 +23,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * per-element interpreted ROUND cost [[QuantizeLong]] removed from
   * `prepared()`.
   */
-case class Sq8CodesLong(first: Expression, second: Expression,
-                        third: Expression)
-    extends TernaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _),
-            ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<float|double> vec, array<double> lo, " +
-          s"array<double> hi), got (${first.dataType.simpleString}, " +
-          s"${second.dataType.simpleString}, ${third.dataType.simpleString})")
-    }
-
-  @transient private lazy val elemIsFloat = first.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = Sq8CodesLong.Name
-
-  override def nullSafeEval(vec: Any, lo: Any, hi: Any): Any =
-    Sq8CodesLong.compute(vec.asInstanceOf[ArrayData],
-      lo.asInstanceOf[ArrayData], hi.asInstanceOf[ArrayData], elemIsFloat)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = Sq8CodesLong.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, (v, lo, hi) =>
-      s"(org.apache.spark.sql.catalyst.util.ArrayData) $cls.compute($v, $lo, $hi, $elemIsFloat)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object Sq8CodesLong {
   val Name = "graft_sq8_codes"
 
-  /** The per-row kernel; public because generated code calls it.
+  /** The per-row kernel behind graft_sq8_codes
+    * (`isFloat` is the element type of `vec`).
     * A vector longer than the codebook arrays fails loud — exactly the
     * ANSI element_at(lo, i + 1) INVALID_ARRAY_INDEX abort of the transform
     * form; NULL codebook entries (degenerate all-NULL training input)
@@ -118,25 +74,7 @@ object Sq8CodesLong {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(vec, lo, hi)", 3, children)
-    Sq8CodesLong(children(0), children(1), children(2))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[Sq8CodesLong].getName, Name),
-        fromChildren)
-    }
-  }
-
   /** SQ8 codes of `vec` against per-dimension [lo, hi] codebook arrays. */
-  def sq8Codes(vec: Column, lo: Column, hi: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, vec, lo, hi)
-  }
+  def sq8Codes(vec: Column, lo: Column, hi: Column): Column =
+    GraftFunctions.call(Name, vec, lo, hi)
 }

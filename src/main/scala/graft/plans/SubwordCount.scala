@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, typedlit}
+import org.apache.spark.sql.functions.typedlit
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -105,25 +104,11 @@ object SubwordCount {
   val Name = "graft_subword_count"
 
   val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(text, vocab array)", 2, children)
     val vocab = Builders.litStrings(Name, "vocab argument", children(1))
     SubwordCount(children(0), vocab)
   }
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[SubwordCount].getName, Name),
-        fromChildren)
-    }
-  }
-
   /** Column API. `vocab` is embedded in the plan (a per-query constant). */
-  def subwordCount(text: Column, vocab: Seq[String]): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, text, typedlit(vocab))
-  }
+  def subwordCount(text: Column, vocab: Seq[String]): Column =
+    GraftFunctions.call(Name, text, typedlit(vocab))
 }

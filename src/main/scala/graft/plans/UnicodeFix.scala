@@ -1,12 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.Column
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Stage-0 text hygiene in ONE per-row kernel (VERDICT r17 ask #2): every
@@ -42,29 +36,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * call (the HtmlStrip/SimhashLong codegen pattern) — zero shuffle, zero
   * driver state, linear in bytes.
   */
-case class UnicodeFix(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs a string input, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_unicode_fix"
-
-  override def nullSafeEval(input: Any): Any =
-    UnicodeFix.fix(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = UnicodeFix.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, c => s"$cls.fix($c)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object UnicodeFix {
 
   /** cp1252 specials: char -> byte for the 27 codepoints outside U+00FF
@@ -80,7 +51,7 @@ object UnicodeFix {
     'œ' -> 0x9C, 'ž' -> 0x9E, 'Ÿ' -> 0x9F
   ).map { case (c, b) => c -> b.toByte }
 
-  /** The per-row kernel; public so generated code can call it. */
+  /** The per-row kernel behind graft_unicode_fix. */
   def fix(input: UTF8String): UTF8String = {
     var s = input.toString
     var rounds = 0
@@ -157,24 +128,6 @@ object UnicodeFix {
 
   val Name = "graft_unicode_fix"
 
-  val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(text string)", 1, children)
-    UnicodeFix(children.head)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[UnicodeFix].getName, Name),
-        fromChildren)
-    }
-  }
-
-  def unicodeFix(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, c)
-  }
+  def unicodeFix(c: Column): Column =
+    GraftFunctions.call(Name, c)
 }

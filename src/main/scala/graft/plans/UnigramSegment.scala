@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -116,7 +115,6 @@ object UnigramSegment {
   val Name = "graft_unigram_segment"
 
   val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(word, pieces array, scores array)", 3, children)
     val Seq(word, piecesExpr, scoresExpr) = children
     val ps = Builders.litStrings(Name, "pieces argument", piecesExpr)
     val ss = Builders.litValue(Name, "scores argument", scoresExpr)
@@ -126,21 +124,8 @@ object UnigramSegment {
     UnigramSegment(word, ps.zip(ss.toSeq))
   }
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[UnigramSegment].getName, Name),
-        fromChildren)
-    }
-  }
-
   /** Column API: `model` rides the plan as two aligned literal arrays. */
-  def unigramSegment(word: Column, model: Seq[(String, Long)]): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, word,
+  def unigramSegment(word: Column, model: Seq[(String, Long)]): Column =
+    GraftFunctions.call(Name, word,
       lit(model.map(_._1).toArray), lit(model.map(_._2).toArray))
-  }
 }

@@ -1,14 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Elementwise sum of `array<long>` vectors as a `TypedImperativeAggregate`:
@@ -101,24 +99,6 @@ case class VectorSumLong(
 object VectorSumLong {
   val Name = "graft_vector_sum"
 
-  val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(vec)", 1, children)
-    VectorSumLong(children.head)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[VectorSumLong].getName, Name),
-        fromChildren)
-    }
-  }
-
-  def vectorSum(c: Column): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, c)
-  }
+  def vectorSum(c: Column): Column =
+    GraftFunctions.call(Name, c)
 }

@@ -1,14 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Winnowing fingerprints (Schleimer, Wilkerson, Aiken, SIGMOD 2003) of one
@@ -28,40 +23,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * were also rejected: Spark HOF lambdas evaluate interpreted, and a
   * slice-per-window min is O(n*w) with an allocation per window.
   *
-  * The hash equals `Md5PrefixLong(substring(text, pos, k), 6)` — the same
-  * value the SQL-oracle mirror computes — because the digest runs over the
-  * UTF-8 bytes of the character substring (offsets honor multi-byte chars).
+  * The hash equals `graft_md5_prefix_long(substring(text, pos, k), 6)` —
+  * the same value the SQL-oracle mirror computes — because the digest runs
+  * over the UTF-8 bytes of the character substring (offsets honor
+  * multi-byte chars).
   *
   * Guarantees (paper §2): any shared substring of length >= w+k-1 shares a
   * fingerprint; density is ~2/(w+1) of the k-gram count. Documents shorter
   * than w+k-1 chars have no full window and return an empty array.
   */
-case class WinnowLong(child: Expression, k: Int, w: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (k < 1 || w < 1)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName needs k >= 1 and w >= 1, got (k=$k, w=$w)")
-    else child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs string input, got ${other.simpleString}")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = WinnowLong.Name
-
-  override def nullSafeEval(input: Any): Any =
-    WinnowLong.compute(input.asInstanceOf[UTF8String], k, w)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = WinnowLong.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, c => s"$cls.compute($c, $k, $w)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object WinnowLong {
   val Name = "graft_winnow_long"
 
@@ -70,8 +40,8 @@ object WinnowLong {
 
   private val Empty = UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
 
-  /** One pass over one document; see class Scaladoc. Public because codegen
-    * calls it statically.
+  /** One pass over one document; see the object Scaladoc. Behind
+    * graft_winnow_long (k, w >= 1 are checked literals).
     */
   def compute(s: UTF8String, k: Int, w: Int): ArrayData = {
     val bytes = s.getBytes
@@ -98,7 +68,7 @@ object WinnowLong {
       md.reset()
       md.update(bytes, offsets(i), offsets(i + k) - offsets(i))
       val d = md.digest()
-      // first 6 digest bytes big-endian = Md5PrefixLong(_, 6)
+      // first 6 digest bytes big-endian = graft_md5_prefix_long(_, 6)
       hashes(i) =
         ((d(0) & 0xffL) << 40) | ((d(1) & 0xffL) << 32) | ((d(2) & 0xffL) << 24) |
           ((d(3) & 0xffL) << 16) | ((d(4) & 0xffL) << 8) | (d(5) & 0xffL)
@@ -128,28 +98,7 @@ object WinnowLong {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[WinnowLong].getName, Name),
-        fromChildren)
-    }
-  }
-
-  val fromChildren: Seq[Expression] => Expression = children =>
-    (Builders.arity(Name, "(text, k, w)", 3, children)(1), children(2)) match {
-      case (Literal(k: Int, IntegerType), Literal(w: Int, IntegerType)) =>
-        WinnowLong(children(0), k, w)
-      case other => throw new IllegalArgumentException(
-        s"$Name (k, w) arguments must be literal ints, got $other")
-    }
-
   /** Sorted distinct winnowing fingerprints of `text` as array<bigint>. */
-  def winnowLong(text: Column, k: Int, w: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, text, lit(k), lit(w))
-  }
+  def winnowLong(text: Column, k: Int, w: Int): Column =
+    GraftFunctions.call(Name, text, lit(k), lit(w))
 }

@@ -1,14 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, Literal, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The complete per-pair WORD n-gram overlap statistic (the BLEU-n /
@@ -30,41 +26,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * gram-keyed exchanges (~79 MB at sf0.1 across e4+e5) for output that is
   * maxOrder rows per pair.
   */
-case class WordGramStatsLong(first: Expression, second: Expression,
-                             third: Expression)
-    extends TernaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType, third) match {
-      case (StringType, StringType, IntegerType, Literal(n: Int, _))
-          if n >= 1 && n <= 8 =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, string, literal int in [1, 8]), got " +
-          s"(${first.dataType.simpleString}, ${second.dataType.simpleString}, " +
-          s"${third.dataType.simpleString})")
-    }
-
-  override def dataType: DataType = ChrfStatsLong.OutType
-  override def nullable: Boolean = true
-  override def prettyName: String = WordGramStatsLong.Name
-
-  override def nullSafeEval(cand: Any, ref: Any, n: Any): Any =
-    WordGramStatsLong.compute(cand.asInstanceOf[UTF8String],
-      ref.asInstanceOf[UTF8String], n.asInstanceOf[Int])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = WordGramStatsLong.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, (c, r, n) =>
-      s"(org.apache.spark.sql.catalyst.util.ArrayData) $cls.compute($c, $r, $n)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
 object WordGramStatsLong {
   val Name = "graft_wordgram_stats"
 
@@ -85,7 +46,8 @@ object WordGramStatsLong {
     starts
   }
 
-  /** The per-pair kernel; public because generated code calls it. */
+  /** The per-pair kernel behind graft_wordgram_stats
+    * (max_order is a checked literal in [1, 8]). */
   def compute(cand: UTF8String, ref: UTF8String, maxOrder: Int)
       : GenericArrayData = {
     val cb = cand.getBytes
@@ -165,26 +127,7 @@ object WordGramStatsLong {
     new GenericArrayData(rows)
   }
 
-  val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(candidate_text, reference_text, max_order)", 3,
-      children)
-    WordGramStatsLong(children(0), children(1), children(2))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[WordGramStatsLong].getName, Name),
-        fromChildren)
-    }
-  }
-
   /** Per-pair word n-gram overlap statistic rows for `inline()`. */
-  def wordGramStats(cand: Column, ref: Column, maxOrder: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, cand, ref, lit(maxOrder))
-  }
+  def wordGramStats(cand: Column, ref: Column, maxOrder: Int): Column =
+    GraftFunctions.call(Name, cand, ref, lit(maxOrder))
 }

@@ -1,11 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.functions.{call_function, typedlit}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.functions.typedlit
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -105,25 +104,11 @@ object WordSetCountLong {
   val Name = "graft_word_set_count"
 
   def fromChildren(children: Seq[Expression]): WordSetCountLong = {
-    Builders.arity(Name, "(text, words array)", 2, children)
     val ws = Builders.litStrings(Name, "words argument", children(1))
     WordSetCountLong(children.head, ws)
   }
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[WordSetCountLong].getName, Name),
-        (children: Seq[Expression]) => fromChildren(children))
-    }
-  }
-
   /** Column API. `words` is embedded in the plan (a per-query constant). */
-  def wordSetCount(text: Column, words: Seq[String]): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, text, typedlit(words))
-  }
+  def wordSetCount(text: Column, words: Seq[String]): Column =
+    GraftFunctions.call(Name, text, typedlit(words))
 }

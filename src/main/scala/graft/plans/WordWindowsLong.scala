@@ -1,13 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Every word window of EXACTLY order `n` as a string, WITH multiplicity,
@@ -34,36 +30,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * empty array — exactly the `when(...).otherwise(empty)` of the retired
   * form (PropertySpec pins the equivalence).
   */
-case class WordWindowsLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType, right) match {
-      case (StringType, IntegerType, Literal(n: Int, _)) if n >= 1 && n <= 8 =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, literal int in [1, 8]), got " +
-          s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-    }
-
-  override def dataType: DataType = WordWindowsLong.OutType
-  override def nullable: Boolean = true
-  override def prettyName: String = WordWindowsLong.Name
-
-  override def nullSafeEval(text: Any, n: Any): Any =
-    WordWindowsLong.compute(text.asInstanceOf[UTF8String], n.asInstanceOf[Int])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = WordWindowsLong.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    defineCodeGen(ctx, ev, (t, n) =>
-      s"(org.apache.spark.sql.catalyst.util.ArrayData) $cls.compute($t, $n)")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object WordWindowsLong {
   val Name = "graft_word_windows"
 
@@ -71,7 +37,8 @@ object WordWindowsLong {
 
   private val Empty = new GenericArrayData(new Array[Any](0))
 
-  /** The per-document kernel; public because generated code calls it. */
+  /** The per-document kernel behind graft_word_windows
+    * (n is a checked literal in [1, 8]). */
   def compute(text: UTF8String, n: Int): GenericArrayData = {
     // getBytes copies unless the string spans its whole base array, and a
     // spanning base array is owned by this string alone — either way `b`
@@ -100,25 +67,7 @@ object WordWindowsLong {
     new GenericArrayData(out)
   }
 
-  val fromChildren: Seq[Expression] => Expression = children => {
-    Builders.arity(Name, "(text, n)", 2, children)
-    WordWindowsLong(children(0), children(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(Name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[WordWindowsLong].getName, Name),
-        fromChildren)
-    }
-  }
-
   /** All order-`n` word windows of `text`, with multiplicity. */
-  def wordWindows(text: Column, n: Int): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(Name, text, lit(n))
-  }
+  def wordWindows(text: Column, n: Int): Column =
+    GraftFunctions.call(Name, text, lit(n))
 }

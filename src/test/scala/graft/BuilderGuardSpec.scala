@@ -11,22 +11,7 @@ import graft.plans._
   */
 class BuilderGuardSpec extends SparkSpec {
 
-  private def registerAll(): Unit = {
-    GraftFunctions.register(spark)
-    LnFpFunctions.register(spark)
-    Md5PrefixLong.register(spark)
-    SimhashLong.register(spark)
-    MinhashSigLong.register(spark)
-    VectorSumLong.register(spark)
-    WinnowLong.register(spark)
-    AhoCorasickCount.register(spark)
-    SubwordCount.register(spark)
-    CdcBoundariesLong.register(spark)
-    LcsTokensLong.register(spark)
-    BpeSegment.register(spark)
-    UnigramSegment.register(spark)
-    HtmlStrip.register(spark)
-  }
+  private def registerAll(): Unit = GraftFunctions.register(spark)
 
   /** The builder error may be wrapped (AnalysisException chains); assert
     * the function name appears somewhere in the message chain and that no
@@ -45,35 +30,21 @@ class BuilderGuardSpec extends SparkSpec {
       s"$sql error must name $name; got ${chain.map(_.getMessage)}")
   }
 
-  // (name, a wrong-arity call) for every registered function: one arg
-  // missing or one extra relative to the real signature.
-  private val wrongArity = Seq(
-    GraftFunctions.DotLongName -> "SELECT graft_dot_long(array(1L))",
-    GraftFunctions.PqAdcName -> "SELECT graft_pq_adc(array(1L))",
-    GraftFunctions.PqAdcDirectName -> "SELECT graft_pq_adc_direct(array(1L))",
-    GraftFunctions.PqEncodeName -> "SELECT graft_pq_encode(array(1L))",
-    GraftFunctions.LshBucketsName -> "SELECT graft_lsh_buckets(array(1L))",
-    GraftFunctions.MisraGriesName -> "SELECT graft_misra_gries(1L)",
-    KmvSketch.Name -> "SELECT graft_kmv(1L)",
-    CountMinSketch.Name -> "SELECT graft_count_min(1L)",
-    LnFpFunctions.LnMicroName -> "SELECT graft_ln_micro(1L)",
-    LnFpFunctions.GumbelMicroName -> "SELECT graft_gumbel_micro(1L, 2L)",
-    Md5PrefixLong.Name -> "SELECT graft_md5_prefix_long('x')",
-    SimhashLong.Name -> "SELECT graft_simhash_long('x', 'y')",
-    MinhashSigLong.Name -> "SELECT graft_minhash_sig('x')",
-    VectorSumLong.Name -> "SELECT graft_vector_sum(array(1L), array(2L))",
-    WinnowLong.Name -> "SELECT graft_winnow_long('x', 4)",
-    AhoCorasickCount.Name -> "SELECT graft_aho_corasick('x')",
-    SubwordCount.Name -> "SELECT graft_subword_count('x')",
-    CdcBoundariesLong.Name -> "SELECT graft_cdc_boundaries('x', 3)",
-    LcsTokensLong.Name -> "SELECT graft_lcs_tokens('x')",
-    BpeSegment.Name -> "SELECT graft_bpe_segment('x')",
-    UnigramSegment.Name -> "SELECT graft_unigram_segment('x', array('a'))",
-    HtmlStrip.Name -> "SELECT graft_html_strip()")
+  // every table row, one argument short and one argument over — generated
+  // from the registry itself, so a new function cannot miss this check
+  private val wrongArity = GraftFunctions.all.map { f =>
+    def call(n: Int) = s"SELECT ${f.name}(${Seq.fill(n)("1").mkString(", ")})"
+    f.name -> Seq(call(f.params.length - 1), call(f.params.length + 1))
+  }
 
-  wrongArity.foreach { case (name, sql) =>
+  test("the table holds every graft_* function exactly once") {
+    val names = GraftFunctions.all.map(_.name)
+    assert(names.length == 35 && names.distinct == names, names)
+  }
+
+  wrongArity.foreach { case (name, sqls) =>
     test(s"$name rejects wrong arity with a named error") {
-      assertNamedError(name, sql)
+      sqls.foreach(assertNamedError(name, _))
     }
   }
 
@@ -100,11 +71,52 @@ class BuilderGuardSpec extends SparkSpec {
     CountMinSketch.Name ->
       "SELECT graft_count_min(1L, CAST(NULL AS int), 3)",
     GraftFunctions.MisraGriesName ->
-      "SELECT graft_misra_gries(1L, CAST(NULL AS int))")
+      "SELECT graft_misra_gries(1L, CAST(NULL AS int))",
+    LangIdLong.Name ->
+      "SELECT graft_lang_id('x', array('en'), array(array('the', NULL)))",
+    AhoCorasickCount.Name ->
+      "SELECT graft_aho_corasick('x', array('a', NULL))",
+    WordWindowsLong.Name ->
+      "SELECT graft_word_windows('x', CAST(NULL AS int))")
 
   nullLiteral.zipWithIndex.foreach { case ((name, sql), i) =>
     test(s"$name rejects NULL literal argument with a named error ($i)") {
       assertNamedError(name, sql)
     }
+  }
+
+  test("graft_lang_id rejects more than 64 word sets at plan time") {
+    val labels = (0 to 64).map(i => s"'l$i'").mkString(", ")
+    val sets = (0 to 64).map(i => s"array('w$i')").mkString(", ")
+    registerAll()
+    // analysis only: the limit must fire while planning, not at first eval
+    val t = intercept[Throwable](
+      spark.sql(s"SELECT graft_lang_id('x', array($labels), array($sets))"))
+    val msgs = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .flatMap(e => Option(e.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains(LangIdLong.Name) && m.contains("64")), msgs)
+  }
+
+  test("a kernel literal out of range is a named plan-time error") {
+    assertNamedError(WordWindowsLong.Name, "SELECT graft_word_windows('x', 9)")
+    assertNamedError(PqLutLong.Name,
+      "SELECT graft_pq_lut(array(1L), array(array(array(1L))), 3, 2)")
+  }
+
+  test("a kernel argument of the wrong type is a DATATYPE_MISMATCH naming it") {
+    registerAll()
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT graft_ln_micro(2, 1)"))
+    assert(e.getCondition.startsWith("DATATYPE_MISMATCH"), e.getMessage)
+    assert(e.getMessage.contains(LnFpFunctions.LnMicroName), e.getMessage)
+  }
+
+  test("kernels propagate NULL arguments and fold constant calls") {
+    registerAll()
+    val df = spark.sql("SELECT graft_ln_micro(CAST(NULL AS bigint), 1L) AS n, " +
+      "graft_ln_micro(2L, 1L) AS c")
+    assert(df.collect()(0).isNullAt(0))
+    assert(df.queryExecution.optimizedPlan.toString.contains("693147"),
+      df.queryExecution.optimizedPlan)
   }
 }

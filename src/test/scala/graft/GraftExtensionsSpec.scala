@@ -52,7 +52,8 @@ class GraftExtensionsSpec extends AnyFunSuite
         |  graft_pq_adc_direct(array(0L, 0L), array(1L, 0L),
         |    array(array(array(5L), array(0L)), array(array(1L), array(2L)))) AS adcd,
         |  graft_ln_micro(2L, 1L) AS lnm,
-        |  graft_gumbel_micro(0L) AS gum""".stripMargin)
+        |  graft_gumbel_micro(0L) AS gum,
+        |  graft_unicode_fix('cafÃ©') AS fix""".stripMargin)
       .collect()(0)
     assert(row.getLong(0) == 4 + 10 + 18)
     // md5('abc') = 900150983cd24fb0...; first 4 bytes unsigned
@@ -65,6 +66,7 @@ class GraftExtensionsSpec extends AnyFunSuite
     assert(row.getLong(9) == 0L + 1L) // (0-0)^2 + (0-1)^2
     assert(row.getLong(10) == 693147L) // ln 2 in micro-nats
     assert(row.getLong(11) == graft.plans.LnFp.gumbelMicro(0L))
+    assert(row.getString(12) == "café") // mojibake repaired
   }
 
   test("aggregates (misra-gries, vector sum) work from SQL GROUP BY") {

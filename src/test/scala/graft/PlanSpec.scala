@@ -608,6 +608,53 @@ class PlanSpec extends SparkSpec {
     assert("""\*\(\d+\) Project \[[^\n]*graft_pq_adc""".r.findFirstIn(p).nonEmpty, p)
   }
 
+  test("every KernelCall row runs as one static call inside whole-stage codegen") {
+    // one call per kernel row of the registry; `t` and `id` come from the
+    // range so nothing constant-folds away before execution
+    val calls = Map(
+      "graft_ln_micro" -> "graft_ln_micro(id + 2, 1L)",
+      "graft_gumbel_micro" -> "graft_gumbel_micro(id)",
+      "graft_md5_prefix_long" -> "graft_md5_prefix_long(t, 6)",
+      "graft_simhash_long" -> "graft_simhash_long(t)",
+      "graft_minhash_sig" -> "graft_minhash_sig(t, 2)",
+      "graft_winnow_long" -> "graft_winnow_long(t, 3, 2)",
+      "graft_cdc_boundaries" -> "graft_cdc_boundaries(t, 2, 3)",
+      "graft_lcs_tokens" -> "graft_lcs_tokens(t, t)",
+      "graft_html_strip" -> "graft_html_strip(t)",
+      "graft_unicode_fix" -> "graft_unicode_fix(t)",
+      "graft_chrf_stats" -> "graft_chrf_stats(t, t, 2)",
+      "graft_wordgram_stats" -> "graft_wordgram_stats(t, t, 2)",
+      "graft_shingle_hashes" -> "graft_shingle_hashes(t, 2, 6)",
+      "graft_shingle_hashes_all" -> "graft_shingle_hashes_all(t, 2, 6)",
+      "graft_ngram_rows" -> "graft_ngram_rows(t, 2)",
+      "graft_word_windows" -> "graft_word_windows(t, 2)",
+      "graft_rank_cells" -> ("graft_rank_cells(array(id), 1.0D, array(named_struct(" +
+        "'cid', 1L, 'cv', array(1L), 'cnrm', 1.0D)))"),
+      "graft_pq_lut" -> ("graft_pq_lut(array(id, id), " +
+        "array(array(array(1L), array(2L)), array(array(3L), array(4L))), 2, 2)"),
+      "graft_quantize" -> "graft_quantize(array(CAST(id AS double)), 1000)",
+      "graft_sq8_codes" ->
+        "graft_sq8_codes(array(CAST(id AS double)), array(0.0D), array(10.0D))")
+    val kernelRows = graft.plans.GraftFunctions.all
+      .filter(_.owner == classOf[graft.plans.KernelCall]).map(_.name).toSet
+    assert(calls.keySet == kernelRows, kernelRows.diff(calls.keySet))
+    graft.plans.GraftFunctions.register(spark)
+    val df = spark.sql(calls.toSeq.map { case (n, c) => s"$c AS $n" }
+      .mkString("SELECT ", ", ", " FROM (SELECT id, concat('a b a ', id) AS t FROM range(3))"))
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    calls.keys.foreach { n =>
+      assert(("""\*\(\d+\) Project \[[^\n]*static_invoke\(graft\.plans\.GraftFunctions\.""" +
+        n + """\(""").r.findFirstIn(p).nonEmpty, s"$n:\n$p")
+    }
+    // analysis keeps the SQL name: auto-generated column names show the
+    // shown arguments only, never a constant the builder took out
+    val named = spark.sql("SELECT graft_md5_prefix_long(t, 6), " +
+      "graft_word_windows(t, 2) FROM (SELECT 'a b' AS t)")
+    assert(named.columns.toSeq ==
+      Seq("graft_md5_prefix_long(t)", "graft_word_windows(t, 2)"), named.columns)
+  }
+
   test("pq-adc kernel throws on out-of-range codes instead of a wrong distance") {
     import spark.implicits._
     val df = Seq((Array(0L, 9L), Array(Array(1L, 2L), Array(3L, 4L))))

@@ -982,15 +982,16 @@ class PropertySpec extends AnyFunSuite {
   test("sq8Codes kernel vs the transform formulation: identical codes") {
     // pins graft.plans.Sq8CodesLong to the retired transform(vec, (x, i) =>
     // coalesce(round(...), 0.0).cast(long)) form — random finite doubles,
-    // constant dimensions (hi == lo -> 0), null elements (-> 0), rounding
-    // ties, and the float element path
+    // constant dimensions (hi == lo -> 0), inverted spans (hi < lo), null
+    // elements (-> 0), rounding ties, and the float element path
     val gen: Gen[(Seq[java.lang.Double], Seq[Double], Seq[Double])] = for {
       n <- Gen.choose(1, 12)
       xs <- Gen.listOfN(n, Gen.oneOf(
         Gen.choose(-5.0, 5.0).map(java.lang.Double.valueOf),
         Gen.const(null: java.lang.Double)))
       los <- Gen.listOfN(n, Gen.choose(-5.0, 0.0))
-      spans <- Gen.listOfN(n, Gen.oneOf(Gen.const(0.0), Gen.choose(0.1, 10.0)))
+      spans <- Gen.listOfN(n, Gen.oneOf(Gen.const(0.0), Gen.choose(0.1, 10.0),
+        Gen.choose(-10.0, -0.1)))
     } yield (xs.toSeq, los.toSeq, los.zip(spans).map { case (l, s) => l + s }.toSeq)
     forAllSamples(gen, 6) { case (xs, los, his) =>
       val df = Seq((xs, los, his)).toDF("v", "lo", "hi")
@@ -1021,6 +1022,17 @@ class PropertySpec extends AnyFunSuite {
         .as[Seq[Long]].head()
       assert(kernelF == hofF, s"floats v=$fs lo=$los hi=$his")
     }
+  }
+
+  test("sq8Codes kernel: a NULL lo or hi array yields NULL") {
+    // the call is null-propagating: a NULL codebook array never reaches
+    // the kernel (the retired transform form returned all-zero codes)
+    val df = Seq((Seq(1.0, 2.0), Option.empty[Seq[Double]], Option(Seq(3.0, 4.0))))
+      .toDF("v", "lo", "hi")
+    val codes = df.select(
+      graft.plans.Sq8CodesLong.sq8Codes($"v", $"lo", $"hi").as("a"),
+      graft.plans.Sq8CodesLong.sq8Codes($"v", $"hi", $"lo").as("b")).head()
+    assert(codes.isNullAt(0) && codes.isNullAt(1), codes)
   }
 
   test("langId kernel vs the five-markerScore when-chain: identical labels") {
