@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * double << 2^53), so Spark and a SQL oracle agree bit-for-bit — floats
   * would differ in the last ulp depending on fold order.
   *
-  * Performance strategy: the dot-product kernel is a native codegen'd
-  * Catalyst expression (graft.plans.DotProductLong — measured ~50x over
+  * Performance strategy: the dot product is one native kernel call inside
+  * whole-stage codegen (graft.plans.DotProductLong — measured ~50x over
   * `aggregate(zip_with(...))` interpreted lambdas), and per-vector norms are
   * computed once before any pairwise join, so per-pair work is one dot and
   * one division.
@@ -38,7 +38,7 @@ object Similarity {
   def quantize(v: Column): Column =
     graft.plans.QuantizeLong.quantize(v, QuantScale)
 
-  /** Exact integer dot product of two quantized vectors (native codegen). */
+  /** Exact integer dot product of two quantized vectors (native kernel). */
   def idot(a: Column, b: Column): Column = dotLong(a, b)
 
   /** (id, qv, nrm) projection: quantized vector + its L2 norm, computed once
@@ -787,7 +787,7 @@ object Similarity {
     * argmin-d2 code (ties -> lowest code), as `array<long>` of length m.
     * Pure per-row array algebra against the broadcast codebook row — NO
     * shuffle. Encoding scans the whole codebook per row (m x k subvector
-    * distances), so it runs as ONE native codegen'd kernel
+    * distances), so it runs as ONE native kernel call
     * (graft.plans.PqEncodeLong) — the interpreted `array_min(transform(...))`
     * argmin paid a lambda dispatch + slice + struct allocation per
     * (row, subspace, entry), ~8M of them at N=2000/m=16/k=256. Same exact
@@ -818,7 +818,7 @@ object Similarity {
     * the probe side ships only its dim-long vector (512 B at dim=64)
     * through the per-cell shuffle instead of an m x k LUT, so exchange
     * bytes scale with dim, not with codebook size. Per pair it costs
-    * dim multiply-adds inside ONE native codegen'd kernel
+    * dim multiply-adds inside ONE native kernel call
     * (graft.plans.PqAdcDirectLong) — the interpreted
     * `aggregate(zip_with(...))` + slice form paid a lambda dispatch and an
     * intermediate array per (pair, subspace), which at m=16/k=256 over ~1M
@@ -1501,14 +1501,14 @@ object Similarity {
   /** (sid, tbl, bucket): each vector's sign-bucket id in every LSH table —
     * the shared index-build step of `lshTopK` and `lshNearDupPairs`.
     *
-    * Bucket ids come from ONE native codegen'd expression
+    * Bucket ids come from ONE native kernel call
     * (graft.plans.LshBucketsLong) over a single flat plane literal, then
     * posexplode — NO shuffle, no vector columns in the output (candidate
     * generation is id-only; verification re-joins vectors later). The
     * interpreted higher-order form (`transform` + `aggregate` lambdas over a
     * broadcast planes row) cost 2.2x wall-clock at sf0.1 purely in per-row
     * lambda dispatch — same trap DotProductLong documents. Per-row work is
-    * O(nTables x nPlanes x dim) multiply-adds in a tight generated loop —
+    * O(nTables x nPlanes x dim) multiply-adds in a tight primitive loop —
     * inherent to multi-table LSH, now at primitive-loop cost.
     */
   private def lshBuckets(df: DataFrame, idCol: String, vecCol: String,

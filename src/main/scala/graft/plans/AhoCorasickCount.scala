@@ -3,13 +3,9 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.typedlit
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Multi-pattern substring counting via Aho-Corasick (goto/fail automaton):
   * per input string, the occurrence count of EVERY pattern — overlapping
@@ -20,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * character ONCE, O(len + matches) regardless of pattern count.
   *
   * The pattern list is a plan-time literal (the SubwordCount convention), so
-  * the automaton builds once per expression instance and the match runs
+  * the automaton is the call's [[Matcher]], built once, and the match runs
   * per-row inside the scan — no shuffle, no join, no broadcast. Output
   * lists are pre-merged along fail links at build time (standard BFS
   * construction), so the hot loop is: one goto step, one output-array walk.
@@ -29,60 +25,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * text[i .. i+|p|) == p — deterministic, overlap-inclusive, byte-equal
   * across engines.
   */
-case class AhoCorasickCount(child: Expression, patterns: Seq[String])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (patterns.isEmpty || patterns.exists(_.isEmpty))
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a non-empty list of non-empty patterns")
-    else child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs string input, got ${other.simpleString}")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_aho_corasick"
-
-  @transient private lazy val automaton = new AhoCorasickCount.Automaton(patterns)
-
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      automaton.counts(input.asInstanceOf[UTF8String].toString)
-        .map(Long.box): Array[Any])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("automaton", automaton,
-      classOf[AhoCorasickCount.Automaton].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.countsArray($c.toString())")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object AhoCorasickCount {
 
   /** Goto/fail automaton with outputs pre-merged along fail links. */
-  final class Automaton(patterns: Seq[String]) extends Serializable {
-    private val goto = mutable.ArrayBuffer(mutable.HashMap.empty[Char, Int])
-    private val outs = mutable.ArrayBuffer[Array[Int]](Array.empty)
-    private val fail = mutable.ArrayBuffer(0)
-
-    patterns.zipWithIndex.foreach { case (p, id) =>
-      var s = 0
-      p.foreach { ch =>
-        s = goto(s).getOrElseUpdate(ch, {
-          goto += mutable.HashMap.empty[Char, Int]
-          outs += Array.empty
-          fail += 0
-          goto.size - 1
-        })
+  final case class Automaton(patterns: Seq[String]) extends Matcher {
+    // (goto, outs, fail) per state
+    @transient private lazy val trie = {
+      val goto = mutable.ArrayBuffer(mutable.HashMap.empty[Char, Int])
+      val outs = mutable.ArrayBuffer[Array[Int]](Array.empty)
+      val fail = mutable.ArrayBuffer(0)
+      patterns.zipWithIndex.foreach { case (p, id) =>
+        var s = 0
+        p.foreach { ch =>
+          s = goto(s).getOrElseUpdate(ch, {
+            goto += mutable.HashMap.empty[Char, Int]
+            outs += Array.empty
+            fail += 0
+            goto.size - 1
+          })
+        }
+        outs(s) = outs(s) :+ id
       }
-      outs(s) = outs(s) :+ id
-    }
-    locally { // BFS fail links; merge output lists so matching never chains
+      // BFS fail links; merge output lists so matching never chains
       val q = mutable.Queue.empty[Int]
       goto(0).values.foreach { v => fail(v) = 0; q.enqueue(v) }
       while (q.nonEmpty) {
@@ -97,10 +61,14 @@ object AhoCorasickCount {
           q.enqueue(v)
         }
       }
+      (goto, outs, fail)
     }
 
     def counts(text: String): Array[Long] = {
       val c = new Array[Long](patterns.size)
+      val goto = trie._1
+      val outs = trie._2
+      val fail = trie._3
       var s = 0
       var i = 0
       while (i < text.length) {
@@ -115,16 +83,19 @@ object AhoCorasickCount {
       c
     }
 
-    /** Codegen entry: counts boxed into Catalyst array data. */
+    /** The kernel entry: counts as Catalyst array data. */
     def countsArray(text: String): ArrayData =
-      new GenericArrayData(counts(text).map(Long.box): Array[Any])
+      UnsafeArrayData.fromPrimitiveArray(counts(text))
   }
 
   val Name = "graft_aho_corasick"
 
-  def fromChildren(children: Seq[Expression]): AhoCorasickCount = {
+  /** The row's matcher; empty patterns would match everywhere. */
+  def matcher(children: Seq[Expression]): Seq[Any] = {
     val pats = Builders.litStrings(Name, "patterns argument", children(1))
-    AhoCorasickCount(children.head, pats)
+    require(pats.nonEmpty && pats.forall(_.nonEmpty),
+      s"$Name requires a non-empty list of non-empty patterns")
+    Seq(Automaton(pats))
   }
 
   /** Column API. `patterns` is embedded in the plan (a per-query constant). */

@@ -1,26 +1,23 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.typedlit
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native BPE merge APPLICATION: segment one word into its pieces by
   * applying a trained merge table (graft.operators.TextOps.bpeMerges, in
   * rank order) — the inference step of a GPT-2/SentencePiece-style
-  * tokenizer, as ONE codegen'd kernel regardless of merge-table size.
+  * tokenizer, as ONE kernel call regardless of merge-table size.
   *
   * This retires `TextOps.bpeSegmentCol`'s expression-size limit: the
   * declarative form folds one `aggregate(...)` layer PER MERGE into the
   * plan, so a production 30k-merge vocabulary explodes the expression tree
   * (and codegen) long before data size matters. Here the merge table rides
-  * as a plan-time constant object (the SubwordCount posture — dimension-
-  * sized, like a broadcast dim), and the per-row cost is independent of
-  * how many merges never fire.
+  * as the call's [[Matcher]] (the SubwordCount posture — dimension-sized,
+  * like a broadcast dim), and the per-row cost is independent of how many
+  * merges never fire.
   *
   * Semantics are EXACTLY the fold's (spec-asserted against it): each merge
   * is one greedy left-to-right pass in rank order — in "aaa", (a,a) merges
@@ -37,45 +34,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * The empty word returns a single empty piece — `split(word, "")`
   * parity, so the fold and the kernel agree on every string.
   */
-case class BpeSegment(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs string input, got ${other.simpleString}")
-    }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_bpe_segment"
-
-  @transient private lazy val applier = new BpeSegment.Applier(merges)
-
-  override def nullSafeEval(input: Any): Any =
-    applier.segment(input.asInstanceOf[UTF8String].toString)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("applier", applier,
-      classOf[BpeSegment.Applier].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.segment($c.toString())")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object BpeSegment {
 
-  /** Rank-ordered greedy merge passes over one word; see the class doc for
+  /** Rank-ordered greedy merge passes over one word; see the doc above for
     * the fold-equivalence argument.
     */
-  final class Applier(merges: Seq[(String, String)]) extends Serializable {
-    private val lefts: Array[String] = merges.map(_._1).toArray
-    private val rights: Array[String] = merges.map(_._2).toArray
+  final case class Applier(merges: Seq[(String, String)]) extends Matcher {
+    @transient private lazy val lefts: Array[String] = merges.map(_._1).toArray
+    @transient private lazy val rights: Array[String] = merges.map(_._2).toArray
     // ranks per (l, r) pair, ascending — the same pair CAN train at several
     // ranks (it may re-form after later merges), so keep them all
-    private val ranks: java.util.HashMap[String, Array[Int]] = {
+    @transient private lazy val ranks: java.util.HashMap[String, Array[Int]] = {
       val tmp = new java.util.LinkedHashMap[String,
         scala.collection.mutable.ArrayBuffer[Int]]()
       var i = 0
@@ -144,14 +113,12 @@ object BpeSegment {
 
   val Name = "graft_bpe_segment"
 
-  // SQL callers reach this builder directly — fail with the function's
-  // name, not IndexOutOfBounds/NPE (ADVICE r14)
-  val fromChildren: Seq[Expression] => Expression = children => {
+  /** The row's matcher, from the flattened literal merge table. */
+  def matcher(children: Seq[Expression]): Seq[Any] = {
     val flat = Builders.litStrings(Name, "merges argument", children(1))
     require(flat.length % 2 == 0,
       s"$Name merges must be (lft, rgt) pairs flattened; got ${flat.length} strings")
-    val pairs = flat.grouped(2).map(a => (a(0), a(1))).toSeq
-    BpeSegment(children(0), pairs)
+    Seq(Applier(flat.grouped(2).map(a => (a(0), a(1))).toSeq))
   }
 
   /** Column API. `merges` ride the plan flattened [l1, r1, l2, r2, ...]

@@ -18,9 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * emits inline and physical plans print as
   * `static_invoke(graft.plans.GraftFunctions.<name>(...))`.
   * `consts` are plan-time constants the builder took out of the SQL call
-  * (checked literals, the element-type flag); the kernel receives them but
-  * they are not children, so they never show in a column name. A NULL
-  * child yields NULL without calling the kernel.
+  * (checked literals, the element-type flag, a [[Matcher]]); the kernel
+  * receives them but they are not children, so they never show in a
+  * column name. A NULL child yields NULL without calling the kernel.
   */
 case class KernelCall(name: String, override val dataType: DataType,
                       inputTypes: Seq[DataType], children: Seq[Expression],
@@ -34,27 +34,38 @@ case class KernelCall(name: String, override val dataType: DataType,
 
   override lazy val replacement: Expression =
     StaticInvoke(GraftFunctions.EntryPoints, dataType, name,
-      children ++ consts.map(Literal(_)), returnNullable = returnsNull)
+      children ++ consts.map {
+        case m: Matcher => Literal.fromObject(m)
+        case v => Literal(v)
+      }, returnNullable = returnsNull)
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
 }
+
+/** A matcher, trie or model a kernel row builds from its call's literal
+  * arguments, handed to the kernel as one hidden object literal. It is a
+  * case class over those literal inputs, so two builds of the same call
+  * are equal (a GROUP BY on the call matches the SELECT); its lookup
+  * tables are `@transient lazy`, built once per deserialized copy.
+  */
+trait Matcher extends Product with Serializable
 
 /** THE registry of every `graft_*` SQL function: one table row per
   * function, walked by both registration routes — `GraftExtensions` (a
   * `spark.sql.extensions` session) and [[register]] (the lazy Column-API
   * helpers) — so the two can never drift.
   *
-  * Adding a kernel is a compute function plus one [[kernel]] row here and
-  * its one-line static entry point below, named after the SQL function:
-  * the row's argument list drives the arity check, the type check and the
-  * literal guards, and the builder returns a [[KernelCall]]. The other
-  * rows keep their own expression classes: the TypedImperativeAggregate
-  * sketches (an aggregation buffer is not a static call), the kernels with
-  * hand-written codegen loops (DotProduct, LshBuckets, PqAdc, PqAdcDirect,
-  * PqEncode), and the kernels whose matcher, trie or model is built once
-  * per expression from literal arguments (AhoCorasick, Bpe, LangId,
-  * SubwordCount, WordSetCount, UnigramSegment).
+  * A kernel is a compute function plus one [[kernel]] row here and its
+  * one-line static entry point below, named after the SQL function: the
+  * row's argument list drives the arity check, the type check and the
+  * literal guards, and the builder returns a [[KernelCall]]. 31 of the 35
+  * rows are kernels. A kernel that needs a matcher, trie or model (Aho-
+  * Corasick, BPE, unigram, subword, word sets) declares its literal
+  * arguments `Hidden` and builds a [[Matcher]] from them in `more`; the
+  * matcher reaches its entry point as a hidden argument. Only the four
+  * TypedImperativeAggregate sketches keep their own expression classes,
+  * because an aggregation buffer is not a static call.
   */
 object GraftFunctions {
   val DotLongName = "graft_dot_long"
@@ -77,18 +88,20 @@ object GraftFunctions {
   }
 
   /** A kernel argument: a shown child of one of the types `ts` (the first
-    * unless the child's type is another), or a literal int in [lo, hi] — a
-    * child when `shown`, else a constant of the kernel call.
+    * unless the child's type is another), a literal int in [lo, hi] — a
+    * child when `shown`, else a constant of the kernel call — or a
+    * `Hidden` literal that only the row's `more` reads.
     */
   private sealed trait Arg
   private final case class Col(ts: DataType*) extends Arg
   private final case class IntLit(lo: Int, hi: Int = Int.MaxValue,
                                   shown: Boolean = true) extends Arg
+  private case object Hidden extends Arg
 
-  /** A [[KernelCall]] row; `more` derives further constants (and makes
-    * cross-argument literal checks) from the shown children. The analyzer
-    * calls a builder only once its arguments are resolved, so a row may
-    * read their types.
+  /** A [[KernelCall]] row; `more` derives further constants (a matcher,
+    * cross-argument literal checks) from all the call's arguments. The
+    * analyzer calls a builder only once its arguments are resolved, so a
+    * row may read their types.
     */
   private def kernel(name: String, out: DataType,
                      returnsNull: Boolean = false,
@@ -104,14 +117,15 @@ object GraftFunctions {
         case ((_, IntLit(_, _, true)), e) => (IntegerType, e)
       }
       KernelCall(name, out, shown.map(_._1), shown.map(_._2),
-        lits.collect { case (false, v) => v } ++ more(shown.map(_._2)),
-        returnsNull)
+        lits.collect { case (false, v) => v } ++ more(children), returnsNull)
     })
 
   private val Str = Col(StringType)
   private val Longs = Col(ArrayType(LongType))
+  private val Codebook = Col(ArrayType(ArrayType(ArrayType(LongType))))
   private val FloatsOrDoubles = Col(ArrayType(FloatType), ArrayType(DoubleType))
   private val LongArray = ArrayType(LongType, containsNull = false)
+  private val StringArray = ArrayType(StringType, containsNull = false)
 
   /** Same type up to array nullability (the alternatives a Col offers). */
   private def sameElements(t: DataType, actual: DataType): Boolean =
@@ -126,8 +140,6 @@ object GraftFunctions {
   }
 
   val all: Seq[Fn] = Seq(
-    Fn(DotLongName, classOf[DotProductLong], Seq("vec_a", "vec_b"),
-      c => DotProductLong(c(0), c(1))),
     Fn(MisraGriesName, classOf[MisraGriesSketch], Seq("column", "k"),
       MisraGriesSketch.fromChildren),
     Fn(KmvSketch.Name, classOf[KmvSketch], Seq("column", "k"),
@@ -136,28 +148,27 @@ object GraftFunctions {
       CountMinSketch.fromChildren),
     Fn(VectorSumLong.Name, classOf[VectorSumLong], Seq("vec"),
       c => VectorSumLong(c(0))),
-    Fn(LshBucketsName, classOf[LshBucketsLong], Seq("vec", "planes", "nBands"),
-      c => LshBucketsLong(c(0), c(1), c(2))),
-    Fn(PqAdcName, classOf[PqAdcLong], Seq("codes", "lut"),
-      c => PqAdcLong(c(0), c(1))),
-    Fn(PqAdcDirectName, classOf[PqAdcDirectLong],
-      Seq("codes", "centroids", "query"),
-      c => PqAdcDirectLong(c(0), c(1), c(2))),
-    Fn(PqEncodeName, classOf[PqEncodeLong], Seq("vec", "centroids"),
-      c => PqEncodeLong(c(0), c(1))),
-    Fn(AhoCorasickCount.Name, classOf[AhoCorasickCount],
-      Seq("text", "patterns array"), AhoCorasickCount.fromChildren),
-    Fn(SubwordCount.Name, classOf[SubwordCount], Seq("text", "vocab array"),
-      SubwordCount.fromChildren),
-    Fn(BpeSegment.Name, classOf[BpeSegment], Seq("word", "merges array"),
-      BpeSegment.fromChildren),
-    Fn(UnigramSegment.Name, classOf[UnigramSegment],
-      Seq("word", "pieces array", "scores array"), UnigramSegment.fromChildren),
-    Fn(WordSetCountLong.Name, classOf[WordSetCountLong],
-      Seq("text", "words array"), WordSetCountLong.fromChildren),
-    Fn(LangIdLong.Name, classOf[LangIdLong],
-      Seq("text", "labels array", "sets array<array>"), LangIdLong.fromChildren),
 
+    kernel(DotLongName, LongType)("vec_a" -> Longs, "vec_b" -> Longs),
+    kernel(LshBucketsName, LongArray)(
+      "vec" -> Longs, "planes" -> Longs, "nPlanes" -> IntLit(1, 63)),
+    kernel(PqAdcName, LongType)(
+      "codes" -> Longs, "lut" -> Col(ArrayType(ArrayType(LongType)))),
+    kernel(PqAdcDirectName, LongType)(
+      "query" -> Longs, "codes" -> Longs, "centroids" -> Codebook),
+    kernel(PqEncodeName, LongArray)("vec" -> Longs, "centroids" -> Codebook),
+    kernel(AhoCorasickCount.Name, LongArray, more = AhoCorasickCount.matcher)(
+      "text" -> Str, "patterns array" -> Hidden),
+    kernel(SubwordCount.Name, LongType, more = SubwordCount.matcher)(
+      "text" -> Str, "vocab array" -> Hidden),
+    kernel(BpeSegment.Name, StringArray, more = BpeSegment.matcher)(
+      "word" -> Str, "merges array" -> Hidden),
+    kernel(UnigramSegment.Name, StringArray, more = UnigramSegment.matcher)(
+      "word" -> Str, "pieces array" -> Hidden, "scores array" -> Hidden),
+    kernel(WordSetCountLong.Name, LongType, more = WordSetCountLong.matcher)(
+      "text" -> Str, "words array" -> Hidden),
+    kernel(LangIdLong.Name, StringType, more = LangIdLong.matcher)(
+      "text" -> Str, "labels array" -> Hidden, "sets array<array>" -> Hidden),
     kernel(LnFpFunctions.LnMicroName, LongType)(
       "p" -> Col(LongType), "q" -> Col(LongType)),
     kernel(LnFpFunctions.GumbelMicroName, LongType)("hash64" -> Col(LongType)),
@@ -195,7 +206,7 @@ object GraftFunctions {
     kernel(PqLutLong.Name, PqLutLong.OutType, returnsNull = true,
       more = PqLutLong.checkShape)(
       "query_vec" -> Longs,
-      "codebook" -> Col(ArrayType(ArrayType(ArrayType(LongType)))),
+      "codebook" -> Codebook,
       "dim" -> IntLit(1), "m" -> IntLit(1)),
     kernel(QuantizeLong.Name, ArrayType(LongType), returnsNull = true,
       more = c => Seq(isFloatArray(c(0))))(
@@ -249,6 +260,27 @@ object GraftFunctions {
   def graft_sq8_codes(vec: ArrayData, lo: ArrayData, hi: ArrayData,
                       isFloat: Boolean): ArrayData =
     Sq8CodesLong.compute(vec, lo, hi, isFloat)
+  def graft_dot_long(a: ArrayData, b: ArrayData): Long = DotProductLong.dot(a, b)
+  def graft_lsh_buckets(vec: ArrayData, planes: ArrayData, np: Int): ArrayData =
+    LshBucketsLong.buckets(vec, planes, np)
+  def graft_pq_adc(codes: ArrayData, lut: ArrayData): Long =
+    PqAdcLong.adc(codes, lut)
+  def graft_pq_adc_direct(qv: ArrayData, codes: ArrayData, cb: ArrayData): Long =
+    PqAdcDirectLong.adc(qv, codes, cb)
+  def graft_pq_encode(vec: ArrayData, cb: ArrayData): ArrayData =
+    PqEncodeLong.encode(vec, cb)
+  def graft_aho_corasick(text: UTF8String, a: AhoCorasickCount.Automaton): ArrayData =
+    a.countsArray(text.toString)
+  def graft_subword_count(text: UTF8String, v: SubwordCount.Vocab): Long =
+    v.countDocument(text.toString)
+  def graft_bpe_segment(word: UTF8String, a: BpeSegment.Applier): ArrayData =
+    a.segment(word.toString)
+  def graft_unigram_segment(word: UTF8String, m: UnigramSegment.Model): ArrayData =
+    m.segment(word.toString)
+  def graft_word_set_count(text: UTF8String, m: LangIdLong.MultiMatcher): Long =
+    m.scores(text)(0)
+  def graft_lang_id(text: UTF8String, m: LangIdLong.MultiMatcher): UTF8String =
+    m.pick(text)
 
   /** Registers every table row into `spark`; idempotent per session. */
   def register(spark: SparkSession): Unit = {
@@ -290,16 +322,16 @@ object GraftFunctions {
   def lshBuckets(vec: Column, planes: Column, nPlanes: Int): Column =
     call(LshBucketsName, vec, planes, lit(nPlanes))
 
-  /** PQ asymmetric distance: sum_m lut[m][codes[m]] (native codegen). */
+  /** PQ asymmetric distance: sum_m lut[m][codes[m]]. */
   def pqAdc(codes: Column, lut: Column): Column = call(PqAdcName, codes, lut)
 
   /** PQ encode: codes[mm] = argmin_k d2(vec_sub_mm, cb[mm][k]), ties ->
-    * lowest code (native codegen).
+    * lowest code.
     */
   def pqEncode(vec: Column, cb: Column): Column = call(PqEncodeName, vec, cb)
 
   /** PQ asymmetric distance direct from (query vector, codes, codebook):
-    * sum_mm sum_j (qv[mm*sub+j] - cb[mm][codes[mm]][j])^2 (native codegen).
+    * sum_mm sum_j (qv[mm*sub+j] - cb[mm][codes[mm]][j])^2.
     */
   def pqAdcDirect(qv: Column, codes: Column, cb: Column): Column =
     call(PqAdcDirectName, qv, codes, cb)

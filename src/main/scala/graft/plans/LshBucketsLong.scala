@@ -1,57 +1,37 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** All LSH sign-bucket ids of a quantized vector, over every hyperplane
-  * table, in ONE codegen'd pass: `lsh_buckets(vec, planes, nPlanes)` where
-  * `planes` is the flat concatenation of nTables x nPlanes plane vectors
-  * (each of the vector's dimension) and the result is `array<long>` with one
-  * bucket id per table — bit m of table t's bucket is set iff
-  * dot(vec, plane[t][m]) > 0.
+  * table, in ONE pass: `lsh_buckets(vec, planes, nPlanes)` where `planes`
+  * is the flat concatenation of nTables x nPlanes plane vectors (each of
+  * the vector's dimension) and the result is `array<long>` with one bucket
+  * id per table — bit m of table t's bucket is set iff
+  * dot(vec, plane[t][m]) > 0. `nPlanes` is a checked literal in [1, 63].
   *
   * Why native: the higher-order-function form
   * (`transform(planesByTable, tp => aggregate(tp, 0L, ...))`) evaluates its
   * lambdas INTERPRETED, per row x table x plane — measured 2.2x wall-clock
   * regression on the s2_knn_lsh index build at sf0.1, the same trap
-  * DotProductLong documents (~50x on raw dots). This expression is one tight
+  * DotProductLong documents (~50x on raw dots). This is one tight
   * primitive loop over the broadcast-literal plane array: no allocation per
-  * plane, no virtual dispatch, and it participates in whole-stage codegen.
-  * The plane array is a single complex-typed literal, which codegen loads as
-  * one reference object — janino compiles a constant-size method regardless
-  * of nTables x nPlanes x dim (inlining per-plane literals would not).
+  * plane, no virtual dispatch. The plane array is a single complex-typed
+  * literal, which codegen loads as one reference object, so the generated
+  * method stays constant-size regardless of nTables x nPlanes x dim.
   */
-case class LshBucketsLong(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
+object LshBucketsLong {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _), IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (array<bigint>, array<bigint>, int), " +
-            s"got (${a.simpleString}, ${b.simpleString}, ${c.simpleString})")
-    }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_lsh_buckets"
-
-  // A plane-table length that doesn't tile (nPlanes x dim) must surface as an
-  // error, not silently mis-bucket — same fail-loud stance as DotProductLong.
-  override def nullSafeEval(vecAny: Any, planesAny: Any, npAny: Any): Any = {
-    val v = vecAny.asInstanceOf[ArrayData]
-    val p = planesAny.asInstanceOf[ArrayData]
-    val np = npAny.asInstanceOf[Int]
+  // A plane-table length that doesn't tile (nPlanes x dim) must surface as
+  // an error, not silently mis-bucket — same fail-loud stance as
+  // DotProductLong.
+  def buckets(v: ArrayData, p: ArrayData, np: Int): ArrayData = {
     val dim = v.numElements()
     val block = np * dim
-    if (np <= 0 || np > 63 || dim == 0 || p.numElements() % block != 0)
+    if (dim == 0 || p.numElements() % block != 0)
       throw new IllegalArgumentException(
-        s"$prettyName: planes length ${p.numElements()} does not tile " +
-          s"nPlanes=$np x dim=$dim")
+        s"${GraftFunctions.LshBucketsName}: planes length ${p.numElements()} " +
+          s"does not tile nPlanes=$np x dim=$dim")
     val nTables = p.numElements() / block
     val out = new Array[Long](nTables)
     var t = 0
@@ -70,50 +50,6 @@ case class LshBucketsLong(first: Expression, second: Expression, third: Expressi
       out(t) = bucket
       t += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, p, np) => {
-      val dim = ctx.freshName("dim")
-      val block = ctx.freshName("block")
-      val nT = ctx.freshName("nT")
-      val out = ctx.freshName("out")
-      val t = ctx.freshName("t")
-      val m = ctx.freshName("m")
-      val j = ctx.freshName("j")
-      val off = ctx.freshName("off")
-      val acc = ctx.freshName("acc")
-      val bucket = ctx.freshName("bucket")
-      val gad = classOf[GenericArrayData].getName
-      s"""
-         |int $dim = $v.numElements();
-         |int $block = $np * $dim;
-         |if ($np <= 0 || $np > 63 || $dim == 0 || $p.numElements() % $block != 0) {
-         |  throw new IllegalArgumentException(
-         |    "graft_lsh_buckets: planes length " + $p.numElements() +
-         |    " does not tile nPlanes=" + $np + " x dim=" + $dim);
-         |}
-         |int $nT = $p.numElements() / $block;
-         |long[] $out = new long[$nT];
-         |int $off = 0;
-         |for (int $t = 0; $t < $nT; $t++) {
-         |  long $bucket = 0L;
-         |  for (int $m = 0; $m < $np; $m++) {
-         |    long $acc = 0L;
-         |    for (int $j = 0; $j < $dim; $j++) {
-         |      $acc += $v.getLong($j) * $p.getLong($off + $j);
-         |    }
-         |    if ($acc > 0) $bucket |= (1L << $m);
-         |    $off += $dim;
-         |  }
-         |  $out[$t] = $bucket;
-         |}
-         |${ev.value} = new $gad($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }

@@ -41,17 +41,8 @@ object NgramRowsLong {
     // spanning base array is owned by this string alone — either way `b`
     // is private and immutable, so the gram slices below can wrap it
     val b = text.getBytes
-    var nWords = 1
-    var i = 0
-    while (i < b.length) { if (b(i) == ' '.toByte) nWords += 1; i += 1 }
-    val starts = new Array[Int](nWords + 1)
-    var w = 1
-    i = 0
-    while (i < b.length) {
-      if (b(i) == ' '.toByte) { starts(w) = i + 1; w += 1 }
-      i += 1
-    }
-    starts(nWords) = b.length + 1
+    val starts = WordWindowsLong.wordStarts(b)
+    val nWords = starts.length - 1
     val ords = math.min(maxOrder, nWords)
     var total = 0
     var n = 1

@@ -1,14 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** PQ asymmetric distance DIRECTLY from (query vector, candidate codes,
-  * codebook): `sum_mm sum_j (qv[mm*sub + j] - cb[mm][codes[mm]][j])^2`,
-  * as a native codegen'd expression.
+  * codebook): `sum_mm sum_j (qv[mm*sub + j] - cb[mm][codes[mm]][j])^2` —
+  * the kernel behind graft_pq_adc_direct.
   *
   * This is the self-search scoring kernel: every corpus row is a query, so
   * the probe side ships its dim-long vector through the per-cell shuffle
@@ -19,69 +15,39 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * cb[mm][c])))` evaluates its lambdas interpreted and allocates an
   * intermediate slice + array per pair; at m=16/k=256 over ~1M probe pairs
   * that interpreted traversal was 30x the whole-plan budget (round-10 bench:
-  * s9 118.8 s vs 3.7 s baseline). This expression is m x sub primitive
-  * loads, subtracts, and multiply-adds in one generated loop — identical
-  * exact integers (subD2's dot identity a.a + b.b - 2a.b IS sum (a-b)^2),
-  * so every oracle hash-matches unchanged.
+  * s9 118.8 s vs 3.7 s baseline). This kernel is m x sub primitive loads,
+  * subtracts, and multiply-adds in one loop — identical exact integers
+  * (subD2's dot identity a.a + b.b - 2a.b IS sum (a-b)^2), so every oracle
+  * hash-matches unchanged.
   *
-  * Malformed inputs throw in both eval paths (the DotProductLong
-  * discipline): a dimension mismatch, out-of-range code, or null slot must
-  * surface as an error, not a plausible-but-wrong distance.
+  * Malformed inputs throw (the DotProductLong discipline): a dimension
+  * mismatch, out-of-range code, or null slot must surface as an error, not
+  * a plausible-but-wrong distance.
   */
-case class PqAdcDirectLong(first: Expression, second: Expression,
-                           third: Expression) extends TernaryExpression {
+object PqAdcDirectLong {
+  private def fail(msg: String): Nothing =
+    throw new IllegalArgumentException(s"${GraftFunctions.PqAdcDirectName}: $msg")
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val qvOk = first.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    val codesOk = second.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    val cbOk = third.dataType match {
-      case ArrayType(ArrayType(ArrayType(LongType, _), _), _) => true
-      case _ => false
-    }
-    if (qvOk && codesOk && cbOk) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<bigint>, array<bigint>, " +
-        s"array<array<array<bigint>>>), got (${first.dataType.simpleString}, " +
-        s"${second.dataType.simpleString}, ${third.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_pq_adc_direct"
-
-  override def nullSafeEval(q: Any, c: Any, b: Any): Any = {
-    val qv = q.asInstanceOf[ArrayData]
-    val codes = c.asInstanceOf[ArrayData]
-    val cb = b.asInstanceOf[ArrayData]
+  def adc(qv: ArrayData, codes: ArrayData, cb: ArrayData): Long = {
     val m = codes.numElements()
     val dim = qv.numElements()
     if (m != cb.numElements() || m == 0 || dim % m != 0)
-      throw new IllegalArgumentException(
-        s"$prettyName: shape mismatch (dim=$dim, $m codes, ${cb.numElements()} codebook subspaces)")
+      fail(s"shape mismatch (dim=$dim, $m codes, ${cb.numElements()} codebook subspaces)")
     val sub = dim / m
     var acc = 0L
     var mm = 0
     while (mm < m) {
       if (codes.isNullAt(mm) || cb.isNullAt(mm))
-        throw new IllegalArgumentException(
-          s"$prettyName: null ${if (codes.isNullAt(mm)) "code" else "codebook row"} in subspace $mm")
+        fail(s"null ${if (codes.isNullAt(mm)) "code" else "codebook row"} in subspace $mm")
       val book = cb.getArray(mm)
       val code = codes.getLong(mm)
       if (code < 0 || code >= book.numElements())
-        throw new IllegalArgumentException(
-          s"$prettyName: code $code out of range [0, ${book.numElements()}) in subspace $mm")
+        fail(s"code $code out of range [0, ${book.numElements()}) in subspace $mm")
       if (book.isNullAt(code.toInt))
-        throw new IllegalArgumentException(
-          s"$prettyName: null codebook entry $code in subspace $mm")
+        fail(s"null codebook entry $code in subspace $mm")
       val cv = book.getArray(code.toInt)
       if (cv.numElements() != sub)
-        throw new IllegalArgumentException(
-          s"$prettyName: codebook subvector length ${cv.numElements()} != $sub in subspace $mm")
+        fail(s"codebook subvector length ${cv.numElements()} != $sub in subspace $mm")
       var j = 0
       val base = mm * sub
       while (j < sub) {
@@ -93,60 +59,4 @@ case class PqAdcDirectLong(first: Expression, second: Expression,
     }
     acc
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (q, c, b) => {
-      val m = ctx.freshName("m")
-      val dim = ctx.freshName("dim")
-      val sub = ctx.freshName("sub")
-      val acc = ctx.freshName("acc")
-      val mm = ctx.freshName("mm")
-      val j = ctx.freshName("j")
-      val base = ctx.freshName("base")
-      val book = ctx.freshName("book")
-      val code = ctx.freshName("code")
-      val cv = ctx.freshName("cv")
-      val d = ctx.freshName("d")
-      s"""
-         |int $m = $c.numElements();
-         |int $dim = $q.numElements();
-         |if ($m != $b.numElements() || $m == 0 || $dim % $m != 0) {
-         |  throw new IllegalArgumentException(
-         |    "graft_pq_adc_direct: shape mismatch (dim=" + $dim + ", " + $m +
-         |      " codes, " + $b.numElements() + " codebook subspaces)");
-         |}
-         |int $sub = $dim / $m;
-         |long $acc = 0L;
-         |for (int $mm = 0; $mm < $m; $mm++) {
-         |  if ($c.isNullAt($mm) || $b.isNullAt($mm)) {
-         |    throw new IllegalArgumentException(
-         |      "graft_pq_adc_direct: null " +
-         |        ($c.isNullAt($mm) ? "code" : "codebook row") + " in subspace " + $mm);
-         |  }
-         |  org.apache.spark.sql.catalyst.util.ArrayData $book = $b.getArray($mm);
-         |  long $code = $c.getLong($mm);
-         |  if ($code < 0 || $code >= $book.numElements() || $book.isNullAt((int) $code)) {
-         |    throw new IllegalArgumentException(
-         |      "graft_pq_adc_direct: bad code " + $code + " in subspace " + $mm);
-         |  }
-         |  org.apache.spark.sql.catalyst.util.ArrayData $cv = $book.getArray((int) $code);
-         |  if ($cv.numElements() != $sub) {
-         |    throw new IllegalArgumentException(
-         |      "graft_pq_adc_direct: codebook subvector length " + $cv.numElements() +
-         |        " != " + $sub + " in subspace " + $mm);
-         |  }
-         |  int $base = $mm * $sub;
-         |  for (int $j = 0; $j < $sub; $j++) {
-         |    long $d = $q.getLong($base + $j) - $cv.getLong($j);
-         |    $acc += $d * $d;
-         |  }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }

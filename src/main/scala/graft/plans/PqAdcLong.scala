@@ -1,52 +1,29 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** PQ asymmetric-distance lookup: `sum_m lut[m][codes[m]]` over a candidate's
-  * code array and a query's per-subspace distance table, as a native
-  * codegen'd expression.
+/** PQ asymmetric-distance lookup: `sum_m lut[m][codes[m]]` over a
+  * candidate's code array and a query's per-subspace distance table — the
+  * kernel behind graft_pq_adc.
   *
   * This is the innermost loop of PQ-ADC search — it runs once per
   * (query, candidate) pair, i.e. O(|queries| x corpus) times. The
   * higher-order form `aggregate(zip_with(codes, lut, (c, row) => get(row,
   * c)), 0L, _+_)` evaluates its lambdas interpreted and materializes an
   * intermediate array per pair (the same trap DotProductLong documents);
-  * this expression is m primitive loads and adds with no allocation, inside
-  * whole-stage codegen.
+  * this is m primitive loads and adds with no allocation.
   *
-  * Out-of-range codes throw (both eval paths): a corrupted code must surface
-  * as an error, not a plausible-but-wrong distance.
+  * Out-of-range codes throw: a corrupted code must surface as an error,
+  * not a plausible-but-wrong distance.
   */
-case class PqAdcLong(left: Expression, right: Expression)
-    extends BinaryExpression {
+object PqAdcLong {
+  private def fail(msg: String): Nothing =
+    throw new IllegalArgumentException(s"${GraftFunctions.PqAdcName}: $msg")
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = left.dataType.isInstanceOf[ArrayType] &&
-      left.dataType.asInstanceOf[ArrayType].elementType == LongType &&
-      (right.dataType match {
-        case ArrayType(ArrayType(LongType, _), _) => true
-        case _ => false
-      })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<bigint>, array<array<bigint>>), " +
-        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_pq_adc"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val codes = a.asInstanceOf[ArrayData]
-    val lut = b.asInstanceOf[ArrayData]
+  def adc(codes: ArrayData, lut: ArrayData): Long = {
     val m = codes.numElements()
     if (m != lut.numElements())
-      throw new IllegalArgumentException(
-        s"$prettyName: subspace count mismatch ($m codes vs ${lut.numElements()} LUT rows)")
+      fail(s"subspace count mismatch ($m codes vs ${lut.numElements()} LUT rows)")
     var acc = 0L
     var i = 0
     while (i < m) {
@@ -55,54 +32,14 @@ case class PqAdcLong(left: Expression, right: Expression)
       // ACTUAL null must still fail loud, not read a stale primitive slot
       // (codes) or NPE opaquely (LUT row)
       if (codes.isNullAt(i) || lut.isNullAt(i))
-        throw new IllegalArgumentException(
-          s"$prettyName: null ${if (codes.isNullAt(i)) "code" else "LUT row"} in subspace $i")
+        fail(s"null ${if (codes.isNullAt(i)) "code" else "LUT row"} in subspace $i")
       val row = lut.getArray(i)
       val c = codes.getLong(i)
       if (c < 0 || c >= row.numElements())
-        throw new IllegalArgumentException(
-          s"$prettyName: code $c out of range [0, ${row.numElements()}) in subspace $i")
+        fail(s"code $c out of range [0, ${row.numElements()}) in subspace $i")
       acc += row.getLong(c.toInt)
       i += 1
     }
     acc
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val m = ctx.freshName("m")
-      val acc = ctx.freshName("acc")
-      val row = ctx.freshName("row")
-      val c = ctx.freshName("c")
-      s"""
-         |int $m = $a.numElements();
-         |if ($m != $b.numElements()) {
-         |  throw new IllegalArgumentException(
-         |    "graft_pq_adc: subspace count mismatch (" + $m + " codes vs " +
-         |      $b.numElements() + " LUT rows)");
-         |}
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $m; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) {
-         |    throw new IllegalArgumentException(
-         |      "graft_pq_adc: null " + ($a.isNullAt($i) ? "code" : "LUT row") +
-         |        " in subspace " + $i);
-         |  }
-         |  org.apache.spark.sql.catalyst.util.ArrayData $row = $b.getArray($i);
-         |  long $c = $a.getLong($i);
-         |  if ($c < 0 || $c >= $row.numElements()) {
-         |    throw new IllegalArgumentException(
-         |      "graft_pq_adc: code " + $c + " out of range [0, " +
-         |        $row.numElements() + ") in subspace " + $i);
-         |  }
-         |  $acc += $row.getLong((int) $c);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

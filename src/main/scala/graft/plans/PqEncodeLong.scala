@@ -1,82 +1,54 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** PQ encode: per subspace the argmin-squared-L2 codebook entry (ties ->
   * lowest code), `codes[mm] = argmin_k sum_j (vec[mm*sub+j] - cb[mm][k][j])^2`,
-  * as a native codegen'd expression returning `array<bigint>` of length m.
+  * returning `array<bigint>` of length m — the kernel behind
+  * graft_pq_encode.
   *
   * Encoding runs once per corpus row but scans the whole codebook per row:
   * N x m x k subvector distances (8.2M at N=2000, m=16, k=256). The
   * higher-order form — `transform(sequence(0, m-1), mm => array_min(
   * transform(cb[mm], (c, kk) => struct(subD2(slice(vec, ...), c), kk)))("k")`
   * — pays an interpreted lambda dispatch, a slice allocation, and a struct
-  * allocation per (row, subspace, entry); this expression is a tight
-  * generated triple loop of primitive loads and multiply-adds. Identical
-  * exact integers and the same lowest-code tie break (strict less-than while
-  * scanning k ascending), so every oracle hash-matches unchanged.
+  * allocation per (row, subspace, entry); this kernel is a tight triple
+  * loop of primitive loads and multiply-adds. Identical exact integers and
+  * the same lowest-code tie break (strict less-than while scanning k
+  * ascending), so every oracle hash-matches unchanged.
   *
-  * Malformed inputs throw in both eval paths (the DotProductLong
-  * discipline): dimension mismatches and null slots surface as errors, not
-  * plausible-but-wrong codes.
+  * Malformed inputs throw (the DotProductLong discipline): dimension
+  * mismatches and null slots surface as errors, not plausible-but-wrong
+  * codes.
   */
-case class PqEncodeLong(left: Expression, right: Expression)
-    extends BinaryExpression {
+object PqEncodeLong {
+  private def fail(msg: String): Nothing =
+    throw new IllegalArgumentException(s"${GraftFunctions.PqEncodeName}: $msg")
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val vecOk = left.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    val cbOk = right.dataType match {
-      case ArrayType(ArrayType(ArrayType(LongType, _), _), _) => true
-      case _ => false
-    }
-    if (vecOk && cbOk) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (array<bigint>, array<array<array<bigint>>>), " +
-        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_pq_encode"
-
-  override def nullSafeEval(v: Any, b: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
-    val cb = b.asInstanceOf[ArrayData]
+  def encode(vec: ArrayData, cb: ArrayData): ArrayData = {
     val m = cb.numElements()
     val dim = vec.numElements()
     if (m == 0 || dim % m != 0)
-      throw new IllegalArgumentException(
-        s"$prettyName: shape mismatch (dim=$dim, $m codebook subspaces)")
+      fail(s"shape mismatch (dim=$dim, $m codebook subspaces)")
     val sub = dim / m
     val codes = new Array[Long](m)
     var mm = 0
     while (mm < m) {
-      if (cb.isNullAt(mm))
-        throw new IllegalArgumentException(
-          s"$prettyName: null codebook row in subspace $mm")
+      if (cb.isNullAt(mm)) fail(s"null codebook row in subspace $mm")
       val book = cb.getArray(mm)
       val k = book.numElements()
-      if (k == 0)
-        throw new IllegalArgumentException(
-          s"$prettyName: empty codebook in subspace $mm")
+      if (k == 0) fail(s"empty codebook in subspace $mm")
       val base = mm * sub
       var best = 0L
       var bestD2 = Long.MaxValue
       var kk = 0
       while (kk < k) {
         if (book.isNullAt(kk))
-          throw new IllegalArgumentException(
-            s"$prettyName: null codebook entry $kk in subspace $mm")
+          fail(s"null codebook entry $kk in subspace $mm")
         val cv = book.getArray(kk)
         if (cv.numElements() != sub)
-          throw new IllegalArgumentException(
-            s"$prettyName: codebook subvector length ${cv.numElements()} != $sub in subspace $mm")
+          fail(s"codebook subvector length ${cv.numElements()} != $sub in subspace $mm")
         var d2 = 0L
         var j = 0
         while (j < sub) {
@@ -90,77 +62,6 @@ case class PqEncodeLong(left: Expression, right: Expression)
       codes(mm) = best
       mm += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(codes)
+    UnsafeArrayData.fromPrimitiveArray(codes)
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, b) => {
-      val m = ctx.freshName("m")
-      val dim = ctx.freshName("dim")
-      val sub = ctx.freshName("sub")
-      val codes = ctx.freshName("codes")
-      val mm = ctx.freshName("mm")
-      val kk = ctx.freshName("kk")
-      val j = ctx.freshName("j")
-      val base = ctx.freshName("base")
-      val book = ctx.freshName("book")
-      val nK = ctx.freshName("nK")
-      val cv = ctx.freshName("cv")
-      val best = ctx.freshName("best")
-      val bestD2 = ctx.freshName("bestD2")
-      val d2 = ctx.freshName("d2")
-      val d = ctx.freshName("d")
-      s"""
-         |int $m = $b.numElements();
-         |int $dim = $v.numElements();
-         |if ($m == 0 || $dim % $m != 0) {
-         |  throw new IllegalArgumentException(
-         |    "graft_pq_encode: shape mismatch (dim=" + $dim + ", " + $m +
-         |      " codebook subspaces)");
-         |}
-         |int $sub = $dim / $m;
-         |long[] $codes = new long[$m];
-         |for (int $mm = 0; $mm < $m; $mm++) {
-         |  if ($b.isNullAt($mm)) {
-         |    throw new IllegalArgumentException(
-         |      "graft_pq_encode: null codebook row in subspace " + $mm);
-         |  }
-         |  org.apache.spark.sql.catalyst.util.ArrayData $book = $b.getArray($mm);
-         |  int $nK = $book.numElements();
-         |  if ($nK == 0) {
-         |    throw new IllegalArgumentException(
-         |      "graft_pq_encode: empty codebook in subspace " + $mm);
-         |  }
-         |  int $base = $mm * $sub;
-         |  long $best = 0L;
-         |  long $bestD2 = Long.MAX_VALUE;
-         |  for (int $kk = 0; $kk < $nK; $kk++) {
-         |    if ($book.isNullAt($kk)) {
-         |      throw new IllegalArgumentException(
-         |        "graft_pq_encode: null codebook entry " + $kk + " in subspace " + $mm);
-         |    }
-         |    org.apache.spark.sql.catalyst.util.ArrayData $cv = $book.getArray($kk);
-         |    if ($cv.numElements() != $sub) {
-         |      throw new IllegalArgumentException(
-         |        "graft_pq_encode: codebook subvector length " + $cv.numElements() +
-         |          " != " + $sub + " in subspace " + $mm);
-         |    }
-         |    long $d2 = 0L;
-         |    for (int $j = 0; $j < $sub; $j++) {
-         |      long $d = $v.getLong($base + $j) - $cv.getLong($j);
-         |      $d2 += $d * $d;
-         |    }
-         |    if ($d2 < $bestD2) { $bestD2 = $d2; $best = (long) $kk; }
-         |  }
-         |  $codes[$mm] = $best;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray($codes);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

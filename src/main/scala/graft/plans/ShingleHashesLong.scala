@@ -44,20 +44,9 @@ object ShingleHashesLong {
   def compute(text: UTF8String, n: Int, nBytes: Int,
               distinct: Boolean): ArrayData = {
     val b = text.getBytes
-    // word start offsets under split(text, " "): empties kept
-    var nWords = 1
-    var i = 0
-    while (i < b.length) { if (b(i) == ' '.toByte) nWords += 1; i += 1 }
-    if (nWords < n) return Empty
-    val starts = new Array[Int](nWords + 1)
-    var w = 1
-    i = 0
-    while (i < b.length) {
-      if (b(i) == ' '.toByte) { starts(w) = i + 1; w += 1 }
-      i += 1
-    }
-    starts(nWords) = b.length + 1 // sentinel: gram end = starts(i+n) - 1
-    val nGrams = nWords - n + 1
+    val starts = WordWindowsLong.wordStarts(b)
+    val nGrams = starts.length - n
+    if (nGrams <= 0) return Empty
     if (!distinct) {
       val out = new Array[Long](nGrams)
       var g = 0

@@ -1,13 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.typedlit
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Greedy longest-match subword segmentation count (the wordpiece/BPE
   * inference step): split on single spaces, then segment each word greedily
@@ -17,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The vocabulary is a plan-time constant (corpus-trained by
   * TextOps.subwordVocab — dimension-sized, like a broadcast dim or IVF
-  * centroid set), so the expression runs per-row inside the scan with no
+  * centroid set), so the kernel runs per-row inside the scan with no
   * shuffle and no lookup join: exactly where tokenization belongs in a
   * 100 TB pre-training pipeline (count tokens while the text is in cache,
   * not in a later pass).
@@ -28,40 +23,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * piece (the [UNK] convention); with a corpus-trained vocab this never
   * fires on the training corpus itself (all its characters are pieces).
   */
-case class SubwordCount(child: Expression, vocab: Seq[String])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (vocab.isEmpty) TypeCheckResult.TypeCheckFailure("vocab must be non-empty")
-    else child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName needs string input, got ${other.simpleString}")
-    }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_subword_count"
-
-  @transient private lazy val matcher = new SubwordCount.Matcher(vocab)
-
-  override def nullSafeEval(input: Any): Any =
-    matcher.countDocument(input.asInstanceOf[UTF8String].toString)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the matcher is per-expression state; reference it from generated code
-    val ref = ctx.addReferenceObj("matcher", matcher, classOf[SubwordCount.Matcher].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.countDocument($c.toString())")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object SubwordCount {
 
   /** Longest-first greedy matcher over pieces grouped by length. */
-  final class Matcher(vocab: Seq[String]) extends Serializable {
-    private val byLen: Array[java.util.HashSet[String]] = {
+  final case class Vocab(vocab: Seq[String]) extends Matcher {
+    @transient private lazy val byLen: Array[java.util.HashSet[String]] = {
       val maxLen = vocab.map(_.length).max
       val a = Array.fill(maxLen + 1)(new java.util.HashSet[String]())
       vocab.foreach(p => if (p.nonEmpty) a(p.length).add(p))
@@ -69,6 +35,7 @@ object SubwordCount {
     }
 
     def countWord(w: String): Long = {
+      val byLen = this.byLen
       var pos = 0
       var n = 0L
       while (pos < w.length) {
@@ -103,9 +70,11 @@ object SubwordCount {
 
   val Name = "graft_subword_count"
 
-  val fromChildren: Seq[Expression] => Expression = children => {
+  /** The row's matcher, from the literal vocab. */
+  def matcher(children: Seq[Expression]): Seq[Any] = {
     val vocab = Builders.litStrings(Name, "vocab argument", children(1))
-    SubwordCount(children(0), vocab)
+    require(vocab.nonEmpty, s"$Name needs a non-empty vocab")
+    Seq(Vocab(vocab))
   }
 
   /** Column API. `vocab` is embedded in the plan (a per-query constant). */

@@ -1,20 +1,17 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Viterbi segmentation of one word under a unigram-LM piece vocabulary —
   * the E-step kernel of [[graft.operators.TextOps.unigramLmVocab]] (Kudo
   * 2018's unigram tokenizer, hard-EM variant). The model rides the plan as
   * two literal arrays (pieces + integer micro-nat scores, the BpeSegment
-  * posture), so segmenting a 100 TB corpus is one codegen'd per-row scan
-  * with zero joins.
+  * posture) that build the call's [[Model]], so segmenting a 100 TB corpus
+  * is one per-row kernel call inside a codegen'd scan, with zero joins.
   *
   * DP contract (the oracle unrolls the identical recurrence in SQL, so
   * every choice below is bit-checked): dp[0] = 0; dp[i] maximizes
@@ -28,39 +25,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * corpus character, so reaching that error means the caller passed a
   * foreign vocabulary).
   */
-case class UnigramSegment(child: Expression,
-                          pieces: Seq[(String, Long)])
-  extends UnaryExpression with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName needs a string word, got ${other.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = UnigramSegment.Name
-
-  @transient private lazy val scores: java.util.HashMap[String, java.lang.Long] = {
-    val m = new java.util.HashMap[String, java.lang.Long](pieces.size * 2)
-    pieces.foreach { case (p, s) => m.put(p, java.lang.Long.valueOf(s)) }
-    m
-  }
-  @transient private lazy val maxLen: Int =
-    if (pieces.isEmpty) 0 else pieces.iterator.map(_._1.length).max
-
-  // evaluated, not codegen'd: the kernel needs the instance-bound score
-  // map; one virtual call per ROW around a tight loop is noise next to
-  // the DP itself (the BpeSegment precedent)
-  override def nullSafeEval(input: Any): Any =
-    UnigramSegment.segment(input.asInstanceOf[UTF8String].toString,
-      scores, maxLen)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object UnigramSegment {
+
+  /** The piece table: scores by piece and the longest piece length. */
+  final case class Model(pieces: Seq[(String, Long)]) extends Matcher {
+    @transient private lazy val scores: java.util.HashMap[String, java.lang.Long] = {
+      val m = new java.util.HashMap[String, java.lang.Long](pieces.size * 2)
+      pieces.foreach { case (p, s) => m.put(p, java.lang.Long.valueOf(s)) }
+      m
+    }
+    @transient private lazy val maxLen: Int =
+      if (pieces.isEmpty) 0 else pieces.iterator.map(_._1.length).max
+
+    def segment(w: String): ArrayData = UnigramSegment.segment(w, scores, maxLen)
+  }
 
   /** The per-word Viterbi kernel. */
   def segment(w: String, scores: java.util.HashMap[String, java.lang.Long],
@@ -114,14 +92,14 @@ object UnigramSegment {
 
   val Name = "graft_unigram_segment"
 
-  val fromChildren: Seq[Expression] => Expression = children => {
-    val Seq(word, piecesExpr, scoresExpr) = children
-    val ps = Builders.litStrings(Name, "pieces argument", piecesExpr)
-    val ss = Builders.litValue(Name, "scores argument", scoresExpr)
+  /** The row's matcher, from the two aligned literal arrays. */
+  def matcher(children: Seq[Expression]): Seq[Any] = {
+    val ps = Builders.litStrings(Name, "pieces argument", children(1))
+    val ss = Builders.litValue(Name, "scores argument", children(2))
       .asInstanceOf[ArrayData].toLongArray()
     require(ps.length == ss.length,
       s"$Name pieces (${ps.length}) and scores (${ss.length}) must align")
-    UnigramSegment(word, ps.zip(ss.toSeq))
+    Seq(Model(ps.zip(ss.toSeq)))
   }
 
   /** Column API: `model` rides the plan as two aligned literal arrays. */

@@ -37,18 +37,16 @@ object WordWindowsLong {
 
   private val Empty = new GenericArrayData(new Array[Any](0))
 
-  /** The per-document kernel behind graft_word_windows
-    * (n is a checked literal in [1, 8]). */
-  def compute(text: UTF8String, n: Int): GenericArrayData = {
-    // getBytes copies unless the string spans its whole base array, and a
-    // spanning base array is owned by this string alone — either way `b`
-    // is private and immutable, so the window slices below can wrap it
-    val b = text.getBytes
+  /** Where each word of `b` starts under `split(text, " ")` (empty words
+    * kept), plus a sentinel `b.length + 1`: word w spans
+    * [starts(w), starts(w + 1) - 1), so a window of n words from w ends at
+    * starts(w + n) - 1 and there are `starts.length - 1` words. The one
+    * word-start walk of the window, n-gram and shingle kernels.
+    */
+  def wordStarts(b: Array[Byte]): Array[Int] = {
     var nWords = 1
     var i = 0
     while (i < b.length) { if (b(i) == ' '.toByte) nWords += 1; i += 1 }
-    val nGrams = nWords - n + 1
-    if (nGrams <= 0) return Empty
     val starts = new Array[Int](nWords + 1)
     var w = 1
     i = 0
@@ -57,6 +55,19 @@ object WordWindowsLong {
       i += 1
     }
     starts(nWords) = b.length + 1
+    starts
+  }
+
+  /** The per-document kernel behind graft_word_windows
+    * (n is a checked literal in [1, 8]). */
+  def compute(text: UTF8String, n: Int): GenericArrayData = {
+    // getBytes copies unless the string spans its whole base array, and a
+    // spanning base array is owned by this string alone — either way `b`
+    // is private and immutable, so the window slices below can wrap it
+    val b = text.getBytes
+    val starts = wordStarts(b)
+    val nGrams = starts.length - n
+    if (nGrams <= 0) return Empty
     val out = new Array[Any](nGrams)
     var g = 0
     while (g < nGrams) {

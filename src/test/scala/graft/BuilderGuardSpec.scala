@@ -119,4 +119,28 @@ class BuilderGuardSpec extends SparkSpec {
     assert(df.queryExecution.optimizedPlan.toString.contains("693147"),
       df.queryExecution.optimizedPlan)
   }
+  // literal arguments a kernel row checks while planning, before any row
+  // is read: the error must name the function at analysis
+  private val planTime = Seq(
+    GraftFunctions.LshBucketsName ->
+      "SELECT graft_lsh_buckets(array(1L), array(1L), 64)",
+    GraftFunctions.LshBucketsName ->
+      "SELECT graft_lsh_buckets(array(1L), array(1L), 0)",
+    AhoCorasickCount.Name -> "SELECT graft_aho_corasick('x', array(''))",
+    AhoCorasickCount.Name ->
+      "SELECT graft_aho_corasick('x', CAST(array() AS array<string>))",
+    SubwordCount.Name ->
+      "SELECT graft_subword_count('x', CAST(array() AS array<string>))",
+    LangIdLong.Name ->
+      "SELECT graft_lang_id('x', array('en', 'de'), array(array('the')))")
+
+  planTime.zipWithIndex.foreach { case ((name, sql), i) =>
+    test(s"$name rejects a bad literal argument at analysis ($i)") {
+      registerAll()
+      val t = intercept[Throwable](spark.sql(sql))
+      val chain = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(e => Option(e.getMessage).exists(_.contains(name))),
+        s"$sql error must name $name; got ${chain.map(_.getMessage)}")
+    }
+  }
 }

@@ -634,15 +634,32 @@ class PlanSpec extends SparkSpec {
         "array(array(array(1L), array(2L)), array(array(3L), array(4L))), 2, 2)"),
       "graft_quantize" -> "graft_quantize(array(CAST(id AS double)), 1000)",
       "graft_sq8_codes" ->
-        "graft_sq8_codes(array(CAST(id AS double)), array(0.0D), array(10.0D))")
+        "graft_sq8_codes(array(CAST(id AS double)), array(0.0D), array(10.0D))",
+      "graft_dot_long" -> "graft_dot_long(array(id), array(id))",
+      "graft_lsh_buckets" -> "graft_lsh_buckets(array(id, 1L), array(1L, -1L, 2L, 3L), 2)",
+      "graft_pq_adc" -> "graft_pq_adc(array(id % 2), array(array(5L, 7L)))",
+      "graft_pq_adc_direct" ->
+        "graft_pq_adc_direct(array(id, id), array(0L), array(array(array(1L, 2L))))",
+      "graft_pq_encode" ->
+        "graft_pq_encode(array(id, id), array(array(array(1L, 2L), array(3L, 4L))))",
+      "graft_aho_corasick" -> "graft_aho_corasick(t, array('a', 'b a'))",
+      "graft_subword_count" -> "graft_subword_count(t, array('a', 'b'))",
+      "graft_bpe_segment" -> "graft_bpe_segment(t, array('a', ' '))",
+      "graft_unigram_segment" -> ("graft_unigram_segment(t, " +
+        "array('a', 'b', ' ', '0', '1', '2'), array(-1L, -1L, -1L, -1L, -1L, -1L))"),
+      "graft_word_set_count" -> "graft_word_set_count(t, array('a'))",
+      "graft_lang_id" -> "graft_lang_id(t, array('x', 'y'), array(array('a'), array('b')))")
     val kernelRows = graft.plans.GraftFunctions.all
       .filter(_.owner == classOf[graft.plans.KernelCall]).map(_.name).toSet
     assert(calls.keySet == kernelRows, kernelRows.diff(calls.keySet))
     graft.plans.GraftFunctions.register(spark)
-    val df = spark.sql(calls.toSeq.map { case (n, c) => s"$c AS $n" }
-      .mkString("SELECT ", ", ", " FROM (SELECT id, concat('a b a ', id) AS t FROM range(3))"))
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
+    // 20 calls per query: a plan string shows only a Project's first 25 fields
+    val p = calls.toSeq.grouped(20).map { chunk =>
+      val df = spark.sql(chunk.map { case (n, c) => s"$c AS $n" }
+        .mkString("SELECT ", ", ", " FROM (SELECT id, concat('a b a ', id) AS t FROM range(3))"))
+      df.collect()
+      df.queryExecution.executedPlan.toString
+    }.mkString("\n")
     calls.keys.foreach { n =>
       assert(("""\*\(\d+\) Project \[[^\n]*static_invoke\(graft\.plans\.GraftFunctions\.""" +
         n + """\(""").r.findFirstIn(p).nonEmpty, s"$n:\n$p")
@@ -653,6 +670,19 @@ class PlanSpec extends SparkSpec {
       "graft_word_windows(t, 2) FROM (SELECT 'a b' AS t)")
     assert(named.columns.toSeq ==
       Seq("graft_md5_prefix_long(t)", "graft_word_windows(t, 2)"), named.columns)
+  }
+
+  test("matcher kernels: the matcher is hidden, and equal calls group together") {
+    // only the four aggregate sketches are not kernel calls
+    assert(graft.plans.GraftFunctions.all
+      .count(_.owner != classOf[graft.plans.KernelCall]) == 4)
+    graft.plans.GraftFunctions.register(spark)
+    val q = "SELECT graft_word_set_count(t, array('a', 'the')), count(*) AS c " +
+      "FROM (SELECT concat('a the ', id % 3) AS t FROM range(6)) " +
+      "GROUP BY graft_word_set_count(t, array('a', 'the'))"
+    val df = spark.sql(q)
+    assert(df.columns.toSeq == Seq("graft_word_set_count(t)", "c"), df.columns)
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((2L, 6L)))
   }
 
   test("pq-adc kernel throws on out-of-range codes instead of a wrong distance") {
