@@ -105,10 +105,6 @@ object Bench {
     }.getOrElse(Map.empty[String, Double])
   }
 
-  /** (per-query seconds, per-query shuffle MB, calibration seconds) from the
-    * newest available prior artifact (all from the SAME file, so time and
-    * shuffle gates judge against one coherent baseline).
-    */
   /** The fixed CPU-bound hardware probe (8M md5+xxhash64 rows, shuffle-free,
     * codegen'd): min of two timed runs after a JIT pass. Run once at session
     * start for the cross-host time-gate scale, and RE-RUN before the retry
@@ -138,6 +134,10 @@ object Bench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans)
       .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum / 1e3
 
+  /** (per-query seconds, per-query shuffle MB, calibration seconds) from the
+    * newest available prior artifact (all from the SAME file, so time and
+    * shuffle gates judge against one coherent baseline).
+    */
   private def priorMetrics(): (Map[String, Double], Map[String, Double],
       Option[Double], Map[String, Double]) = {
     val candidates: Seq[java.nio.file.Path] =

@@ -1,5 +1,6 @@
 package graft.apps
 
+import graft.core.Timing
 import graft.operators.{Dedup, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -70,10 +71,11 @@ object CorpusApp {
     *        content. Docs whose main content is empty (pure boilerplate)
     *        drop at this stage; `Stats.cleaned` counts the survivors.
     * @param onStage per-stage wall-time callback (stage name, seconds) —
-    *        fired after each stage's counting action, so a composed bench
-    *        run can report where the end-to-end time goes (the stage-split
-    *        ask of VERDICT r17 #1). Stage boundaries are the actions that
-    *        were already there; the default no-op costs nothing.
+    *        [[graft.core.Timing.stage]] fires it after each stage's
+    *        counting action, so a composed bench run can report where the
+    *        end-to-end time goes (the stage-split ask of VERDICT r17 #1).
+    *        Stage boundaries are the actions that were already there; the
+    *        default no-op costs nothing.
     */
   def curate(spark: SparkSession, docs: DataFrame,
              keepLangs: Set[String], minQuality: Double,
@@ -82,13 +84,7 @@ object CorpusApp {
              htmlMinChars: Int = 25,
              htmlMaxLinkPct: Int = 30,
              onStage: (String, Double) => Unit = (_, _) => ()): (DataFrame, Stats) = {
-    def timed[T](stage: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      onStage(stage, (System.nanoTime() - t0) / 1e9)
-      r
-    }
-    val input = timed("input_scan")(docs.count())
+    val input = Timing.stage(onStage, "input_scan")(docs.count())
 
     val base =
       if (!htmlInput) docs
@@ -102,7 +98,7 @@ object CorpusApp {
         docs.drop("text").join(main, Seq("doc_id"))
           .withColumnRenamed("main", "text")
       }
-    val cleaned = if (htmlInput) timed("html_extract")(base.count()) else input
+    val cleaned = if (htmlInput) Timing.stage(onStage, "html_extract")(base.count()) else input
 
     // checkpoint the language-filtered corpus: three downstream consumers
     // (the lang count, the quality+tokens branch, and the bigram-repetition
@@ -113,7 +109,7 @@ object CorpusApp {
       .withColumn("lang_pred", TextOps.langId(col("text")))
       .filter(col("lang_pred").isin(keepLangs.toSeq.map(lit(_)): _*))
       .localCheckpoint(false)
-    val langKept = timed("lang_filter")(langed.count())
+    val langKept = Timing.stage(onStage, "lang_filter")(langed.count())
 
     // boilerplate/spam guard: per-doc bigram repetition joined back to the
     // corpus (docs with < 2 words have no bigram row and pass — the score
@@ -124,7 +120,7 @@ object CorpusApp {
     // intermediate query stages (adaptive planning needs their metrics), so
     // the quality+repetition shuffles run here, at construction — timed as
     // the build stage; the count after it pays only the result stage
-    val qualified = timed("quality_build")(langed
+    val qualified = Timing.stage(onStage, "quality_build")(langed
       .withColumn("quality", TextOps.qualityScore(col("text")))
       .filter(col("quality") >= minQuality)
       .join(repetition, col("doc_id") === col("rep_sid"), "left")
@@ -134,13 +130,13 @@ object CorpusApp {
       .withColumn("n_tokens", TextOps.wsTokenCount(col("text")).cast("long"))
       .withColumn("fp", TextOps.fingerprint(col("text")))
       .localCheckpoint(false)) // dedup references this subtree many times
-    val qualityKept = timed("quality_gate")(qualified.count())
+    val qualityKept = Timing.stage(onStage, "quality_gate")(qualified.count())
 
     // scrub AFTER filtering (don't pay redaction on dropped docs), BEFORE
     // dedup (near-dup grouping should see the text users will train on)
     val scrubbed = qualified
       .withColumn("text", TextOps.redactPii(col("text")))
-    val piiRedacted = timed("pii_redact")(scrubbed
+    val piiRedacted = Timing.stage(onStage, "pii_redact")(scrubbed
       .filter(col("text").contains("<EMAIL>") || col("text").contains("<URL>") ||
         col("text").contains("<PHONE>")).count())
 
@@ -148,8 +144,9 @@ object CorpusApp {
     // EAGERLY (Storage.freeingIntermediates) — the heavy minhash+CC work
     // runs at call time, so it gets its own stage timer; the count after
     // it only pays the final anti-join
-    val curated = timed("dedup_build")(Dedup.dedupCorpus(scrubbed, "doc_id", "text"))
-    val deduped = timed("dedup_count")(curated.count())
+    val curated = Timing.stage(onStage, "dedup_build")(
+      Dedup.dedupCorpus(scrubbed, "doc_id", "text"))
+    val deduped = Timing.stage(onStage, "dedup_count")(curated.count())
 
     (curated, Stats(input, langKept, qualityKept, piiRedacted, deduped,
       cleaned = cleaned))

@@ -1,5 +1,6 @@
 package graft.apps
 
+import graft.core.Timing
 import graft.operators.{Chat, Dedup, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -40,24 +41,18 @@ object SftApp {
     *        prompts with distinct responses are still contamination).
     * @param chatOverhead fixed per-pair token overhead for the rendered
     *        two-turn template (role headers + sequence delimiters).
-    * @param onStage per-stage wall-time callback (corpus_app discipline).
+    * @param onStage per-stage wall-time callback, fired through
+    *        [[graft.core.Timing.stage]] (corpus_app discipline).
     */
   def curatePairs(spark: SparkSession, pairs: DataFrame, benchmark: DataFrame,
                   n: Int = 3, minJaccard: Double = 0.5,
                   packSize: Long = 256L, chatOverhead: Int = 4,
                   onStage: (String, Double) => Unit = (_, _) => ())
       : (DataFrame, Stats) = {
-    def timed[T](stage: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      onStage(stage, (System.nanoTime() - t0) / 1e9)
-      r
-    }
-
     // prompt-side near-dup components + response-exact keep-first (the i1
     // kernel). The component build checkpoints its band/verify/CC
     // intermediates eagerly, so it gets its own stage timer.
-    val comp = timed("pair_dedup_build") {
+    val comp = Timing.stage(onStage, "pair_dedup_build") {
       graft.core.Storage.freeingIntermediates(spark) {
         Dedup.connectedComponents(
           Dedup.minhashVerifiedPairs(pairs, "pair_id", "prompt", n, minJaccard))
@@ -90,7 +85,7 @@ object SftApp {
     // chat render + token accounting + packing. assignPacks runs its own
     // two bounded driver actions (range bounds + bucket totals) at
     // construction — timed as the build stage.
-    val packed = timed("pack_build") {
+    val packed = Timing.stage(onStage, "pack_build") {
       val rendered = clean.select(col("pair_id"),
         concat(lit("user: "), col("prompt"), lit("\nassistant: "),
           col("response")).as("chat"),
@@ -102,7 +97,7 @@ object SftApp {
     }
 
     // bookkeeping in ONE tagged-union action.
-    val stats = timed("stats") {
+    val stats = Timing.stage(onStage, "stats") {
       val row = pairs.select(lit(0).as("__tag"), lit(null).cast("long").as("__pack"))
         .unionByName(kept.select(lit(1).as("__tag"),
           lit(null).cast("long").as("__pack")))

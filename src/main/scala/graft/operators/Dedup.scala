@@ -271,13 +271,6 @@ object Dedup {
   def hashA(i: Int): Long = 2L * i + 1
   def hashB(i: Int): Long = 12345L * i + 67
 
-  /** 32-wide minhash signature per document: min over shingles of
-    * (a_i * h + b_i) mod p. ONE per-row native expression
-    * (graft.plans.MinhashSigLong) — no shingle explode, no 32-column min
-    * aggregate, no shuffle; docs with < n words have no shingles and drop
-    * out, exactly as they dropped out of the groupBy in the relational form
-    * (which shuffled ~1M shingle rows at sf0.1 on this hot path).
-    */
   /** LSH S-CURVE CALIBRATION — measures the banding config against its own
     * theory (MMDS ch.3): with b bands of r rows, theory says
     * P(candidate | jaccard s) = 1 − (1 − s^r)^b; this report buckets the
@@ -332,6 +325,13 @@ object Dedup {
           col("n_pairs").cast("double") / 1000000.0, 6).as("predicted_rate"))
   }
 
+  /** 32-wide minhash signature per document: min over shingles of
+    * (a_i * h + b_i) mod p. ONE per-row native expression
+    * (graft.plans.MinhashSigLong) — no shingle explode, no 32-column min
+    * aggregate, no shuffle; docs with < n words have no shingles and drop
+    * out, exactly as they dropped out of the groupBy in the relational form
+    * (which shuffled ~1M shingle rows at sf0.1 on this hot path).
+    */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
     val sig = df.select(col(idCol).as("sid"),
       graft.plans.MinhashSigLong.minhashSig(col(textCol), n).as("sig"))
@@ -561,19 +561,6 @@ object Dedup {
     spark.sql(s"DROP TABLE $retired")
   }
 
-  /** Incremental near-dup detection: verified pairs that TOUCH a new batch —
-    * new-vs-new plus new-vs-corpus — WITHOUT re-banding the corpus. At
-    * ingestion scale this is the whole game: the corpus index
-    * (`corpusBands`, from [[bandIndex]], persisted) is reused, so per-batch
-    * work scales with |batch| x bucket occupancy, not |corpus|. A doc's
-    * band keys don't depend on other docs, so the result equals running the
-    * full pipeline over (corpus UNION batch) and keeping pairs that mention
-    * a batch id — which is exactly what the oracle checks.
-    *
-    * `corpusDocs` is still read during VERIFICATION, but only the matched
-    * candidates' shingles are computed (semi-join pushdown in
-    * verifyCandidates) — a tiny id-filtered scan, not a corpus pass.
-    */
   /** Batch-vs-corpus candidate pairs: batch bands joined to the corpus band
     * index on exactly (band, bkey). A seam for plan tests: when
     * `corpusBands` is a [[writeBandIndex]] bucketed table, this join must
@@ -588,6 +575,19 @@ object Dedup {
       .select(least(col("a.sid"), col("b.sid")).as("ida"),
         greatest(col("a.sid"), col("b.sid")).as("idb"))
 
+  /** Incremental near-dup detection: verified pairs that TOUCH a new batch —
+    * new-vs-new plus new-vs-corpus — WITHOUT re-banding the corpus. At
+    * ingestion scale this is the whole game: the corpus index
+    * (`corpusBands`, from [[bandIndex]], persisted) is reused, so per-batch
+    * work scales with |batch| x bucket occupancy, not |corpus|. A doc's
+    * band keys don't depend on other docs, so the result equals running the
+    * full pipeline over (corpus UNION batch) and keeping pairs that mention
+    * a batch id — which is exactly what the oracle checks.
+    *
+    * `corpusDocs` is still read during VERIFICATION, but only the matched
+    * candidates' shingles are computed (semi-join pushdown in
+    * verifyCandidates) — a tiny id-filtered scan, not a corpus pass.
+    */
   def incrementalNearDupPairs(newDf: DataFrame, corpusDocs: DataFrame,
                               corpusBands: DataFrame, idCol: String,
                               textCol: String, n: Int,
@@ -1693,19 +1693,6 @@ object Dedup {
       lineWinners(lineOccurrences(batch, idCol, textCol, sep, minLineChars)),
       table, Seq("h"), nBuckets)
 
-  /** Dedup ONE ingestion batch's lines against the persisted index — equal
-    * BY CONSTRUCTION to [[lineDedup]] over (corpus UNION batch) restricted
-    * to batch docs: a batch line occurrence survives iff it is the minimum
-    * (sid, pos) across the index's first holders AND the batch itself
-    * (min over a union decomposes). `<=` instead of `<` on the merged
-    * winner makes the dedup idempotent under append-then-retry (the
-    * batchNovelty replay discipline): a batch whose own rows already
-    * landed in the index still keeps its first occurrences.
-    *
-    * Scale shape: the index side min-merges without an exchange (bucketed
-    * on h); only the batch's line hashes shuffle — per-batch cost scales
-    * with |batch|, never |corpus|.
-    */
   /** EXACTLY-ONCE streaming line-dedup ingestion (the ds-series contract
     * on [[lineDedup]]): each micro-batch dedups against the committed
     * first-holder index, LANDS its rebuilt docs by partition-replace on
@@ -1748,6 +1735,19 @@ object Dedup {
                       statePath: String): DataFrame =
     spark.read.parquet(statePath)
 
+  /** Dedup ONE ingestion batch's lines against the persisted index — equal
+    * BY CONSTRUCTION to [[lineDedup]] over (corpus UNION batch) restricted
+    * to batch docs: a batch line occurrence survives iff it is the minimum
+    * (sid, pos) across the index's first holders AND the batch itself
+    * (min over a union decomposes). `<=` instead of `<` on the merged
+    * winner makes the dedup idempotent under append-then-retry (the
+    * batchNovelty replay discipline): a batch whose own rows already
+    * landed in the index still keeps its first occurrences.
+    *
+    * Scale shape: the index side min-merges without an exchange (bucketed
+    * on h); only the batch's line hashes shuffle — per-batch cost scales
+    * with |batch|, never |corpus|.
+    */
   def lineDedupIncremental(spark: org.apache.spark.sql.SparkSession,
                            batch: DataFrame, idCol: String, textCol: String,
                            sep: String, minLineChars: Int,

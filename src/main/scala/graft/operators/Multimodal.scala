@@ -6,27 +6,6 @@ import java.util.zip.CRC32
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Multimodal-column plumbing: media as an opaque `binary` column with typed
-  * metadata extracted by a REAL byte-level header parser.
-  *
-  * The container has no image codec libraries, so full pixel decode is out of
-  * scope — but header parsing needs none: PNG's IHDR chunk, BMP's
-  * BITMAPINFOHEADER and GIF's logical screen descriptor are fixed-offset
-  * integer fields defined by their public specs. `encodeMedia` builds real
-  * container bytes (PNG with a CRC-valid IHDR chunk; BMP with a full 54-byte
-  * header; GIF89a with a logical screen descriptor) around an arbitrary
-  * payload, and `parseMeta` sniffs the magic and reads the dimensions back —
-  * so the extraction pipeline is exercised on genuine file-format bytes, not
-  * arithmetic stand-ins.
-  *
-  * The Spark-side shape is what matters at 100 TB: binary columns travel
-  * untouched through shuffles, metadata extraction is per-row map-side work
-  * (no shuffle), and both kernels run via `mapPartitions` — one decoder
-  * instance per partition with rows streamed through it, so codec init cost
-  * (dlopen'd libs, GPU handles in a real deployment) amortizes over the
-  * partition, exactly like a Pandas-UDF/mapInPandas batch on the PySpark
-  * side.
-  */
 /** Parsed media metadata. Dimensions come from the container header.
   * Top-level (not nested in the object): encoder codegen instantiates these
   * classes from generated Java, and a nested/private constructor makes janino
@@ -80,6 +59,27 @@ case class PdfMeta(id: Long, version: String, n_pages: Long,
 case class WebpMeta(id: Long, width: Long, height: Long, codec: String,
                     extended: Boolean, has_alpha: Boolean)
 
+/** Multimodal-column plumbing: media as an opaque `binary` column with typed
+  * metadata extracted by a REAL byte-level header parser.
+  *
+  * The container has no image codec libraries, so full pixel decode is out of
+  * scope — but header parsing needs none: PNG's IHDR chunk, BMP's
+  * BITMAPINFOHEADER and GIF's logical screen descriptor are fixed-offset
+  * integer fields defined by their public specs. `encodeMedia` builds real
+  * container bytes (PNG with a CRC-valid IHDR chunk; BMP with a full 54-byte
+  * header; GIF89a with a logical screen descriptor) around an arbitrary
+  * payload, and `parseMeta` sniffs the magic and reads the dimensions back —
+  * so the extraction pipeline is exercised on genuine file-format bytes, not
+  * arithmetic stand-ins.
+  *
+  * The Spark-side shape is what matters at 100 TB: binary columns travel
+  * untouched through shuffles, metadata extraction is per-row map-side work
+  * (no shuffle), and both kernels run via `mapPartitions` — one decoder
+  * instance per partition with rows streamed through it, so codec init cost
+  * (dlopen'd libs, GPU handles in a real deployment) amortizes over the
+  * partition, exactly like a Pandas-UDF/mapInPandas batch on the PySpark
+  * side.
+  */
 object Multimodal {
 
   /** Header sizes of the synthetic containers (fixed by construction):

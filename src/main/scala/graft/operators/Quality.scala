@@ -296,6 +296,14 @@ object Quality {
           <= maxOutlierFrac).as("gate_ok"))
   }
 
+  /** The ONE funnel gate parameterization (Gopher rule constants) shared
+    * by every funnel-family operator — [[curationFunnel]],
+    * [[curationFunnelNovelty]] and [[rejectionReasons]] reconcile count-
+    * for-count ONLY while they gate identically, so the tuple lives once.
+    */
+  private def funnelGopherKeep(textCol: String): org.apache.spark.sql.Column =
+    TextOps.gopherRules(col(textCol), 30L, 10000L, 4.0, 5.0, 2L)._4
+
   /** Curation-funnel report: the survivor count of each stage of the
     * standard pre-training filter chain — Gopher rule gate
     * ([[TextOps.gopherRules]]), quality-score threshold
@@ -311,14 +319,6 @@ object Quality {
     * 32-char fingerprint keys of quality survivors ride the distinct
     * exchange. No stage materializes an intermediate corpus.
     */
-  /** The ONE funnel gate parameterization (Gopher rule constants) shared
-    * by every funnel-family operator — [[curationFunnel]],
-    * [[curationFunnelNovelty]] and [[rejectionReasons]] reconcile count-
-    * for-count ONLY while they gate identically, so the tuple lives once.
-    */
-  private def funnelGopherKeep(textCol: String): org.apache.spark.sql.Column =
-    TextOps.gopherRules(col(textCol), 30L, 10000L, 4.0, 5.0, 2L)._4
-
   def curationFunnel(docs: DataFrame, idCol: String, textCol: String,
                      minQuality: Double): DataFrame = {
     val keep = funnelGopherKeep(textCol)
@@ -379,25 +379,6 @@ object Quality {
       .crossJoin(broadcast(novel))
   }
 
-  /** Per-document curation DECISION LOG — the per-row dual of
-    * [[curationFunnel]]'s aggregate report: every document gets the FIRST
-    * gate that rejected it (funnel order), or `kept`. This is the
-    * provenance artifact an auditable curation run ships alongside the
-    * pruned corpus ("why is doc X not in the training set?"), and the
-    * debugging surface when a source's survival rate drops.
-    *
-    * Verdicts: `gopher` (failed the rule gate), `low_quality` (passed
-    * rules, score < minQuality), `duplicate` (quality survivor whose
-    * fingerprint was first claimed by a lower id — the d2 keep-first
-    * rule), `kept`. Counts reconcile with [[curationFunnel]] by
-    * construction: n_gopher = n - #gopher, n_quality = n_gopher -
-    * #low_quality, n_unique = #kept (spec-asserted).
-    *
-    * Scale shape: the gates stay one scan; the duplicate verdict needs
-    * one shuffle on the fingerprint (an unordered per-partition MIN —
-    * cheaper than the rank window, no sort) — the same exchange d2's
-    * dedup pays.
-    */
   /** Curation DASHBOARD CUBE: per (lang, source) — plus each one-dim
     * rollup and the grand total — document/token counts and the funnel
     * survival ladder (Gopher pass, quality pass, distinct fingerprints
@@ -916,6 +897,25 @@ object Quality {
           .cast("long").as("kappa_den"))
   }
 
+  /** Per-document curation DECISION LOG — the per-row dual of
+    * [[curationFunnel]]'s aggregate report: every document gets the FIRST
+    * gate that rejected it (funnel order), or `kept`. This is the
+    * provenance artifact an auditable curation run ships alongside the
+    * pruned corpus ("why is doc X not in the training set?"), and the
+    * debugging surface when a source's survival rate drops.
+    *
+    * Verdicts: `gopher` (failed the rule gate), `low_quality` (passed
+    * rules, score < minQuality), `duplicate` (quality survivor whose
+    * fingerprint was first claimed by a lower id — the d2 keep-first
+    * rule), `kept`. Counts reconcile with [[curationFunnel]] by
+    * construction: n_gopher = n - #gopher, n_quality = n_gopher -
+    * #low_quality, n_unique = #kept (spec-asserted).
+    *
+    * Scale shape: the gates stay one scan; the duplicate verdict needs
+    * one shuffle on the fingerprint (an unordered per-partition MIN —
+    * cheaper than the rank window, no sort) — the same exchange d2's
+    * dedup pays.
+    */
   def rejectionReasons(docs: DataFrame, idCol: String, textCol: String,
                        minQuality: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -617,21 +617,6 @@ object Sampling {
       .filter(col("rank") <= k)
   }
 
-  /** Deterministic global shuffle order for training: every row gets a
-    * contiguous 0-based `pos` by (md5 bucket, id) — the reproducible
-    * "shuffle the corpus before training" step, stable across retries,
-    * engines and re-runs, and resumable (a checkpointed trainer re-derives
-    * the exact order from the salt alone). Different `salt` = a fresh epoch
-    * permutation.
-    *
-    * Scale shape: a naive ROW_NUMBER() OVER (ORDER BY hash) pulls the whole
-    * corpus through ONE task. Here the rank is two-level (the Packing
-    * prefix-sum pattern): hash-value-derived buckets (uniform by
-    * construction — the hash IS the shuffle), per-bucket counts, a
-    * driver-side exclusive scan of those counts (dimension-sized), then a
-    * per-bucket window rank plus the broadcast base. Every heavy step is
-    * parallel; serial state is one long per bucket.
-    */
   /** CURRICULUM training order: a contiguous 0-based `pos` that walks the
     * stages in ascending `stageCol` order, md5-shuffled WITHIN each stage —
     * the curriculum-learning layout (easy/clean stages stream first, each
@@ -721,6 +706,21 @@ object Sampling {
         sum(graft.operators.Dedup.hash48(col(idCol).cast("string")))
           .as("id_fp"))
 
+  /** Deterministic global shuffle order for training: every row gets a
+    * contiguous 0-based `pos` by (md5 bucket, id) — the reproducible
+    * "shuffle the corpus before training" step, stable across retries,
+    * engines and re-runs, and resumable (a checkpointed trainer re-derives
+    * the exact order from the salt alone). Different `salt` = a fresh epoch
+    * permutation.
+    *
+    * Scale shape: a naive ROW_NUMBER() OVER (ORDER BY hash) pulls the whole
+    * corpus through ONE task. Here the rank is two-level (the Packing
+    * prefix-sum pattern): hash-value-derived buckets (uniform by
+    * construction — the hash IS the shuffle), per-bucket counts, a
+    * driver-side exclusive scan of those counts (dimension-sized), then a
+    * per-bucket window rank plus the broadcast base. Every heavy step is
+    * parallel; serial state is one long per bucket.
+    */
   def shuffleOrder(spark: org.apache.spark.sql.SparkSession, df: DataFrame,
                    idCol: String, salt: String, buckets: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -933,23 +933,6 @@ object Similarity {
       .agg(coalesce(sum(col("occ") * col("np")), lit(0L))).head().getLong(0)
   }
 
-  /** IVF-flat ANN: partition vectors into `nCells` cells around centroid
-    * vectors; a query probes its `nProbe` closest cells and ranks only their
-    * members. Centroids here are deterministic data samples (the lowest ids)
-    * rather than k-means output — the index-build trade is recall for a
-    * training-free, reproducible build; swap in Lloyd iterations for real
-    * workloads without touching the probe path.
-    *
-    * Scale shape: all centroids ride in ONE broadcast row as an array of
-    * structs, so cell assignment is per-row array algebra — score every cell,
-    * `array_sort` by (cosine desc, cid asc) — with NO shuffle. (The
-    * relational alternative, cross-join + row_number window, exchanges and
-    * sorts n x nCells rows just to rank each row's private cell list — at
-    * corpus scale that shuffle dwarfs the one the candidate join actually
-    * needs.) The candidate join is keyed by cell id, so work scales with
-    * cell occupancy, not n^2. Assignment cost is O(nCells x dim) per row
-    * either way — inherent to IVF probing.
-    */
   /** Seed centroids: the `nCells` lowest-id vectors, packed into ONE row as
     * an array of (cid, cv, cnrm) structs for broadcasting.
     */
@@ -981,7 +964,24 @@ object Similarity {
         graft.plans.RankCellsLong.rankCells(col("qv"), col("nrm"),
           col("cells")).as("cellrank"))
 
-  /** `probeFilter` restricts which corpus rows act as QUERIES (a predicate
+  /** IVF-flat ANN: partition vectors into `nCells` cells around centroid
+    * vectors; a query probes its `nProbe` closest cells and ranks only their
+    * members. Centroids here are deterministic data samples (the lowest ids)
+    * rather than k-means output — the index-build trade is recall for a
+    * training-free, reproducible build; swap in Lloyd iterations for real
+    * workloads without touching the probe path.
+    *
+    * Scale shape: all centroids ride in ONE broadcast row as an array of
+    * structs, so cell assignment is per-row array algebra — score every cell,
+    * `array_sort` by (cosine desc, cid asc) — with NO shuffle. (The
+    * relational alternative, cross-join + row_number window, exchanges and
+    * sorts n x nCells rows just to rank each row's private cell list — at
+    * corpus scale that shuffle dwarfs the one the candidate join actually
+    * needs.) The candidate join is keyed by cell id, so work scales with
+    * cell occupancy, not n^2. Assignment cost is O(nCells x dim) per row
+    * either way — inherent to IVF probing.
+    *
+    * `probeFilter` restricts which corpus rows act as QUERIES (a predicate
     * over `qid`) without touching the index side — the answer for the kept
     * qids is bit-identical to filtering the full self-search afterwards
     * (the rank window partitions by qid), but the scoring join only carries
@@ -1603,6 +1603,20 @@ object Similarity {
     scored.withColumn("rank", row_number().over(w).cast("long")).filter(col("rank") <= k)
   }
 
+  /** XOR masks for every bucket perturbation of at most `maxFlips` sign
+    * bits: 1 + C(nPlanes, 1) + C(nPlanes, 2) masks at the cap.
+    */
+  private def flipMasks(nPlanes: Int, maxFlips: Int): Seq[Long] = {
+    require(maxFlips >= 0 && maxFlips <= 2,
+      s"maxFlips must be 0, 1, or 2 (probe count grows as C(nPlanes, f)), got $maxFlips")
+    0L +:
+      ((if (maxFlips >= 1) (0 until nPlanes).map(m => 1L << m) else Seq.empty) ++
+       (if (maxFlips >= 2)
+          for { a <- 0 until nPlanes; b <- a + 1 until nPlanes }
+            yield (1L << a) | (1L << b)
+        else Seq.empty))
+  }
+
   /** MULTI-PROBE LSH ANN (Lv et al., VLDB'07): each query probes its own
     * bucket PLUS every bucket within `maxFlips` sign-bit flips, in every
     * table — recovering neighbors that disagree on one or two hyperplanes
@@ -1622,20 +1636,6 @@ object Similarity {
     * set (the lshTopK discipline). At 100 TB this is the serve-time recall
     * upgrade: re-index nothing, probe harder.
     */
-  /** XOR masks for every bucket perturbation of at most `maxFlips` sign
-    * bits: 1 + C(nPlanes, 1) + C(nPlanes, 2) masks at the cap.
-    */
-  private def flipMasks(nPlanes: Int, maxFlips: Int): Seq[Long] = {
-    require(maxFlips >= 0 && maxFlips <= 2,
-      s"maxFlips must be 0, 1, or 2 (probe count grows as C(nPlanes, f)), got $maxFlips")
-    0L +:
-      ((if (maxFlips >= 1) (0 until nPlanes).map(m => 1L << m) else Seq.empty) ++
-       (if (maxFlips >= 2)
-          for { a <- 0 until nPlanes; b <- a + 1 until nPlanes }
-            yield (1L << a) | (1L << b)
-        else Seq.empty))
-  }
-
   def lshTopKMultiProbe(df: DataFrame, idCol: String, vecCol: String,
                         dim: Int, nTables: Int, nPlanes: Int, maxFlips: Int,
                         k: Int, probeFilter: Column = lit(true)): DataFrame = {

@@ -257,31 +257,6 @@ object TextOps {
   def subwordTokenCount(text: Column, vocab: Seq[String]): Column =
     graft.plans.SubwordCount.subwordCount(text, vocab)
 
-  /** REAL BPE merge training: `rounds` iterations of count-all-adjacent-
-    * symbol-pairs -> merge the argmax pair corpus-wide (ties: lexicographic
-    * (lft, rgt)) — the algorithm behind GPT-2/SentencePiece vocabularies,
-    * not a frequency-ranked substring heuristic. Returns one row per merge,
-    * in order: (rank, lft, rgt, merged, pair_freq). [[subwordVocab]] /
-    * [[subwordTokenCount]] (t9) remain the greedy APPLY path; this is the
-    * trainer that produces their vocabulary.
-    *
-    * Semantics pinned for oracle parity: pair counts are over the word-
-    * frequency table (standard BPE — each distinct word weighted by its
-    * corpus frequency), adjacent pairs count WITH overlap, and a merge
-    * applies greedily left-to-right within each word (in "aaa", pair (a,a)
-    * merges positions 1-2, not 2-3). No end-of-word marker — a documented
-    * simplification; adding one changes the alphabet, not the algorithm.
-    *
-    * Scale shape: the corpus collapses to (word, freq) ONCE (one map-side-
-    * combinable aggregate — at 100 TB the word table is millions of rows,
-    * not corpus-sized); each round is then one pair-count aggregate over
-    * 8-ish-byte pairs, a ONE-ROW argmax collect (the merge decision is a
-    * plan-time constant, the IVF-centroid posture), and a shuffle-free
-    * per-row fold applying the merge. The evolving symbol table is
-    * Storage.cut per round with the superseded round freed — the
-    * connectedComponents checkpoint discipline, without which `rounds`
-    * self-referencing plans re-analyze exponentially.
-    */
   /** Apply trained BPE merges (in rank order) to a word: the segmentation a
     * trained tokenizer produces, as an array of pieces. The APPLY half of
     * [[bpeMerges]]: pure per-row array algebra with the merge table riding
@@ -315,6 +290,31 @@ object TextOps {
   def bpeSegment(word: Column, merges: Seq[(String, String)]): Column =
     graft.plans.BpeSegment.bpeSegment(word, merges)
 
+  /** REAL BPE merge training: `rounds` iterations of count-all-adjacent-
+    * symbol-pairs -> merge the argmax pair corpus-wide (ties: lexicographic
+    * (lft, rgt)) — the algorithm behind GPT-2/SentencePiece vocabularies,
+    * not a frequency-ranked substring heuristic. Returns one row per merge,
+    * in order: (rank, lft, rgt, merged, pair_freq). [[subwordVocab]] /
+    * [[subwordTokenCount]] (t9) remain the greedy APPLY path; this is the
+    * trainer that produces their vocabulary.
+    *
+    * Semantics pinned for oracle parity: pair counts are over the word-
+    * frequency table (standard BPE — each distinct word weighted by its
+    * corpus frequency), adjacent pairs count WITH overlap, and a merge
+    * applies greedily left-to-right within each word (in "aaa", pair (a,a)
+    * merges positions 1-2, not 2-3). No end-of-word marker — a documented
+    * simplification; adding one changes the alphabet, not the algorithm.
+    *
+    * Scale shape: the corpus collapses to (word, freq) ONCE (one map-side-
+    * combinable aggregate — at 100 TB the word table is millions of rows,
+    * not corpus-sized); each round is then one pair-count aggregate over
+    * 8-ish-byte pairs, a ONE-ROW argmax collect (the merge decision is a
+    * plan-time constant, the IVF-centroid posture), and a shuffle-free
+    * per-row fold applying the merge. The evolving symbol table is
+    * Storage.cut per round with the superseded round freed — the
+    * connectedComponents checkpoint discipline, without which `rounds`
+    * self-referencing plans re-analyze exponentially.
+    */
   def bpeMerges(df: org.apache.spark.sql.DataFrame, textCol: String,
                 rounds: Int): org.apache.spark.sql.DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
@@ -1161,21 +1161,6 @@ object TextOps {
     (okWords, okMeanWl, okStop, okWords && okMeanWl && okStop)
   }
 
-  /** Per-document average negative log-likelihood under a corpus-trained
-    * unigram LM — the cheap stand-in for model-based perplexity filtering
-    * (rare-token soup scores high, common fluent text scores low).
-    *
-    * Float discipline: the per-token surprisal -ln(cnt/total) is rounded to
-    * integer MICRO-NATS once, then everything is exact long arithmetic
-    * (tf-weighted sum) until one final division — summation order cannot
-    * perturb the result, and the oracle mirrors the same fixed-point
-    * pipeline (ulp differences between libm and DuckDB's ln survive only if
-    * a surprisal sits within ~1e-9 of a rounding boundary).
-    *
-    * Scale shape: tokens are reduced to (doc, token) counts BEFORE any join
-    * (map-side combinable), the vocab join is token-keyed (shuffles counts,
-    * never text), and the corpus total rides in one broadcast row.
-    */
   /** BIGRAM language-model NLL with STUPID BACKOFF (Brants et al.'s
     * count-based smoothing — the one that scales, because it needs no
     * discount fitting): score every document of `df` against a bigram LM
@@ -1247,6 +1232,21 @@ object TextOps {
         col("n_unseen"))
   }
 
+  /** Per-document average negative log-likelihood under a corpus-trained
+    * unigram LM — the cheap stand-in for model-based perplexity filtering
+    * (rare-token soup scores high, common fluent text scores low).
+    *
+    * Float discipline: the per-token surprisal -ln(cnt/total) is rounded to
+    * integer MICRO-NATS once, then everything is exact long arithmetic
+    * (tf-weighted sum) until one final division — summation order cannot
+    * perturb the result, and the oracle mirrors the same fixed-point
+    * pipeline (ulp differences between libm and DuckDB's ln survive only if
+    * a surprisal sits within ~1e-9 of a rounding boundary).
+    *
+    * Scale shape: tokens are reduced to (doc, token) counts BEFORE any join
+    * (map-side combinable), the vocab join is token-keyed (shuffles counts,
+    * never text), and the corpus total rides in one broadcast row.
+    */
   def unigramNll(df: org.apache.spark.sql.DataFrame, idCol: String,
                  textCol: String): org.apache.spark.sql.DataFrame = {
     val tf = df

@@ -1,5 +1,7 @@
 package graft.orchestration
 
+import java.util.concurrent.{Executors, LinkedBlockingQueue}
+import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
 /** Minimal orchestration runtime replacing the reference's Airflow layer
@@ -26,96 +28,85 @@ object TaskGraph {
   final case class FailedAfterRetries(attempts: Int, error: Throwable) extends TaskResult
   case object SkippedUpstreamFailure extends TaskResult
 
-  /** Topologically execute the graph; downstream of a failed task is
-    * skipped (Airflow default trigger rule). Returns per-task results.
+  /** [[runParallel]] with one worker: tasks run one at a time, in
+    * declaration order among those that are ready.
     */
-  def run(tasks: Seq[Task], sleep: Long => Unit = Thread.sleep): Map[String, TaskResult] = {
-    val byId = tasks.map(t => t.id -> t).toMap
-    require(byId.size == tasks.size, "duplicate task ids")
-    tasks.foreach(t => t.upstream.foreach(u =>
-      require(byId.contains(u), s"unknown upstream '$u' of '${t.id}'")))
+  def run(tasks: Seq[Task], sleep: Long => Unit = Thread.sleep): Map[String, TaskResult] =
+    runParallel(tasks, parallelism = 1, sleep)
 
-    val order = topoSort(tasks)
-    val results = scala.collection.mutable.Map.empty[String, TaskResult]
-    order.foreach { t =>
-      if (t.upstream.exists(u => results(u) != Succeeded))
-        results(t.id) = SkippedUpstreamFailure
-      else
-        results(t.id) = attempt(t, sleep)
-    }
-    results.toMap
-  }
-
-  /** Like [[run]], but independent ready tasks execute CONCURRENTLY on
-    * `parallelism` worker threads (the reference's CeleryExecutor runs task
-    * processes in parallel; docker-compose.yaml scales workers). Semantics
-    * identical to `run`: a task starts only when every upstream Succeeded,
-    * downstream of failure is skipped, per-task retries apply. Wave-based
-    * scheduling: each wave launches every currently-ready task and joins —
-    * simple, deterministic result maps, and a Spark driver mostly WANTS
-    * bounded submission concurrency (jobs from separate threads fill the
-    * scheduler's pools).
+  /** Run the graph on `parallelism` worker threads from one ready queue (the
+    * reference's Airflow scheduler feeding CeleryExecutor workers). The graph
+    * is checked once, before any task runs: duplicate ids, unknown upstreams
+    * and cycles throw IllegalArgumentException. A task goes to a free worker
+    * as soon as its last upstream finishes, never held back by unrelated
+    * tasks; among ready tasks the lowest declaration index goes first.
+    * Downstream of a task that did not succeed is skipped without running
+    * (Airflow's default trigger rule); per-task retries apply.
+    *
+    * Tasks run on pool threads, not the caller's: do not call this inside
+    * `Storage.freeingIntermediates`, whose lock is held by the calling
+    * thread, so a task that enters it waits forever. A Throwable the retry
+    * loop does not catch surfaces unwrapped.
     */
   def runParallel(tasks: Seq[Task], parallelism: Int = 4,
                   sleep: Long => Unit = Thread.sleep): Map[String, TaskResult] = {
     require(parallelism >= 1, "parallelism >= 1")
-    val byId = tasks.map(t => t.id -> t).toMap
-    require(byId.size == tasks.size, "duplicate task ids")
-    tasks.foreach(t => t.upstream.foreach(u =>
-      require(byId.contains(u), s"unknown upstream '$u' of '${t.id}'")))
-    topoSort(tasks) // cycle check up front
+    val index = tasks.map(_.id).zipWithIndex.toMap
+    require(index.size == tasks.size, "duplicate task ids")
+    val downstream = Array.fill(tasks.size)(mutable.ArrayBuffer.empty[Int])
+    for ((t, i) <- tasks.zipWithIndex; u <- t.upstream) {
+      require(index.contains(u), s"unknown upstream '$u' of '${t.id}'")
+      downstream(index(u)) += i
+    }
+    // unfinished upstreams per task; a task whose count reaches 0 is ready
+    val waiting = tasks.map(_.upstream.size).toArray
+    def release(i: Int, counts: Array[Int], ready: Int => Unit): Unit =
+      downstream(i).foreach { d =>
+        counts(d) -= 1
+        if (counts(d) == 0) ready(d)
+      }
+    val initial = tasks.indices.filter(waiting(_) == 0)
+    // cycle check: a dry run over a copy of the counts must reach every task
+    val dry = waiting.clone()
+    val reached = mutable.Queue(initial: _*)
+    var seen = 0
+    while (reached.nonEmpty) { seen += 1; release(reached.dequeue(), dry, reached += _) }
+    require(seen == tasks.size, s"cycle through task '${tasks(dry.indexWhere(_ > 0)).id}'")
 
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
+    val results = mutable.Map.empty[String, TaskResult]
+    val ready = mutable.PriorityQueue(initial: _*)(Ordering.Int.reverse)
+    def finish(i: Int, r: TaskResult): Unit = {
+      results(tasks(i).id) = r
+      release(i, waiting, ready += _)
+    }
+    val done = new LinkedBlockingQueue[(Int, Try[TaskResult])]
+    val pool = Executors.newFixedThreadPool(parallelism)
     try {
-      val results = scala.collection.concurrent.TrieMap.empty[String, TaskResult]
-      var remaining = tasks
-      while (remaining.nonEmpty) {
-        val (ready, blocked) = remaining.partition(
-          _.upstream.forall(results.contains))
-        // topoSort guarantees progress: some task always has all upstreams done
-        val futures = ready.map { t =>
-          t -> pool.submit(new java.util.concurrent.Callable[TaskResult] {
-            override def call(): TaskResult =
-              if (t.upstream.exists(u => results(u) != Succeeded))
-                SkippedUpstreamFailure
-              else attempt(t, sleep)
-          })
+      var running = 0
+      while (results.size < tasks.size) {
+        while (ready.nonEmpty && running < parallelism) {
+          val i = ready.dequeue()
+          if (tasks(i).upstream.exists(results(_) != Succeeded)) finish(i, SkippedUpstreamFailure)
+          else {
+            running += 1
+            pool.execute(() => done.put(i ->
+              (try Success(attempt(tasks(i), sleep)) catch { case e: Throwable => Failure(e) })))
+          }
         }
-        futures.foreach { case (t, f) => results(t.id) = f.get() }
-        remaining = blocked
+        if (results.size < tasks.size) {
+          val (i, r) = done.take()
+          running -= 1
+          finish(i, r.get) // a fatal error rethrows unwrapped
+        }
       }
       results.toMap
     } finally pool.shutdown()
   }
 
-  private def attempt(t: Task, sleep: Long => Unit): TaskResult = {
-    var attempts = 0
-    var lastError: Throwable = null
-    while (attempts <= t.policy.retries) {
-      attempts += 1
-      Try(t.run()) match {
-        case Success(_) => return Succeeded
-        case Failure(e) =>
-          lastError = e
-          if (attempts <= t.policy.retries) sleep(t.policy.delayMs)
-      }
+  private def attempt(t: Task, sleep: Long => Unit, n: Int = 1): TaskResult =
+    Try(t.run()) match {
+      case Success(_) => Succeeded
+      case Failure(e) if n > t.policy.retries => FailedAfterRetries(n, e)
+      case Failure(_) => sleep(t.policy.delayMs); attempt(t, sleep, n + 1)
     }
-    FailedAfterRetries(attempts, lastError)
-  }
-
-  private def topoSort(tasks: Seq[Task]): Seq[Task] = {
-    val byId = tasks.map(t => t.id -> t).toMap
-    val visiting = scala.collection.mutable.Set.empty[String]
-    val done = scala.collection.mutable.LinkedHashSet.empty[String]
-    def visit(id: String): Unit = {
-      if (!done.contains(id)) {
-        require(visiting.add(id), s"cycle through task '$id'")
-        byId(id).upstream.foreach(visit)
-        visiting.remove(id)
-        done.add(id)
-      }
-    }
-    tasks.foreach(t => visit(t.id))
-    done.toSeq.map(byId)
-  }
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.{Tables, Timing}
 import graft.operators.TextOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -303,23 +303,20 @@ object AppQueries {
     // the self-overlap drops plus genuine salad-gram contamination.
     QueryDef("corpus_app", corpusAppOracle) { (s, d) =>
       import s.implicits._
-      val tAll = System.nanoTime()
-      val corpus = Tables.documents(s, d).withColumn("text",
-        concat(col("text"), lit(" "), synthCol, piiCol))
       val stages = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-      val tCur = System.nanoTime()
-      val (curated, stats) = graft.apps.CorpusApp.curate(
-        s, corpus, Set("en", "de"), minQuality = 0.5,
-        onStage = (n, sec) => stages += (n -> sec))
-      stages += ("curate_total" -> (System.nanoTime() - tCur) / 1e9)
-      val t0 = System.nanoTime()
-      val benchmark = corpus.filter(col("doc_id") % 7 === 0)
-      val (_, dropped, packs) = graft.apps.CorpusApp.decontaminateAndPack(
-        s, curated, benchmark, n = 3, packSize = 2048L)
-      stages += ("decontaminate_pack" -> (System.nanoTime() - t0) / 1e9)
-      stages += ("total" -> (System.nanoTime() - tAll) / 1e9)
-      System.err.println("[corpus_app stages] " +
-        stages.map { case (n, sec) => f"$n=$sec%.2fs" }.mkString(" "))
+      val onStage: (String, Double) => Unit = (n, sec) => stages += (n -> sec)
+      val (stats, dropped, packs) = Timing.stage(onStage, "total") {
+        val corpus = Tables.documents(s, d).withColumn("text",
+          concat(col("text"), lit(" "), synthCol, piiCol))
+        val (curated, curateStats) = Timing.stage(onStage, "curate_total")(
+          graft.apps.CorpusApp.curate(s, corpus, Set("en", "de"),
+            minQuality = 0.5, onStage = onStage))
+        val (_, dropped, packs) = Timing.stage(onStage, "decontaminate_pack")(
+          graft.apps.CorpusApp.decontaminateAndPack(s, curated,
+            corpus.filter(col("doc_id") % 7 === 0), n = 3, packSize = 2048L))
+        (curateStats, dropped, packs)
+      }
+      System.err.println(Timing.stageLine("corpus_app", stages.toSeq))
       Seq((stats.input, stats.langKept, stats.qualityKept, stats.piiRedacted,
           stats.deduped, dropped, packs))
         .toDF("input", "lang_kept", "quality_kept", "pii_redacted",
@@ -1095,8 +1092,7 @@ object AppQueries {
           array_join(slice(split(col("text"), " "), 1, 30), " ").as("etext"))
       val (manifest, stats) = graft.apps.SftApp.curatePairs(s, pr, ev,
         onStage = (n, sec) => stages += (n -> sec))
-      System.err.println("[sft_app stages] " +
-        stages.map { case (n, sec) => f"$n=$sec%.2fs" }.mkString(" ") +
+      System.err.println(Timing.stageLine("sft_app", stages.toSeq) +
         s" | pairs=${stats.pairs} after_dedup=${stats.afterDedup}" +
         s" after_decontam=${stats.afterDecontam} packs=${stats.packs}")
       manifest.orderBy(col("pack_id"))

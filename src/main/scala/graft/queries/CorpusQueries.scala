@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.core.Tables
+import graft.core.{Tables, Timing}
 import graft.operators.{AnnIndex, Dedup, FtsIndex, Html, Multimodal, Quality, Similarity, TextOps}
 import org.apache.spark.sql.functions._
 
@@ -621,10 +621,6 @@ object CorpusQueries {
        |sim AS (SELECT sid, ${packed.mkString(" + ")} AS simhash FROM bits)""".stripMargin
   }
 
-  /** Mirror of Similarity.quantize + cosineQ. MATERIALIZED: every ANN
-    * oracle references `v` from several CTEs; inlined, DuckDB re-runs the
-    * parquet scan + list transform per reference.
-    */
   /** The e4/e5 shared counting CTEs: adjacent-document candidate/reference
     * pairs (even doc_id = candidate, odd = reference), per-(pair, order,
     * gram) occurrence counts for orders 1..3 in one fan-out per side, the
@@ -653,6 +649,10 @@ object CorpusQueries {
       |rt AS (SELECT id, ord, CAST(SUM(rc) AS BIGINT) AS ref_total
       |  FROM rg GROUP BY 1, 2)""".stripMargin
 
+  /** Mirror of Similarity.quantize + cosineQ. MATERIALIZED: every ANN
+    * oracle references `v` from several CTEs; inlined, DuckDB re-runs the
+    * parquet scan + list transform per reference.
+    */
   private val quantVecCte =
     s"""v AS MATERIALIZED (SELECT vec_id AS sid,
        |  list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * ${Similarity.QuantScale}) AS BIGINT)) AS qv
@@ -865,17 +865,6 @@ object CorpusQueries {
       |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY d2 ASC, nid ASC) AS rank
       |  FROM dist) WHERE rank <= 5""".stripMargin
 
-  /** Random-hyperplane LSH CTE chain (s2 oracle + the s16 lsh recall row):
-    * md5-derived planes (the Similarity.plane formula), per-table sign
-    * buckets, bucket-collision candidates, exact-cosine scoring. Ends at
-    * `sc (qid, nid, cosine)`; callers rank. Parameterized because the two
-    * call sites tune for different goals: s2's (8 tables x 10 planes)
-    * optimizes precision-at-cost, the recall row's (8 x 4) trades bucket
-    * size for collision probability (at 10 planes a true neighbor at
-    * cosine ~0.3 collides with probability (1 - theta/pi)^10 ~ 0.003 per
-    * table — measured recall@5 0.025; at 4 planes it is ~0.1 per table,
-    * 0.73-0.80 over 8 tables).
-    */
   /** Shared LSH index CTEs (md5-derived planes + per-table sign buckets);
     * ends at `buckets (sid, tbl, bucket)`.
     */
@@ -894,6 +883,17 @@ object CorpusQueries {
        |  FROM v CROSS JOIN planes p
        |  GROUP BY v.sid, p.tbl)""".stripMargin
 
+  /** Random-hyperplane LSH CTE chain (s2 oracle + the s16 lsh recall row):
+    * md5-derived planes (the Similarity.plane formula), per-table sign
+    * buckets, bucket-collision candidates, exact-cosine scoring. Ends at
+    * `sc (qid, nid, cosine)`; callers rank. Parameterized because the two
+    * call sites tune for different goals: s2's (8 tables x 10 planes)
+    * optimizes precision-at-cost, the recall row's (8 x 4) trades bucket
+    * size for collision probability (at 10 planes a true neighbor at
+    * cosine ~0.3 collides with probability (1 - theta/pi)^10 ~ 0.003 per
+    * table — measured recall@5 0.025; at 4 planes it is ~0.1 per table,
+    * 0.73-0.80 over 8 tables).
+    */
   private def lshCtes(nTables: Int, nPlanes: Int): String =
     s"""${lshIndexCtes(nTables, nPlanes)},
        |cand AS (SELECT DISTINCT a.sid AS qid, b.sid AS nid
@@ -1673,7 +1673,7 @@ object CorpusQueries {
 
     // Batch twin of the STREAMING ingestion-dedup flow (VERDICT r7 ask #4):
     // two micro-batches (doc_id % 8 = 0, then % 8 = 4) replayed against the
-    // bucketed corpus band index exactly as dedupIngestBucketed's
+    // bucketed corpus band index exactly as dedupIngestIdempotentBucketed's
     // foreachBatch does — round 1's verified pairs, round-1 LOSERS excluded
     // from the index (only survivors' bands are appended), then round 2
     // dedups against corpus + round-1 survivors. The oracle derives both
@@ -1792,7 +1792,10 @@ object CorpusQueries {
       // the retry foreachBatch delivers after a failure
       graft.core.Timing.overhead { run(batchA, 0L) }
       run(batchB, 1L)
-      s.read.parquet(pairsPath)
+      // declared schema: a corpus with no near-dup pair lands no pair file,
+      // and an empty directory has no schema to infer
+      s.read.schema("ida BIGINT, idb BIGINT, jaccard DOUBLE, ingest_batch BIGINT")
+        .parquet(pairsPath)
         .select(col("ida"), col("idb"), col("jaccard"),
           (col("ingest_batch") + 1L).cast("long").as("round"))
         .orderBy(col("round"), col("ida"), col("idb"))
@@ -7769,14 +7772,11 @@ object CorpusQueries {
     // so the source-side pruning/pushdown assertions live in WebAppSpec.
     QueryDef("web_app", webAppOracle) { (s, d) =>
       val stages = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-      def timed[T](n: String)(body: => T): T = {
-        val t0 = System.nanoTime(); val r = body
-        stages += (n -> ((System.nanoTime() - t0) / 1e9)); r
-      }
+      val onStage: (String, Double) => Unit = (n, sec) => stages += (n -> sec)
       val warcDir = java.nio.file.Files.createTempDirectory("graft-web-app").toString
       val shardPath = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:") +
         "/graft_shards_web_" + s.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
-      timed("warc_export") {
+      Timing.stage(onStage, "warc_export") {
         val rec = Tables.documents(s, d).select(
           concat(lit("https://host"), (col("doc_id") % 7).cast("string"),
             lit(".example.com/doc/"), col("doc_id").cast("string")).as("url"),
@@ -7797,7 +7797,7 @@ object CorpusQueries {
             .sortWithinPartitions(col("url")),
           warcDir, "url", "warc_date", "record_type", "mime", "payload")
       }
-      val extracted = timed("read_gate_extract") {
+      val extracted = Timing.stage(onStage, "read_gate_extract") {
         val pages = s.read.format("graft-warc").load(warcDir)
           .filter(col("record_type") === "response")
           .select(regexp_extract(col("url"), "/doc/(\\d+)$", 1)
@@ -7812,15 +7812,14 @@ object CorpusQueries {
               TextOps.fixText(col("main")).as("text")),
           eager = true)
       }
-      timed("quality_order_shards") {
+      Timing.stage(onStage, "quality_order_shards") {
         val survivors = extracted
           .filter(TextOps.qualityScore(col("text")) >= 0.5)
           .withColumn("n_main", length(col("text")).cast("long"))
         graft.operators.Sampling.writeTrainingShards(
           survivors, "doc_id", "web", docsPerShard = 64L, shardPath)
       }
-      System.err.println("[web_app stages] " +
-        stages.map { case (n, sec) => f"$n=$sec%.2fs" }.mkString(" "))
+      System.err.println(Timing.stageLine("web_app", stages.toSeq))
       s.read.parquet(shardPath)
         .groupBy(col("shard").cast("long").as("shard"))
         .agg(count(lit(1)).as("n_docs"),
@@ -7927,14 +7926,6 @@ object CorpusQueries {
        |FROM p GROUP BY shard ORDER BY shard""".stripMargin
   }
 
-  /** Relational spec of the persisted-index flow, shared by s19 (build +
-    * frozen append + serve) and ds3 (exactly-once streaming ingest with a
-    * retry replay): cells and codebook derive from the BASE set only
-    * (sid >= 8, sid % 4 <> 0 — the training state is FROZEN before any
-    * append), codes cover base + appended batches (sid >= 8), queries are
-    * sid < 8. Any divergence between the two queries' storage paths and
-    * this one spec is a hash mismatch.
-    */
   /** The persisted-index CTE chain up to `dist (qid, nid, d2)` — shared by
     * the raw-ADC serve oracles (s19/ds3) and the refine serve oracle (s20),
     * which extends it with a shortlist + exact-cosine re-rank (the s17
@@ -7974,6 +7965,14 @@ object CorpusQueries {
          |  JOIN a qa ON qa.sid = p.qid AND qa.m = mem.m AND qa.code = mem.code
          |  GROUP BY 1, 2)""".stripMargin
 
+  /** Relational spec of the persisted-index flow, shared by s19 (build +
+    * frozen append + serve) and ds3 (exactly-once streaming ingest with a
+    * retry replay): cells and codebook derive from the BASE set only
+    * (sid >= 8, sid % 4 <> 0 — the training state is FROZEN before any
+    * append), codes cover base + appended batches (sid >= 8), queries are
+    * sid < 8. Any divergence between the two queries' storage paths and
+    * this one spec is a hash mismatch.
+    */
   private lazy val persistedIvfPqOracle: String =
       s"""$persistedIvfPqCtes
          |SELECT qid, nid, d2, rank FROM (

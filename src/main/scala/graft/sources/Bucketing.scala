@@ -86,22 +86,6 @@ object Bucketing {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Idempotently (re)write ONE partition of a [[writeBucketedPartitionedBy]]
-    * table: DROP PARTITION (which deletes a managed table's partition files)
-    * plus a belt-and-braces sweep of the partition directory (a crashed
-    * writer can leave committed files with no catalog entry), then append
-    * `df` with the full partition+bucket spec. A retry of the same
-    * `partValue` REPLACES its own partition — never duplicates — while
-    * every other partition, and the table's bucket property, is untouched.
-    * Spark's dynamic partitionOverwriteMode refuses bucketed tables, so this
-    * drop-then-append sequence IS the partition-overwrite for them; the
-    * non-atomic window (partition absent between drop and append) is
-    * acceptable because callers read behind a committed-prefix filter that
-    * excludes the in-flight partition anyway.
-    *
-    * `df` must NOT already contain `partCol`; it is stamped here so the rows
-    * land in exactly the partition being replaced.
-    */
   /** DROP PARTITION plus the belt-and-braces file sweep (a crashed writer
     * can leave committed files with no catalog entry) — the shared first
     * half of [[overwriteBucketedPartition]] and
@@ -131,6 +115,22 @@ object Bucketing {
     }
   }
 
+  /** Idempotently (re)write ONE partition of a [[writeBucketedPartitionedBy]]
+    * table: DROP PARTITION (which deletes a managed table's partition files)
+    * plus a belt-and-braces sweep of the partition directory (a crashed
+    * writer can leave committed files with no catalog entry), then append
+    * `df` with the full partition+bucket spec. A retry of the same
+    * `partValue` REPLACES its own partition — never duplicates — while
+    * every other partition, and the table's bucket property, is untouched.
+    * Spark's dynamic partitionOverwriteMode refuses bucketed tables, so this
+    * drop-then-append sequence IS the partition-overwrite for them; the
+    * non-atomic window (partition absent between drop and append) is
+    * acceptable because callers read behind a committed-prefix filter that
+    * excludes the in-flight partition anyway.
+    *
+    * `df` must NOT already contain `partCol`; it is stamped here so the rows
+    * land in exactly the partition being replaced.
+    */
   def overwriteBucketedPartition(df: DataFrame, table: String, partCol: String,
                                  partValue: Long, bucketCols: Seq[String],
                                  nBuckets: Int): Unit = {
@@ -146,32 +146,6 @@ object Bucketing {
       .saveAsTable(table)
   }
 
-  /** Compact a bucketed managed table IN PLACE to one file per non-empty
-    * bucket (VERDICT r8 ask #5 — index maintenance under append churn).
-    *
-    * Why file COUNT is the target: every [[appendBucketedBy]] lands up to
-    * (writer partitions x nBuckets) more files; the bucketed reader must
-    * open every file of a bucket, so after B appended batches the
-    * "exchange-free" aligned scan opens O(B) files per bucket — at 100 TB
-    * the open/seek count, not the bytes, kills the candidate join.
-    * Rewriting the table repartitioned BY THE BUCKET ID VALUE (pmod of the
-    * murmur3 hash — the same mapping the bucketed writer applies) puts
-    * every bucket's rows in exactly one write task, and the writer splits
-    * files per (task, bucket), so the rewrite emits exactly one file per
-    * non-empty bucket. (Repartitioning by the raw bucket COLUMNS is not
-    * enough — the write task a row lands in and the bucket file it is
-    * routed to come from different pmod chains, so tasks straddle buckets
-    * and each straddle costs a file.) Rows only move between files of the
-    * SAME bucket — downstream join plans, their Exchange counts, and their
-    * results are unchanged (DedupSpec proves candidate pairs identical).
-    *
-    * Publication is a staging-table swap (the Sinks.compact contract
-    * in catalog form): write `<table>__compacting`, then drop + rename.
-    * The swap window is metadata-only; a crash between drop and rename
-    * leaves the staging table intact for manual recovery.
-    *
-    * Returns (files_before, files_after).
-    */
   /** One task per bucket: partition by the bucket id (pmod of murmur3 over
     * the bucket columns — `hash` IS Murmur3 with the writer's seed), so the
     * bucketed writer's per-(task, bucket) file split emits one file per
@@ -201,6 +175,32 @@ object Bucketing {
     try body finally spark.conf.set(key, prev)
   }
 
+  /** Compact a bucketed managed table IN PLACE to one file per non-empty
+    * bucket (VERDICT r8 ask #5 — index maintenance under append churn).
+    *
+    * Why file COUNT is the target: every [[appendBucketedBy]] lands up to
+    * (writer partitions x nBuckets) more files; the bucketed reader must
+    * open every file of a bucket, so after B appended batches the
+    * "exchange-free" aligned scan opens O(B) files per bucket — at 100 TB
+    * the open/seek count, not the bytes, kills the candidate join.
+    * Rewriting the table repartitioned BY THE BUCKET ID VALUE (pmod of the
+    * murmur3 hash — the same mapping the bucketed writer applies) puts
+    * every bucket's rows in exactly one write task, and the writer splits
+    * files per (task, bucket), so the rewrite emits exactly one file per
+    * non-empty bucket. (Repartitioning by the raw bucket COLUMNS is not
+    * enough — the write task a row lands in and the bucket file it is
+    * routed to come from different pmod chains, so tasks straddle buckets
+    * and each straddle costs a file.) Rows only move between files of the
+    * SAME bucket — downstream join plans, their Exchange counts, and their
+    * results are unchanged (DedupSpec proves candidate pairs identical).
+    *
+    * Publication is a staging-table swap (the Sinks.compact contract
+    * in catalog form): write `<table>__compacting`, then drop + rename.
+    * The swap window is metadata-only; a crash between drop and rename
+    * leaves the staging table intact for manual recovery.
+    *
+    * Returns (files_before, files_after).
+    */
   def compactBucketedTable(spark: SparkSession, table: String,
                            bucketCols: Seq[String], nBuckets: Int): (Int, Int) = {
     val before = spark.table(table).inputFiles.length

@@ -189,98 +189,17 @@ object EventStreams {
         col("n_events"))
   }
 
-  /** Streaming ingestion dedup: every micro-batch of documents is checked
-    * against the PERSISTED corpus LSH band index (Dedup.bandIndex parquet)
-    * plus itself, near-dup pairs land in `pairsOutPath`, the surviving
-    * (non-duplicate, non-contaminated) docs are appended to `docsOutPath`,
-    * and the batch's own bands are appended to the index — so batch N+1
-    * dedups against everything batch N ingested. This is the streaming twin
-    * of the batch incremental path (d12): per-batch cost scales with
-    * |batch| x bucket occupancy, never with corpus size, because the corpus
-    * is only ever touched through its band index and an id-filtered
-    * verification scan.
+  /** IDEMPOTENT streaming ingestion dedup: every micro-batch of documents
+    * is checked against the PERSISTED corpus LSH band index plus itself,
+    * near-dup pairs land in `pairsOutPath`, the surviving docs join the
+    * corpus and their bands join the index — so batch N+1 dedups against
+    * everything batch N ingested. Per-batch cost scales with |batch| x
+    * bucket occupancy, never with corpus size: the corpus is only touched
+    * through its band index and an id-filtered verification scan. The
+    * state lives in storage, not in the state store, because it must
+    * outlive the query and be shared with batch jobs.
     *
-    * foreachBatch rather than a stateful operator on purpose: the state (the
-    * band index) must outlive the query and be shared with batch jobs, so it
-    * lives in storage, not in the state store. Exactly-once: foreachBatch is
-    * at-least-once on retry, so production runs key the appends by batchId
-    * (idempotent overwrite-by-partition, Sinks.overwriteRunPartition) — kept
-    * as plain appends here for fixture clarity.
-    */
-  def dedupIngest(stream: DataFrame, corpusDocsPath: String, bandIndexPath: String,
-                  docsOutPath: String, pairsOutPath: String, idCol: String,
-                  textCol: String, n: Int, threshold: Double)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.Dedup
-    stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val spark = batch.sparkSession
-      val b = batch.localCheckpoint(false)
-      val corpus = spark.read.parquet(corpusDocsPath)
-      val bands = spark.read.parquet(bandIndexPath)
-      val pairs = Dedup.incrementalNearDupPairs(
-        b, corpus, bands, idCol, textCol, n, threshold).localCheckpoint(false)
-      pairs.write.mode("append").parquet(pairsOutPath)
-      // keep docs that are not the higher-id member of any verified pair
-      val losers = pairs.select(org.apache.spark.sql.functions.greatest(
-        org.apache.spark.sql.functions.col("ida"),
-        org.apache.spark.sql.functions.col("idb")).as("loser"))
-      val kept = b.join(org.apache.spark.sql.functions.broadcast(losers),
-        b(idCol) === org.apache.spark.sql.functions.col("loser"), "left_anti")
-      kept.write.mode("append").parquet(docsOutPath)
-      kept.write.mode("append").parquet(corpusDocsPath)
-      Dedup.bandIndex(kept, idCol, textCol, n).write.mode("append").parquet(bandIndexPath)
-    }
-  }
-
-  /** [[dedupIngest]] against a BUCKETED band-index table instead of plain
-    * parquet — the 100 TB shape: the corpus side of every micro-batch's
-    * candidate join reads bucket-aligned on (band, bkey) with NO Exchange
-    * (Dedup.writeBandIndex's contract), and each batch's surviving bands
-    * are appended WITH the same bucket spec (Dedup.appendBandIndex), so the
-    * property holds as the index grows. Per-batch cost stays
-    * |batch| x bucket occupancy while the corpus-side shuffle cost is zero
-    * — at corpus scale that exchange is the dominant term the plain-parquet
-    * form pays every batch. Results are identical to [[dedupIngest]]
-    * (storage layout must not change answers) — oracle-anchored by the
-    * ds1_streaming_dedup_twin batch query and the parity spec.
-    */
-  def dedupIngestBucketed(stream: DataFrame, corpusDocsPath: String,
-                          bandIndexTable: String, nBuckets: Int,
-                          docsOutPath: String, pairsOutPath: String,
-                          idCol: String, textCol: String, n: Int,
-                          threshold: Double)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.Dedup
-    import org.apache.spark.sql.functions.lit
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val b = batch.localCheckpoint(false)
-      val corpus = spark.read.parquet(corpusDocsPath)
-      val bands = spark.table(bandIndexTable)
-      val pairs = Dedup.incrementalNearDupPairs(
-        b, corpus, bands, idCol, textCol, n, threshold).localCheckpoint(false)
-      // every appended row carries its batchId, so a retried micro-batch's
-      // duplicates are DETECTABLE and compactable after the fact (group by
-      // ingest_batch, keep one copy); for retries that never duplicate in
-      // the first place use [[dedupIngestIdempotentBucketed]]
-      pairs.withColumn("ingest_batch", lit(batchId))
-        .write.mode("append").parquet(pairsOutPath)
-      val losers = pairs.select(org.apache.spark.sql.functions.greatest(
-        org.apache.spark.sql.functions.col("ida"),
-        org.apache.spark.sql.functions.col("idb")).as("loser"))
-      val kept = b.join(org.apache.spark.sql.functions.broadcast(losers),
-        b(idCol) === org.apache.spark.sql.functions.col("loser"), "left_anti")
-        .localCheckpoint(false)
-      kept.withColumn("ingest_batch", lit(batchId))
-        .write.mode("append").parquet(docsOutPath)
-      kept.withColumn("ingest_batch", lit(batchId))
-        .write.mode("append").parquet(corpusDocsPath)
-      Dedup.appendBandIndex(kept, idCol, textCol, n, bandIndexTable, nBuckets)
-    }
-  }
-
-  /** IDEMPOTENT ingestion dedup — closes [[dedupIngest]]'s documented
-    * at-least-once caveat: foreachBatch re-runs a failed batch with the
+    * Exactly-once: foreachBatch re-runs a failed batch with the
     * SAME batchId, so every output (pairs, surviving docs, band-index rows)
     * is written to an `ingest_batch = batchId` partition with dynamic
     * partition overwrite — a retry REPLACES its own partition instead of
@@ -338,11 +257,11 @@ object EventStreams {
         .withColumn("ingest_batch", lit(batchId)), bandIndexPath, "ingest_batch")
   }
 
-  /** EXACTLY-ONCE ingestion dedup with the EXCHANGE-FREE corpus join — the
-    * unification of [[dedupIngestBucketed]] (scale) and
-    * [[dedupIngestIdempotent]] (retry safety), closing the tradeoff the r8
-    * design accepted. The band index is a table partitioned by
-    * `ingest_batch` AND bucketed on (band, bkey)
+  /** EXACTLY-ONCE ingestion dedup with the EXCHANGE-FREE corpus join —
+    * [[dedupIngestIdempotent]]'s retry safety at the 100 TB shape, where the
+    * corpus-side exchange of the candidate join is the dominant per-batch
+    * term the plain-parquet index pays. The band index is a table
+    * partitioned by `ingest_batch` AND bucketed on (band, bkey)
     * (Dedup.writeBandIndexPartitioned): each micro-batch's bands land in
     * their own partition via drop-partition + bucketed append
     * (Dedup.overwriteBandIndexBatch), so a retry REPLACES its own partition

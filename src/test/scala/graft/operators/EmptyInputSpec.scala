@@ -271,4 +271,18 @@ class EmptyInputSpec extends SparkSpec {
       "budget 35 keeps docs 1..3 (30) + the crossing doc 4")
     assert(kept.map(_._2).toSeq == Seq(10L, 20L, 30L, 40L))
   }
+
+  test("ds2_ingest_exactly_once: a corpus with no near-duplicate pair gives 0 rows") {
+    // 16 documents of disjoint words: no batch lands a pair file, so the
+    // pairs directory the query reads back holds no data file
+    val dir = java.nio.file.Files.createTempDirectory("graft_ds2_nopairs").toString
+    (0L until 16L).map { i =>
+      val text = (0 until 10).map(j => s"w${i}x$j").mkString(" ")
+      (i, text, "en", "web", text.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    val out = graft.SparkEntry.queries("ds2_ingest_exactly_once")(spark, dir)
+    assert(out.columns.toSeq == Seq("ida", "idb", "jaccard", "round"))
+    assert(out.count() == 0)
+  }
 }

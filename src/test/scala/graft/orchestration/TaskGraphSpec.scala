@@ -74,4 +74,58 @@ class TaskGraphSpec extends AnyFunSuite {
       parallelism = 2, sleep = _ => ())
     assert(r2("y") == SkippedUpstreamFailure && r2("z") == SkippedUpstreamFailure)
   }
+
+  test("runParallel: a straggler does not hold back tasks that do not depend on it") {
+    // a can only finish once c runs, and c waits on the independent b: a
+    // scheduler that holds ready tasks back until every running task ends
+    // leaves a waiting out its whole timeout
+    val latch = new java.util.concurrent.CountDownLatch(1)
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val once = RetryPolicy(retries = 0, delayMs = 1)
+    val r = TaskGraph.runParallel(Seq(
+      Task("a", policy = once)(() => {
+        if (!latch.await(10, java.util.concurrent.TimeUnit.SECONDS)) sys.error("latch never opened")
+        events.add("a end")
+      }),
+      Task("b", policy = once)(() => ()),
+      Task("c", upstream = Seq("b"), policy = once)(() => {
+        events.add("c start")
+        latch.countDown()
+      })),
+      parallelism = 2, sleep = _ => ())
+    assert(r.values.forall(_ == Succeeded), r.toString)
+    assert(events.toArray.toSeq == Seq("c start", "a end"))
+  }
+
+  test("run: one task at a time, ready tasks start in declaration order") {
+    val active = new java.util.concurrent.atomic.AtomicInteger(0)
+    val maxActive = new java.util.concurrent.atomic.AtomicInteger(0)
+    val order = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def body(id: String): () => Unit = () => {
+      maxActive.accumulateAndGet(active.incrementAndGet(), math.max)
+      order.add(id)
+      Thread.sleep(20)
+      active.decrementAndGet()
+    }
+    // ready at start: b, a, c (declaration order); d becomes ready when a
+    // finishes and, declared before c, runs ahead of it
+    val r = TaskGraph.run(Seq(
+      Task("b")(body("b")),
+      Task("d", upstream = Seq("a"))(body("d")),
+      Task("a")(body("a")),
+      Task("c")(body("c"))),
+      sleep = _ => ())
+    assert(r.values.forall(_ == Succeeded))
+    assert(maxActive.get() == 1)
+    assert(order.toArray.toSeq == Seq("b", "a", "d", "c"))
+  }
+
+  test("a fatal error in a task surfaces unwrapped") {
+    val err = intercept[StackOverflowError] {
+      TaskGraph.runParallel(Seq(
+        Task("x")(() => throw new StackOverflowError("injected"))),
+        parallelism = 2, sleep = _ => ())
+    }
+    assert(err.getMessage == "injected")
+  }
 }

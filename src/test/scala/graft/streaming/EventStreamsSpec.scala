@@ -455,20 +455,22 @@ class EventStreamsSpec extends SparkSpec {
     } finally q2.stop()
   }
 
-  test("dedupIngest: batch N+1 dedups against what batch N ingested, via the persisted index") {
+  test("dedupIngestIdempotent: batch N+1 dedups against what batch N ingested, via the persisted index") {
     implicit val sqlCtx = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft_ingest")
     def p(s: String) = base.resolve(s).toString
-    // seed corpus + its band index
+    // seed corpus + its band index under the ingest_batch = -1 partition
     val corpus = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta")).toDF("doc_id", "text")
-    corpus.write.parquet(p("corpus"))
-    graft.operators.Dedup.bandIndex(corpus, "doc_id", "text", 3)
-      .write.parquet(p("bands"))
+    graft.sources.Sinks.overwriteRunPartition(
+      corpus.withColumn("ingest_batch", lit(-1L)), p("corpus"), "ingest_batch")
+    graft.sources.Sinks.overwriteRunPartition(
+      graft.operators.Dedup.bandIndex(corpus, "doc_id", "text", 3)
+        .withColumn("ingest_batch", lit(-1L)), p("bands"), "ingest_batch")
 
     val input = MemoryStream[(Long, String)]
-    val q = dedupIngest(input.toDF().toDF("doc_id", "text"),
-      p("corpus"), p("bands"), p("kept"), p("pairs"),
+    val q = dedupIngestIdempotent(input.toDF().toDF("doc_id", "text"),
+      p("corpus"), p("bands"), p("pairs"),
       "doc_id", "text", n = 3, threshold = 0.5).start()
     def drain(): Unit = { q.processAllAvailable() }
 
@@ -483,8 +485,8 @@ class EventStreamsSpec extends SparkSpec {
       input.addData((20L, "one two three four five six seven eight"))
       drain()
 
-      val kept = spark.read.parquet(p("kept")).select("doc_id")
-        .collect().map(_.getLong(0)).toSet
+      val kept = spark.read.parquet(p("corpus")).filter($"ingest_batch" >= 0)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(kept == Set(11L), s"kept $kept") // 10 dups seed, 20 dups 11
       val pairs = spark.read.parquet(p("pairs"))
         .select("ida", "idb").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -531,7 +533,7 @@ class EventStreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("dedupIngestBucketed parity: live two-batch stream equals the ds1 oracle twin") {
+  test("dedupIngestIdempotentBucketed parity: live two-batch stream equals the ds1 oracle twin") {
     implicit val sqlCtx = spark.sqlContext
     val base = java.nio.file.Files.createTempDirectory("graft_ingest_bkt")
     def p(s: String) = base.resolve(s).toString
@@ -550,29 +552,32 @@ class EventStreamsSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect()
       .groupBy(_._1).map { case (r, xs) => r -> xs.map(x => (x._2, x._3)).toSet }
 
-    // live foreachBatch replay against a fresh bucketed index
+    // live foreachBatch replay against a fresh partitioned bucketed index,
+    // corpus and index seeded under ingest_batch = -1
     val table = "graft_band_index_ds1_stream_test"
     graft.sources.Bucketing.ensureCleanTable(spark, table)
-    corpus.write.parquet(p("corpus"))
-    graft.operators.Dedup.writeBandIndex(
-      spark.read.parquet(p("corpus")), "doc_id", "text", 3, table, nBuckets = 8)
+    graft.sources.Sinks.overwriteRunPartition(
+      corpus.withColumn("ingest_batch", lit(-1L)), p("corpus"), "ingest_batch")
+    graft.operators.Dedup.writeBandIndexPartitioned(
+      corpus, "doc_id", "text", 3, table, nBuckets = 8)
     val input = MemoryStream[(Long, String)]
-    val q = dedupIngestBucketed(input.toDF().toDF("doc_id", "text"),
-      p("corpus"), table, 8, p("kept"), p("pairs"),
+    val q = dedupIngestIdempotentBucketed(input.toDF().toDF("doc_id", "text"),
+      p("corpus"), table, 8, p("pairs"),
       "doc_id", "text", n = 3, threshold = 0.5).start()
     try {
       input.addData(batchA.toSeq: _*); q.processAllAvailable()
-      val pairsAfterA = spark.read.parquet(p("pairs"))
-        .select("ida", "idb").as[(Long, Long)].collect().toSet
       input.addData(batchB.toSeq: _*); q.processAllAvailable()
-      val pairsAll = spark.read.parquet(p("pairs"))
-        .select("ida", "idb").as[(Long, Long)].collect().toSet
-      assert(pairsAfterA == twin.getOrElse(1L, Set.empty),
-        s"round-1 stream=$pairsAfterA twin=${twin.get(1L)}")
-      assert(pairsAll -- pairsAfterA == twin.getOrElse(2L, Set.empty),
-        s"round-2 stream=${pairsAll -- pairsAfterA} twin=${twin.get(2L)}")
+      // micro-batch ids 0 and 1 are rounds 1 and 2
+      val rounds = spark.read.parquet(p("pairs"))
+        .select($"ingest_batch" + 1L, $"ida", $"idb")
+        .as[(Long, Long, Long)].collect()
+        .groupBy(_._1).map { case (r, xs) => r -> xs.map(x => (x._2, x._3)).toSet }
+      assert(rounds.getOrElse(1L, Set.empty) == twin.getOrElse(1L, Set.empty),
+        s"round-1 stream=${rounds.get(1L)} twin=${twin.get(1L)}")
+      assert(rounds.getOrElse(2L, Set.empty) == twin.getOrElse(2L, Set.empty),
+        s"round-2 stream=${rounds.get(2L)} twin=${twin.get(2L)}")
       // the parity is only meaningful if the flow actually flags something
-      assert(pairsAll.nonEmpty)
+      assert(rounds.values.exists(_.nonEmpty))
     } finally {
       q.stop()
       graft.sources.Bucketing.ensureCleanTable(spark, table)
