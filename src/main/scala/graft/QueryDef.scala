@@ -17,10 +17,4 @@ object QueryDef {
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, fn, Some(oracle))
-
-  /** For ops whose semantics aren't expressible in portable SQL (LSH
-    * banding, stubs…): driver records a weaker rows-only check.
-    */
-  def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
 }

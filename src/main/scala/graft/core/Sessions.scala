@@ -10,6 +10,10 @@ import org.apache.spark.sql.SparkSession
   * is overridden to ~2-3x total cores), UTC session timezone (the reference
   * pins UTC for weather and is otherwise TZ-naive;
   * OpenMeteoWeatherPipelineHourlyData.py:67-68).
+  *
+  * [[configure]] also applies [[graft.GraftExtensions]], the one route of
+  * the `graft_*` functions and the nanos rule into a session, so every
+  * session it builds (and each `newSession()` of one) has them on any thread.
   */
 object Sessions {
   def local(appName: String = "graft"): SparkSession = {
@@ -20,7 +24,7 @@ object Sessions {
     ).getOrCreate()
   }
 
-  /** Apply graft's standard configuration to any builder (cluster or local). */
+  /** Apply graft's configuration and extensions to any builder (cluster or local). */
   def configure(
       b: SparkSession.Builder,
       shufflePartitions: Int = 32
@@ -44,4 +48,5 @@ object Sessions {
       .config("spark.sql.codegen.cache.maxEntries",
         sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.GraftExtensions)
 }

@@ -38,10 +38,8 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Comparisons against the converted column are rewritten back onto the
-    // raw nanos long so they push into the scan (see NanosPredicatePushdown).
-    graft.plans.NanosPredicatePushdown.install(s)
+    // Sessions.configure sets nanosAsLong and applies NanosPredicatePushdown,
+    // which pushes comparisons on the converted ts onto the raw nanos long.
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
       case LongType => // TIMESTAMP(NANOS) fixture, micro-aligned

@@ -1429,13 +1429,6 @@ object Dedup {
       cdcChunkHashes(df, idCol, textCol, n, divisor),
       table, Seq("h"), nBuckets)
 
-  /** Append a batch's chunk-hash postings — per-batch CDC-index growth. */
-  def appendCdcIndex(df: DataFrame, idCol: String, textCol: String, n: Int,
-                     divisor: Int, table: String, nBuckets: Int): Unit =
-    graft.sources.Bucketing.appendBucketedBy(
-      cdcChunkHashes(df, idCol, textCol, n, divisor),
-      table, Seq("h"), nBuckets)
-
   /** Incremental near-version dedup: a batch against the persisted CDC
     * chunk index (+ within itself) — equals the full [[cdcOverlapPairs]]
     * run restricted to batch-touching pairs. The hot-hash suppression
@@ -1554,15 +1547,6 @@ object Dedup {
   def writeHammingIndex(sig: DataFrame, hashCol: String, totalBits: Int,
                         numChunks: Int, table: String, nBuckets: Int): Unit =
     graft.sources.Bucketing.writeBucketedBy(
-      hammingChunks(sig, hashCol, totalBits, numChunks),
-      table, Seq("chunk", "ckey"), nBuckets)
-
-  /** Append a batch's chunk postings to a [[writeHammingIndex]] table —
-    * per-batch media-index growth, bucket spec validated by Spark.
-    */
-  def appendHammingIndex(sig: DataFrame, hashCol: String, totalBits: Int,
-                         numChunks: Int, table: String, nBuckets: Int): Unit =
-    graft.sources.Bucketing.appendBucketedBy(
       hammingChunks(sig, hashCol, totalBits, numChunks),
       table, Seq("chunk", "ckey"), nBuckets)
 

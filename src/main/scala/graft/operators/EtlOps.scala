@@ -97,15 +97,6 @@ object EtlOps {
   def dropColumns(names: String*)(df: DataFrame): DataFrame =
     df.drop(names.toSeq: _*)
 
-  /** A1 — group-sum (`computeHourlyNetGenerationByEnergySource`,
-    * EIA930PipelineHourlyData.py:111-118). Exact decimal sum; see ExactAgg.
-    */
-  def groupSum(keys: Seq[String], valueCol: String, alias: String)(
-      df: DataFrame): DataFrame =
-    df.groupBy(keys.map(col): _*)
-      .agg(ExactAgg.sumExact(col(valueCol)).as(alias))
-      .orderBy(keys.map(col): _*)
-
   /** A2/A3 — group-sum then pivot wide over a fixed value set
     * (EIA930PipelineHourlyData.py:121-142; pivot values fixed by the sink
     * schema, databaseOperations.py:189-206). `dropIncomplete` reproduces the

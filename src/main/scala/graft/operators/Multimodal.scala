@@ -101,11 +101,6 @@ object Multimodal {
     case 1 => "bmp"
     case _ => "gif"
   }
-  def headerLenFor(format: String): Int = format match {
-    case "png" => PngHeaderLen
-    case "bmp" => BmpHeaderLen
-    case _     => GifHeaderLen
-  }
   def widthFor(nPayload: Long): Int  = (64 + (nPayload * 7919L) % 509).toInt
   def heightFor(nPayload: Long): Int = (64 + (nPayload * 104729L) % 509).toInt
 

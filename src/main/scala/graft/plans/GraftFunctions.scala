@@ -1,7 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, Literal, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -52,9 +51,10 @@ case class KernelCall(name: String, override val dataType: DataType,
 trait Matcher extends Product with Serializable
 
 /** THE registry of every `graft_*` SQL function: one table row per
-  * function, walked by both registration routes — `GraftExtensions` (a
-  * `spark.sql.extensions` session) and [[register]] (the lazy Column-API
-  * helpers) — so the two can never drift.
+  * function. The one registration route, [[graft.GraftExtensions]], injects
+  * every row when a session is built; `core.Sessions.configure` applies it
+  * to every engine session, and the Column-API helpers below are plain
+  * calls of the SQL names.
   *
   * A kernel is a compute function plus one [[kernel]] row here and its
   * one-line static entry point below, named after the SQL function: the
@@ -282,21 +282,8 @@ object GraftFunctions {
   def graft_lang_id(text: UTF8String, m: LangIdLong.MultiMatcher): UTF8String =
     m.pick(text)
 
-  /** Registers every table row into `spark`; idempotent per session. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    all.foreach { f =>
-      val id = FunctionIdentifier(f.name)
-      if (!registry.functionExists(id))
-        registry.registerFunction(id, f.info, f.builder)
-    }
-  }
-
-  /** Column API core: registers into the active session, then calls `name`. */
-  def call(name: String, args: Column*): Column = {
-    SparkSession.getActiveSession.foreach(register)
-    call_function(name, args: _*)
-  }
+  /** Column API core: a plain call of the SQL function `name`. */
+  def call(name: String, args: Column*): Column = call_function(name, args: _*)
 
   /** Exact integer dot product of two array<bigint> columns. */
   def dotLong(a: Column, b: Column): Column = call(DotLongName, a, b)

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -67,11 +66,5 @@ object NanosPredicatePushdown extends Rule[LogicalPlan] {
         case (Some(lo), Some(hi)) => And(GreaterThanOrEqual(x, lo), LessThan(x, hi))
         case _ => orig
       }
-  }
-
-  /** Idempotently install into a session's experimental optimizations. */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(this)) spark.experimental.extraOptimizations = cur :+ this
   }
 }

@@ -39,15 +39,4 @@ object OpenMeteoSource {
           col("latitude"), col("longitude")) ++
           vars.map(v => element_at(col(s"hourly.`$v`"), col("idx") + 1).as(v)): _*)
   }
-
-  /** F5 — hourly range generation from epoch-second bounds, end-EXCLUSIVE
-    * (`inclusive="left"`): sequence is inclusive on both ends, so the last
-    * step is pulled one interval back.
-    */
-  def hourlyRange(startEpochS: org.apache.spark.sql.Column,
-                  endEpochS: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sequence(
-      timestamp_seconds(startEpochS),
-      timestamp_seconds(endEpochS) - expr("INTERVAL 1 HOUR"),
-      expr("INTERVAL 1 HOUR"))
 }

@@ -596,26 +596,17 @@ object EventStreams {
       }
   }
 
-  /** EXACTLY-ONCE persisted funnel ingestion — the ds-series contract
-    * applied to per-user funnel state: each micro-batch advances the
-    * chains of its TOUCHED users from the committed prior state
-    * ([[graft.operators.Funnel.advance]] — expression tree shared with
-    * the oracle-checked w11 path) and lands the updated rows by
+  /** EXACTLY-ONCE persisted funnel ingestion of one micro-batch — the
+    * ds-series contract applied to per-user funnel state: the batch
+    * advances the chains of its TOUCHED users from the committed prior
+    * state ([[graft.operators.Funnel.advance]] — expression tree shared
+    * with the oracle-checked w11 path) and lands the updated rows by
     * partition-replace on `ingest_batch`. A retried batch reads the SAME
     * committed prefix (`ingest_batch < batchId`) and rewrites its own
     * partition with identical rows — replay changes nothing. Serve =
     * latest committed row per user. Batches must not regress event time
     * (the [[funnelUpdates]] posture), which Spark's source ordering
-    * provides.
-    */
-  def funnelIngest(stream: DataFrame, statePath: String, steps: Seq[String])
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      funnelIngestBatch(batch, batchId, statePath, steps)
-    }
-
-  /** One funnel micro-batch — public so retry semantics are testable
-    * without faulting a live query (the noveltyIngestBatch convention).
+    * provides when this runs as a `foreachBatch` body.
     */
   def funnelIngestBatch(batch: DataFrame, batchId: Long, statePath: String,
                         steps: Seq[String]): Unit = {

@@ -11,14 +11,11 @@ import graft.plans._
   */
 class BuilderGuardSpec extends SparkSpec {
 
-  private def registerAll(): Unit = GraftFunctions.register(spark)
-
   /** The builder error may be wrapped (AnalysisException chains); assert
     * the function name appears somewhere in the message chain and that no
     * frame is the unnamed IndexOutOfBounds/NPE/NoSuchElement failure.
     */
   private def assertNamedError(name: String, sql: String): Unit = {
-    registerAll()
     val t = intercept[Throwable](spark.sql(sql).collect())
     val chain = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
       .take(8).toSeq
@@ -88,7 +85,6 @@ class BuilderGuardSpec extends SparkSpec {
   test("graft_lang_id rejects more than 64 word sets at plan time") {
     val labels = (0 to 64).map(i => s"'l$i'").mkString(", ")
     val sets = (0 to 64).map(i => s"array('w$i')").mkString(", ")
-    registerAll()
     // analysis only: the limit must fire while planning, not at first eval
     val t = intercept[Throwable](
       spark.sql(s"SELECT graft_lang_id('x', array($labels), array($sets))"))
@@ -104,7 +100,6 @@ class BuilderGuardSpec extends SparkSpec {
   }
 
   test("a kernel argument of the wrong type is a DATATYPE_MISMATCH naming it") {
-    registerAll()
     val e = intercept[org.apache.spark.sql.AnalysisException](
       spark.sql("SELECT graft_ln_micro(2, 1)"))
     assert(e.getCondition.startsWith("DATATYPE_MISMATCH"), e.getMessage)
@@ -112,7 +107,6 @@ class BuilderGuardSpec extends SparkSpec {
   }
 
   test("kernels propagate NULL arguments and fold constant calls") {
-    registerAll()
     val df = spark.sql("SELECT graft_ln_micro(CAST(NULL AS bigint), 1L) AS n, " +
       "graft_ln_micro(2L, 1L) AS c")
     assert(df.collect()(0).isNullAt(0))
@@ -136,7 +130,6 @@ class BuilderGuardSpec extends SparkSpec {
 
   planTime.zipWithIndex.foreach { case ((name, sql), i) =>
     test(s"$name rejects a bad literal argument at analysis ($i)") {
-      registerAll()
       val t = intercept[Throwable](spark.sql(sql))
       val chain = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
       assert(chain.exists(e => Option(e.getMessage).exists(_.contains(name))),

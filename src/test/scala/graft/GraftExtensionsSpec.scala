@@ -3,24 +3,24 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The spark.sql.extensions entry point: a FRESH session built with
-  * GraftExtensions must expose every native kernel to plain SQL and carry
-  * the nanos-pushdown optimizer rule — no Column-API helper may have run
-  * first (that path self-registers and would mask a broken injection).
+/** The one registration route: a FRESH session built through
+  * `Sessions.configure`, which applies GraftExtensions, must expose every
+  * native kernel to plain SQL and carry the nanos-pushdown optimizer rule.
+  * Nothing else registers a function, so these tests see only what
+  * `configure` wires.
   */
 class GraftExtensionsSpec extends AnyFunSuite
     with org.scalatest.BeforeAndAfterAll {
 
   private lazy val spark: SparkSession = {
     // getOrCreate() returns any existing active/default session, ignoring
-    // withExtensions — clear both so the injection genuinely runs (the
-    // SparkContext itself is still reused within the JVM)
+    // the builder's extensions — clear both so the injection genuinely runs
+    // (the SparkContext itself is still reused within the JVM)
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val s = graft.core.Sessions.configure(
       SparkSession.builder()
-        .appName("graft-ext-test").master("local[2]")
-        .withExtensions(new GraftExtensions),
+        .appName("graft-ext-test").master("local[2]"),
       shufflePartitions = 2)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
@@ -28,8 +28,8 @@ class GraftExtensionsSpec extends AnyFunSuite
   }
 
   override def afterAll(): Unit = {
-    // hand the JVM-shared default session back to the suite singleton so
-    // later suites' lazy helpers resolve the expected session
+    // hand the JVM-shared default and active session back to the suite
+    // singleton, so later suites see the session they share
     SparkSession.setDefaultSession(TestSpark.spark)
     SparkSession.setActiveSession(TestSpark.spark)
     super.afterAll()

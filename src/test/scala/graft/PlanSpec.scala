@@ -652,7 +652,6 @@ class PlanSpec extends SparkSpec {
     val kernelRows = graft.plans.GraftFunctions.all
       .filter(_.owner == classOf[graft.plans.KernelCall]).map(_.name).toSet
     assert(calls.keySet == kernelRows, kernelRows.diff(calls.keySet))
-    graft.plans.GraftFunctions.register(spark)
     // 20 calls per query: a plan string shows only a Project's first 25 fields
     val p = calls.toSeq.grouped(20).map { chunk =>
       val df = spark.sql(chunk.map { case (n, c) => s"$c AS $n" }
@@ -676,7 +675,6 @@ class PlanSpec extends SparkSpec {
     // only the four aggregate sketches are not kernel calls
     assert(graft.plans.GraftFunctions.all
       .count(_.owner != classOf[graft.plans.KernelCall]) == 4)
-    graft.plans.GraftFunctions.register(spark)
     val q = "SELECT graft_word_set_count(t, array('a', 'the')), count(*) AS c " +
       "FROM (SELECT concat('a the ', id % 3) AS t FROM range(6)) " +
       "GROUP BY graft_word_set_count(t, array('a', 'the'))"

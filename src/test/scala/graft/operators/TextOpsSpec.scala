@@ -413,7 +413,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("graft_bpe_segment SQL builder fails loud on wrong arity and NULL merges") {
-    graft.plans.GraftFunctions.register(spark)
     // one argument: a named arity error, not IndexOutOfBoundsException
     val e1 = intercept[Exception] {
       spark.sql("SELECT graft_bpe_segment('abc')").collect()

@@ -60,7 +60,6 @@ class FailLoudParitySpec extends SparkSpec {
   }
 
   test("loop kernels fail loud with one message in generated and interpreted code") {
-    GraftFunctions.register(spark)
     cases.foreach { case (name, cause, call) =>
       val generated = kernelError(call)
       val plain = interpreted(kernelError(call))
