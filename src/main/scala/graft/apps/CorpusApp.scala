@@ -152,51 +152,16 @@ object CorpusApp {
       cleaned = cleaned))
   }
 
-  /** Final stage: deterministic training order — every curated doc gets a
-    * contiguous 0-based `pos` (Sampling.shuffleOrder), so the trainer
-    * streams a reproducible permutation and a checkpointed run re-derives
-    * the exact order from the salt alone; a new salt is a new epoch.
+  /** The pipeline apps' flags plus `--html-input true|false` (default
+    * false): whether the corpus is raw HTML.
     */
-  def orderForTraining(spark: SparkSession, curated: DataFrame,
-                       epochSalt: String): DataFrame =
-    graft.operators.Sampling.shuffleOrder(spark, curated, "doc_id", epochSalt)
-
-  /** Tokenizer handoff: train `rounds` BPE merges on the CURATED corpus
-    * (training on pre-dedup text overweights duplicated boilerplate — the
-    * reason this stage runs after [[curate]]) and annotate every document
-    * with its post-merge piece count, the number packing actually needs
-    * (whitespace `n_tokens` over-estimates sequence length once subwords
-    * merge). Returns (merge table, annotated docs). The merges ride back
-    * into the per-doc count as fold literals — the annotation is one
-    * shuffle-free map.
-    *
-    * Training runs the BATCHED trainer (TextOps.bpeMergesBatched): up to
-    * `batchK` non-overlapping merges are selected per corpus sweep, so
-    * jobs-per-vocab is ~2/batchK per merge instead of the exact trainer's
-    * 2/merge — the difference between a feasible and an infeasible driver
-    * loop when `rounds` is a real vocabulary size (32k) over 100 TB.
-    * `batchK = 1` degrades exactly to TextOps.bpeMerges (property-tested
-    * in TextOpsSpec), which stays the oracle path (t14); the app default
-    * batchK = 8 is the scale posture.
-    */
-  def trainTokenizer(spark: SparkSession, curated: DataFrame,
-                     rounds: Int, batchK: Int = 8): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val merges = TextOps.bpeMergesBatched(curated, "text", rounds, batchK)
-    val pairs = merges.orderBy(col("rank"))
-      .select(col("lft"), col("rgt")).as[(String, String)].collect().toSeq
-    val annotated = curated.withColumn("n_bpe_pieces",
-      aggregate(
-        transform(filter(split(col("text"), " "), w => length(w) > 0),
-          w => size(TextOps.bpeSegment(w, pairs))),
-        lit(0), (acc, x) => acc + x).cast("long"))
-    (merges, annotated)
+  private[apps] def parseArgs(argv: Array[String]): (PipelineApps.Args, Boolean) = {
+    val (args, m) = PipelineApps.parseArgs(argv, "--html-input")
+    (args, PipelineApps.parsed(m, "--html-input", _.toBoolean).getOrElse(false))
   }
 
   def main(argv: Array[String]): Unit = {
-    val args = PipelineApps.parseArgs(argv)
-    val htmlInput = argv.sliding(2, 2)
-      .exists(a => a.length == 2 && a(0) == "--html-input" && a(1) == "true")
+    val (args, htmlInput) = parseArgs(argv)
     val spark = graft.core.Sessions.local("corpus-curate")
     try {
       val docs = spark.read.parquet(s"${args.src}/documents.parquet")

@@ -68,10 +68,10 @@ object EventsApp {
     * (idempotent re-runs, the PipelineApps load discipline).
     */
   def main(argv: Array[String]): Unit = {
-    val m = argv.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
+    val m = PipelineApps.parseFlags(argv, "--events", "--out", "--run-date")
     val eventsDir = m.getOrElse("--events", "/root/testdata/sf0.001")
     val out = m.getOrElse("--out", "/tmp/graft_events_out")
-    val runDate = m.get("--run-date").map(java.time.LocalDate.parse)
+    val runDate = PipelineApps.parsed(m, "--run-date", java.time.LocalDate.parse)
       .getOrElse(java.time.LocalDate.parse("2024-01-01"))
     val spark = Sessions.local("graft-events")
     try {

@@ -23,13 +23,53 @@ object PipelineApps {
 
   final case class Args(src: String, out: String, runDate: java.time.LocalDate)
 
-  def parseArgs(argv: Array[String]): Args = {
-    val m = argv.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
-    Args(
+  /** The one flag parser of the app mains. `argv` is `--flag value` pairs,
+    * each flag one of `accepted`; the result holds the flags given, and
+    * each caller applies its own defaults. An unknown flag or a flag with
+    * no value throws an IllegalArgumentException that names it and lists
+    * the accepted flags: a misspelt `--run-date` must fail the run, not
+    * fall back to today and overwrite today's run-date partition.
+    */
+  private[apps] def parseFlags(argv: Array[String],
+                               accepted: String*): Map[String, String] = {
+    def fail(flag: String, why: String): Nothing =
+      throw new IllegalArgumentException(
+        s"$flag: $why; accepted flags: ${accepted.mkString(" ")}")
+    @scala.annotation.tailrec
+    def pairs(rest: List[String], given: Map[String, String]): Map[String, String] =
+      rest match {
+        case Nil => given
+        case k :: _ if !accepted.contains(k) => fail(k, "unknown flag")
+        case k :: v :: more if !v.startsWith("--") => pairs(more, given + (k -> v))
+        case k :: _ => fail(k, "missing value")
+      }
+    pairs(argv.toList, Map.empty)
+  }
+
+  /** Flag `name` of `flags` through `parse`, if it was given. A value
+    * `parse` rejects throws an IllegalArgumentException naming the flag.
+    */
+  private[apps] def parsed[T](flags: Map[String, String], name: String,
+                              parse: String => T): Option[T] =
+    flags.get(name).map { v =>
+      try parse(v)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          throw new IllegalArgumentException(s"$name: cannot parse '$v'", e)
+      }
+    }
+
+  /** `--src`, `--out` and `--run-date` (yyyy-mm-dd, default today), plus
+    * the `extra` flags the caller reads from the returned map.
+    */
+  def parseArgs(argv: Array[String],
+                extra: String*): (Args, Map[String, String]) = {
+    val m = parseFlags(argv, Seq("--src", "--out", "--run-date") ++ extra: _*)
+    (Args(
       src = m.getOrElse("--src", "src/test/resources/fixtures"),
       out = m.getOrElse("--out", "/tmp/graft_out"),
-      runDate = m.get("--run-date").map(java.time.LocalDate.parse)
-        .getOrElse(java.time.LocalDate.now()))
+      runDate = parsed(m, "--run-date", java.time.LocalDate.parse)
+        .getOrElse(java.time.LocalDate.now())), m)
   }
 
   /** Load stage shared by all apps: each output frame becomes a partitioned
@@ -45,7 +85,7 @@ object PipelineApps {
 
   private def app(name: String)(body: (SparkSession, Args) => Unit): Array[String] => Unit =
     argv => {
-      val args = parseArgs(argv)
+      val (args, _) = parseArgs(argv)
       val spark = Sessions.local(name)
       try {
         val results = TaskGraph.run(Seq(

@@ -43,9 +43,9 @@ object AnnIndex {
   def deletesTable(name: String): String = name + "_deletes"
 
   /** Build and persist the index from `df`: seeded coarse cells (the
-    * reproducible training-free posture of Similarity.ivfTopK — swap the
-    * centroids table's rows for Lloyd output via Similarity.kmeansCentroids
-    * to train, without touching encode or search), seeded PQ codebook, and
+    * reproducible training-free posture of Similarity.ivfTopK — Lloyd
+    * output in the centroids table's rows would train it without touching
+    * encode or search), seeded PQ codebook, and
     * every vector's (cid, codes) row bucketed by cell.
     *
     * Scale shape: one pass over the corpus — cell assignment and PQ
@@ -90,10 +90,7 @@ object AnnIndex {
   /** Ingest a batch into an existing index: encode against the FROZEN
     * persisted centroids + codebook (see the object Scaladoc for why), then
     * append to the bucketed members table — Spark validates the bucket spec,
-    * so the exchange-free join property survives every append. After many
-    * appends, compact with
-    * `Bucketing.compactBucketedTable(spark, membersTable(name), Seq("cid"), nBuckets)`
-    * — same maintenance discipline as the dedup band index.
+    * so the exchange-free join property survives every append.
     */
   def appendIvfPq(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                   m: Int, name: String, nBuckets: Int): Unit = {
@@ -180,21 +177,6 @@ object AnnIndex {
       membersTable(name), "ingest_batch", batchId, Seq("cid"), nBuckets)
   }
 
-  /** STREAMING vector ingestion into the persisted index — the ANN twin of
-    * EventStreams.dedupIngestIdempotentBucketed: each micro-batch of new
-    * embedding rows is encoded against the FROZEN training state and lands
-    * exactly-once in its own members partition. Callers `.start()` with
-    * their checkpoint location; a crashed batch replays into the same
-    * partition and the visible index state is as if it ran once
-    * (AnnIndexSpec proves retry-replay and live-stream parity).
-    */
-  def ingestVectors(stream: DataFrame, idCol: String, vecCol: String,
-                    dim: Int, m: Int, name: String, nBuckets: Int)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      ingestVectorBatch(batch, batchId, idCol, vecCol, dim, m, name, nBuckets)
-    }
-
   /** TOMBSTONE-delete vectors from the index (FAISS `remove_ids` semantics
     * over storage): ids land in a `<name>_deletes` side table, and every
     * serve call anti-joins them out of the candidate set BEFORE ranking —
@@ -227,14 +209,13 @@ object AnnIndex {
     * bucket spec, so the exchange-free serve plan survives), publish via
     * the rename-aside swap — every crash window leaves a queryable table
     * under SOME name (live, or staging + __old): pre-rename crashes repair
-    * by re-running, a mid-swap crash recovers with one manual rename (the
-    * Bucketing.compactBucketedTable contract). The tombstone table is
-    * dropped LAST, so an interrupted compaction never un-deletes: the
-    * masked serve stays correct until the swap fully lands. No-op when
-    * nothing is deleted.
+    * by re-running, a mid-swap crash recovers with one manual rename. The
+    * tombstone table is dropped LAST, so an interrupted compaction never
+    * un-deletes: the masked serve stays correct until the swap fully
+    * lands. No-op when nothing is deleted.
     * For the [[writeIvfPq]] single-layout table only — a partitioned
     * ([[writeIvfPqPartitioned]]) index keeps tombstone-masked serve, or
-    * compacts per partition with Bucketing.compactBucketedPartition.
+    * re-ingests the affected batch with [[ingestVectorBatch]].
     */
   def compactIvfPqDeletes(spark: SparkSession, name: String,
                           nBuckets: Int): Unit = {
@@ -243,7 +224,7 @@ object AnnIndex {
     val table = membersTable(name)
     require(!spark.table(table).columns.contains("ingest_batch"),
       "compactIvfPqDeletes rewrites the single-layout members table; " +
-        "partitioned indexes compact per partition")
+        "partitioned indexes keep the tombstone-masked serve")
     graft.sources.Bucketing.requireBucketCount(spark, table, nBuckets)
     val staging = table + "__compacting"
     val retired = table + "__old"
@@ -258,25 +239,6 @@ object AnnIndex {
     spark.sql(s"ALTER TABLE $staging RENAME TO $table")
     spark.sql(s"DROP TABLE $retired")
     spark.sql(s"DROP TABLE $dt")
-  }
-
-  /** UPSERT changed vectors: physically remove the ids' old rows (tombstone
-    * + immediate compaction — an append under a live tombstone for the same
-    * id would be masked too, since tombstones are by id, not by version),
-    * then re-encode the new vectors against the FROZEN training state and
-    * append. The FAISS update idiom (`remove_ids` + `add`): old codes
-    * vanish, new codes are comparable to every existing member, training
-    * state untouched. Cost: one members rewrite + one batch encode — batch
-    * upserts amortize the rewrite; for high-churn workloads prefer the
-    * partitioned layout and replace whole ingest batches instead
-    * ([[ingestVectorBatch]]).
-    */
-  def upsertIvfPq(df: DataFrame, idCol: String, vecCol: String, dim: Int,
-                  m: Int, name: String, nBuckets: Int): Unit = {
-    val spark = df.sparkSession
-    deleteIvfPq(spark, name, df.select(col(idCol)), idCol)
-    compactIvfPqDeletes(spark, name, nBuckets)
-    appendIvfPq(df, idCol, vecCol, dim, m, name, nBuckets)
   }
 
   /** Serve top-k for an external query batch against the persisted index —

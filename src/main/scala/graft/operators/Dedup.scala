@@ -500,67 +500,6 @@ object Dedup {
       bandIndex(df, idCol, textCol, n), table, "ingest_batch", batch,
       Seq("band", "bkey"), nBuckets)
 
-  /** Compact an [[appendBandIndex]]-grown band index to one file per
-    * non-empty bucket — the ds1 maintenance op. Candidate pairs and the
-    * exchange-free corpus read are unchanged (rows only move between files
-    * of the same bucket); only the per-bucket file count drops. Run it on
-    * the cadence where appended-file count, not data size, starts to
-    * dominate the candidate join's open cost. Returns
-    * (files_before, files_after).
-    */
-  def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
-                       table: String, nBuckets: Int): (Int, Int) =
-    graft.sources.Bucketing.compactBucketedTable(
-      spark, table, Seq("band", "bkey"), nBuckets)
-
-  /** Compact ONE ingestion batch's partition of a
-    * [[writeBandIndexPartitioned]] table (the ds2 exactly-once layout) —
-    * same drop-plus-bucketed-append idempotence as the ingest path, so
-    * re-running after a crash repairs it. Returns
-    * (files_before, files_after).
-    */
-  def compactBandIndexBatch(spark: org.apache.spark.sql.SparkSession,
-                            table: String, nBuckets: Int,
-                            batch: Long): (Int, Int) =
-    graft.sources.Bucketing.compactBucketedPartition(
-      spark, table, "ingest_batch", batch, Seq("band", "bkey"), nBuckets)
-
-  /** TAKEDOWN: physically remove documents' bands from a persisted
-    * [[writeBandIndex]] table — the compliance operation of an ingestion
-    * pipeline (a removed document must stop acting as a dedup witness:
-    * future batches can no longer candidate-match against it, exactly as
-    * if it had never been indexed). The rewrite keeps the (band, bkey)
-    * bucket spec — the exchange-free corpus join survives — and publishes
-    * via the rename-aside swap: every crash window leaves a queryable
-    * table under SOME name (live, or staging + __old); a crash before the
-    * first rename repairs by re-running, a crash mid-swap recovers with
-    * one manual rename (the compactBucketedTable contract). The removal
-    * id set broadcasts (takedown batches are small by nature).
-    *
-    * Single-layout tables only; a partitioned
-    * ([[writeBandIndexPartitioned]]) index rewrites the affected batch
-    * partitions with [[overwriteBandIndexBatch]] from re-filtered source.
-    */
-  def removeFromBandIndex(spark: org.apache.spark.sql.SparkSession,
-                          table: String, ids: DataFrame, idCol: String,
-                          nBuckets: Int): Unit = {
-    require(!spark.table(table).columns.contains("ingest_batch"),
-      "removeFromBandIndex rewrites the single-layout index; partitioned " +
-        "indexes rewrite affected batch partitions")
-    graft.sources.Bucketing.requireBucketCount(spark, table, nBuckets)
-    val staging = table + "__compacting"
-    val retired = table + "__old"
-    graft.sources.Bucketing.ensureCleanTable(spark, staging)
-    graft.sources.Bucketing.writeBucketedBy(
-      spark.table(table).join(
-        broadcast(ids.select(col(idCol).cast("long").as("__rid")).distinct()),
-        col("sid") === col("__rid"), "left_anti"),
-      staging, Seq("band", "bkey"), nBuckets)
-    spark.sql(s"ALTER TABLE $table RENAME TO $retired")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $table")
-    spark.sql(s"DROP TABLE $retired")
-  }
-
   /** Batch-vs-corpus candidate pairs: batch bands joined to the corpus band
     * index on exactly (band, bkey). A seam for plan tests: when
     * `corpusBands` is a [[writeBandIndex]] bucketed table, this join must
@@ -1164,8 +1103,7 @@ object Dedup {
     * The index is an append-only log of first-holder candidates; serve-time
     * reads min-merge per gram ([[batchNovelty]]'s `min(first_sid)`), which
     * is exchange-free on the bucketed layout, so duplicate gram rows across
-    * appends cost a bucketed-local reduce, never a shuffle. Compact with
-    * Bucketing.compactBucketedTable when append count warrants.
+    * appends cost a bucketed-local reduce, never a shuffle.
     */
   def appendNoveltyIndex(batch: DataFrame, idCol: String, textCol: String,
                          n: Int, table: String, nBuckets: Int): Unit =

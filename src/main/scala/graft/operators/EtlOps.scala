@@ -117,30 +117,6 @@ object EtlOps {
     cleaned.orderBy(keys.map(col): _*)
   }
 
-  /** A4/A5 — per-group mean and sample stddev over many metric columns
-    * (`computeMetricsPerStatePerHour`,
-    * OpenMeteoWeatherPipelineHourlyData.py:86-107). The reference dispatches
-    * on a method-name string; here the same dispatch is a total map from
-    * name to exact Column aggregate. `std` is sample (ddof=1), matching
-    * pandas `Series.std` — NOT population stddev.
-    */
-  val statFns: Map[String, Column => Column] = Map(
-    "mean" -> ExactAgg.meanExact,
-    "std" -> ExactAgg.stddevSampExact,
-    "sum" -> ExactAgg.sumExact,
-    "min" -> min,
-    "max" -> max
-  )
-
-  def groupStats(keys: Seq[String], metrics: Seq[String], stat: String)(
-      df: DataFrame): DataFrame = {
-    val fn = statFns(stat)
-    df.groupBy(keys.map(col): _*)
-      .agg(fn(col(metrics.head)).as(metrics.head),
-           metrics.tail.map(m => fn(col(m)).as(m)): _*)
-      .orderBy(keys.map(col): _*)
-  }
-
   /** U1/U2 — union of per-page / per-location frames by column name
     * (`pd.concat`, EIA930PipelineHourlyData.py:100). */
   def unionPages(pages: Seq[DataFrame]): DataFrame =

@@ -146,18 +146,6 @@ object FtsIndex {
       metaTable(name), "ingest_batch", batchId)
   }
 
-  /** Streaming wrapper over [[ingestBm25Batch]]: foreachBatch ingestion of
-    * a live document stream into the partitioned index — start with
-    * `.option("checkpointLocation", …).start()`; an uncommitted batch id
-    * re-runs and replaces its own partitions.
-    */
-  def bm25Ingest(stream: DataFrame, idCol: String, textCol: String,
-                 name: String, nBuckets: Int)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-      ingestBm25Batch(b, id, idCol, textCol, name, nBuckets)
-    }
-
   /** Serve a BM25 query from the persisted index: the postings scan is
     * filtered to `terms` (bucket-pruned), global stats come from the
     * summed meta rows, and the scoring tail is the shared

@@ -43,9 +43,9 @@ object Funnel {
     * `t0..t{n-1}`, NULL beyond the reached step); the result is the
     * updated chain for USERS PRESENT IN `events` (untouched users keep
     * their prior rows wherever they are stored). Exact against the
-    * full-history chain when event time does not regress across calls —
-    * the [[graft.streaming.EventStreams.funnelUpdates]] replay posture:
-    * an unset prior `ti` proves no qualifying event existed in earlier
+    * full-history chain when event time does not regress across calls
+    * (the replay posture of EventStreams.funnelIngestBatch): an unset
+    * prior `ti` proves no qualifying event existed in earlier
     * batches, so coalesce(prior, this-batch minimum) IS the global
     * chained minimum. ONE user-keyed exchange, same as the from-scratch
     * path (`userSteps` itself delegates here with an empty prior).

@@ -66,10 +66,10 @@ object HeavyHitters {
       .select(col("grp").as(groupCol), col("term"), col("freq"), col("rank"))
   }
 
-  /** Per-TUMBLING-WINDOW heavy hitters with exact recount — the batch twin
-    * of `EventStreams.windowedHeavyHitters`: the same one-MG-sketch-per-
-    * window aggregate produces the candidate set (identical sketch state to
-    * what the streaming query holds per window), then a second keyed pass
+  /** Per-TUMBLING-WINDOW heavy hitters with exact recount: one MG sketch
+    * per window produces the candidate set (the state a streaming
+    * aggregate of the same sketch would hold per window), then a second
+    * keyed pass
     * recounts candidates exactly and ranks the top-N per window. With
     * k >= the per-window value cardinality the sketch is lossless and the
     * result IS the exact per-window top-N — the hh1/hh2 oracle discipline,

@@ -65,31 +65,6 @@ object LmIndex {
       countsTable(name), "ingest_batch", batchId, Seq("gram"), nBuckets)
   }
 
-  /** Streaming wrapper over [[ingestLmBatch]]: foreachBatch ingestion of a
-    * live document stream — start with `.option("checkpointLocation", …)
-    * .start()`; an uncommitted batch id re-runs and replaces its own
-    * partition.
-    */
-  def lmIngest(stream: DataFrame, textCol: String,
-               maxOrder: Int, name: String, nBuckets: Int)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-      ingestLmBatch(b, id, textCol, maxOrder, name, nBuckets)
-    }
-
-  /** Compact one committed batch partition to one file per bucket —
-    * ingest-per-micro-batch accretes small files; serve cost follows file
-    * count. Delegates to the crash-safe staged
-    * [[graft.sources.Bucketing.compactBucketedPartition]] (a crash between
-    * drop and rewrite is recovered from staging, never an empty
-    * partition). Served counts are byte-identical before and after
-    * (spec-checked). Returns (files_before, files_after).
-    */
-  def compactLmBatch(spark: SparkSession, name: String, batchId: Long,
-                     nBuckets: Int): (Int, Int) =
-    graft.sources.Bucketing.compactBucketedPartition(
-      spark, countsTable(name), "ingest_batch", batchId, Seq("gram"), nBuckets)
-
   /** TAKEDOWN contract: the sufficient statistics carry no document ids BY
     * DESIGN (corpus-global counts; per-doc rows would multiply storage by
     * average document length). Removing a document therefore means

@@ -1081,25 +1081,6 @@ object Multimodal {
     bmpBytes(outW, outH, out)
   }
 
-  case class ResizedMedia(id: Long, width: Long, height: Long, bytes: Array[Byte])
-
-  /** Resize a frame of (id, media) BMP blobs to a fixed thumbnail size —
-    * mapPartitions so a real codec's init would happen once per partition;
-    * per-row map-side work, no shuffle, fuses into the scan at any scale.
-    */
-  def resizeImages(spark: SparkSession, df: DataFrame, outW: Int,
-                   outH: Int): Dataset[ResizedMedia] = {
-    import spark.implicits._
-    df.select(col("id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          val resized = resizeBmp(bytes, outW, outH)
-          ResizedMedia(id, outW.toLong, outH.toLong, resized)
-        }
-      }
-  }
-
   /** Header length column for media generated by `encodeMedia` (format
     * rotates by id).
     */

@@ -36,17 +36,11 @@ object Salting {
         sum(col("__pcnt")).as("n"))
   }
 
-  /** Skewed-key equi-join: replicate the build side `buckets` times and salt
-    * the probe side, so a hot key's rows land on `buckets` reducers instead
-    * of one. Correct for inner joins on `probeKey = buildKey`; build side
-    * must be the smaller input (it is multiplied by `buckets`).
-    */
-  def saltedJoin(probe: DataFrame, build: DataFrame, probeKey: String,
-                 buildKey: String, buckets: Int): DataFrame =
-    saltedJoinAs(probe, build, probeKey, buildKey, buckets, "inner")
-
-  /** LEFT-OUTER salted join — the skewed ENRICHMENT join: every probe row
-    * survives, hot keys still spread over `buckets` reducers, and a probe
+  /** LEFT-OUTER salted join — the skewed ENRICHMENT join: the build side is
+    * replicated `buckets` times and the probe side salted, so a hot key's
+    * rows land on `buckets` reducers instead of one (the build side must be
+    * the smaller input; it is multiplied by `buckets`). Every probe row
+    * survives, and a probe
     * row with no build match null-extends exactly once. Correctness under
     * salting: each probe row carries exactly ONE salt value, and the build
     * replication materializes EVERY (buildKey, salt) pair — so a probe row
@@ -57,8 +51,16 @@ object Salting {
     * row exists `buckets` times and would null-extend per replica.)
     */
   def saltedJoinOuter(probe: DataFrame, build: DataFrame, probeKey: String,
-                      buildKey: String, buckets: Int): DataFrame =
-    saltedJoinAs(probe, build, probeKey, buildKey, buckets, "left_outer")
+                      buildKey: String, buckets: Int): DataFrame = {
+    val saltedProbe = probe.withColumn("__salt",
+      pmod(hash(probe.columns.toIndexedSeq.map(col): _*), lit(buckets)))
+    val replicatedBuild = build.withColumn("__salt",
+      explode(sequence(lit(0), lit(buckets - 1))))
+    saltedProbe.join(replicatedBuild,
+      col(probeKey) === col(buildKey) && saltedProbe("__salt") === replicatedBuild("__salt"),
+      "left_outer")
+      .drop("__salt")
+  }
 
   /** SKEW DIAGNOSIS report — the measurement that decides whether the two
     * operators above (or AQE alone) are needed, shipped as one row: total
@@ -95,18 +97,5 @@ object Salting {
           .as("skew_x100"),
         expr("CAST((max_count + p99_count - 1) DIV p99_count AS BIGINT)")
           .as("salt_factor"))
-  }
-
-  private def saltedJoinAs(probe: DataFrame, build: DataFrame, probeKey: String,
-                           buildKey: String, buckets: Int,
-                           joinType: String): DataFrame = {
-    val saltedProbe = probe.withColumn("__salt",
-      pmod(hash(probe.columns.toIndexedSeq.map(col): _*), lit(buckets)))
-    val replicatedBuild = build.withColumn("__salt",
-      explode(sequence(lit(0), lit(buckets - 1))))
-    saltedProbe.join(replicatedBuild,
-      col(probeKey) === col(buildKey) && saltedProbe("__salt") === replicatedBuild("__salt"),
-      joinType)
-      .drop("__salt")
   }
 }

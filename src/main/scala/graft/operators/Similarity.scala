@@ -996,7 +996,7 @@ object Similarity {
   }
 
   /** IVF ANN over a TRAINED index: `updates` Lloyd rounds refine the seed
-    * centroids (kmeansCentroids), then the same probe path answers queries —
+    * centroids (kmeansCentroidsFrom), then the same probe path answers queries —
     * the train -> index -> query composition of a production ANN build.
     * Better-centered cells raise recall at the same nProbe.
     */
@@ -1442,13 +1442,6 @@ object Similarity {
     assigned.select(col("sid"), col("cid"),
       nullif(col("ccos"), lit(Double.NegativeInfinity)).as("cosine"))
   }
-
-  /** Centroids after `updates` Lloyd rounds, unpacked as (cid, cv, cnrm).
-    * updates = 0 returns the seeds.
-    */
-  def kmeansCentroids(df: DataFrame, idCol: String, vecCol: String, nCells: Int,
-                      updates: Int): DataFrame =
-    kmeansCentroidsFrom(prepared(df, idCol, vecCol), nCells, updates)
 
   /** (sid, qv, cid, ccos): each vector's argmax-cosine cell (ties: min cid). */
   private def assignTop(v: DataFrame, centroidRow: DataFrame): DataFrame =

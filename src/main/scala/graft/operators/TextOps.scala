@@ -535,8 +535,9 @@ object TextOps {
     *
     * Same scale posture as [[chunkDocs]]: split + explode + slice is
     * map-side only, no shuffle, fuses into the scan. Whitespace tokens are
-    * the budget proxy; swap in n_bpe_pieces (CorpusApp.trainTokenizer) when
-    * the real tokenizer's counts matter.
+    * the budget proxy; swap in per-doc BPE piece counts
+    * ([[bpeMergesBatched]] + [[bpeSegment]]) when the real tokenizer's
+    * counts matter.
     */
   def chunkTokens(df: org.apache.spark.sql.DataFrame, idCol: String,
                   textCol: String, chunkToks: Int, overlap: Int)

@@ -55,7 +55,6 @@ object LnFp {
 
   private val F = 50
   private val One = BigInteger.ONE
-  private val TwoPow50 = One.shiftLeft(50)
   private val TwoPow51 = One.shiftLeft(51)
 
   /** EXACT integer Q50 log2(p/q): e*2^50 + fb with fb the 50 shift-and-

@@ -1673,8 +1673,8 @@ object CorpusQueries {
 
     // Batch twin of the STREAMING ingestion-dedup flow (VERDICT r7 ask #4):
     // two micro-batches (doc_id % 8 = 0, then % 8 = 4) replayed against the
-    // bucketed corpus band index exactly as dedupIngestIdempotentBucketed's
-    // foreachBatch does — round 1's verified pairs, round-1 LOSERS excluded
+    // bucketed corpus band index exactly as a foreachBatch running
+    // EventStreams.ingestBatchIdempotentBucketed does — round 1's verified pairs, round-1 LOSERS excluded
     // from the index (only survivors' bands are appended), then round 2
     // dedups against corpus + round-1 survivors. The oracle derives both
     // rounds from the global verified-pair set: round 2 drops pairs whose
@@ -4314,8 +4314,8 @@ object CorpusQueries {
         .orderBy(col("lang"), col("rank"))
     },
 
-    // Windowed heavy hitters — the BATCH TWIN of the streaming
-    // windowedHeavyHitters monitor (one Misra-Gries sketch per tumbling
+    // Windowed heavy hitters — the batch form of a streaming heavy-hitter
+    // monitor (one Misra-Gries sketch per tumbling
     // window + exact candidate recount). k = 16 >= the event_type
     // cardinality, so the sketch is lossless and the oracle is the exact
     // per-window top-3 — and because it never filled, the sketch's
@@ -7331,7 +7331,7 @@ object CorpusQueries {
     },
 
     // EXACTLY-ONCE STREAMING VECTOR INGESTION into the persisted ANN index
-    // (AnnIndex.ingestVectorBatch / ingestVectors) — the ds2 contract
+    // (AnnIndex.ingestVectorBatch) — the ds2 contract
     // applied to ANN: the members table is ingest_batch-partitioned AND
     // cid-bucketed, each micro-batch encodes against the FROZEN training
     // state and replaces its own partition, so a foreachBatch retry is

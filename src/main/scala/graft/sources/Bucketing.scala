@@ -57,8 +57,7 @@ object Bucketing {
   def appendBucketedBy(df: DataFrame, table: String, bucketCols: Seq[String],
                        nBuckets: Int): Unit =
     // NOT clusterToBuckets: appends are latency-sensitive micro-batches
-    // (the ds2 ingest measured +25% wall with a per-batch exchange), and
-    // append churn is what the compaction path exists to absorb — the
+    // (the ds2 ingest measured +25% wall with a per-batch exchange) — the
     // clustering pays off on the one-shot writes, not here
     df.write
       .mode(SaveMode.Append)
@@ -146,131 +145,6 @@ object Bucketing {
       .saveAsTable(table)
   }
 
-  /** One task per bucket: partition by the bucket id (pmod of murmur3 over
-    * the bucket columns — `hash` IS Murmur3 with the writer's seed), so the
-    * bucketed writer's per-(task, bucket) file split emits one file per
-    * non-empty bucket.
-    */
-  private def bucketAligned(df: DataFrame, bucketCols: Seq[String],
-                            nBuckets: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    df.repartition(nBuckets,
-      pmod(hash(bucketCols.map(col): _*), lit(nBuckets)))
-  }
-
-  /** Run `body` with bucketed READS disabled: a compaction's input files
-    * are bucket-pure since writes cluster to the bucket layout
-    * (clusterToBuckets), so a bucket-aware scan reports the very
-    * HashPartitioning the re-cluster repartition requires — the optimizer
-    * then elides the exchange and the writer faithfully reproduces the
-    * small-file split it was meant to merge (measured: 8 -> 8 files).
-    * With bucketed reads off, the scan packs files into ordinary splits
-    * and the re-cluster exchange actually runs, landing one file per
-    * non-empty bucket.
-    */
-  private def withBucketReadsDisabled[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.sources.bucketing.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** Compact a bucketed managed table IN PLACE to one file per non-empty
-    * bucket (VERDICT r8 ask #5 — index maintenance under append churn).
-    *
-    * Why file COUNT is the target: every [[appendBucketedBy]] lands up to
-    * (writer partitions x nBuckets) more files; the bucketed reader must
-    * open every file of a bucket, so after B appended batches the
-    * "exchange-free" aligned scan opens O(B) files per bucket — at 100 TB
-    * the open/seek count, not the bytes, kills the candidate join.
-    * Rewriting the table repartitioned BY THE BUCKET ID VALUE (pmod of the
-    * murmur3 hash — the same mapping the bucketed writer applies) puts
-    * every bucket's rows in exactly one write task, and the writer splits
-    * files per (task, bucket), so the rewrite emits exactly one file per
-    * non-empty bucket. (Repartitioning by the raw bucket COLUMNS is not
-    * enough — the write task a row lands in and the bucket file it is
-    * routed to come from different pmod chains, so tasks straddle buckets
-    * and each straddle costs a file.) Rows only move between files of the
-    * SAME bucket — downstream join plans, their Exchange counts, and their
-    * results are unchanged (DedupSpec proves candidate pairs identical).
-    *
-    * Publication is a staging-table swap (the Sinks.compact contract
-    * in catalog form): write `<table>__compacting`, then drop + rename.
-    * The swap window is metadata-only; a crash between drop and rename
-    * leaves the staging table intact for manual recovery.
-    *
-    * Returns (files_before, files_after).
-    */
-  def compactBucketedTable(spark: SparkSession, table: String,
-                           bucketCols: Seq[String], nBuckets: Int): (Int, Int) = {
-    val before = spark.table(table).inputFiles.length
-    val staging = table + "__compacting"
-    val retired = table + "__old"
-    ensureCleanTable(spark, staging)
-    ensureCleanTable(spark, retired)
-    withBucketReadsDisabled(spark) {
-      writeBucketedBy(
-        bucketAligned(spark.table(table), bucketCols, nBuckets),
-        staging, bucketCols, nBuckets)
-    }
-    // rename-aside publish: the live name is re-pointed in two renames
-    // rather than DROP + RENAME, so EVERY crash window leaves a queryable
-    // table under some name (live, or staging + __old) and recovery is a
-    // single rename — a drop-first swap had a window where the name bound
-    // to nothing and the old data was already gone
-    spark.sql(s"ALTER TABLE $table RENAME TO $retired")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $table")
-    spark.sql(s"DROP TABLE $retired")
-    (before, spark.table(table).inputFiles.length)
-  }
-
-  /** [[compactBucketedTable]] for ONE partition of a
-    * [[writeBucketedPartitionedBy]] table — the ds2 layout's maintenance
-    * step: each ingestion batch's partition accretes (writer partitions x
-    * nBuckets) files at append time; compacting rewrites that partition to
-    * one file per non-empty bucket.
-    *
-    * Crash safety: the compacted rows are staged DURABLY (a bucketed
-    * staging table on disk) BEFORE the live partition's files are dropped —
-    * an executor-memory pin (localCheckpoint) here was a data-loss window:
-    * crash or executor loss between drop and append lost the partition, and
-    * a re-run read the now-empty partition and silently converged to empty.
-    * Recovery rule on re-run: a staging table left by a crash is REUSED iff
-    * the live partition is empty (the crash was between drop and append);
-    * a non-empty live partition always rebuilds staging from the live rows,
-    * so a stale staging can never shadow later appends. Staging is dropped
-    * on success, so its existence implies a crashed compaction.
-    * DedupSpec drives the drop-then-crash path.
-    *
-    * Returns (files_before, files_after) for the WHOLE table; other
-    * partitions' files are untouched.
-    */
-  def compactBucketedPartition(spark: SparkSession, table: String,
-                               partCol: String, partValue: Long,
-                               bucketCols: Seq[String],
-                               nBuckets: Int): (Int, Int) = {
-    import org.apache.spark.sql.functions.col
-    val before = spark.table(table).inputFiles.length
-    val staging = s"${table}__compact_p$partValue"
-    val live = spark.table(table).filter(col(partCol) === partValue).drop(partCol)
-    if (!(spark.catalog.tableExists(staging) && live.isEmpty)) {
-      ensureCleanTable(spark, staging)
-      withBucketReadsDisabled(spark) {
-        writeBucketedBy(bucketAligned(live, bucketCols, nBuckets),
-          staging, bucketCols, nBuckets)
-      }
-    }
-    // re-align on read-back so the one-file-per-bucket contract survives
-    // the staging round-trip regardless of how the staging scan splits
-    withBucketReadsDisabled(spark) {
-      overwriteBucketedPartition(
-        bucketAligned(spark.table(staging), bucketCols, nBuckets),
-        table, partCol, partValue, bucketCols, nBuckets)
-    }
-    spark.sql(s"DROP TABLE $staging")
-    (before, spark.table(table).inputFiles.length)
-  }
-
   /** Drop `table` and any orphaned warehouse directory left by a session
     * whose metastore is gone (fresh derby metastore + persistent
     * spark-warehouse dir = CREATE TABLE refusing to reuse the location).
@@ -323,7 +197,7 @@ object Bucketing {
   }
 
   /** The live table's bucket count from the catalog, or None for an
-    * unbucketed table. Maintenance rewrites (compaction, takedown) MUST
+    * unbucketed table. Maintenance rewrites (tombstone compaction) MUST
     * preserve the bucket spec or every downstream exchange-free join plan
     * silently re-shuffles — read the truth from here instead of trusting a
     * caller-supplied count.
@@ -347,13 +221,4 @@ object Bucketing {
         s"catalog says ${live.map(_.toString).getOrElse("unbucketed")} — " +
         "a rewrite with the wrong count breaks exchange-free serve joins")
   }
-
-  /** Join two tables bucketed on their join keys — planned with NO Exchange
-    * on either side when bucket counts match.
-    */
-  def bucketedJoin(spark: SparkSession, leftTable: String, rightTable: String,
-                   leftKey: String, rightKey: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable),
-      org.apache.spark.sql.functions.col(leftKey) ===
-        org.apache.spark.sql.functions.col(rightKey))
 }

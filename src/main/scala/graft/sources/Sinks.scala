@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Sink + catalog surface (SURVEY.md S10-S12).
   *
@@ -58,236 +58,6 @@ object Sinks {
     df.withColumn(partCol, org.apache.spark.sql.functions.lit(partValue))
       .write.mode(SaveMode.Append).partitionBy(partCol)
       .format("parquet").saveAsTable(table)
-  }
-
-  /** Format-parameterized batch sink: the engine treats the storage format
-    * as a knob (parquet default; orc for ORC-native warehouses; csv/json for
-    * interchange). Columnar formats keep predicate pushdown + pruning; the
-    * text formats are for export only and are written with headers/ISO
-    * timestamps so they round-trip against the declared sink schemas.
-    */
-  def writeTable(df: DataFrame, path: String, format: String = "parquet"): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite).format(format)
-    (format match {
-      case "csv" => w.option("header", "true").option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss")
-      case _ => w
-    }).save(path)
-  }
-
-  def readTable(spark: SparkSession, path: String, format: String,
-                schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val r = spark.read.format(format).schema(schema)
-    (format match {
-      case "csv" => r.option("header", "true").option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss")
-      case _ => r
-    }).load(path)
-  }
-
-  /** Compact a parquet directory's small files into ~`targetBytes` outputs,
-    * range-clustered on `sortCols` — the table-maintenance pass every
-    * long-running ingestion needs: a per-hour (or per-micro-batch) append
-    * produces thousands of KB-sized files whose per-file open/footer cost
-    * eventually dominates scans, and range clustering restores min/max
-    * row-group skipping on the sort key. Writes to a staging dir, then
-    * swaps.
-    *
-    * Contract: LOCAL filesystem, FLAT layout (a directory of .parquet files,
-    * no partition subdirectories) — the swap is two java.nio renames and the
-    * sizing walks the directory with java.io. The swap is two renames, not
-    * one atomic exchange: there is a window where the table path is absent,
-    * and readers racing the swap can fail; if the second rename throws, the
-    * original directory is RESTORED before rethrowing, so a crash never
-    * strands the table under _precompact. On an object store or a
-    * partitioned table, compact per partition through the catalog instead.
-    *
-    * Returns the output file count. File sizing uses the CURRENT on-disk
-    * bytes (post-compression), so the target is approximate.
-    */
-  def compact(spark: SparkSession, path: String, targetBytes: Long,
-              sortCols: Seq[String]): Int = {
-    import org.apache.spark.sql.functions.col
-    compactWith(spark, path, targetBytes) { (df, nFiles) =>
-      df.repartitionByRange(nFiles, sortCols.map(col): _*)
-        .sortWithinPartitions(sortCols.map(col): _*)
-    }
-  }
-
-  /** Z-ORDER compaction: cluster on the Morton interleave of several
-    * columns instead of a lexicographic sort. A linear sort gives perfect
-    * min/max skipping on its FIRST key and none on the others; Z-ordering
-    * gives every listed column a min/max range of ~range/2^(k/n) per file
-    * (k = leading z-bits a file spans, n = columns), so selective filters
-    * on ANY of the columns prune files — the standard lakehouse layout for
-    * multi-dimension point/range lookups. Same staging-swap contract as
-    * [[compact]].
-    */
-  def compactZOrdered(spark: SparkSession, path: String, targetBytes: Long,
-                      zCols: Seq[String], bits: Int = 12): Int = {
-    import org.apache.spark.sql.functions.col
-    compactWith(spark, path, targetBytes) { (df, nFiles) =>
-      df.withColumn("__z", zOrderValue(df, zCols, bits))
-        .repartitionByRange(nFiles, col("__z"))
-        .sortWithinPartitions(col("__z"))
-        .drop("__z")
-    }
-  }
-
-  /** QUANTILE-bucketed Morton value — the skew-robust variant
-    * [[zOrderValue]]'s Scaladoc calls for: bucket boundaries are each
-    * column's approximate quantiles instead of a uniform [min, max] grid,
-    * so a heavy-tailed column still spreads its rows evenly over 2^bits
-    * buckets (range-bucketing collapses such a column into a handful of
-    * low buckets, and file skipping on it degenerates).
-    *
-    * Implementation: one approx-quantile pass per column (driver holds
-    * 2^bits - 1 boundary doubles — dimension-sized, the Packing-bounds
-    * posture), then each row finds its bucket through a GENERATED
-    * binary-search expression tree (`bits` nested comparisons against
-    * boundary literals — fully codegen'd, no per-row lambda, no join).
-    * Default 8 bits/column: 255 boundaries, a 511-node tree, and with two
-    * columns a 16-bit z-key — addressable file counts far beyond any
-    * compaction target.
-    */
-  def zOrderValueQuantile(df: DataFrame, cols: Seq[String],
-                          bits: Int = 8): Column = {
-    import org.apache.spark.sql.functions.{col, lit, shiftleft, shiftright, when}
-    require(cols.size >= 2, s"zOrderValueQuantile needs >= 2 columns, got $cols")
-    require(bits >= 1 && bits <= 12, s"bits must be in [1, 12], got $bits")
-    require(bits * cols.size <= 62, s"bits x cols must fit a long, got $bits x ${cols.size}")
-    val nBuckets = 1 << bits
-    val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    val n = cols.size
-    // ONE scan computes every column's boundaries (the single-column
-    // overload re-reads the full input per column — ADVICE r7 #4)
-    val allBounds = df.stat.approxQuantile(cols.toArray, probs, 0.001)
-    val buckets = cols.zip(allBounds).map { case (c, bounds) =>
-      if (bounds.isEmpty) lit(0L)
-      else {
-        // binary-search CASE tree over [lo, hi] bucket range: bucket b holds
-        // values in (bounds(b-1), bounds(b)] with open ends at 0 and max
-        def search(lo: Int, hi: Int): Column =
-          if (lo == hi) lit(lo.toLong)
-          else {
-            val mid = (lo + hi) / 2
-            when(col(c).cast("double") <= bounds(mid), search(lo, mid))
-              .otherwise(search(mid + 1, hi))
-          }
-        // nulls route explicitly to bucket 0 (a null comparison would
-        // silently fall through every `otherwise` into the TOP bucket)
-        when(col(c).isNull, lit(0L)).otherwise(search(0, nBuckets - 1))
-      }
-    }
-    (for (i <- 0 until bits; j <- 0 until n) yield
-      shiftleft(shiftright(buckets(j), i).bitwiseAND(lit(1L)), i * n + j))
-      .reduce(_.bitwiseOR(_))
-  }
-
-  /** [[compactZOrdered]] with quantile bucketing — use when the clustered
-    * columns are skewed (the uniform-grid variant collapses heavy tails).
-    */
-  def compactZOrderedQuantile(spark: SparkSession, path: String,
-                              targetBytes: Long, zCols: Seq[String],
-                              bits: Int = 8): Int = {
-    import org.apache.spark.sql.functions.col
-    compactWith(spark, path, targetBytes) { (df, nFiles) =>
-      df.withColumn("__z", zOrderValueQuantile(df, zCols, bits))
-        .repartitionByRange(nFiles, col("__z"))
-        .sortWithinPartitions(col("__z"))
-        .drop("__z")
-    }
-  }
-
-  /** Morton (Z-curve) value over 2+ numeric columns: each column is
-    * range-bucketed to `bits` bits against its OWN global [min, max] (one
-    * dimension-sized driver read, the Packing bounds posture), then the
-    * bucket bits interleave — column j contributes bit i to z-bit
-    * `i * n + j`. A fixed arithmetic expression (shift/mask/or), fully
-    * codegen'd. Range buckets assume roughly uniform values; heavy skew
-    * wants quantile buckets, which would only change this bucketing line.
-    */
-  def zOrderValue(df: DataFrame, cols: Seq[String], bits: Int = 12): Column = {
-    import org.apache.spark.sql.functions.{coalesce, col, floor, greatest, least, lit, shiftleft, shiftright}
-    require(cols.size >= 2, s"zOrderValue needs >= 2 columns, got $cols")
-    // cap at 30: the bucket scale below is a long shift, and the z-bit
-    // interleave tops out at bit (bits*n - 1) <= 61 anyway
-    require(bits >= 1 && bits <= 30, s"bits must be in [1, 30], got $bits")
-    require(bits * cols.size <= 62, s"bits x cols must fit a long, got $bits x ${cols.size}")
-    val bounds = df.agg(
-      org.apache.spark.sql.functions.array(cols.flatMap(c =>
-        Seq(org.apache.spark.sql.functions.min(col(c)).cast("double"),
-          org.apache.spark.sql.functions.max(col(c)).cast("double"))): _*)).head()
-      .getSeq[java.lang.Double](0) // boxed: empty table / all-null column = null bounds
-    val n = cols.size
-    val buckets = cols.zipWithIndex.map { case (c, j) =>
-      (Option(bounds(2 * j)).map(_.doubleValue),
-        Option(bounds(2 * j + 1)).map(_.doubleValue)) match {
-        case (Some(lo), Some(hi)) =>
-          val width = math.max(hi - lo, java.lang.Double.MIN_NORMAL)
-          // per-row NULLs (a null value in a column with real bounds) land
-          // in bucket 0 instead of nulling the whole z-value
-          coalesce(least(greatest(
-            floor((col(c).cast("double") - lit(lo)) / lit(width) * lit((1L << bits).toDouble)),
-            lit(0.0)), lit((1L << bits) - 1.0)).cast("long"), lit(0L))
-        case _ => lit(0L) // no range to bucket: the column contributes nothing
-      }
-    }
-    (for (i <- 0 until bits; j <- 0 until n) yield
-      shiftleft(shiftright(buckets(j), i).bitwiseAND(lit(1L)), i * n + j))
-      .reduce(_.bitwiseOR(_))
-  }
-
-  /** The staging-write + two-rename swap shared by the compaction modes. */
-  private def compactWith(spark: SparkSession, path: String, targetBytes: Long)
-      (layout: (DataFrame, Int) => DataFrame): Int = {
-    val dir = new java.io.File(path)
-    def parquetFiles(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    val found = parquetFiles(dir)
-    require(found.nonEmpty,
-      s"compact: no .parquet files directly under $path — flat local layout required " +
-        "(partitioned tables: compact each partition directory)")
-    val totalBytes = found.map(_.length()).sum
-    val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-
-    val staging = path.stripSuffix("/") + "_compacting"
-    layout(spark.read.parquet(path), nFiles)
-      .write.mode(SaveMode.Overwrite).parquet(staging)
-
-    val old = path.stripSuffix("/") + "_precompact"
-    java.nio.file.Files.move(dir.toPath, java.nio.file.Paths.get(old))
-    try java.nio.file.Files.move(java.nio.file.Paths.get(staging), dir.toPath)
-    catch {
-      case e: Throwable =>
-        // put the original table back so the path is never left absent
-        java.nio.file.Files.move(java.nio.file.Paths.get(old), dir.toPath)
-        throw e
-    }
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-      f.delete(): Unit
-    }
-    deleteRec(new java.io.File(old))
-    parquetFiles(dir).size
-  }
-
-  /** Compact every partition directory of a Hive-layout table
-    * (`root/col=value/...parquet`) independently via [[compact]] — the
-    * partitioned answer to compact's flat-layout contract. Partitions are
-    * isolated swaps: a failure mid-table leaves earlier partitions
-    * compacted and later ones untouched, never a broken partition.
-    * Returns (partition dir name -> output file count).
-    */
-  def compactPartitioned(spark: SparkSession, root: String, targetBytes: Long,
-                         sortCols: Seq[String]): Map[String, Int] = {
-    val dirs = Option(new java.io.File(root).listFiles())
-      .getOrElse(Array.empty).toSeq
-      .filter(f => f.isDirectory && f.getName.contains("="))
-      .sortBy(_.getName)
-    require(dirs.nonEmpty,
-      s"compactPartitioned: no 'col=value' partition directories under $root")
-    dirs.map(d => d.getName ->
-      compact(spark, d.getAbsolutePath, targetBytes, sortCols)).toMap
   }
 
   /** S11 — DDL from the declared sink schemas, against the session catalog. */

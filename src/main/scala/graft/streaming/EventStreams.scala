@@ -4,101 +4,20 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming surface. The reference has no streams — every DAG is
-  * scheduled batch over a lagged window (SURVEY.md §2g) — but its hourly
-  * pipelines are exactly the shape Structured Streaming runs continuously:
-  * the same windowed aggregation expression works in both modes, with the
-  * reference's fixed LAG (read 3-day-old data, trim 2 days —
-  * EIA930PipelineHourlyData.py:48,98) replaced by a WATERMARK that bounds
-  * state instead of bounding the input.
+/** Micro-batch surface. The reference has no streams — every DAG is
+  * scheduled batch over a lagged window (SURVEY.md §2g). Two kinds of
+  * operator live here:
+  *  - batch/stream-agnostic frames (windowed sketches, attribution joins,
+  *    sessionization): a static frame plans the batch query, a streaming
+  *    one gets a WATERMARK that bounds state in place of the reference's
+  *    fixed LAG (read 3-day-old data, trim 2 days —
+  *    EIA930PipelineHourlyData.py:48,98);
+  *  - `*Batch` bodies: one exactly-once micro-batch each. A caller runs them
+  *    from `writeStream.foreachBatch`, where a failed batch re-runs with the
+  *    same batch id; every output replaces its own `ingest_batch = batchId`
+  *    partition, so a replay leaves the state it would have left once.
   */
 object EventStreams {
-
-  /** Hourly tumbling aggregate with late-data tolerance. Batch/stream
-    * agnostic: pass a static DataFrame and it is the batch W1 query; pass a
-    * readStream and it runs incrementally with watermark-bounded state.
-    */
-  def hourlyStats(events: DataFrame, watermarkDelay: String = "2 hours"): DataFrame = {
-    val src =
-      if (events.isStreaming) events.withWatermark("ts", watermarkDelay) else events
-    src
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("hour_start"), col("event_type"),
-        col("n"), col("sum_value"))
-  }
-
-  /** OVERLAPPING sliding-window aggregate (the streaming twin of the w8
-    * batch query): each event expands map-side into len/slide windows —
-    * Spark's window() generator, no self-join — and the watermark retires
-    * window state once event time passes window end + delay, so state is
-    * O(open windows), not O(history). Batch/stream agnostic like
-    * [[hourlyStats]].
-    */
-  def slidingStats(events: DataFrame, windowLen: String = "3 hours",
-                   slide: String = "1 hour", watermarkDelay: String = "2 hours",
-                   tsCol: String = "ts"): DataFrame = {
-    val src =
-      if (events.isStreaming) events.withWatermark(tsCol, watermarkDelay) else events
-    src
-      .groupBy(window(col(tsCol), windowLen, slide))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("win_start"), col("n"), col("sum_value"))
-  }
-
-  /** Hourly OHLC bars, batch/stream agnostic (the streaming twin of ts3 /
-    * [[graft.operators.EventOps.ohlcBars]]): open/close via min_by/max_by
-    * on the (ts, event_id) struct key — both are algebraic aggregates, so
-    * they fold incrementally across micro-batches exactly like min/max,
-    * and the watermark retires per-(key, hour) state once event time
-    * passes the bar's end + delay. Same struct-key determinism as the
-    * batch operator: unique event_id ⇒ the picks are replay-stable.
-    */
-  def ohlcStats(events: DataFrame, watermarkDelay: String = "2 hours"): DataFrame = {
-    val src =
-      if (events.isStreaming) events.withWatermark("ts", watermarkDelay) else events
-    src
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(
-        min_by(col("value"), struct(col("ts"), col("event_id"))).as("open"),
-        max_by(col("value"), struct(col("ts"), col("event_id"))).as("close"),
-        min(col("value")).as("low"), max(col("value")).as("high"),
-        count(lit(1)).as("n"))
-      .select(col("window.start").as("hour_start"), col("event_type"),
-        col("open"), col("close"), col("low"), col("high"), col("n"))
-  }
-
-  /** Stream-static enrichment: join a stream against a (small, periodically
-    * reloaded) dimension table — the streaming twin of the BA semi-join
-    * (P5/J1). The static side re-resolves per micro-batch, so dimension
-    * updates flow in without restarting the query; the dim broadcasts, so no
-    * stream-side state or shuffle accrues.
-    */
-  def enrich(stream: DataFrame, dim: DataFrame, streamKey: String,
-             dimKey: String): DataFrame =
-    stream.join(org.apache.spark.sql.functions.broadcast(dim),
-      col(streamKey) === col(dimKey), "left")
-
-  /** Streaming heavy hitters: a Misra-Gries sketch per tumbling window —
-    * the trending-terms / hot-keys monitor. The sketch is a
-    * TypedImperativeAggregate, so Structured Streaming maintains ONE bounded
-    * k-counter buffer per (window, group) in the state store, merged
-    * incrementally across micro-batches; memory is O(windows x k), never
-    * proportional to the value distribution. Emits the sketch's candidate
-    * map (over-counts bounded by n/k — see MisraGriesSketch); exact
-    * recounting, when needed, is a batch pass over the flagged window.
-    */
-  def windowedHeavyHitters(events: DataFrame, valueCol: String, k: Int,
-                           windowLen: String = "1 hour",
-                           watermarkDelay: String = "2 hours",
-                           tsCol: String = "ts"): DataFrame = {
-    val src =
-      if (events.isStreaming) events.withWatermark(tsCol, watermarkDelay) else events
-    src
-      .groupBy(window(col(tsCol), windowLen))
-      .agg(graft.operators.HeavyHitters.sketchOf(col(valueCol), k).as("candidates"))
-      .select(col("window.start").as("window_start"), col("candidates"))
-  }
 
   /** Streaming per-window DISTINCT estimates: one KMV bottom-k sketch per
     * tumbling window (the native `graft_kmv` TypedImperativeAggregate), so
@@ -108,7 +27,7 @@ object EventStreams {
     * independent bottom-k), so unlike an HLL monitor the streamed numbers
     * are reproducible and batch/stream runs agree exactly (the ax6 batch
     * twin is oracle-checked; the spec proves parity). Batch/stream
-    * agnostic like [[hourlyStats]].
+    * agnostic: a static frame gets no watermark.
     */
   def windowedDistinct(events: DataFrame, valueCol: String, k: Int,
                        windowLen: String = "1 hour",
@@ -149,146 +68,23 @@ object EventStreams {
       .select(col("window.start").as("window_start"), col("sk"))
   }
 
-  /** Streaming exactly-once-per-key dedup with bounded state: duplicates of
-    * `keyCols` arriving within `delay` of the watermark are dropped; state
-    * for keys older than the watermark is evicted, so memory is bounded by
-    * the duplicate-arrival window, not the stream's lifetime — the streaming
-    * twin of the batch exact-dedup operator (Dedup.exact), and the standard
-    * ingestion guard in front of an append sink when the upstream source
-    * retries (the reference's paginated fetchers re-request pages on
-    * failure; EIA930PipelineHourlyData.py:45-68).
+  /** One EXACTLY-ONCE ingestion-dedup micro-batch: the batch is checked
+    * against the persisted corpus LSH band index plus itself, near-dup
+    * pairs land in `pairsOutPath`, the surviving docs join the corpus and
+    * their bands join the index — so batch N+1 dedups against everything
+    * batch N ingested. Every read filters to the committed prefix
+    * `ingest_batch < batchId` (partition-pruned), and every write replaces
+    * the `ingest_batch = batchId` partition, so calling this twice with
+    * the same (batch, batchId) leaves identical visible state.
     *
-    * Batch/stream agnostic: a static frame gets plain dropDuplicates (no
-    * state to bound).
-    */
-  def dedupWithinWatermark(events: DataFrame, keyCols: Seq[String], tsCol: String,
-                           delay: String = "2 hours"): DataFrame =
-    if (events.isStreaming)
-      events.withWatermark(tsCol, delay).dropDuplicatesWithinWatermark(keyCols)
-    else events.dropDuplicates(keyCols)
-
-  /** Gap sessionization via Spark's NATIVE session-window aggregation — the
-    * declarative sibling of [[sessionize]] (flatMapGroupsWithState): same
-    * 30-minute-gap semantics (batch parity is oracle-checked as
-    * w7_session_window), but state handling, merging and eviction come from
-    * the engine. Streaming: append mode emits a session once the watermark
-    * passes its close; batch: plain aggregation. Prefer this one unless the
-    * session logic needs custom state (mid-session emission, enrichment).
-    */
-  def sessionStats(events: DataFrame, gap: String = "30 minutes",
-                   watermarkDelay: String = "1 hour",
-                   tsCol: String = "ts", keyCol: String = "user_id"): DataFrame = {
-    val src =
-      if (events.isStreaming) events.withWatermark(tsCol, watermarkDelay) else events
-    src
-      .groupBy(session_window(col(tsCol), gap), col(keyCol))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col(keyCol),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"))
-  }
-
-  /** IDEMPOTENT streaming ingestion dedup: every micro-batch of documents
-    * is checked against the PERSISTED corpus LSH band index plus itself,
-    * near-dup pairs land in `pairsOutPath`, the surviving docs join the
-    * corpus and their bands join the index — so batch N+1 dedups against
-    * everything batch N ingested. Per-batch cost scales with |batch| x
-    * bucket occupancy, never with corpus size: the corpus is only touched
-    * through its band index and an id-filtered verification scan. The
-    * state lives in storage, not in the state store, because it must
-    * outlive the query and be shared with batch jobs.
-    *
-    * Exactly-once: foreachBatch re-runs a failed batch with the
-    * SAME batchId, so every output (pairs, surviving docs, band-index rows)
-    * is written to an `ingest_batch = batchId` partition with dynamic
-    * partition overwrite — a retry REPLACES its own partition instead of
-    * appending duplicates — and every read filters to
-    * `ingest_batch < batchId`, so a retry sees exactly the pre-batch state
-    * even when the failed attempt already wrote files (the filter is
-    * partition-pruned, so "read the committed prefix" costs nothing).
-    * Seed the corpus and index under `ingest_batch = -1`.
-    *
-    * Storage-format note: the index here is PLAIN partitioned parquet — the
-    * simplest idempotent layout. For exactly-once AND the exchange-free
-    * corpus join together, use [[dedupIngestIdempotentBucketed]], whose
-    * index is a partitioned bucketed table (Spark's dynamic partition
-    * overwrite refuses bucketed tables, but drop-partition + bucketed
-    * append achieves the same replace-your-own-batch semantics).
-    */
-  def dedupIngestIdempotent(stream: DataFrame, corpusDocsPath: String,
-                            bandIndexPath: String, pairsOutPath: String,
-                            idCol: String, textCol: String, n: Int,
-                            threshold: Double)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      ingestBatchIdempotent(batch, batchId, corpusDocsPath, bandIndexPath,
-        pairsOutPath, idCol, textCol, n, threshold)
-    }
-
-  /** One idempotent micro-batch — public so retry semantics are testable
-    * without faulting a live query: calling this twice with the same
-    * (batch, batchId) leaves byte-identical state.
-    */
-  def ingestBatchIdempotent(batch: DataFrame, batchId: Long,
-                            corpusDocsPath: String, bandIndexPath: String,
-                            pairsOutPath: String, idCol: String,
-                            textCol: String, n: Int,
-                            threshold: Double): Unit = {
-    import graft.operators.Dedup
-    import org.apache.spark.sql.functions.{broadcast, col, greatest, lit}
-    val spark = batch.sparkSession
-    val b = batch.localCheckpoint(false)
-    def committed(path: String) =
-      spark.read.parquet(path).filter(col("ingest_batch") < batchId)
-    val corpus = committed(corpusDocsPath)
-    val bands = committed(bandIndexPath)
-    val pairs = Dedup.incrementalNearDupPairs(
-      b, corpus, bands, idCol, textCol, n, threshold).localCheckpoint(false)
-    graft.sources.Sinks.overwriteRunPartition(
-      pairs.withColumn("ingest_batch", lit(batchId)), pairsOutPath, "ingest_batch")
-    val losers = pairs.select(greatest(col("ida"), col("idb")).as("loser"))
-    val kept = b.join(broadcast(losers), b(idCol) === col("loser"), "left_anti")
-      .localCheckpoint(false)
-    graft.sources.Sinks.overwriteRunPartition(
-      kept.withColumn("ingest_batch", lit(batchId)), corpusDocsPath, "ingest_batch")
-    graft.sources.Sinks.overwriteRunPartition(
-      Dedup.bandIndex(kept, idCol, textCol, n)
-        .withColumn("ingest_batch", lit(batchId)), bandIndexPath, "ingest_batch")
-  }
-
-  /** EXACTLY-ONCE ingestion dedup with the EXCHANGE-FREE corpus join —
-    * [[dedupIngestIdempotent]]'s retry safety at the 100 TB shape, where the
-    * corpus-side exchange of the candidate join is the dominant per-batch
-    * term the plain-parquet index pays. The band index is a table
-    * partitioned by `ingest_batch` AND bucketed on (band, bkey)
-    * (Dedup.writeBandIndexPartitioned): each micro-batch's bands land in
-    * their own partition via drop-partition + bucketed append
-    * (Dedup.overwriteBandIndexBatch), so a retry REPLACES its own partition
-    * — and because the bucket spec is table-level, the committed-prefix
-    * read (`ingest_batch < batchId`, partition-pruned) still scans
-    * bucket-aligned with NO Exchange on the corpus side of the candidate
-    * join. Docs and pairs stay plain `ingest_batch`-partitioned parquet
-    * (they are not party to the bucket-keyed join); seed corpus under
-    * `ingest_batch = -1` (Sinks.overwriteRunPartition) and the seed index
-    * via Dedup.writeBandIndexPartitioned's default batch = -1.
-    */
-  def dedupIngestIdempotentBucketed(stream: DataFrame, corpusDocsPath: String,
-                                    bandIndexTable: String, nBuckets: Int,
-                                    pairsOutPath: String, idCol: String,
-                                    textCol: String, n: Int,
-                                    threshold: Double)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      ingestBatchIdempotentBucketed(batch, batchId, corpusDocsPath,
-        bandIndexTable, nBuckets, pairsOutPath, idCol, textCol, n, threshold)
-    }
-
-  /** One exactly-once micro-batch against the bucketed index — public so
-    * retry semantics are testable without faulting a live query: calling
-    * this twice with the same (batch, batchId) leaves identical visible
-    * state, and the corpus side of the candidate join plans with no
-    * Exchange (DedupSpec's plan contract).
+    * The band index is partitioned by `ingest_batch` AND bucketed on
+    * (band, bkey) (Dedup.writeBandIndexPartitioned): the batch's bands land
+    * by drop-partition + bucketed append (Dedup.overwriteBandIndexBatch),
+    * and since the bucket spec is table-level the committed-prefix read
+    * still scans bucket-aligned, with NO Exchange on the corpus side of
+    * the candidate join (DedupSpec's plan contract). Seed the corpus under
+    * `ingest_batch = -1` (Sinks.overwriteRunPartition) and the index via
+    * Dedup.writeBandIndexPartitioned's default batch = -1.
     */
   def ingestBatchIdempotentBucketed(batch: DataFrame, batchId: Long,
                                     corpusDocsPath: String,
@@ -317,8 +113,8 @@ object EventStreams {
       nBuckets, batchId)
   }
 
-  /** STREAMING NOVELTY SCORING with index growth — each micro-batch of
-    * documents is scored against the persisted first-holder gram index
+  /** NOVELTY SCORING with index growth — each micro-batch of documents
+    * is scored against the persisted first-holder gram index
     * (Dedup.batchNovelty), the scores land exactly-once in an
     * `ingest_batch = batchId` partition, and the batch's grams are appended
     * so the NEXT batch sees them. Retry safety here needs NO committed-
@@ -334,21 +130,6 @@ object EventStreams {
     * for its own prefix, but a later smaller id can re-claim a gram an
     * earlier batch already scored as novel.
     */
-  def noveltyIngest(stream: DataFrame, indexTable: String, nBuckets: Int,
-                    scoresOutPath: String, idCol: String, textCol: String,
-                    n: Int)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      noveltyIngestBatch(batch, batchId, indexTable, nBuckets,
-        scoresOutPath, idCol, textCol, n)
-    }
-
-  /** One streaming novelty micro-batch — public so retry semantics are
-    * testable without faulting a live query: calling this twice with the
-    * same (batch, batchId) leaves identical visible state (scores replace
-    * their own partition; duplicate index appends are absorbed by the
-    * min-merge).
-    */
   def noveltyIngestBatch(batch: DataFrame, batchId: Long, indexTable: String,
                          nBuckets: Int, scoresOutPath: String, idCol: String,
                          textCol: String, n: Int): Unit = {
@@ -363,21 +144,6 @@ object EventStreams {
       scoresOutPath, "ingest_batch")
     Dedup.appendNoveltyIndex(b, idCol, textCol, n, indexTable, nBuckets)
   }
-
-  /** Streaming wrapper over [[qualityGateBatch]]: a foreachBatch writer
-    * gating a live document stream with a frozen quality model — start
-    * with `.option("checkpointLocation", …).start()`. Restart-safe for
-    * the same reason the replay is: Spark re-runs the uncommitted batch
-    * id and the partition replace rewrites identical integers.
-    */
-  def qualityGateIngest(stream: DataFrame, model: DataFrame,
-                        scoresOutPath: String, idCol: String,
-                        textCol: String, nBuckets: Int)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      qualityGateBatch(batch, batchId, model, scoresOutPath, idCol, textCol,
-        nBuckets)
-    }
 
   /** Exactly-once QUALITY-GATE ingestion: score one micro-batch against a
     * FROZEN quality model ([[graft.operators.TextOps.trainQualityModel]],
@@ -469,43 +235,6 @@ object EventStreams {
     ()
   }
 
-  /** Newest committed model version in a [[qualityRetrainBatch]] store —
-    * the "serve the latest refresh" pointer. Partition values only (no
-    * data read).
-    */
-  def latestModelVersion(spark: org.apache.spark.sql.SparkSession,
-                         modelPath: String): Long = {
-    import org.apache.spark.sql.functions.{col, max}
-    // partition values read back as int32; normalize
-    val r = spark.read.parquet(modelPath)
-      .agg(max(col("model_version").cast("long"))).head()
-    require(!r.isNullAt(0), s"no committed model version under $modelPath")
-    r.getLong(0)
-  }
-
-  /** Streaming wrapper over [[qualityServeVersioned]]: a foreachBatch
-    * writer serving a live stream from the versioned model store. With
-    * `version = Some(v)` the model is PINNED — replays are bit-exact (the
-    * ds9 contract). With `version = None` each micro-batch serves the
-    * NEWEST committed version at its start, so a retrain landing
-    * mid-stream takes effect on the next batch; a batch retried AFTER a
-    * refresh then rewrites its partition under the newer model — the
-    * score log's `model_version` column records which model actually
-    * served each batch, which is the auditable guarantee this mode trades
-    * bit-exact replay for. Pin the version when exact replay matters.
-    */
-  def qualityServeIngest(stream: DataFrame, modelPath: String,
-                         scoresOutPath: String, idCol: String,
-                         textCol: String, nBuckets: Int,
-                         version: Option[Long] = None)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val v = version.getOrElse(
-        latestModelVersion(batch.sparkSession, modelPath))
-      qualityServeVersioned(batch, batchId, modelPath, v, scoresOutPath,
-        idCol, textCol, nBuckets)
-    }
-
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                    event_type: String, value: Double)
   case class SessionUpdate(user_id: Long, session_start: java.sql.Timestamp,
@@ -524,9 +253,9 @@ object EventStreams {
     * per key instead of O(history). Inner join: an unmatched left row
     * simply expires (append-safe).
     *
-    * Batch/stream agnostic like [[hourlyStats]]: static inputs skip the
-    * watermarks and plan the ordinary interval join, so batch backfill and
-    * the live stream share one definition.
+    * Batch/stream agnostic: static inputs skip the watermarks and plan the
+    * ordinary interval join, so batch backfill and the live stream share
+    * one definition.
     */
   def attributeJoin(left: DataFrame, right: DataFrame, keyCol: String,
                     tsCol: String, horizon: String,
@@ -604,9 +333,9 @@ object EventStreams {
     * partition-replace on `ingest_batch`. A retried batch reads the SAME
     * committed prefix (`ingest_batch < batchId`) and rewrites its own
     * partition with identical rows — replay changes nothing. Serve =
-    * latest committed row per user. Batches must not regress event time
-    * (the [[funnelUpdates]] posture), which Spark's source ordering
-    * provides when this runs as a `foreachBatch` body.
+    * latest committed row per user. Batches must not regress event time,
+    * which Spark's source ordering provides when this runs as a
+    * `foreachBatch` body.
     */
   def funnelIngestBatch(batch: DataFrame, batchId: Long, statePath: String,
                         steps: Seq[String]): Unit = {
@@ -655,82 +384,5 @@ object EventStreams {
           .select(col("user_id") +:
             cols.filter(_ != "user_id").map(c => col(s"__s.$c").as(c)): _*)
     }
-  }
-
-  case class FunnelState(times: List[Long])
-
-  /** Unit guard for funnel state read back from a checkpoint written by the
-    * pre-r17 code, whose `times` were epoch MILLIS (`ts.getTime`) — mixed
-    * into today's micros they always lose the strict-after comparison and
-    * render as ~1970 timestamps (ADVICE r17 #2). The schema can't carry a
-    * version tag (changing the case class breaks the state encoder for
-    * exactly the checkpoints we're rescuing), so units are detected by
-    * magnitude: any value below 1e13 is millis and upscales by 1000. The
-    * split is exact for event times between 1970-04-26 (1e13 micros) and
-    * 2286-11-20 (1e13 millis) — every sane event stream; fixture streams
-    * use current-era timestamps.
-    */
-  private[streaming] def microsOfStateTime(t: Long): Long =
-    if (t < 10000000000000L) t * 1000L else t
-  case class FunnelUpdate(user_id: Long, steps_reached: Int,
-                          reached_ts: java.sql.Timestamp)
-
-  /** Full-precision epoch MICROSECONDS of a Timestamp. `getTime` truncates
-    * to milliseconds, which would let two steps in the same millisecond but
-    * distinct microseconds tie under strict-after — diverging from the
-    * batch twin (w11 / Funnel.advance), which compares full TimestampType
-    * microseconds. Events are post-epoch so the sub-second nanos add.
-    */
-  private[streaming] def epochMicros(ts: java.sql.Timestamp): Long = {
-    val i = ts.toInstant
-    i.getEpochSecond * 1000000L + i.getNano / 1000L
-  }
-
-  private[streaming] def microsToTimestamp(us: Long): java.sql.Timestamp = {
-    val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
-  }
-
-  /** STREAMING funnel — the incremental twin of [[graft.operators.Funnel]]
-    * (w11): per user the chained strictly-after first-occurrence step
-    * progression, advanced across micro-batches. State is the achieved
-    * chain prefix (≤ |steps| longs per user — bounded however long the
-    * stream runs); an update row is emitted whenever a user advances.
-    *
-    * Exactness contract (the [[sessionize]] posture): within a batch
-    * events sort by (ts, event_id); across batches event time must not
-    * regress (replayed in order). Under that replay the greedy chain
-    * equals w11's nested minima exactly — step k's first occurrence after
-    * t(k−1) is the first qualifying event in global ts order, which the
-    * greedy pass sees first. Equal-ts events can't advance (strict >), in
-    * either engine, whatever the sort order among them.
-    */
-  def funnelUpdates(spark: SparkSession, events: Dataset[Event],
-                    steps: Seq[String]): Dataset[FunnelUpdate] = {
-    import spark.implicits._
-    require(steps.nonEmpty && steps.size <= 16, "1..16 funnel steps")
-    val stepArr = steps.toArray
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelUpdate](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[FunnelState]) =>
-          var times = state.getOption.map(_.times).getOrElse(Nil)
-            .map(microsOfStateTime) // legacy milli-unit checkpoints upscale
-          val before = times.length
-          // Sort key and strict-after comparison in full epoch MICROS —
-          // getTime truncates to millis and would under-advance vs w11.
-          rows.toSeq.sortBy(e => (epochMicros(e.ts), e.event_id)).foreach { e =>
-            val j = times.length
-            if (j < stepArr.length && e.event_type == stepArr(j) &&
-                (j == 0 || epochMicros(e.ts) > times.last))
-              times = times :+ epochMicros(e.ts)
-          }
-          if (times.length > before) {
-            state.update(FunnelState(times))
-            Iterator.single(FunnelUpdate(userId, times.length,
-              microsToTimestamp(times.last)))
-          } else Iterator.empty
-      }
   }
 }

@@ -4,6 +4,8 @@ import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
+import scala.util.matching.Regex
+
 /** Writes PLANS.md: formatted physical plans of EVERY SparkEntry query at
   * sf0.001, so plan shape (pushdown, broadcast, partial agg, codegen spans)
   * is reviewable as a committed artifact, not just asserted in PlanSpec.
@@ -23,17 +25,81 @@ import org.apache.spark.sql.execution.ExplainMode
   *   otherwise hides: g2's per-round rank join over the CHECKPOINTED
   *   degree-annotated edge list.
   *
-  * Usage: sbt "runMain graft.tools.DumpPlans [outFile]"
+  * Every plan goes through [[canonical]], so two dumps of the same plans
+  * are byte-identical and a PLANS.md diff shows only real plan changes.
+  *
+  * Usage:
+  *   sbt "runMain graft.tools.DumpPlans [outFile]"
+  *     writes the whole suite to outFile (default PLANS.md);
+  *   sbt "runMain graft.tools.DumpPlans --names <outDir> <suffix> <name>..."
+  *     writes <outDir>/<name>_<suffix>.txt per named query — the per-query
+  *     before/after plan artifacts an optimization round commits under
+  *     plans/rNN/, reviewable in isolation.
   */
 object DumpPlans {
 
+  /** `plan` with what changes from run to run made stable:
+    *  - expression ids (`#1234L`), RDD ids (`MapPartitionsRDD[700]`) and
+    *    exchange `plan_id`s are renumbered from 1 in order of first
+    *    appearance;
+    *  - lambda class names lose their sequence numbers and hash codes;
+    *  - the app id in temp table names (`_local_1792305208203`), the
+    *    random number ending a temp directory's name and the checkout path
+    *    are masked.
+    */
+  def canonical(plan: String, checkout: String): String = {
+    def renumber(text: String, re: Regex, render: (Regex.Match, Int) => String) = {
+      val ids = scala.collection.mutable.HashMap.empty[String, Int]
+      re.replaceAllIn(text, m => Regex.quoteReplacement(
+        render(m, ids.getOrElseUpdate(m.group(1), ids.size + 1))))
+    }
+    val tmp = Regex.quote(System.getProperty("java.io.tmpdir").stripSuffix("/"))
+    Seq[String => String](
+      renumber(_, """#(\d+)""".r, (_, n) => s"#$n"),
+      renumber(_, """\[(\d+)\] at """.r, (_, n) => s"[$n] at "),
+      renumber(_, """plan_id=(\d+)""".r, (_, n) => s"plan_id=$n"),
+      """Lambda(\$\d+)?/0x[0-9a-f]+@[0-9a-f]+""".r.replaceAllIn(_, "Lambda"),
+      """(local[-_])\d{10,}""".r.replaceAllIn(_, "$1<app>"),
+      s"""($tmp/[\\w.-]*?)\\d+(?![\\w.-])""".r.replaceAllIn(_, "$1<tmp>"),
+      _.replace(checkout, "<checkout>")
+    ).foldLeft(plan)((text, step) => step(text))
+  }
+
   def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("PLANS.md")
     val spark = graft.core.Sessions.configure(
       SparkSession.builder().appName("graft-plans").master("local[4]"),
       shufflePartitions = 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sf = "/root/testdata/sf0.001"
+    val checkout = System.getProperty("user.dir")
+    def planText(planOf: () => org.apache.spark.sql.DataFrame): String = {
+      graft.core.Storage.freeAll(spark, blocking = true)
+      canonical(
+        try planOf().queryExecution
+          .explainString(ExplainMode.fromString("formatted")).trim
+        catch {
+          case e: Throwable =>
+            s"PLAN UNAVAILABLE: ${e.getClass.getSimpleName}: ${e.getMessage}"
+        }, checkout)
+    }
+    try args.toSeq match {
+      case "--names" +: outDir +: suffix +: names if names.nonEmpty =>
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+        names.foreach { name =>
+          val text = s"## $name ($suffix, sf0.001)\n\n```\n" +
+            planText(() => SparkEntry.queries(name)(spark, sf)) + "\n```\n"
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"), text)
+          println(s"wrote $outDir/${name}_$suffix.txt")
+        }
+      case Seq("--names", _*) =>
+        sys.error("usage: DumpPlans --names <outDir> <suffix> <name>...")
+      case _ => writeSuite(args.headOption.getOrElse("PLANS.md"), spark, sf, planText)
+    } finally spark.stop()
+  }
+
+  private def writeSuite(out: String, spark: SparkSession, sf: String,
+                         planText: (() => org.apache.spark.sql.DataFrame) => String): Unit = {
     val sb = new StringBuilder
     sb.append("# Physical plans (generated by graft.tools.DumpPlans, sf0.001)\n\n")
     sb.append("What to look for: `PushedFilters`/`ReadSchema` on scans, " +
@@ -48,19 +114,8 @@ object DumpPlans {
       "two-level bucket walks (a14/a15/lm6/sm15/e7/...) and component " +
       "loops show their post-checkpoint assembly. The closing 'internal " +
       "shapes' part dumps the load-bearing plans execution hides.\n")
-    def section(name: String, planOf: () => org.apache.spark.sql.DataFrame): Unit = {
-      graft.core.Storage.freeAll(spark, blocking = true)
-      sb.append(s"\n## $name\n\n```\n")
-      try {
-        val df = planOf()
-        sb.append(df.queryExecution
-          .explainString(ExplainMode.fromString("formatted")).trim)
-      } catch {
-        case e: Throwable =>
-          sb.append(s"PLAN UNAVAILABLE: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
-      sb.append("\n```\n")
-    }
+    def section(name: String, planOf: () => org.apache.spark.sql.DataFrame): Unit =
+      sb.append(s"\n## $name\n\n```\n").append(planText(planOf)).append("\n```\n")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       section(name, () => fn(spark, sf))
     }
@@ -77,6 +132,5 @@ object DumpPlans {
         checkpoint = false))
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
     println(s"wrote $out")
-    spark.stop()
   }
 }

@@ -100,65 +100,4 @@ class CorpusAppSpec extends SparkSpec {
       minQuality = 0.0, htmlInput = true)
     assert(bStats.input == 1 && bStats.cleaned == 0, bStats.toString)
   }
-
-  test("orderForTraining: curated corpus gets a reproducible epoch permutation") {
-    val docs = graft.core.Tables.documents(spark, sf).limit(200)
-    val (curated, _) = CorpusApp.curate(spark, docs,
-      keepLangs = Set("en", "de", "fr", "es", "zh"), minQuality = 0.0)
-    val n = curated.count()
-    val e0 = CorpusApp.orderForTraining(spark, curated, "epoch0")
-      .select($"doc_id", $"pos").as[(Long, Long)].collect().toMap
-    assert(e0.values.toSeq.sorted == (0L until n).toSeq) // contiguous permutation
-    // re-derivable from the salt alone (resume-safe) and fresh per epoch
-    val e0again = CorpusApp.orderForTraining(spark, curated, "epoch0")
-      .select($"doc_id", $"pos").as[(Long, Long)].collect().toMap
-    assert(e0again == e0)
-    val e1 = CorpusApp.orderForTraining(spark, curated, "epoch1")
-      .select($"doc_id", $"pos").as[(Long, Long)].collect().toMap
-    assert(e1 != e0)
-  }
-
-  test("trainTokenizer: merges from the curated corpus, piece counts bounded correctly") {
-    val docs = graft.core.Tables.documents(spark, sf)
-    val (curated, _) = CorpusApp.curate(spark, docs,
-      keepLangs = Set("en", "de", "fr", "es", "zh"), minQuality = 0.0)
-    val (merges, annotated) = CorpusApp.trainTokenizer(spark, curated, rounds = 4)
-    assert(merges.count() == 4)
-    val rows = annotated
-      .select($"n_tokens", $"n_bpe_pieces",
-        length(regexp_replace($"text", " ", "")).cast("long").as("n_chars"))
-      .as[(Long, Long, Long)].collect()
-    assert(rows.nonEmpty)
-    // per doc: at least one piece per word, at most one piece per character,
-    // and 4 merges must actually compress SOME document below char count
-    assert(rows.forall { case (w, p, c) => p >= w && p <= c })
-    assert(rows.exists { case (_, p, c) => p < c }, "merges never applied")
-  }
-
-  test("trainTokenizer runs the BATCHED trainer; batchK=1 degrades to exact") {
-    val docs = graft.core.Tables.documents(spark, sf)
-    val (curated, _) = CorpusApp.curate(spark, docs,
-      keepLangs = Set("en", "de", "fr", "es", "zh"), minQuality = 0.0)
-    def tbl(df: org.apache.spark.sql.DataFrame): Seq[(Long, String, String)] =
-      df.orderBy($"rank").select($"rank", $"lft", $"rgt")
-        .as[(Long, String, String)].collect().toSeq
-    // properties of the app-default (batchK = 8) output itself — not a
-    // re-run of the implementation as its own oracle: ranks are a
-    // contiguous 1..n prefix of the requested rounds, every merge is the
-    // concatenation of real non-empty sides, and no merge repeats
-    val (appMerges, _) = CorpusApp.trainTokenizer(spark, curated, rounds = 6)
-    val app = appMerges.orderBy($"rank")
-      .select($"rank", $"lft", $"rgt", $"merged")
-      .as[(Long, String, String, String)].collect().toSeq
-    assert(app.nonEmpty && app.size <= 6)
-    assert(app.map(_._1) == (1L to app.size).toSeq)
-    assert(app.forall { case (_, l, r, m) => l.nonEmpty && r.nonEmpty && m == l + r })
-    assert(app.map(_._4).distinct.size == app.size)
-    // batchK = 1 must reproduce the exact job-per-merge trainer — the
-    // oracle path (t14) remains reachable through the app API
-    val (exactMerges, _) =
-      CorpusApp.trainTokenizer(spark, curated, rounds = 4, batchK = 1)
-    assert(tbl(exactMerges) ==
-      tbl(graft.operators.TextOps.bpeMerges(curated, "text", 4)))
-  }
 }

@@ -45,4 +45,32 @@ class PipelineAppsSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/openmeteo_weather_means_per_hour").count() == 48)
     assert(spark.read.parquet(s"$out/openmeteo_weather_deviations_per_hour").count() == 48)
   }
+
+  test("app flags: a misspelt flag fails the run instead of defaulting the run date") {
+    val e = intercept[IllegalArgumentException](
+      PipelineApps.parseArgs(Array("--run_date", "2024-01-01")))
+    assert(e.getMessage.contains("--run_date") && e.getMessage.contains("--run-date"),
+      e.getMessage)
+  }
+
+  test("app flags: a trailing flag with no value fails the run") {
+    val e = intercept[IllegalArgumentException](
+      PipelineApps.parseArgs(Array("--out", "/tmp/graft_out", "--run-date")))
+    assert(e.getMessage.contains("--run-date") && e.getMessage.contains("missing value"),
+      e.getMessage)
+  }
+
+  test("app flags: an unparseable run date names its flag") {
+    val e = intercept[IllegalArgumentException](
+      PipelineApps.parseArgs(Array("--run-date", "2024-13-01")))
+    assert(e.getMessage.contains("--run-date"), e.getMessage)
+    assert(PipelineApps.parseArgs(Array("--run-date", "2024-01-01"))._1.runDate ==
+      java.time.LocalDate.parse("2024-01-01"))
+  }
+
+  test("corpus app flags: --html-input true turns on HTML extraction") {
+    assert(CorpusApp.parseArgs(Array("--html-input", "true"))._2)
+    assert(!CorpusApp.parseArgs(Array("--src", "docs"))._2)
+    intercept[IllegalArgumentException](CorpusApp.parseArgs(Array("--html-input", "yes")))
+  }
 }

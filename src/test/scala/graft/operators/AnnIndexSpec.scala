@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF-PQ index (AnnIndex): storage round-trip value equivalence,
-  * frozen-append semantics, compaction invariance, and the serve-time plan
+  * frozen-append semantics, tombstone compaction, and the serve-time plan
   * contract (index side of the probe join reads bucket-aligned, exchange-
   * free). The full write -> append -> search path is additionally
   * hash-checked against DuckDB by the s19 oracle.
@@ -91,17 +91,6 @@ class AnnIndexSpec extends SparkSpec {
       .collect().toSet
     assert(membersAfter.map(_._2) == membersBefore.map(_._2) ++ batchIds)
     assert(membersAfter.forall(_._3.length == 8))
-
-    // compaction is value-invariant and reduces (or holds) the file count
-    val queries = emb.filter(col("vec_id") < 8)
-    val before = rows(AnnIndex.searchIvfPq(queries, "vec_id", "embedding",
-      dim = 64, m = 8, nProbe = 4, topK = 5, name))
-    val (nf0, nf1) = graft.sources.Bucketing.compactBucketedTable(spark,
-      AnnIndex.membersTable(name), Seq("cid"), 4)
-    assert(nf1 <= nf0)
-    val after = rows(AnnIndex.searchIvfPq(queries, "vec_id", "embedding",
-      dim = 64, m = 8, nProbe = 4, topK = 5, name))
-    assert(after == before)
     AnnIndex.dropIvfPq(spark, name)
   }
 
@@ -197,10 +186,10 @@ class AnnIndexSpec extends SparkSpec {
         .as[(Long, Seq[Float])].collect().toSeq
     val input = MemoryStream[(Long, Seq[Float])]
     val ckpt = java.nio.file.Files.createTempDirectory("ann_stream_ckpt")
-    val q = AnnIndex.ingestVectors(
-        input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        dim = 64, m = 8, name, nBuckets = 4)
-      .option("checkpointLocation", ckpt.toString).start()
+    val q = microBatches(input.toDF().toDF("vec_id", "embedding")) { (b, id) =>
+        AnnIndex.ingestVectorBatch(b, id, "vec_id", "embedding",
+          dim = 64, m = 8, name, nBuckets = 4)
+      }.option("checkpointLocation", ckpt.toString).start()
     try {
       input.addData(vecs(batchA): _*); q.processAllAvailable()
       input.addData(vecs(batchB): _*); q.processAllAvailable()
@@ -273,39 +262,6 @@ class AnnIndexSpec extends SparkSpec {
     val compacted = rows(AnnIndex.searchIvfPq(queries, "vec_id", "embedding",
       dim = 64, m = 8, nProbe = 4, topK = 5, name))
     assert(compacted == masked)
-    AnnIndex.dropIvfPq(spark, name)
-  }
-
-  test("upsert: old codes vanish, new vector is served; refine serve masks tombstones too") {
-    val name = "ann_idx_upsert"
-    AnnIndex.dropIvfPq(spark, name)
-    val corpus = emb.filter(col("vec_id") >= 8)
-    val queries = emb.filter(col("vec_id") < 8)
-    AnnIndex.writeIvfPq(corpus, "vec_id", "embedding", dim = 64,
-      nCells = 16, m = 8, k = 16, name, nBuckets = 4)
-    // move vector 100 onto vector 8's embedding: after upsert, searching
-    // with vec 8's own embedding must rank nid=100 at ADC distance equal
-    // to nid=8's (identical codes)
-    val moved = emb.filter(col("vec_id") === 8)
-      .select(lit(100L).as("vec_id"), col("embedding"))
-    AnnIndex.upsertIvfPq(moved, "vec_id", "embedding", dim = 64,
-      m = 8, name, nBuckets = 4)
-    // exactly one members row per id, and id 100 carries id 8's codes
-    val m100 = spark.table(AnnIndex.membersTable(name)).filter(col("nid") === 100L)
-    assert(m100.count() == 1L)
-    val m8 = spark.table(AnnIndex.membersTable(name)).filter(col("nid") === 8L)
-    assert(m100.select("cid", "codes").collect().toSeq.map(_.toString) ==
-      m8.select("cid", "codes").collect().toSeq.map(_.toString))
-    assert(!spark.catalog.tableExists(AnnIndex.deletesTable(name)))
-    // refine serve inherits the tombstone mask: delete id 100 again and the
-    // refined top-k must not contain it even though it now duplicates id 8
-    AnnIndex.deleteIvfPq(spark, name, Seq(100L).toDF("vec_id"), "vec_id")
-    val refined = AnnIndex.searchIvfPqRefine(queries,
-      emb.select("vec_id", "embedding").unionByName(moved),
-      "vec_id", "embedding", dim = 64, m = 8, nProbe = 4,
-      shortlistK = 25, topK = 5, name)
-      .select("nid").as[Long].collect().toSet
-    assert(!refined.contains(100L))
     AnnIndex.dropIvfPq(spark, name)
   }
 }

@@ -276,135 +276,6 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("compactBandIndex: file count strictly drops, pairs and the exchange-free read survive") {
-    val table = "b_band_index_compact"
-    graft.sources.Bucketing.ensureCleanTable(spark, table)
-    val docs = graft.core.Tables.documents(spark, sf)
-    val corpus = docs.filter(col("doc_id") % 4 =!= 0)
-    val batchA = docs.filter(col("doc_id") % 8 === 0)
-    val probe = docs.filter(col("doc_id") % 8 === 4)
-    Dedup.writeBandIndex(corpus, "doc_id", "text", 3, table, 4)
-    Dedup.appendBandIndex(batchA, "doc_id", "text", 3, table, 4)
-
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      def cands() = Dedup.crossBandCandidates(
-        Dedup.bandIndex(probe, "doc_id", "text", 3), spark.table(table))
-      val beforePairs = cands().as[(Long, Long)].collect().toSet
-      assert(beforePairs.nonEmpty, "fixture must produce candidates")
-
-      val (before, after) = Dedup.compactBandIndex(spark, table, 4)
-      // round 19: bucket-clustered writes cap each append at nBuckets
-      // files, so compaction lands at-or-below the pre-count (exactly one
-      // file per non-empty bucket), never above
-      assert(after <= before, s"compaction grew files, got $before -> $after")
-      assert(after <= 4, s"one file per bucket max, got $after")
-
-      val post = cands()
-      assert(post.as[(Long, Long)].collect().toSet == beforePairs,
-        "compaction must not change candidate pairs")
-      val plan = post.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert(plan.contains("Bucketed: true"), plan)
-      assert("Exchange".r.findAllIn(plan).size == 1,
-        s"compacted index must still read bucket-aligned:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      graft.sources.Bucketing.ensureCleanTable(spark, table)
-    }
-  }
-
-  test("compactBandIndexBatch: ds2 partition compaction is idempotent and content-preserving") {
-    val table = "b_band_index_part_compact"
-    graft.sources.Bucketing.ensureCleanTable(spark, table)
-    val docs = graft.core.Tables.documents(spark, sf)
-    val corpus = docs.filter(col("doc_id") % 4 =!= 0)
-    val batchA = docs.filter(col("doc_id") % 8 === 0)
-    val probe = docs.filter(col("doc_id") % 8 === 4)
-    Dedup.writeBandIndexPartitioned(corpus, "doc_id", "text", 3, table, 4)
-    // ingest batch 0 the way a real source delivers it: writer partitions
-    // that straddle buckets, so the bucketed append lands a file per
-    // (task, bucket) — the churn the maintenance op exists to undo
-    graft.sources.Bucketing.overwriteBucketedPartition(
-      Dedup.bandIndex(batchA, "doc_id", "text", 3).repartition(7),
-      table, "ingest_batch", 0L, Seq("band", "bkey"), 4)
-
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      def committed() = spark.table(table).filter(col("ingest_batch") < 1L)
-      def cands() = Dedup.crossBandCandidates(
-        Dedup.bandIndex(probe, "doc_id", "text", 3), committed())
-      val beforePairs = cands().as[(Long, Long)].collect().toSet
-      assert(beforePairs.nonEmpty)
-      val seedFiles = spark.table(table)
-        .filter(col("ingest_batch") === -1L).inputFiles.length
-
-      val (before, after) = Dedup.compactBandIndexBatch(spark, table, 4, batch = 0L)
-      assert(after < before, s"expected fewer files, got $before -> $after")
-      // only batch 0's partition was rewritten; the seed partition's files
-      // are untouched
-      assert(spark.table(table).filter(col("ingest_batch") === -1L)
-        .inputFiles.length == seedFiles)
-      assert(cands().as[(Long, Long)].collect().toSet == beforePairs)
-      // idempotence: the maintenance op is a partition overwrite, so
-      // re-running it (the crash-repair story) converges to the same state
-      val (_, again) = Dedup.compactBandIndexBatch(spark, table, 4, batch = 0L)
-      assert(again == after)
-      assert(cands().as[(Long, Long)].collect().toSet == beforePairs)
-      val plan = cands().queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert(plan.contains("Bucketed: true"), plan)
-      assert("Exchange".r.findAllIn(plan).size == 1,
-        s"compacted committed-prefix read must stay exchange-free:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      graft.sources.Bucketing.ensureCleanTable(spark, table)
-    }
-  }
-
-  test("compactBandIndexBatch: crash between partition drop and append is recovered from durable staging") {
-    val table = "b_band_index_crash_compact"
-    graft.sources.Bucketing.ensureCleanTable(spark, table)
-    val docs = graft.core.Tables.documents(spark, sf)
-    val corpus = docs.filter(col("doc_id") % 4 =!= 0)
-    val batchA = docs.filter(col("doc_id") % 8 === 0)
-    Dedup.writeBandIndexPartitioned(corpus, "doc_id", "text", 3, table, 4)
-    graft.sources.Bucketing.overwriteBucketedPartition(
-      Dedup.bandIndex(batchA, "doc_id", "text", 3).repartition(7),
-      table, "ingest_batch", 0L, Seq("band", "bkey"), 4)
-    try {
-      val batchRows = spark.table(table).filter(col("ingest_batch") === 0L)
-        .drop("ingest_batch").collect().toSet
-      assert(batchRows.nonEmpty)
-      // phase 1 of compaction: durable staging of the compacted partition
-      val staging = s"${table}__compact_p0"
-      graft.sources.Bucketing.ensureCleanTable(spark, staging)
-      graft.sources.Bucketing.writeBucketedBy(
-        spark.table(table).filter(col("ingest_batch") === 0L).drop("ingest_batch")
-          .repartition(4, col("band"), col("bkey")),
-        staging, Seq("band", "bkey"), 4)
-      // CRASH INJECTION: the partition's files are dropped (the window
-      // inside overwriteBucketedPartition) and the process "dies" before
-      // the append — the partition is now empty, only staging survives
-      spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (ingest_batch=0)")
-      assert(spark.table(table).filter(col("ingest_batch") === 0L).isEmpty)
-      // re-running the maintenance op must RESTORE the partition from the
-      // durable staging instead of converging to an empty partition
-      Dedup.compactBandIndexBatch(spark, table, 4, batch = 0L)
-      val recovered = spark.table(table).filter(col("ingest_batch") === 0L)
-        .drop("ingest_batch").collect().toSet
-      assert(recovered == batchRows,
-        s"recovered ${recovered.size} rows != original ${batchRows.size}")
-      // staging is dropped on success — its absence marks a clean state
-      assert(!spark.catalog.tableExists(staging))
-    } finally {
-      graft.sources.Bucketing.ensureCleanTable(spark, table)
-      graft.sources.Bucketing.ensureCleanTable(spark, s"${table}__compact_p0")
-    }
-  }
-
   test("partitioned bucketed index: committed-prefix read stays exchange-free") {
     // the ds2 plan contract: an ingest_batch-partitioned AND (band, bkey)-
     // bucketed index, read behind the idempotent path's committed-prefix
@@ -668,47 +539,6 @@ class DedupSpec extends SparkSpec {
     assert(out(2L) == ((1L, md5("CCCC"))))     // repeated AAAA removed
     assert(!out.contains(3L))                  // nothing survives
     assert(out(4L) == ((1L, md5("DDDD"))))
-  }
-
-  test("removeFromBandIndex: a taken-down doc stops matching; equals a never-indexed rebuild") {
-    val table = "b_band_takedown"
-    graft.sources.Bucketing.ensureCleanTable(spark, table)
-    val docs = graft.core.Tables.documents(spark, sf)
-    val newBatch = docs.filter(col("doc_id") % 4 === 0)
-    val corpus = docs.filter(col("doc_id") % 4 =!= 0)
-    Dedup.writeBandIndex(corpus, "doc_id", "text", 3, table, 4)
-    def pairs() = Dedup.incrementalNearDupPairs(
-      newBatch, corpus, spark.table(table), "doc_id", "text", 3, 0.5)
-      .select("ida", "idb").as[(Long, Long)].collect().toSet
-    val before = pairs()
-    assert(before.nonEmpty)
-    // take down every corpus doc that matched the batch — the worst case
-    val doomed = (before.map(_._1) ++ before.map(_._2))
-      .filter(_ % 4 != 0).toSeq
-    assert(doomed.nonEmpty)
-    Dedup.removeFromBandIndex(spark, table, doomed.toDF("doc_id"), "doc_id", 4)
-    val after = pairs()
-    assert(after.flatMap(p => Seq(p._1, p._2)).intersect(doomed.toSet).isEmpty,
-      s"taken-down ids still matching: $after")
-    // equivalence: the rewritten index behaves as one built without them
-    val rebuilt = Dedup.incrementalNearDupPairs(
-      newBatch, corpus, Dedup.bandIndex(
-        corpus.filter(!col("doc_id").isin(doomed: _*)), "doc_id", "text", 3),
-      "doc_id", "text", 3, 0.5)
-      .select("ida", "idb").as[(Long, Long)].collect().toSet
-    assert(after == rebuilt)
-    // the bucket layout survived the rewrite: exchange-free corpus read
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val cands = Dedup.crossBandCandidates(
-        Dedup.bandIndex(newBatch, "doc_id", "text", 3), spark.table(table))
-      cands.collect()
-      val plan = cands.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      assert(plan.contains("Bucketed: true"), plan)
-      assert("Exchange".r.findAllIn(plan).size == 1, plan)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("incrementalHammingPairs: equals the full run restricted to the batch") {

@@ -44,15 +44,6 @@ class EtlOpsSpec extends SparkSpec {
     assert(r.getAs[Double]("D") == 10.0 && r.getAs[Double]("NG") == 5.0)
   }
 
-  test("groupStats std is SAMPLE stddev (ddof=1), matching pandas Series.std") {
-    val df = Seq(("a", 2.0), ("a", 4.0), ("a", 4.0), ("a", 4.0), ("a", 5.0),
-      ("a", 5.0), ("a", 7.0), ("a", 9.0), ("b", 1.0)).toDF("k", "x")
-    val out = EtlOps.groupStats(Seq("k"), Seq("x"), "std")(df).collect()
-    val aStd = out.find(_.getString(0) == "a").get.getAs[Double]("x")
-    assert(math.abs(aStd - 2.13808993529939) < 1e-12) // sample stddev of the 8 values
-    assert(out.find(_.getString(0) == "b").get.isNullAt(1)) // n=1 -> null, like pandas
-  }
-
   test("quarterLabel formats like pandas to_period('Q')") {
     val df = Seq("1996-04-01", "1996-03-31", "1996-12-31").toDF("s")
       .withColumn("d", to_date($"s"))

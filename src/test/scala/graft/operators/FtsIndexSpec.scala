@@ -66,8 +66,9 @@ class FtsIndexSpec extends SparkSpec {
         .select("doc_id", "text").as[(Long, String)].collect()
       assert(b0.nonEmpty && b1.nonEmpty)
       val input = MemoryStream[(Long, String)]
-      val q = FtsIndex.bm25Ingest(input.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", name, nBuckets = 4).start()
+      val q = microBatches(input.toDF().toDF("doc_id", "text")) { (b, id) =>
+        FtsIndex.ingestBm25Batch(b, id, "doc_id", "text", name, nBuckets = 4)
+      }.start()
       try {
         input.addData(b0.toSeq: _*); q.processAllAvailable()
         input.addData(b1.toSeq: _*); q.processAllAvailable()
@@ -87,30 +88,6 @@ class FtsIndexSpec extends SparkSpec {
       val replayed = FtsIndex.searchBm25(spark, name, terms, k = 25)
         .as[(Long, Double)].collect().toSeq
       assert(replayed == served, "a replayed batch changed the ranking")
-    } finally cleanup(name)
-  }
-
-  test("postings compaction under append churn: ranking byte-identical, fewer files") {
-    val name = "spec_compact"
-    val docs = graft.core.Tables.documents(spark, sf)
-    val terms = Seq("table", "hash", "merge")
-    try {
-      FtsIndex.writeBm25(docs.filter($"doc_id" % 3 =!= 0), "doc_id", "text",
-        name, nBuckets = 4)
-      FtsIndex.appendBm25(docs.filter($"doc_id" % 3 === 0), "doc_id", "text",
-        name, nBuckets = 4)
-      val before = FtsIndex.searchBm25(spark, name, terms, k = 25)
-        .as[(Long, Double)].collect().toSeq
-      val (nBefore, nAfter) = graft.sources.Bucketing.compactBucketedTable(
-        spark, FtsIndex.postingsTable(name), Seq("tok"), 4)
-      // round 19: writes cluster to the bucket layout, so ONE append leaves
-      // at most nBuckets extra files (not tasks x buckets churn) and
-      // compaction can only land at-or-below that — never above
-      assert(nAfter <= nBefore, s"compaction grew files: $nBefore -> $nAfter")
-      assert(nAfter <= 4, "one file per non-empty bucket")
-      val after = FtsIndex.searchBm25(spark, name, terms, k = 25)
-        .as[(Long, Double)].collect().toSeq
-      assert(after == before, "compaction changed the served ranking")
     } finally cleanup(name)
   }
 

@@ -84,8 +84,9 @@ class LmIndexSpec extends SparkSpec {
         .select("doc_id", "text").as[(Long, String)].collect()
       assert(b0.nonEmpty && b1.nonEmpty)
       val input = MemoryStream[(Long, String)]
-      val q = LmIndex.lmIngest(input.toDF().toDF("doc_id", "text"),
-        "text", 2, name, nBuckets = 4).start()
+      val q = microBatches(input.toDF().toDF("doc_id", "text")) { (b, id) =>
+        LmIndex.ingestLmBatch(b, id, "text", 2, name, nBuckets = 4)
+      }.start()
       try {
         input.addData(b0.toSeq: _*); q.processAllAvailable()
         input.addData(b1.toSeq: _*); q.processAllAvailable()
@@ -95,24 +96,6 @@ class LmIndexSpec extends SparkSpec {
       val scratch = TextOps.ngramLmCounts(docs, "doc_id", "text", 2, 1L)
         .as[(Long, String, Long, Long)].collect().toSet
       assert(served == scratch, "streamed count table diverged from batch")
-    } finally cleanup(name)
-  }
-
-  test("batch compaction: served counts byte-identical, one file per bucket") {
-    val name = "spec_lm_compact"
-    val docs = graft.core.Tables.documents(spark, sf)
-    try {
-      LmIndex.writeLmIndex(docs.filter($"doc_id" % 3 === 0), "text", 2,
-        name, nBuckets = 4, seedBatch = 0L)
-      LmIndex.ingestLmBatch(docs.filter($"doc_id" % 3 =!= 0), 1L, "text", 2,
-        name, nBuckets = 4)
-      val before = LmIndex.serveLmCounts(spark, name, 1L)
-        .as[(Long, String, Long, Long)].collect().toSet
-      val (n0, n1) = LmIndex.compactLmBatch(spark, name, 1L, nBuckets = 4)
-      assert(n1 <= n0, s"compaction must not grow files: $n0 -> $n1")
-      val after = LmIndex.serveLmCounts(spark, name, 1L)
-        .as[(Long, String, Long, Long)].collect().toSet
-      assert(after == before, "compaction changed served counts")
     } finally cleanup(name)
   }
 
@@ -152,9 +135,9 @@ class LmIndexSpec extends SparkSpec {
       val b1 = docs.filter($"doc_id" % 3 === 1)
         .select("doc_id", "text").as[(Long, String)].collect()
       val input = MemoryStream[(Long, String)]
-      def startQuery() = LmIndex.lmIngest(input.toDF().toDF("doc_id", "text"),
-          "text", 2, name, nBuckets = 4)
-        .option("checkpointLocation", ckpt).start()
+      def startQuery() = microBatches(input.toDF().toDF("doc_id", "text")) {
+          (b, id) => LmIndex.ingestLmBatch(b, id, "text", 2, name, nBuckets = 4)
+        }.option("checkpointLocation", ckpt).start()
       val q1 = startQuery()
       input.addData(b0.toSeq: _*); q1.processAllAvailable(); q1.stop()
       // enqueue while stopped; the restart must resume batch numbering

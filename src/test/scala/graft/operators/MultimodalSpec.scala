@@ -301,16 +301,4 @@ class MultimodalSpec extends SparkSpec {
       .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(4, 100000)
     intercept[IllegalArgumentException](Multimodal.parseTiff(farIfd))
   }
-
-  test("resizeImages: per-row map-side thumbnails over a BMP frame") {
-    import spark.implicits._
-    val pix = Array.tabulate(8 * 4)(i => (i % 127).toByte) // 2x4 image, stride 8... 3*2+2pad
-    val frame = Seq((1L, Multimodal.bmpBytes(2, 4, pix)),
-      (2L, Multimodal.bmpBytes(2, 4, pix))).toDF("id", "media")
-    val out = Multimodal.resizeImages(spark, frame, 1, 2).collect()
-    assert(out.length == 2)
-    assert(out.forall(r => r.width == 1L && r.height == 2L))
-    val metas = out.map(r => Multimodal.parseMeta(r.bytes))
-    assert(metas.forall(_ == (("bmp", 1, 2))))
-  }
 }

@@ -30,14 +30,6 @@ class SaltingSpec extends SparkSpec {
     assert(out("cold") == 1.0)
   }
 
-  test("saltedJoin matches the plain join") {
-    val li = graft.core.Tables.lineitem(spark, sf)
-    val part = graft.core.Tables.part(spark, sf)
-    val plain = li.join(part, $"l_partkey" === $"p_partkey").count()
-    val salted = Salting.saltedJoin(li, part, "l_partkey", "p_partkey", 4).count()
-    assert(salted == plain)
-  }
-
   test("AQE skew-join split fires on a hot key (the claim Salting's Scaladoc defers to)") {
     // one key owning ~95% of the probe side; thresholds lowered to make the
     // fixture's hot partition count as skewed at test scale

@@ -5,48 +5,12 @@ import org.apache.spark.sql.functions._
 
 class BucketingSpec extends SparkSpec {
 
-  test("bucketed-by-key join plans with NO shuffle exchange on either side") {
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    // a crashed earlier run can leave warehouse files behind after the
-    // catalog entry is gone; CREATE TABLE refuses to reuse the location
-    Seq("b_lineitem", "b_orders").foreach { t =>
-      val p = java.nio.file.Paths.get(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
-      if (java.nio.file.Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
-      }
-    }
+  test("aggregation on the bucket key also avoids the shuffle") {
+    // ensureCleanTable also sweeps warehouse files a crashed earlier run
+    // left behind (CREATE TABLE refuses to reuse the location)
+    Bucketing.ensureCleanTable(spark, "b_lineitem")
     Bucketing.writeBucketed(
       graft.core.Tables.lineitem(spark, sf), "b_lineitem", "l_orderkey", 4)
-    Bucketing.writeBucketed(
-      graft.core.Tables.orders(spark, sf), "b_orders", "o_orderkey", 4)
-
-    // force the shuffle-join path (the fixtures are broadcast-small, which
-    // would bypass bucketing entirely at this scale)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val plan = try {
-      val joined = Bucketing.bucketedJoin(spark, "b_lineitem", "b_orders",
-        "l_orderkey", "o_orderkey")
-      joined.collect()
-      joined.queryExecution.executedPlan.toString
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-    assert(plan.contains("SortMergeJoin"), plan)
-    assert(!plan.contains("Exchange"), s"bucketed join must not shuffle:\n$plan")
-    assert(plan.contains("Bucketed: true"), plan)
-
-    // and the result is the plain join's result
-    val joined = Bucketing.bucketedJoin(spark, "b_lineitem", "b_orders",
-      "l_orderkey", "o_orderkey")
-    val plain = graft.core.Tables.lineitem(spark, sf).join(
-      graft.core.Tables.orders(spark, sf), col("l_orderkey") === col("o_orderkey"))
-    assert(joined.count() == plain.count())
-  }
-
-  test("aggregation on the bucket key also avoids the shuffle") {
     val agg = spark.table("b_lineitem").groupBy(col("l_orderkey"))
       .agg(sum(col("l_quantity")).as("q"))
     agg.collect()

@@ -39,208 +39,6 @@ class SinksSpec extends SparkSpec {
     assert(out.filter($"run_date" === "2026-08-10").count() == 2)
   }
 
-  test("compact merges a many-small-files table, preserves rows, clusters the sort key") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
-    val df = spark.range(0, 2000).selectExpr("id", "id % 7 AS k")
-    df.repartition(50).write.parquet(dir) // the hourly-append pathology
-    val before = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(before >= 50)
-    val after = Sinks.compact(spark, dir, targetBytes = 64L * 1024 * 1024, Seq("id"))
-    assert(after < before / 10, s"$before -> $after files")
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 2000)
-    assert(back.agg(sum($"id")).as[Long].collect()(0) == 1999L * 2000 / 2)
-    // range clustering: per-file id ranges must not overlap
-    val ranges = back
-      .select(input_file_name().as("f"), $"id")
-      .groupBy($"f").agg(min($"id").as("lo"), max($"id").as("hi"))
-      .collect().map(r => (r.getAs[Long]("lo"), r.getAs[Long]("hi"))).sorted
-    assert(ranges.sliding(2).forall {
-      case Array((_, hi1), (lo2, _)) => hi1 < lo2
-      case _ => true
-    }, ranges.mkString(", "))
-  }
-
-  test("compactZOrdered: selective filters on BOTH z columns prune files; linear sort can't") {
-    def fileRanges(dir: String, c: String): Seq[(Long, Long)] =
-      spark.read.parquet(dir)
-        .select(input_file_name().as("f"), col(c))
-        .groupBy($"f").agg(min(col(c)).as("lo"), max(col(c)).as("hi"))
-        .collect().map(r => (r.getAs[Long]("lo"), r.getAs[Long]("hi"))).toSeq
-    def hitting(ranges: Seq[(Long, Long)], lo: Long, hi: Long): Int =
-      ranges.count { case (l, h) => h >= lo && l <= hi }
-
-    // two independent uniform dimensions (md5-derived, deterministic)
-    val df = spark.range(0, 30000).selectExpr("id",
-      "CAST(conv(substr(md5(CAST(id AS STRING)), 1, 4), 16, 10) AS BIGINT) AS a",
-      "CAST(conv(substr(md5(CAST(id + 99999 AS STRING)), 1, 4), 16, 10) AS BIGINT) AS b")
-    val base = java.nio.file.Files.createTempDirectory("graft_z").toString
-    val (linDir, zDir) = (base + "/lin", base + "/z")
-    df.repartition(20).write.parquet(linDir)
-    df.repartition(20).write.parquet(zDir)
-    val small = 40L * 1024 // force ~8+ output files
-    Sinks.compact(spark, linDir, small, Seq("a", "b"))
-    val zFiles = Sinks.compactZOrdered(spark, zDir, small, Seq("a", "b"))
-    assert(zFiles >= 4, s"need enough files to show pruning, got $zFiles")
-
-    // a selective range on the SECOND dimension: the lexicographic layout
-    // spreads b across every file (no pruning possible); the z-order
-    // layout confines it to a fraction of them
-    val (bLo, bHi) = (0L, 65536L / 8)
-    val linHit = hitting(fileRanges(linDir, "b"), bLo, bHi)
-    val linAll = fileRanges(linDir, "b").size
-    val zHit = hitting(fileRanges(zDir, "b"), bLo, bHi)
-    val zAll = fileRanges(zDir, "b").size
-    assert(linHit == linAll, s"linear layout should not prune b: $linHit/$linAll")
-    assert(zHit < zAll, s"z-order must prune b-range scans: $zHit/$zAll")
-    // and the FIRST dimension still prunes under z-order
-    val zHitA = hitting(fileRanges(zDir, "a"), 0L, 65536L / 8)
-    assert(zHitA < zAll, s"z-order must also prune a-range scans: $zHitA/$zAll")
-    // rows survive the rewrite byte-exactly
-    val expected = spark.range(0, 30000).selectExpr(
-      "CAST(conv(substr(md5(CAST(id AS STRING)), 1, 4), 16, 10) AS BIGINT) AS a",
-      "CAST(conv(substr(md5(CAST(id + 99999 AS STRING)), 1, 4), 16, 10) AS BIGINT) AS b")
-      .agg(sum($"a" + $"b")).as[Long].head()
-    assert(spark.read.parquet(zDir).agg(sum($"a" + $"b")).as[Long].head() == expected)
-  }
-
-  test("z-order file skipping is REAL at execution time: scan decodes only overlapping files") {
-    // VERDICT r7 ask #7: the earlier tests prove the min/max ranges WOULD
-    // allow pruning; this one proves the executed scan actually skips.
-    // Spark's v1 parquet scan lists every file (numFiles never shrinks
-    // without a table format), so execution-time skipping manifests as
-    // PARQUET ROW-GROUP PRUNING: each ~40 KB compacted file is one row
-    // group, and the scan's numOutputRows metric counts only decoded rows
-    // — files whose row-group stats miss the pushed predicate contribute 0.
-    def scanOutputRows(df: org.apache.spark.sql.DataFrame): Long = {
-      df.collect()
-      val plan = df.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan
-        case p => p
-      }
-      val scans = plan.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
-      assert(scans.nonEmpty, plan.toString)
-      scans.map(_.metrics("numOutputRows").value).sum
-    }
-    val df = spark.range(0, 30000).selectExpr("id",
-      "CAST(conv(substr(md5(CAST(id AS STRING)), 1, 4), 16, 10) AS BIGINT) AS a",
-      "CAST(conv(substr(md5(CAST(id + 99999 AS STRING)), 1, 4), 16, 10) AS BIGINT) AS b")
-    val base = java.nio.file.Files.createTempDirectory("graft_zskip").toString
-    Seq("lin", "z", "zq").foreach(s => df.repartition(20).write.parquet(s"$base/$s"))
-    val small = 40L * 1024
-    Sinks.compact(spark, s"$base/lin", small, Seq("a", "b"))
-    Sinks.compactZOrdered(spark, s"$base/z", small, Seq("a", "b"))
-    Sinks.compactZOrderedQuantile(spark, s"$base/zq", small, Seq("a", "b"))
-
-    val (bLo, bHi) = (0L, 65536L / 8) // selective range on the SECOND dim
-    def filtered(dir: String) =
-      spark.read.parquet(dir).filter($"b" >= bLo && $"b" <= bHi)
-    // the predicate must reach the parquet reader or no row group can skip
-    assert(filtered(s"$base/z").queryExecution.executedPlan.toString
-      .contains("PushedFilters: [IsNotNull(b), GreaterThanOrEqual(b,"),
-      "b-range predicate not pushed to the scan")
-
-    val total = 30000L
-    val linRows = scanOutputRows(filtered(s"$base/lin"))
-    Seq("z" -> s"$base/z", "zq" -> s"$base/zq").foreach { case (label, dir) =>
-      // prediction from file-level stats: rows in files whose [min,max]
-      // overlaps the range — the ceiling row-group pruning can reach
-      val perFile = spark.read.parquet(dir)
-        .select(input_file_name().as("f"), $"b")
-        .groupBy($"f").agg(count(lit(1)).as("n"),
-          min($"b").as("lo"), max($"b").as("hi"))
-        .collect().map(r => (r.getAs[Long]("n"), r.getAs[Long]("lo"), r.getAs[Long]("hi")))
-      val predicted = perFile.collect {
-        case (n, lo, hi) if hi >= bLo && lo <= bHi => n }.sum
-      assert(predicted < total,
-        s"$label: fixture must have non-overlapping files ($predicted/$total)")
-      val zRows = scanOutputRows(filtered(dir))
-      // the STRICT skip: decoded rows never exceed the file-stats ceiling
-      // (page-level column indexes may prune even further), and are a
-      // strict subset of the corpus — skipped files were never decoded
-      assert(zRows <= predicted, s"$label: decoded $zRows > predicted $predicted")
-      assert(zRows < total, s"$label: nothing skipped ($zRows/$total)")
-      // z-order decodes strictly less than the linear layout on dim b
-      assert(zRows < linRows, s"$label: z=$zRows !< lin=$linRows")
-      // and answers are identical — skipping never changes results
-      assert(filtered(dir).count() == filtered(s"$base/lin").count())
-    }
-    // the linear layout cannot skip on b: it decodes (almost) everything
-    assert(linRows >= (total * 9) / 10, s"lin decoded only $linRows")
-  }
-
-  test("zOrderValueQuantile: heavy-tailed column spreads evenly where the uniform grid collapses") {
-    // lognormal-ish skew: squaring a uniform hash concentrates mass near 0
-    // with a long tail — the classic case where min/max range bucketing
-    // puts almost everything into the bottom buckets
-    val df = spark.range(0, 20000).selectExpr(
-      "CAST(pow(conv(substr(md5(CAST(id AS STRING)), 1, 4), 16, 10) / 65536.0, 8) * 1e12 AS BIGINT) AS s",
-      "CAST(conv(substr(md5(CAST(id + 7 AS STRING)), 1, 4), 16, 10) AS BIGINT) AS u")
-    def topBucketShare(z: org.apache.spark.sql.Column): Double = {
-      // column s contributes the even-index z bits; project its bucket back
-      val counts = df.select(z.as("z"))
-        .selectExpr("aggregate(transform(sequence(0, 7), i -> ((z >> (2*i)) & 1) << i), 0L, (a, x) -> a + x) AS sb")
-        .groupBy($"sb").count().select($"count").as[Long].collect()
-      counts.max.toDouble / counts.sum
-    }
-    val uniformShare = topBucketShare(Sinks.zOrderValue(df, Seq("s", "u"), bits = 8))
-    val quantileShare = topBucketShare(Sinks.zOrderValueQuantile(df, Seq("s", "u"), bits = 8))
-    // uniform grid: the hottest s-bucket owns most of the corpus; quantile
-    // bucketing bounds every bucket near 1/256 (ties + approx error aside)
-    assert(uniformShare > 0.3, s"fixture not skewed enough: $uniformShare")
-    assert(quantileShare < 0.05, s"quantile buckets must stay balanced: $quantileShare")
-
-    // and the skewed column still prunes files after quantile z-compaction
-    val base = java.nio.file.Files.createTempDirectory("graft_zq").toString + "/data"
-    df.repartition(10).write.parquet(base)
-    val nf = Sinks.compactZOrderedQuantile(spark, base, 30L * 1024, Seq("s", "u"))
-    assert(nf >= 4, s"need several files, got $nf")
-    val ranges = spark.read.parquet(base)
-      .select(input_file_name().as("f"), $"s")
-      .groupBy($"f").agg(min($"s").as("lo"), max($"s").as("hi"))
-      .collect().map(r => (r.getAs[Long]("lo"), r.getAs[Long]("hi")))
-    val (qLo, qHi) = (0L, 1000L) // the dense head of the distribution
-    val hit = ranges.count { case (l, h) => h >= qLo && l <= qHi }
-    assert(hit < ranges.length, s"head-range scans must prune: $hit/${ranges.length}")
-  }
-
-  test("zOrderValue: null bounds (all-null column, empty frame) degrade to bucket 0, not NPE") {
-    val withNullCol = Seq((1L, Option.empty[Long]), (2L, None), (3L, None))
-      .toDF("a", "b")
-    val z = withNullCol.select(Sinks.zOrderValue(withNullCol, Seq("a", "b")).as("z"))
-      .as[Long].collect()
-    assert(z.length == 3 && z.forall(_ >= 0L)) // b contributes nothing, a still buckets
-    val empty = spark.range(0).selectExpr("id AS a", "id AS b")
-    assert(empty.select(Sinks.zOrderValue(empty, Seq("a", "b"))).count() == 0L)
-    // a per-row null in a column with real bounds lands in bucket 0
-    val mixed = Seq((0L, Some(5L)), (100L, None)).toDF("a", "b")
-    assert(mixed.select(Sinks.zOrderValue(mixed, Seq("a", "b")).as("z"))
-      .as[Long].collect().forall(_ >= 0L))
-    // the Int-shift overflow window is closed: bits > 30 is rejected
-    intercept[IllegalArgumentException](
-      Sinks.zOrderValue(mixed, Seq("a", "b"), bits = 31))
-  }
-
-  test("compactPartitioned compacts each partition directory independently") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_part").toString + "/t"
-    val days = (0 until 3).flatMap(d => (0 until 400).map(i =>
-      (s"2026-08-1$d", d * 1000L + i))).toDF("run_date", "id")
-    days.repartition(20).write.partitionBy("run_date").parquet(dir)
-    def filesPerPart = new java.io.File(dir).listFiles()
-      .filter(_.getName.contains("=")).map(p =>
-        p.getName -> p.listFiles().count(_.getName.endsWith(".parquet"))).toMap
-    assert(filesPerPart.values.forall(_ >= 10))
-    val out = Sinks.compactPartitioned(spark, dir, 64L * 1024 * 1024, Seq("id"))
-    assert(out.keySet == Set("run_date=2026-08-10", "run_date=2026-08-11", "run_date=2026-08-12"))
-    assert(filesPerPart.values.forall(_ <= 2), filesPerPart.toString)
-    // data and partition column survive
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 1200)
-    assert(back.select("run_date").distinct().count() == 3)
-  }
-
   test("partitioned table reads prune by partition: one day's filter scans one directory") {
     val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString
     val days = Seq(("2026-08-10", 1), ("2026-08-11", 2), ("2026-08-12", 3))
