@@ -1,5 +1,7 @@
 package graft.apps
 
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
+
 import graft.core.Sessions
 import graft.orchestration.TaskGraph
 import graft.orchestration.TaskGraph.{RetryPolicy, Task}
@@ -73,15 +75,52 @@ object PipelineApps {
   }
 
   /** Load stage shared by all apps: each output frame becomes a partitioned
-    * parquet table keyed by the run date.
+    * parquet table keyed by the run date, written with dynamic partition
+    * overwrite. The write adds no sort of its own: `run_date` is one value
+    * per call, so each file keeps the order its frame sorted its rows in
+    * (within partitions, see `Eia930Pipeline`).
+    *
+    * The tables are independent jobs, so they are written side by side on a
+    * pool made for this call, of min(#outputs, `defaultParallelism`)
+    * threads. The calling thread starts those threads (one per submitted
+    * write until the pool is full), so they inherit its Spark local
+    * properties: every write job carries the caller's job group and job
+    * tags. The writers never enter `Storage.freeingIntermediates`, so a
+    * caller inside it does not deadlock them.
+    *
+    * `load` returns only when every write has ended. When writes fail it
+    * then throws the first failure, with the later ones added as
+    * suppressed; the tables whose writes succeeded have landed. No writer
+    * outlives the call, so a retry of the load never races a leftover
+    * write on the same table path, and the retry's overwrite replaces each
+    * run-date partition exactly once. (To stop a load early, cancel its
+    * jobs by tag: the writes then fail and `load` throws. An interrupt of
+    * the calling thread would end the wait with the writers still running.)
     */
   def load(outputs: Map[String, DataFrame], outDir: String,
-           runDate: java.time.LocalDate): Unit =
-    outputs.foreach { case (table, df) =>
-      Sinks.overwriteRunPartition(
-        df.withColumn("run_date", org.apache.spark.sql.functions.lit(runDate.toString)),
-        s"$outDir/$table", "run_date")
-    }
+           runDate: java.time.LocalDate): Unit = if (outputs.nonEmpty) {
+    val sc = outputs.head._2.sparkSession.sparkContext
+    val pool = Executors.newFixedThreadPool(math.min(outputs.size, sc.defaultParallelism))
+    try {
+      val writes = new ExecutorCompletionService[Unit](pool)
+      outputs.foreach { case (table, df) =>
+        writes.submit(() =>
+          Sinks.overwriteRunPartition(stamped(df, runDate), s"$outDir/$table", "run_date"))
+      }
+      val failures = Seq.fill(outputs.size)(writes.take()).flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures match {
+        case first +: rest => rest.foreach(first.addSuppressed); throw first
+        case _ =>
+      }
+    } finally pool.shutdown()
+  }
+
+  /** `df` with the `run_date` column [[load]] partitions its table by. */
+  def stamped(df: DataFrame, runDate: java.time.LocalDate): DataFrame =
+    df.withColumn("run_date", org.apache.spark.sql.functions.lit(runDate.toString))
 
   private def app(name: String)(body: (SparkSession, Args) => Unit): Array[String] => Unit =
     argv => {
@@ -98,53 +137,73 @@ object PipelineApps {
     }
 
   /** EIA-930 daily: cutoff = run date minus 2 days at hour 00 (:48,:98). */
-  def runEia930(spark: SparkSession, a: Args): Unit = {
+  def runEia930(spark: SparkSession, a: Args): Unit =
+    load(eia930Outputs(spark, a), a.out, a.runDate)
+
+  /** EIA-7A quarterly: target quarter = run date minus 6 months (:51,:76). */
+  def runEia7a(spark: SparkSession, a: Args): Unit =
+    load(eia7aOutputs(spark, a), a.out, a.runDate)
+
+  /** EIA-814 monthly: fetch until the API runs dry (:52-54). */
+  def runEia814(spark: SparkSession, a: Args): Unit =
+    load(eia814Outputs(spark, a), a.out, a.runDate)
+
+  /** Open-Meteo daily: one response document per curated coordinate. */
+  def runOpenMeteo(spark: SparkSession, a: Args): Unit =
+    load(openMeteoOutputs(spark, a), a.out, a.runDate)
+
+  /** The sink frames of all four pipelines over the sources under `a.src`,
+    * by table, each stamped as [[load]] stamps it: what the apps write.
+    */
+  def sinkFrames(spark: SparkSession, a: Args): Seq[(String, DataFrame)] =
+    Seq(eia930Outputs _, eia7aOutputs _, eia814Outputs _, openMeteoOutputs _)
+      .flatMap(_(spark, a)).sortBy(_._1)
+      .map { case (table, df) => table -> stamped(df, a.runDate) }
+
+  /** The extract >> transform of each app above: its sink frames by table. */
+  private def eia930Outputs(spark: SparkSession, a: Args): Map[String, DataFrame] = {
     val cutoff = java.sql.Timestamp.valueOf(a.runDate.minusDays(2).atStartOfDay())
     val stop = a.runDate.minusDays(2).toString + "T00"
     def pages(sub: String, row: org.apache.spark.sql.types.StructType, pageSize: Int) =
       EnvelopeJson.parsePages(spark,
         EnvelopeJson.fetchUntilPeriod(new FixturePages(s"${a.src}/eia930/$sub", pageSize), pageSize, stop),
         row)
-    load(Eia930Pipeline.transform(
+    Eia930Pipeline.transform(
       pages("fuel", Schemas.fuelTypeDataRow, 12),
       pages("region", Schemas.regionDataRow, 40),
       pages("interchange", Schemas.interchangeDataRow, 16),
       CsvSources.balancingAuthorities(spark, s"${a.src}/eia930/ba.csv"),
       CsvSources.energySources(spark, s"${a.src}/eia930/energy.csv"),
-      cutoff), a.out, a.runDate)
+      cutoff)
   }
 
-  /** EIA-7A quarterly: target quarter = run date minus 6 months (:51,:76). */
-  def runEia7a(spark: SparkSession, a: Args): Unit = {
+  private def eia7aOutputs(spark: SparkSession, a: Args): Map[String, DataFrame] = {
     val quarter = Eia7aPipeline.quarterLabelFor(a.runDate, monthsAgo = 6)
     def pages(sub: String, row: org.apache.spark.sql.types.StructType, pageSize: Int) =
       EnvelopeJson.parsePages(spark,
         EnvelopeJson.fetchWhilePeriodEquals(new FixturePages(s"${a.src}/eia7a/$sub", pageSize), pageSize, quarter),
         row)
-    load(Eia7aPipeline.transform(
+    Eia7aPipeline.transform(
       pages("customs", Schemas.coalImportsExportsRow, 4),
       pages("mine", Schemas.coalShipmentReceiptsRow, 1),
-      quarter), a.out, a.runDate)
+      quarter)
   }
 
-  /** EIA-814 monthly: fetch until the API runs dry (:52-54). */
-  def runEia814(spark: SparkSession, a: Args): Unit =
-    load(Eia814Pipeline.transform(
+  private def eia814Outputs(spark: SparkSession, a: Args): Map[String, DataFrame] =
+    Eia814Pipeline.transform(
       EnvelopeJson.parsePages(spark,
         EnvelopeJson.fetchUntilEmpty(new FixturePages(s"${a.src}/eia814", 1), 1),
-        Schemas.crudeOilImportsRow)), a.out, a.runDate)
+        Schemas.crudeOilImportsRow))
 
-  /** Open-Meteo daily: one response document per curated coordinate. */
-  def runOpenMeteo(spark: SparkSession, a: Args): Unit = {
+  private def openMeteoOutputs(spark: SparkSession, a: Args): Map[String, DataFrame] = {
     val dir = java.nio.file.Paths.get(s"${a.src}/openmeteo")
     val stream = java.nio.file.Files.list(dir)
     val files = try stream.toArray.map(_.toString) finally stream.close()
     val bodies = files.filter(_.endsWith(".json")).sorted.toSeq
       .map(p => java.nio.file.Files.readString(java.nio.file.Paths.get(p)))
-    load(OpenMeteoPipeline.transform(
+    OpenMeteoPipeline.transform(
       OpenMeteoSource.parseResponses(spark, bodies),
-      CsvSources.coordinates(spark, s"${a.src}/openmeteo/coords.csv")),
-      a.out, a.runDate)
+      CsvSources.coordinates(spark, s"${a.src}/openmeteo/coords.csv"))
   }
 
   private[apps] def runApp(name: String, body: (SparkSession, Args) => Unit,

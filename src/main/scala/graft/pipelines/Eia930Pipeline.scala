@@ -13,6 +13,16 @@ import org.apache.spark.sql.functions._
   * reference computes `now - 2 days` inside the transform, :98), and the
   * positional `iloc` trim (:102) is the relational half-open filter
   * `date < cutoff` (SURVEY.md §7 "hard parts").
+  *
+  * Sink order. The reference sorts each aggregate before appending it to a
+  * Postgres heap table, which keeps no row order (loadTask, :277-284). A
+  * global `orderBy` in front of a parquet partition write buys nothing
+  * relationally and costs a range exchange, a sampling job and a second
+  * read of the aggregate's shuffle. So the aggregates here (and
+  * `OpenMeteoPipeline`'s) sort only WITHIN partitions, on the reference's
+  * keys: no exchange is added, every written file holds its rows in key
+  * order, and the clustering keeps parquet row groups run-length friendly.
+  * A reader that needs a total order says so with its own `orderBy`.
   */
 object Eia930Pipeline {
 
@@ -29,37 +39,49 @@ object Eia930Pipeline {
     EtlOps.semiJoinFilter(baRef.select(col("`BA Code`").as("__ba")), key, "__ba")(renamed)
   }
 
-  /** A1 (:111-118): hourly net generation by energy source. The coalesce
-    * matches pandas groupby-sum over an all-NaN group (= 0.0, skipna);
-    * Spark's sum would return null there.
+  /** A1 (:111-118): hourly net generation by energy source, sorted within
+    * partitions by (date, fueltype). The coalesce matches pandas
+    * groupby-sum over an all-NaN group (= 0.0, skipna); Spark's sum would
+    * return null there.
     */
   def hourlyNetGenerationByEnergySource(cleaned: DataFrame): DataFrame =
     cleaned
       .withColumn("value", expr("try_cast(value AS DOUBLE)"))
       .groupBy(col("date"), col("fueltype"))
       .agg(coalesce(sum(col("value")), lit(0.0)).as("value"))
-      .orderBy(col("date"), col("fueltype"))
+      .sortWithinPartitions(col("date"), col("fueltype"))
+
+  /** The reference's `pivot_table(columns='type', aggfunc='sum')` over
+    * D/DF/NG/TI as one aggregate: one sum per type of the values whose
+    * `type` is that type. A NULL or unlisted type adds to no column, and a
+    * type a group lacks is NULL, as in pandas. Spark's `pivot` plans the
+    * same result as two aggregates with two hash exchanges (PivotFirst);
+    * this is one of each.
+    */
+  private def sumsByType(cleaned: DataFrame, keys: String*): DataFrame = {
+    val sums = pivotTypes.map(t => sum(when(col("type") === t, col("value"))).as(t))
+    cleaned
+      .withColumn("value", expr("try_cast(value AS DOUBLE)"))
+      .groupBy(keys.map(col): _*)
+      .agg(sums.head, sums.tail: _*)
+  }
+
+  private val pivotTypes = Seq("D", "DF", "NG", "TI")
 
   /** A2 (:121-131): per-respondent pivot over type D/DF/NG/TI, incomplete
-    * rows dropped (pandas pivot_table + dropna).
+    * rows dropped (pandas pivot_table + dropna), sorted within partitions by
+    * (date, respondent).
     */
   def hourlyRespondentsProducingAndGenerating(cleaned: DataFrame): DataFrame =
-    cleaned
-      .withColumn("value", expr("try_cast(value AS DOUBLE)"))
-      .groupBy(col("date"), col("respondent"), col("respondent-name"))
-      .pivot("type", Seq("D", "DF", "NG", "TI"))
-      .agg(sum(col("value")))
-      .na.drop(Seq("D", "DF", "NG", "TI"))
-      .orderBy(col("date"), col("respondent"))
+    sumsByType(cleaned, "date", "respondent", "respondent-name")
+      .na.drop(pivotTypes)
+      .sortWithinPartitions(col("date"), col("respondent"))
 
-  /** A3 (:134-142): same pivot keyed by date only, incomplete rows kept. */
+  /** A3 (:134-142): same pivot keyed by date only, incomplete rows kept,
+    * sorted within partitions by date.
+    */
   def hourlyStatsByResponseType(cleaned: DataFrame): DataFrame =
-    cleaned
-      .withColumn("value", expr("try_cast(value AS DOUBLE)"))
-      .groupBy(col("date"))
-      .pivot("type", Seq("D", "DF", "NG", "TI"))
-      .agg(sum(col("value")))
-      .orderBy(col("date"))
+    sumsByType(cleaned, "date").sortWithinPartitions(col("date"))
 
   /** Full transform stage: 8 snake-cased output frames keyed by sink table
     * (loadTask mapping, :277-284).

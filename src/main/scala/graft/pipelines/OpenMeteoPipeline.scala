@@ -14,21 +14,25 @@ import org.apache.spark.sql.functions._
   * broadcast equi-join on (latitude, longitude) — order-independent and
   * correct when a location returns != 24 rows (SURVEY.md §7, a documented
   * semantic improvement, not a translation).
+  *
+  * Sink frames sort within partitions, never globally: the reference's
+  * sorts (O3, :79 and :105) order rows for a heap table that keeps no
+  * order, and a global sort in front of a parquet partition write is a
+  * range exchange that buys nothing (the `Eia930Pipeline` docs make the
+  * full argument).
   */
 object OpenMeteoPipeline {
 
-  /** cleaner (:60-83). The reference sorts the whole frame by date; a global
-    * sort in a write path is a full range-partitioning exchange that buys
-    * nothing relationally, so this only sorts WITHIN partitions (no shuffle):
-    * downstream aggregation is order-independent, and the clustering still
-    * gives parquet run-length-friendly row groups. Consumers needing a total
-    * order say so with their own orderBy (O3's explicit tiebreak keys).
+  /** cleaner (:60-83), sorted within partitions by (date, latitude,
+    * longitude) where the reference sorts the whole frame by date.
     */
   def clean(hourlyRows: DataFrame): DataFrame =
     hourlyRows.sortWithinPartitions(col("date"), col("latitude"), col("longitude"))
 
-  /** computeMetricsPerStatePerHour (:86-107): J2 state join + one aggregate
-    * per weather variable. `std` is SAMPLE stddev (pandas Series.std ddof=1).
+  /** computeMetricsPerStatePerHour (:86-107), A4 (`mean`) and A5 (`std`):
+    * J2 state join + one aggregate per weather variable, sorted within
+    * partitions by (date, state). `std` is SAMPLE stddev (pandas Series.std
+    * ddof=1).
     */
   def metricsPerStatePerHour(cleaned: DataFrame, coordinates: DataFrame,
                              stat: String): DataFrame = {
@@ -47,7 +51,7 @@ object OpenMeteoPipeline {
       .groupBy(col("date"), col("state"))
       .agg(fn(col(vars.head)).as(vars.head),
         vars.tail.map(v => fn(col(v)).as(v)): _*)
-      .orderBy(col("date"), col("state"))
+      .sortWithinPartitions(col("date"), col("state"))
   }
 
   def transform(hourlyRows: DataFrame, coordinates: DataFrame): Map[String, DataFrame] = {

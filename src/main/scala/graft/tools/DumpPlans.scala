@@ -21,9 +21,12 @@ import scala.util.matching.Regex
   *   components, the two-level bucket walks of a14/a15/lm6/sm15/e7, BPE
   *   training) show the post-checkpoint assembly; their loop/walk
   *   contracts are spec-asserted.
-  * - A closing "internal shapes" part dumps load-bearing plans execution
+  * - An "internal shapes" part dumps load-bearing plans execution
   *   otherwise hides: g2's per-round rank join over the CHECKPOINTED
   *   degree-annotated edge list.
+  * - A closing "pipeline sinks" part dumps every frame the four pipeline
+  *   apps write (`PipelineApps.sinkFrames` over the test fixtures), so the
+  *   write path's exchanges are reviewable too.
   *
   * Every plan goes through [[canonical]], so two dumps of the same plans
   * are byte-identical and a PLANS.md diff shows only real plan changes.
@@ -130,6 +133,14 @@ object DumpPlans {
       graft.operators.Dedup.prefixFilterPipeline(
         graft.core.Tables.documents(spark, sf), "doc_id", "text", 3, 0.5,
         checkpoint = false))
+    sb.append("\n# Pipeline sinks (what the pipeline apps write, over the test " +
+      "fixtures, stamped with `run_date` as `PipelineApps.load` stamps it)\n")
+    val fixtures = graft.apps.PipelineApps.Args(
+      s"${System.getProperty("user.dir")}/src/test/resources/fixtures", "",
+      java.time.LocalDate.parse("2026-08-14"))
+    graft.apps.PipelineApps.sinkFrames(spark, fixtures).foreach { case (table, df) =>
+      section(s"sink/$table", () => df)
+    }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)
     println(s"wrote $out")
   }
