@@ -78,7 +78,11 @@ object PipelineApps {
     * parquet table keyed by the run date, written with dynamic partition
     * overwrite. The write adds no sort of its own: `run_date` is one value
     * per call, so each file keeps the order its frame sorted its rows in
-    * (within partitions, see `Eia930Pipeline`).
+    * (within partitions, see `Eia930Pipeline`). It adds no exchange either:
+    * a frame lands at most one file per partition, so the apps' frames, built
+    * on one-partition sources (`EnvelopeJson.parsePages`,
+    * `OpenMeteoSource.parseResponses`), land one file per table and run
+    * date, and a partitioned frame keeps its parallelism.
     *
     * The tables are independent jobs, so they are written side by side on a
     * pool made for this call, of min(#outputs, `defaultParallelism`)

@@ -22,7 +22,12 @@ import org.apache.spark.sql.functions._
   * `OpenMeteoPipeline`'s) sort only WITHIN partitions, on the reference's
   * keys: no exchange is added, every written file holds its rows in key
   * order, and the clustering keeps parquet row groups run-length friendly.
-  * A reader that needs a total order says so with its own `orderBy`.
+  * The apps' sources arrive in one partition (`EnvelopeJson.parsePages`),
+  * so there each aggregate plans no exchange either, and each table lands
+  * ONE file per run date, fully ordered by its keys. A caller that passes
+  * partitioned pages (the DSv2 `graft-pages` source) keeps its parallelism:
+  * one hash exchange per aggregate, each file still in key order. A reader
+  * that needs a total order across files says so with its own `orderBy`.
   */
 object Eia930Pipeline {
 
@@ -55,8 +60,8 @@ object Eia930Pipeline {
     * D/DF/NG/TI as one aggregate: one sum per type of the values whose
     * `type` is that type. A NULL or unlisted type adds to no column, and a
     * type a group lacks is NULL, as in pandas. Spark's `pivot` plans the
-    * same result as two aggregates with two hash exchanges (PivotFirst);
-    * this is one of each.
+    * same result as two aggregates (PivotFirst), with two hash exchanges
+    * over partitioned input; this is one aggregate and at most one exchange.
     */
   private def sumsByType(cleaned: DataFrame, keys: String*): DataFrame = {
     val sums = pivotTypes.map(t => sum(when(col("type") === t, col("value"))).as(t))

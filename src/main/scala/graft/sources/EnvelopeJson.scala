@@ -10,11 +10,16 @@ import org.apache.spark.sql.types.StructType
   * The fetch loop is driver-side by design: pagination has sequential stop
   * conditions (stop on empty page / on a period cutoff,
   * EIA930PipelineHourlyData.py:71-93), so pages arrive as a Seq of JSON
-  * bodies; parsing them is distributed (`from_json` + `explode` over a
-  * Dataset of page strings). Page counts are dozens at 5,000 rows/page —
-  * the distributed part is everything after the fetch. The PageSource
-  * abstraction keeps HTTP out of the engine: prod wires an HTTP client,
-  * tests wire fixture files.
+  * bodies. Parsing them is not distributed either: the pages become a
+  * `LocalRelation`, and Spark's `ConvertToLocalRelation` rule evaluates the
+  * `from_json` projection on the driver while it optimizes each action
+  * (PLANS.md shows `LocalTableScan [_extract_data#1]`); only the `explode`
+  * and what follows run as tasks. A run date's pages are dozens at 5,000
+  * rows/page, all of them already held by the driver, so [[parsePages]]
+  * returns ONE partition. The parallel path for many pages is the DSv2
+  * `graft-pages` source (one partition per page, fetched on executors). The
+  * PageSource abstraction keeps HTTP out of the engine: prod wires an HTTP
+  * client, tests wire fixture files.
   */
 object EnvelopeJson {
 
@@ -79,9 +84,16 @@ object EnvelopeJson {
     pages.result()
   }
 
-  /** Distributed envelope parse: pages -> one DataFrame of string-typed rows.
-    * Declared schema (no inference scan); backticked field access because
-    * the API uses hyphenated names.
+  /** Envelope parse: pages -> one DataFrame of string-typed rows, in one
+    * partition. Declared schema (no inference scan); backticked field
+    * access because the API uses hyphenated names.
+    *
+    * One partition because the rows are bounded by what the driver fetched
+    * and `createDataset` would otherwise split them into min(#pages, cores)
+    * slices. Spark's `SinglePartition` satisfies every clustered
+    * distribution, so the aggregates, sorts and writes downstream plan no
+    * exchange. `coalesce`, not `repartition`: a narrow `Coalesce`, not a
+    * round-robin shuffle.
     */
   def parsePages(spark: SparkSession, pages: Seq[String], row: StructType): DataFrame = {
     import spark.implicits._
@@ -90,5 +102,6 @@ object EnvelopeJson {
       .select(from_json(col("body"), Schemas.envelope(row)).as("env"))
       .select(explode(col("env.response.data")).as("r"))
       .select(row.fieldNames.map(f => col(s"r.`$f`").as(f)).toIndexedSeq: _*)
+      .coalesce(1)
   }
 }

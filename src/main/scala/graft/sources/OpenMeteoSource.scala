@@ -10,8 +10,11 @@ import org.apache.spark.sql.functions._
   * which is what this source models: one response document per coordinate,
   * epoch-second `time` array + 30 parallel float arrays. The columnar
   * array-per-variable response becomes rows via one `posexplode` of the time
-  * axis + positional `element_at` into each variable array — no shuffle,
-  * scales linearly with (locations x hours).
+  * axis + positional `element_at` into each variable array. The response
+  * bodies are already on the driver (one per curated coordinate, a few
+  * thousand hourly rows per run date), so the rows come back in ONE
+  * partition, as `EnvelopeJson.parsePages` returns them: the sort, state
+  * join and aggregates of `OpenMeteoPipeline` then plan no exchange.
   */
 object OpenMeteoSource {
 
@@ -38,5 +41,6 @@ object OpenMeteoSource {
           timestamp_seconds(col("epoch_s")).as("date"),
           col("latitude"), col("longitude")) ++
           vars.map(v => element_at(col(s"hourly.`$v`"), col("idx") + 1).as(v)): _*)
+      .coalesce(1)
   }
 }

@@ -2,15 +2,18 @@ package graft.pipelines
 
 import graft.SparkSpec
 import graft.apps.PipelineApps
+import graft.sources.{EnvelopeJson, OpenMeteoSource, Schemas}
+import graft.sources.EnvelopeJson.FixturePages
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
-/** The write path's exchange diet: the pipelines' sink frames carry only the
-  * shuffles their aggregates need, and the files a run lands still hold
-  * their rows in the reference's sort-key order.
+/** The write path's exchange diet: the driver-built sources are one
+  * partition, so the pipelines' sink frames plan no shuffle at all, each
+  * table lands one file per run date, and that file holds its rows in the
+  * reference's sort-key order.
   */
 class SinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -25,7 +28,33 @@ class SinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     "openmeteo_weather_means_per_hour" -> Seq("date", "state"),
     "openmeteo_weather_deviations_per_hour" -> Seq("date", "state"))
 
-  test("sink frames: no range exchange or global sort; each aggregate shuffles once, by hash") {
+  test("parsed sources: every driver-built page and response frame is one partition") {
+    val pageDirs = Seq(
+      "eia930/fuel" -> Schemas.fuelTypeDataRow,
+      "eia930/region" -> Schemas.regionDataRow,
+      "eia930/interchange" -> Schemas.interchangeDataRow,
+      "eia7a/customs" -> Schemas.coalImportsExportsRow,
+      "eia7a/mine" -> Schemas.coalShipmentReceiptsRow,
+      "eia814" -> Schemas.crudeOilImportsRow)
+    val pages = pageDirs.map { case (dir, _) =>
+      EnvelopeJson.fetchUntilEmpty(new FixturePages(s"$fixtureRoot/$dir", 1), 1)
+    }
+    assert(pages.map(_.size).max > 1, "one page per source shows nothing")
+    val parsed = pageDirs.zip(pages).map { case ((dir, row), p) =>
+      dir -> EnvelopeJson.parsePages(spark, p, row)
+    }
+    val bodies = new java.io.File(s"$fixtureRoot/openmeteo").listFiles()
+      .map(_.getPath).filter(_.endsWith(".json")).sorted.toSeq
+      .map(p => java.nio.file.Files.readString(java.nio.file.Paths.get(p)))
+    assert(bodies.size > 1)
+    (parsed :+ ("openmeteo" -> OpenMeteoSource.parseResponses(spark, bodies))).foreach {
+      case (source, df) =>
+        val plan = stripAQEPlan(df.queryExecution.executedPlan)
+        assert(plan.outputPartitioning == SinglePartition, s"$source:\n$plan")
+    }
+  }
+
+  test("sink frames: no shuffle exchange of any kind and no global sort") {
     val frames = PipelineApps.sinkFrames(spark, PipelineApps.Args(fixtureRoot, "", runDate))
     assert(frames.size == 14 && sortKeys.keySet.subsetOf(frames.map(_._1).toSet),
       frames.map(_._1))
@@ -35,10 +64,32 @@ class SinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(!shuffles.exists(_.isInstanceOf[RangePartitioning]), s"$table:\n$plan")
       assert(collectWithSubqueries(plan) { case s: SortExec if s.global => s }.isEmpty,
         s"$table:\n$plan")
-      if (sortKeys.contains(table))
-        assert(shuffles.size == 1 && shuffles.head.isInstanceOf[HashPartitioning],
-          s"$table:\n$plan")
+      assert(shuffles.isEmpty, s"$table:\n$plan")
     }
+  }
+
+  /** The four apps' tables over the fixtures, landed once for the file tests. */
+  private lazy val landed: String = {
+    val out = java.nio.file.Files.createTempDirectory("graft_order").toString
+    val args = PipelineApps.Args(fixtureRoot, out, runDate)
+    PipelineApps.runEia930(spark, args)
+    PipelineApps.runEia7a(spark, args)
+    PipelineApps.runEia814(spark, args)
+    PipelineApps.runOpenMeteo(spark, args)
+    out
+  }
+
+  private def landedFiles(table: String): Seq[String] =
+    Option(new java.io.File(s"$landed/$table/run_date=$runDate").listFiles())
+      .getOrElse(Array.empty[java.io.File])
+      .map(_.getPath).filter(_.endsWith(".parquet")).sorted.toSeq
+
+  test("landed files: each of the 14 tables lands exactly one file per run date") {
+    val tables = PipelineApps.sinkFrames(spark, PipelineApps.Args(fixtureRoot, "", runDate))
+      .map(_._1)
+    assert(tables.size == 14, tables)
+    val counts = tables.map(t => t -> landedFiles(t).size)
+    assert(counts.forall(_._2 == 1), counts.filter(_._2 != 1))
   }
 
   /** Ascending, nulls first: the order `sortWithinPartitions` writes. */
@@ -54,14 +105,9 @@ class SinkPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }.find(_ != 0).getOrElse(0)
 
   test("landed files: every aggregate and cleaned-weather file reads back in sort-key order") {
-    val out = java.nio.file.Files.createTempDirectory("graft_order").toString
-    val args = PipelineApps.Args(fixtureRoot, out, runDate)
-    PipelineApps.runEia930(spark, args)
-    PipelineApps.runOpenMeteo(spark, args)
     val checked = sortKeys + ("openmeteo_cleaned_weather" -> Seq("date", "latitude", "longitude"))
     checked.foreach { case (table, keys) =>
-      val files = new java.io.File(s"$out/$table/run_date=$runDate").listFiles()
-        .map(_.getPath).filter(_.endsWith(".parquet")).sorted
+      val files = landedFiles(table)
       assert(files.nonEmpty, s"$table landed no files")
       files.foreach { f =>
         val rows = spark.read.parquet(f).select(keys.head, keys.tail: _*).collect().toSeq
