@@ -43,19 +43,9 @@ object CdcBoundariesLong {
     */
   def compute(text: UTF8String, n: Int, divisor: Int): ArrayData = {
     val bytes = text.getBytes
-    var m = 1
-    var i = 0
-    while (i < bytes.length) { if (bytes(i) == ' ') m += 1; i += 1 }
+    val starts = WordWindowsLong.wordStarts(bytes)
+    val m = starts.length - 1
     if (m < n) return Empty
-    val starts = new Array[Int](m + 1)
-    starts(0) = 0
-    var j = 1
-    i = 0
-    while (i < bytes.length) {
-      if (bytes(i) == ' ') { starts(j) = i + 1; j += 1 }
-      i += 1
-    }
-    starts(m) = bytes.length + 1 // sentinel: "space" one past the end
     val md = digests.get()
     val buf = new Array[Long](m - n + 1)
     var cnt = 0

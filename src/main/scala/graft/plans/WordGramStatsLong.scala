@@ -29,31 +29,14 @@ import org.apache.spark.unsafe.types.UTF8String
 object WordGramStatsLong {
   val Name = "graft_wordgram_stats"
 
-  /** Word start offsets under split(text, " "), with a sentinel so window
-    * g..g+n-1 spans bytes [starts(g), starts(g+n) - 1). */
-  private def wordStarts(b: Array[Byte]): Array[Int] = {
-    var nWords = 1
-    var i = 0
-    while (i < b.length) { if (b(i) == ' '.toByte) nWords += 1; i += 1 }
-    val starts = new Array[Int](nWords + 1)
-    var w = 1
-    i = 0
-    while (i < b.length) {
-      if (b(i) == ' '.toByte) { starts(w) = i + 1; w += 1 }
-      i += 1
-    }
-    starts(nWords) = b.length + 1
-    starts
-  }
-
   /** The per-pair kernel behind graft_wordgram_stats
     * (max_order is a checked literal in [1, 8]). */
   def compute(cand: UTF8String, ref: UTF8String, maxOrder: Int)
       : GenericArrayData = {
     val cb = cand.getBytes
     val rb = ref.getBytes
-    val cs = wordStarts(cb)
-    val rs = wordStarts(rb)
+    val cs = WordWindowsLong.wordStarts(cb)
+    val rs = WordWindowsLong.wordStarts(rb)
     val cWords = cs.length - 1
     val rWords = rs.length - 1
     val nOrds = math.min(maxOrder, math.min(cWords, rWords))

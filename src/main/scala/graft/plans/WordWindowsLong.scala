@@ -41,7 +41,8 @@ object WordWindowsLong {
     * kept), plus a sentinel `b.length + 1`: word w spans
     * [starts(w), starts(w + 1) - 1), so a window of n words from w ends at
     * starts(w + n) - 1 and there are `starts.length - 1` words. The one
-    * word-start walk of the window, n-gram and shingle kernels.
+    * word-start walk of the window, n-gram, shingle, word-gram-stats and
+    * CDC kernels.
     */
   def wordStarts(b: Array[Byte]): Array[Int] = {
     var nWords = 1

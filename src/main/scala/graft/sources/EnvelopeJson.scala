@@ -16,8 +16,9 @@ import org.apache.spark.sql.types.StructType
   * (PLANS.md shows `LocalTableScan [_extract_data#1]`); only the `explode`
   * and what follows run as tasks. A run date's pages are dozens at 5,000
   * rows/page, all of them already held by the driver, so [[parsePages]]
-  * returns ONE partition. The parallel path for many pages is the DSv2
-  * `graft-pages` source (one partition per page, fetched on executors). The
+  * returns ONE partition: its size is bounded by what the driver fetched,
+  * so splitting it would only add tasks. This object is the one decoder of
+  * the envelope (`response.data` with its hyphenated row fields). The
   * PageSource abstraction keeps HTTP out of the engine: prod wires an HTTP
   * client, tests wire fixture files.
   */

@@ -25,9 +25,10 @@ import java.time.Duration
   * HTTP status, so `fetch` returns Some for every 200 — the stop conditions
   * in `EnvelopeJson.cycle` decide when to stop asking.
   *
-  * Driver-side by design (pagination is sequential); the parallel path for
-  * already-captured pages is the DSv2 `graft-pages` source. The `sleeper`
-  * hook exists so tests assert backoff timing without sleeping.
+  * Driver-side by design: pagination is sequential, so the pages are on the
+  * driver before any parse, and `EnvelopeJson.parsePages` turns them into
+  * one partition bounded by what was fetched. The `sleeper` hook exists so
+  * tests assert backoff timing without sleeping.
   */
 final class HttpPages(
     baseUrl: String,

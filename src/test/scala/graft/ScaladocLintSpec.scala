@@ -18,7 +18,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * No dead public surface: an object-level def or val outside `queries/`
   * and `tools/` that no code in src/main/scala or etlbench/src calls is
-  * deleted with its specs, unless it is on `uncalledOnPurpose`.
+  * deleted with its specs, unless it is on `uncalledOnPurpose`. A data
+  * source registered in `META-INF/services` is reached by its short name
+  * in a format string, so the same holds for it: some `.format("<name>")`
+  * in src/main/scala or etlbench/src must read it.
   */
 class ScaladocLintSpec extends AnyFunSuite {
 
@@ -182,5 +185,35 @@ class ScaladocLintSpec extends AnyFunSuite {
     val stale = uncalledOnPurpose.keySet -- uncalled.map(_._1)
     assert(stale.isEmpty,
       s"uncalledOnPurpose names a def that is gone or now has a caller: $stale")
+  }
+
+  test("every registered data source is read by a .format call in src/main or etlbench") {
+    val services = java.nio.file.Paths.get(
+      "src/main/resources/META-INF/services/org.apache.spark.sql.sources.DataSourceRegister")
+    val providers = java.nio.file.Files.readAllLines(services).toArray.map(_.toString.trim)
+      .filterNot(l => l.isEmpty || l.startsWith("#")).toSeq
+    assert(providers.nonEmpty, s"no provider listed in $services")
+    // raw text: codeOnly blanks string literals, and the names live in them
+    val raw = (files ++ scalaFiles("etlbench/src"))
+      .map(p => p -> java.nio.file.Files.readString(p))
+    val shortName = """shortName\(\)\s*:\s*String\s*=\s*"([^"]+)"""".r
+    val unread = providers.flatMap { fqn =>
+      val (pkg, cls) = fqn.splitAt(fqn.lastIndexOf('.'))
+      val decl = s"""(?m)^package\\s+${java.util.regex.Pattern.quote(pkg)}\\s*$$""".r
+      val name = raw.iterator.flatMap { case (_, text) =>
+        val at = s"""\\bclass\\s+${cls.drop(1)}\\b""".r.findFirstMatchIn(text)
+        if (decl.findFirstIn(text).isEmpty) None
+        else at.flatMap(m => shortName.findFirstMatchIn(text.substring(m.end)))
+          .map(_.group(1))
+      }.nextOption()
+      assert(name.nonEmpty, s"$fqn: no class with a shortName() under src/main/scala")
+      val format = s"""\\.format\\(\\s*"${java.util.regex.Pattern.quote(name.get)}"\\s*\\)""".r
+      if (raw.exists { case (_, text) => format.findFirstIn(text).nonEmpty }) None
+      else Some(s"$fqn: ${name.get}")
+    }
+    assert(unread.isEmpty,
+      s"registered in $services but no .format(...) in src/main/scala or etlbench/src " +
+        "reads it; delete the source with its specs and its services line:\n" +
+        unread.mkString("\n"))
   }
 }
