@@ -9,6 +9,7 @@ import graft.pipelines._
 import graft.sources._
 import graft.sources.EnvelopeJson.FixturePages
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Runnable pipeline applications (SURVEY.md §2h D1/D2): one Spark app per
   * reference DAG, composed as extract >> transform >> load inside a
@@ -79,10 +80,10 @@ object PipelineApps {
     * overwrite. The write adds no sort of its own: `run_date` is one value
     * per call, so each file keeps the order its frame sorted its rows in
     * (within partitions, see `Eia930Pipeline`). It adds no exchange either:
-    * a frame lands at most one file per partition, so the apps' frames, built
-    * on one-partition sources (`EnvelopeJson.parsePages`,
-    * `OpenMeteoSource.parseResponses`), land one file per table and run
-    * date, and a partitioned frame keeps its parallelism.
+    * a frame lands at most one file per partition. The apps' sources are
+    * rows decoded on the driver into one partition (`EnvelopeJson.parsePages`,
+    * `OpenMeteoSource.parseResponses`), so they land one file per table and
+    * run date; a partitioned frame keeps its parallelism.
     *
     * The tables are independent jobs, so they are written side by side on a
     * pool made for this call, of min(#outputs, `defaultParallelism`)
@@ -126,20 +127,6 @@ object PipelineApps {
   def stamped(df: DataFrame, runDate: java.time.LocalDate): DataFrame =
     df.withColumn("run_date", org.apache.spark.sql.functions.lit(runDate.toString))
 
-  private def app(name: String)(body: (SparkSession, Args) => Unit): Array[String] => Unit =
-    argv => {
-      val (args, _) = parseArgs(argv)
-      val spark = Sessions.local(name)
-      try {
-        val results = TaskGraph.run(Seq(
-          Task("run", policy = RetryPolicy(retries = 2, delayMs = 1000))(
-            () => body(spark, args))))
-        results.values.collectFirst {
-          case TaskGraph.FailedAfterRetries(_, e) => throw e
-        }
-      } finally spark.stop()
-    }
-
   /** EIA-930 daily: cutoff = run date minus 2 days at hour 00 (:48,:98). */
   def runEia930(spark: SparkSession, a: Args): Unit =
     load(eia930Outputs(spark, a), a.out, a.runDate)
@@ -164,18 +151,21 @@ object PipelineApps {
       .flatMap(_(spark, a)).sortBy(_._1)
       .map { case (table, df) => table -> stamped(df, a.runDate) }
 
+  /** The `row`-shaped frame of the fixture pages under `dir`, `pageSize`
+    * rows a page, as `fetch` (an `EnvelopeJson.fetch*` loop) pulls them. */
+  private def pages(spark: SparkSession, dir: String, row: StructType, pageSize: Int)(
+      fetch: (EnvelopeJson.PageSource, Int) => Seq[String]): DataFrame =
+    EnvelopeJson.parsePages(spark, fetch(new FixturePages(dir, pageSize), pageSize), row)
+
   /** The extract >> transform of each app above: its sink frames by table. */
   private def eia930Outputs(spark: SparkSession, a: Args): Map[String, DataFrame] = {
     val cutoff = java.sql.Timestamp.valueOf(a.runDate.minusDays(2).atStartOfDay())
-    val stop = a.runDate.minusDays(2).toString + "T00"
-    def pages(sub: String, row: org.apache.spark.sql.types.StructType, pageSize: Int) =
-      EnvelopeJson.parsePages(spark,
-        EnvelopeJson.fetchUntilPeriod(new FixturePages(s"${a.src}/eia930/$sub", pageSize), pageSize, stop),
-        row)
+    val untilCutoff: (EnvelopeJson.PageSource, Int) => Seq[String] =
+      EnvelopeJson.fetchUntilPeriod(_, _, a.runDate.minusDays(2).toString + "T00")
     Eia930Pipeline.transform(
-      pages("fuel", Schemas.fuelTypeDataRow, 12),
-      pages("region", Schemas.regionDataRow, 40),
-      pages("interchange", Schemas.interchangeDataRow, 16),
+      pages(spark, s"${a.src}/eia930/fuel", Schemas.fuelTypeDataRow, 12)(untilCutoff),
+      pages(spark, s"${a.src}/eia930/region", Schemas.regionDataRow, 40)(untilCutoff),
+      pages(spark, s"${a.src}/eia930/interchange", Schemas.interchangeDataRow, 16)(untilCutoff),
       CsvSources.balancingAuthorities(spark, s"${a.src}/eia930/ba.csv"),
       CsvSources.energySources(spark, s"${a.src}/eia930/energy.csv"),
       cutoff)
@@ -183,21 +173,17 @@ object PipelineApps {
 
   private def eia7aOutputs(spark: SparkSession, a: Args): Map[String, DataFrame] = {
     val quarter = Eia7aPipeline.quarterLabelFor(a.runDate, monthsAgo = 6)
-    def pages(sub: String, row: org.apache.spark.sql.types.StructType, pageSize: Int) =
-      EnvelopeJson.parsePages(spark,
-        EnvelopeJson.fetchWhilePeriodEquals(new FixturePages(s"${a.src}/eia7a/$sub", pageSize), pageSize, quarter),
-        row)
+    val inQuarter: (EnvelopeJson.PageSource, Int) => Seq[String] =
+      EnvelopeJson.fetchWhilePeriodEquals(_, _, quarter)
     Eia7aPipeline.transform(
-      pages("customs", Schemas.coalImportsExportsRow, 4),
-      pages("mine", Schemas.coalShipmentReceiptsRow, 1),
+      pages(spark, s"${a.src}/eia7a/customs", Schemas.coalImportsExportsRow, 4)(inQuarter),
+      pages(spark, s"${a.src}/eia7a/mine", Schemas.coalShipmentReceiptsRow, 1)(inQuarter),
       quarter)
   }
 
   private def eia814Outputs(spark: SparkSession, a: Args): Map[String, DataFrame] =
     Eia814Pipeline.transform(
-      EnvelopeJson.parsePages(spark,
-        EnvelopeJson.fetchUntilEmpty(new FixturePages(s"${a.src}/eia814", 1), 1),
-        Schemas.crudeOilImportsRow))
+      pages(spark, s"${a.src}/eia814", Schemas.crudeOilImportsRow, 1)(EnvelopeJson.fetchUntilEmpty))
 
   private def openMeteoOutputs(spark: SparkSession, a: Args): Map[String, DataFrame] = {
     val dir = java.nio.file.Paths.get(s"${a.src}/openmeteo")
@@ -210,8 +196,22 @@ object PipelineApps {
       CsvSources.coordinates(spark, s"${a.src}/openmeteo/coords.csv"))
   }
 
+  /** One app main: `body` over `argv`'s [[Args]] in a fresh session, as one
+    * TaskGraph task with the reference's retry policy; its last failure rethrows.
+    */
   private[apps] def runApp(name: String, body: (SparkSession, Args) => Unit,
-                           argv: Array[String]): Unit = app(name)(body)(argv)
+                           argv: Array[String]): Unit = {
+    val (args, _) = parseArgs(argv)
+    val spark = Sessions.local(name)
+    try {
+      val results = TaskGraph.run(Seq(
+        Task("run", policy = RetryPolicy(retries = 2, delayMs = 1000))(
+          () => body(spark, args))))
+      results.values.collectFirst {
+        case TaskGraph.FailedAfterRetries(_, e) => throw e
+      }
+    } finally spark.stop()
+  }
 }
 
 // Top-level objects: nested objects get no static main forwarder, so

@@ -22,14 +22,12 @@ import org.apache.spark.sql.functions._
   * `OpenMeteoPipeline`'s) sort only WITHIN partitions, on the reference's
   * keys: no exchange is added, every written file holds its rows in key
   * order, and the clustering keeps parquet row groups run-length friendly.
-  * The apps' sources arrive in one partition (`EnvelopeJson.parsePages`),
-  * so there each aggregate plans no exchange either, and each table lands
-  * ONE file per run date, fully ordered by its keys: pagination is
-  * sequential, so the pages are already on the driver and one partition is
-  * bounded by what the driver fetched. A caller that passes a partitioned
-  * frame keeps its parallelism: one hash exchange per aggregate, each file
-  * still in key order. A reader that needs a total order across files says
-  * so with its own `orderBy`.
+  * The apps' sources are the pages' rows, decoded on the driver into one
+  * partition (`EnvelopeJson.parsePages`), so each aggregate plans no
+  * exchange either and each table lands ONE file per run date, in key
+  * order. A partitioned input keeps its parallelism: one hash exchange per
+  * aggregate, each file still in key order. A reader that needs a total
+  * order across files says so with its own `orderBy`.
   */
 object Eia930Pipeline {
 

@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   * sorts (O3, :79 and :105) order rows for a heap table that keeps no
   * order, and a global sort in front of a parquet partition write is a
   * range exchange that buys nothing (the `Eia930Pipeline` docs make the
-  * full argument). `OpenMeteoSource.parseResponses` returns one partition,
-  * so the apps' sink frames plan no exchange and each table lands one file
-  * per run date, fully ordered by its keys.
+  * full argument). `OpenMeteoSource.parseResponses` decodes the responses
+  * on the driver into one partition, so the apps' sink frames plan no
+  * exchange and each table lands one file per run date, in key order.
   */
 object OpenMeteoPipeline {
 

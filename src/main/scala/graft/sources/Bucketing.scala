@@ -100,19 +100,23 @@ object Bucketing {
     if (meta.tableType ==
         org.apache.spark.sql.catalyst.catalog.CatalogTableType.MANAGED) {
       val loc = meta.location
-      if (loc.getScheme == null || loc.getScheme == "file") {
-        val p = java.nio.file.Paths.get(loc.getPath, s"$partCol=$partValue")
-        if (java.nio.file.Files.exists(p)) {
-          val walk = java.nio.file.Files.walk(p)
-          try {
-            import scala.jdk.CollectionConverters._
-            walk.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.delete)
-          } finally walk.close()
-        }
-      }
+      if (loc.getScheme == null || loc.getScheme == "file")
+        sweep(java.nio.file.Paths.get(loc.getPath, s"$partCol=$partValue"))
     }
   }
+
+  /** Delete the local directory `p` and everything under it, if it exists:
+    * the file sweep of [[dropPartitionWithSweep]] and [[ensureCleanTable]].
+    * Their callers decide which locations may be swept.
+    */
+  private def sweep(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      val walk = java.nio.file.Files.walk(p)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
+      } finally walk.close()
+    }
 
   /** Idempotently (re)write ONE partition of a [[writeBucketedPartitionedBy]]
     * table: DROP PARTITION (which deletes a managed table's partition files)
@@ -181,18 +185,9 @@ object Bucketing {
     (resolved.toSeq :+ default).distinct.foreach { uri =>
       // only file-scheme (or scheme-less local) locations can be swept here;
       // remote warehouses are out of local reach and DROP TABLE handled them
-      if (uri.getScheme == null || uri.getScheme == "file") {
-        val p = java.nio.file.Paths.get(
-          Option(uri.getPath).filter(_.nonEmpty).getOrElse(uri.toString))
-        if (java.nio.file.Files.exists(p)) {
-          val walk = java.nio.file.Files.walk(p)
-          try {
-            import scala.jdk.CollectionConverters._
-            walk.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.delete)
-          } finally walk.close()
-        }
-      }
+      if (uri.getScheme == null || uri.getScheme == "file")
+        sweep(java.nio.file.Paths.get(
+          Option(uri.getPath).filter(_.nonEmpty).getOrElse(uri.toString)))
     }
   }
 

@@ -1,26 +1,21 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** EIA v2 API envelope source (SURVEY.md S1-S4).
-  *
-  * The fetch loop is driver-side by design: pagination has sequential stop
-  * conditions (stop on empty page / on a period cutoff,
-  * EIA930PipelineHourlyData.py:71-93), so pages arrive as a Seq of JSON
-  * bodies. Parsing them is not distributed either: the pages become a
-  * `LocalRelation`, and Spark's `ConvertToLocalRelation` rule evaluates the
-  * `from_json` projection on the driver while it optimizes each action
-  * (PLANS.md shows `LocalTableScan [_extract_data#1]`); only the `explode`
-  * and what follows run as tasks. A run date's pages are dozens at 5,000
-  * rows/page, all of them already held by the driver, so [[parsePages]]
-  * returns ONE partition: its size is bounded by what the driver fetched,
-  * so splitting it would only add tasks. This object is the one decoder of
-  * the envelope (`response.data` with its hyphenated row fields). The
-  * PageSource abstraction keeps HTTP out of the engine: prod wires an HTTP
-  * client, tests wire fixture files.
+/** EIA v2 API envelope source (SURVEY.md S1-S4), and the one decoder of the
+  * envelope (`response.data` with its hyphenated row fields). The fetch loop
+  * is driver-side by design: pagination has sequential stop conditions (stop
+  * on empty page / on a period cutoff, EIA930PipelineHourlyData.py:71-93).
+  * [[parsePages]] decodes the pages there too, with Jackson, into a
+  * `LocalTableScan` of typed rows, so no plan decodes JSON. The PageSource
+  * abstraction keeps HTTP out of the engine: prod wires an HTTP client,
+  * tests wire fixture files.
   */
 object EnvelopeJson {
 
@@ -37,13 +32,38 @@ object EnvelopeJson {
     }
   }
 
-  private val mapper = new ObjectMapper()
+  /** The sources' JSON reader: like Spark's, it takes single quotes and
+    * NaN / Infinity. A malformed body throws; an empty one reads as missing. */
+  private[sources] val mapper: JsonMapper = JsonMapper.builder()
+    .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES, JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
+    .build()
+
+  /** Driver-decoded rows as a frame in ONE partition. The rows are bounded
+    * by what the driver fetched, and `createDataFrame` would otherwise split
+    * them into min(#rows, cores) slices. Spark's `SinglePartition` satisfies
+    * every clustered distribution, so the aggregates, sorts and writes
+    * downstream plan no exchange. `coalesce`, not `repartition`: a narrow
+    * `Coalesce`, not a round-robin shuffle.
+    */
+  private[sources] def driverFrame(spark: SparkSession, rows: Seq[Row],
+                                   schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema).coalesce(1)
+
+  /** `n`'s elements through `read`; None (a NULL array, as Spark's JSON
+    * reader gives) if `n` is not an array or `read` rejects an element. */
+  private[sources] def elements[T](n: JsonNode)(read: JsonNode => Option[T]): Option[Seq[T]] =
+    Option.when(n.isArray)(n.elements.asScala.map(read).toVector)
+      .filter(_.forall(_.isDefined)).map(_.flatten)
+
+  /** A page's `response.data` node. */
+  private def data(body: String): JsonNode =
+    mapper.readTree(body).path("response").path("data")
 
   /** Driver-side peek used by the stop conditions (row count + last period). */
   private def pageStats(body: String): (Int, Option[String]) = {
-    val data = mapper.readTree(body).path("response").path("data")
-    val n = data.size()
-    val last = if (n > 0) Option(data.get(n - 1).path("period").asText(null)) else None
+    val rows = data(body)
+    val n = rows.size()
+    val last = if (n > 0) Option(rows.get(n - 1).path("period").asText(null)) else None
     (n, last)
   }
 
@@ -70,39 +90,29 @@ object EnvelopeJson {
     cycle(src, pageSize) { body => pageStats(body)._1 == 0 }
 
   private def cycle(src: PageSource, pageSize: Int)(stopAfter: String => Boolean): Seq[String] = {
-    val pages = Seq.newBuilder[String]
-    var offset = 0
-    var done = false
-    while (!done) {
-      src.fetch(offset) match {
-        case None => done = true
-        case Some(body) =>
-          pages += body
-          done = stopAfter(body)
-          offset += pageSize
-      }
+    @scala.annotation.tailrec
+    def from(offset: Int, pages: Vector[String]): Vector[String] = src.fetch(offset) match {
+      case Some(body) if !stopAfter(body) => from(offset + pageSize, pages :+ body)
+      case Some(body) => pages :+ body
+      case None => pages
     }
-    pages.result()
+    from(0, Vector.empty)
   }
 
-  /** Envelope parse: pages -> one DataFrame of string-typed rows, in one
-    * partition. Declared schema (no inference scan); backticked field
-    * access because the API uses hyphenated names.
-    *
-    * One partition because the rows are bounded by what the driver fetched
-    * and `createDataset` would otherwise split them into min(#pages, cores)
-    * slices. Spark's `SinglePartition` satisfies every clustered
-    * distribution, so the aggregates, sorts and writes downstream plan no
-    * exchange. `coalesce`, not `repartition`: a narrow `Coalesce`, not a
-    * round-robin shuffle.
+  /** Envelope parse: pages -> one frame of `row`-shaped rows, in page and
+    * row order, in one partition ([[driverFrame]]). Each field is read as
+    * Spark's JSON reader reads a STRING: a JSON string is its text, a
+    * missing field or `null` is NULL, any other value is its JSON text. A
+    * `data` array holding a non-object adds no rows, as in Spark's reader;
+    * a malformed page (a truncated one, say) throws.
     */
   def parsePages(spark: SparkSession, pages: Seq[String], row: StructType): DataFrame = {
-    import spark.implicits._
-    val ds = spark.createDataset(pages)
-    ds.toDF("body")
-      .select(from_json(col("body"), Schemas.envelope(row)).as("env"))
-      .select(explode(col("env.response.data")).as("r"))
-      .select(row.fieldNames.map(f => col(s"r.`$f`").as(f)).toIndexedSeq: _*)
-      .coalesce(1)
+    def text(n: JsonNode) =
+      if (n.isMissingNode || n.isNull) null else if (n.isTextual) n.textValue else n.toString
+    val rows = pages.flatMap { body =>
+      elements(data(body))(r => Option.when(r.isObject || r.isNull)(r)).getOrElse(Nil)
+        .map(r => Row.fromSeq(row.fieldNames.toSeq.map(f => text(r.path(f)))))
+    }
+    driverFrame(spark, rows, row)
   }
 }

@@ -26,9 +26,9 @@ import java.time.Duration
   * in `EnvelopeJson.cycle` decide when to stop asking.
   *
   * Driver-side by design: pagination is sequential, so the pages are on the
-  * driver before any parse, and `EnvelopeJson.parsePages` turns them into
-  * one partition bounded by what was fetched. The `sleeper` hook exists so
-  * tests assert backoff timing without sleeping.
+  * driver before any parse, and `EnvelopeJson.parsePages` decodes them
+  * there. The `sleeper` hook exists so tests assert backoff timing without
+  * sleeping.
   */
 final class HttpPages(
     baseUrl: String,

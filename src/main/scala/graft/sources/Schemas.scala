@@ -72,23 +72,6 @@ object Schemas {
     "ash-content-units", "heat-content-units", "price-units",
     "quantity-units", "sulfur-content-units").map(s))
 
-  /** EIA v2 JSON envelope around any row schema (FIXTURES.md §A1). */
-  def envelope(row: StructType): StructType = StructType(Seq(
-    StructField("response", StructType(Seq(
-      StructField("data", ArrayType(row)),
-      StructField("total", StringType)))),
-    StructField("request", StructType(Seq(
-      StructField("params", MapType(StringType, StringType)))))))
-
-  /** Open-Meteo hourly archive response (JSON form; FIXTURES.md §A3). */
-  val openMeteoResponse: StructType = StructType(Seq(
-    StructField("latitude", DoubleType),
-    StructField("longitude", DoubleType),
-    StructField("utc_offset_seconds", LongType),
-    StructField("hourly", StructType(
-      StructField("time", ArrayType(LongType)) +:
-        weatherVariables.map(v => StructField(v, ArrayType(DoubleType)))))))
-
   // ---- the 13 sink schemas ------------------------------------------------
 
   private val weatherCols = weatherVariables.map(f)
