@@ -410,7 +410,7 @@ object ApproxOps {
 
   /** Count-min frequency estimates for every distinct item, with the exact
     * count and the sketch's one-sided guarantee as oracle anchors. The
-    * sketch is the native [[graft.plans.CountMinSketch]] aggregate — a
+    * sketch is the native [[graft.plans.CountMin]] aggregate — a
     * d x w counter matrix whose cells are pure order-insensitive sums, so
     * unlike HLL/percentile summaries the whole estimate is bit-deterministic
     * and the oracle hash-checks the NUMBERS, not just a contract boolean.

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Heavy-hitters surface over the native Misra-Gries aggregate
-  * (graft.plans.MisraGriesSketch — a `TypedImperativeAggregate` with a
-  * mutable bounded buffer; see its Scaladoc for the guarantee and the
+  * (graft.plans.MisraGries — a sketch with a mutable bounded buffer, run
+  * by `plans.SketchCall`; see its Scaladoc for the guarantee and the
   * at-scale shape).
   */
 object HeavyHitters {

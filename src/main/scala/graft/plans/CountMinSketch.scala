@@ -1,19 +1,14 @@
 package graft.plans
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.io.{DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Count-min sketch as a `TypedImperativeAggregate` over a flat d x w long
-  * counter matrix — the mergeable frequency sketch complementing
-  * [[MisraGriesSketch]]: MG bounds UNDERcounts and keeps only candidates,
+/** Count-min sketch behind `graft_count_min` ([[SketchCall]]) over a flat
+  * d x w long counter matrix — the mergeable frequency sketch complementing
+  * [[MisraGries]]: MG bounds UNDERcounts and keeps only candidates,
   * CMS answers a point estimate for EVERY item and only ever OVERcounts
   * (est >= true always; est <= true + 2n/w per row with prob 1 - (2/w)^d
   * over the hash choice — here the hashes are fixed md5 slices, so the
@@ -33,102 +28,39 @@ import org.apache.spark.unsafe.types.UTF8String
   * aggregation keeps one matrix per partition and merges by elementwise
   * addition — no per-key shuffle ever, the heavy-hitters posture at 100 TB.
   */
-case class CountMinSketch(
-    child: Expression,
-    w: Int,
-    d: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]]
-  with UnaryLike[Expression] {
+case class CountMin(w: Int, d: Int) extends Sketch[Array[Long]] {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a string column, got ${child.dataType.simpleString}")
-    else if (w < 2 || w > 65536)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName requires w in [2, 65536], got $w")
-    else if (d < 1 || d > 3)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires d in [1, 3] (disjoint 16-bit slices of one 48-bit md5), got $d")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def prettyName: String = "graft_count_min"
-  override def dataType: DataType =
+  def dataType: DataType =
     ArrayType(ArrayType(LongType, containsNull = false), containsNull = false)
-  override def nullable: Boolean = false
+  def empty: Array[Long] = new Array[Long](d * w)
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](d * w)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val h = Md5PrefixLong.prefix(v.asInstanceOf[UTF8String].getBytes, 6)
-      var j = 0
-      while (j < d) {
-        buf(j * w + (((h >>> (16 * j)) & 0xffffL) % w).toInt) += 1L
-        j += 1
-      }
+  def add(buf: Array[Long], v: Any): Array[Long] = {
+    val h = Md5PrefixLong.prefix(v.asInstanceOf[UTF8String].getBytes, 6)
+    var j = 0
+    while (j < d) {
+      buf(j * w + (((h >>> (16 * j)) & 0xffffL) % w).toInt) += 1L
+      j += 1
     }
     buf
   }
 
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
+  def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
     var i = 0
     while (i < buf.length) { buf(i) += other(i); i += 1 }
     buf
   }
 
-  override def eval(buf: Array[Long]): Any = {
-    val rows = new Array[Any](d)
-    var j = 0
-    while (j < d) {
-      val row = new Array[Any](w)
-      var i = 0
-      while (i < w) { row(i) = buf(j * w + i); i += 1 }
-      rows(j) = new GenericArrayData(row)
-      j += 1
-    }
-    new GenericArrayData(rows)
-  }
+  def result(buf: Array[Long]): Any = new GenericArrayData(
+    Array.tabulate[Any](d)(j => new GenericArrayData(buf.slice(j * w, (j + 1) * w))))
 
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
+  def write(buf: Array[Long], out: DataOutputStream): Unit = {
     out.writeInt(buf.length)
-    var i = 0
-    while (i < buf.length) { out.writeLong(buf(i)); i += 1 }
-    out.flush()
-    bos.toByteArray
+    buf.foreach(out.writeLong(_))
   }
 
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = new Array[Long](n)
-    var i = 0
-    while (i < n) { buf(i) = in.readLong(); i += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CountMinSketch =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CountMinSketch =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): CountMinSketch =
-    copy(child = newChild)
+  def read(in: DataInputStream): Array[Long] = Array.fill(in.readInt())(in.readLong())
 }
 
-object CountMinSketch {
+object CountMin {
   val Name = "graft_count_min"
-
-  /** Builder for FunctionRegistry: (column, w literal, d literal). */
-  def fromChildren(children: Seq[Expression]): CountMinSketch = {
-    (children(1), children(2)) match {
-      case (Literal(w: Int, IntegerType), Literal(d: Int, IntegerType)) =>
-        CountMinSketch(children.head, w, d)
-      case other => throw new IllegalArgumentException(
-        s"$Name: (w, d) must be integer literals, got $other")
-    }
-  }
 }

@@ -1,8 +1,13 @@
 package graft.plans
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
@@ -42,6 +47,66 @@ case class KernelCall(name: String, override val dataType: DataType,
       newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
 }
 
+/** A per-group sketch behind one `graft_*` aggregate: a case class over
+  * its plan-time parameters (so two builds of the same call are equal and
+  * a plan prints them), its result type and nullability, and its buffer's
+  * operations. `add` sees non-NULL inputs only; `write` and `read` carry a
+  * buffer across the partial/final aggregation boundary.
+  */
+trait Sketch[B] extends Product with Serializable {
+  def dataType: DataType
+  def nullable: Boolean = false
+  def empty: B
+  def add(buf: B, v: Any): B
+  def merge(buf: B, other: B): B
+  def result(buf: B): Any
+  def write(buf: B, out: DataOutputStream): Unit
+  def read(in: DataInputStream): B
+}
+
+/** A [[Sketch]] as one map-side-combinable aggregate: the aggregate-side
+  * twin of [[KernelCall]]. Analysis type-checks `child` against
+  * `inputType`; the call prints as `name(child)` in column names and as
+  * `name(child, params...)` in plans. A NULL input row is skipped.
+  */
+case class SketchCall[B](name: String, sketch: Sketch[B], inputType: DataType,
+                         child: Expression, mutableAggBufferOffset: Int = 0,
+                         inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[B] with UnaryLike[Expression]
+    with ExpectsInputTypes {
+
+  override def prettyName: String = name
+  override def stringArgs: Iterator[Any] = Iterator(child) ++ sketch.productIterator
+  override def inputTypes: Seq[DataType] = Seq(inputType)
+  override def dataType: DataType = sketch.dataType
+  override def nullable: Boolean = sketch.nullable
+
+  override def createAggregationBuffer(): B = sketch.empty
+  override def update(buf: B, input: InternalRow): B = {
+    val v = child.eval(input)
+    if (v == null) buf else sketch.add(buf, v)
+  }
+  override def merge(buf: B, other: B): B = sketch.merge(buf, other)
+  override def eval(buf: B): Any = sketch.result(buf)
+
+  override def serialize(buf: B): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream()
+    val out = new DataOutputStream(bytes)
+    sketch.write(buf, out)
+    out.flush()
+    bytes.toByteArray
+  }
+  override def deserialize(bytes: Array[Byte]): B =
+    sketch.read(new DataInputStream(new ByteArrayInputStream(bytes)))
+
+  override def withNewMutableAggBufferOffset(offset: Int): SketchCall[B] =
+    copy(mutableAggBufferOffset = offset)
+  override def withNewInputAggBufferOffset(offset: Int): SketchCall[B] =
+    copy(inputAggBufferOffset = offset)
+  override protected def withNewChildInternal(newChild: Expression): SketchCall[B] =
+    copy(child = newChild)
+}
+
 /** A matcher, trie or model a kernel row builds from its call's literal
   * arguments, handed to the kernel as one hidden object literal. It is a
   * case class over those literal inputs, so two builds of the same call
@@ -63,9 +128,11 @@ trait Matcher extends Product with Serializable
   * rows are kernels. A kernel that needs a matcher, trie or model (Aho-
   * Corasick, BPE, unigram, subword, word sets) declares its literal
   * arguments `Hidden` and builds a [[Matcher]] from them in `more`; the
-  * matcher reaches its entry point as a hidden argument. Only the four
-  * TypedImperativeAggregate sketches keep their own expression classes,
-  * because an aggregation buffer is not a static call.
+  * matcher reaches its entry point as a hidden argument. The other four
+  * rows are per-group sketches (KMV, count-min, Misra-Gries, vector sum):
+  * a [[Sketch]] plus one [[sketch]] row with the same argument spec, whose
+  * builder returns a [[SketchCall]], because an aggregation buffer is not
+  * a static call.
   */
 object GraftFunctions {
   val DotLongName = "graft_dot_long"
@@ -98,6 +165,23 @@ object GraftFunctions {
                                   shown: Boolean = true) extends Arg
   private case object Hidden extends Arg
 
+  /** A call's arguments checked against a row's `args`: the shown children,
+    * each with the type analysis checks it against, and the values of the
+    * literal ints that are not shown. Every literal int is range-checked.
+    */
+  private def bind(name: String, args: Seq[(String, Arg)],
+                   children: Seq[Expression]): (Seq[(DataType, Expression)], Seq[Int]) = {
+    val typed = args.zip(children)
+    val lits = typed.collect { case ((what, IntLit(lo, hi, isShown)), e) =>
+      isShown -> Builders.litInt(name, what, e, lo, hi) }
+    val shown = typed.collect {
+      case ((_, Col(ts @ _*)), e) =>
+        (ts.find(sameElements(_, e.dataType)).getOrElse(ts.head), e)
+      case ((_, IntLit(_, _, true)), e) => (IntegerType, e)
+    }
+    (shown, lits.collect { case (false, v) => v })
+  }
+
   /** A [[KernelCall]] row; `more` derives further constants (a matcher,
     * cross-argument literal checks) from all the call's arguments. The
     * analyzer calls a builder only once its arguments are resolved, so a
@@ -108,16 +192,19 @@ object GraftFunctions {
                      more: Seq[Expression] => Seq[Any] = _ => Nil)
                     (args: (String, Arg)*): Fn =
     Fn(name, classOf[KernelCall], args.map(_._1), children => {
-      val typed = args.zip(children)
-      val lits = typed.collect { case ((what, IntLit(lo, hi, isShown)), e) =>
-        isShown -> Builders.litInt(name, what, e, lo, hi) }
-      val shown = typed.collect {
-        case ((_, Col(ts @ _*)), e) =>
-          (ts.find(sameElements(_, e.dataType)).getOrElse(ts.head), e)
-        case ((_, IntLit(_, _, true)), e) => (IntegerType, e)
-      }
+      val (shown, consts) = bind(name, args, children)
       KernelCall(name, out, shown.map(_._1), shown.map(_._2),
-        lits.collect { case (false, v) => v } ++ more(children), returnsNull)
+        consts ++ more(children), returnsNull)
+    })
+
+  /** A [[SketchCall]] row: one shown column, and `make` builds the sketch
+    * from the values of its literal int arguments (declared not shown).
+    */
+  private def sketch(name: String, make: Seq[Int] => Sketch[_])
+                    (args: (String, Arg)*): Fn =
+    Fn(name, classOf[SketchCall[_]], args.map(_._1), children => {
+      val (Seq((inputType, child)), params) = bind(name, args, children)
+      SketchCall(name, make(params), inputType, child)
     })
 
   private val Str = Col(StringType)
@@ -140,14 +227,13 @@ object GraftFunctions {
   }
 
   val all: Seq[Fn] = Seq(
-    Fn(MisraGriesName, classOf[MisraGriesSketch], Seq("column", "k"),
-      MisraGriesSketch.fromChildren),
-    Fn(KmvSketch.Name, classOf[KmvSketch], Seq("column", "k"),
-      KmvSketch.fromChildren),
-    Fn(CountMinSketch.Name, classOf[CountMinSketch], Seq("column", "w", "d"),
-      CountMinSketch.fromChildren),
-    Fn(VectorSumLong.Name, classOf[VectorSumLong], Seq("vec"),
-      c => VectorSumLong(c(0))),
+    sketch(MisraGriesName, p => MisraGries(p(0)))(
+      "column" -> Str, "k" -> IntLit(1, shown = false)),
+    sketch(Kmv.Name, p => Kmv(p(0)))(
+      "column" -> Col(LongType), "k" -> IntLit(2, shown = false)),
+    sketch(CountMin.Name, p => CountMin(p(0), p(1)))("column" -> Str,
+      "w" -> IntLit(2, 65536, shown = false), "d" -> IntLit(1, 3, shown = false)),
+    sketch(VectorSumLong.Name, _ => VectorSumLong)("vec" -> Longs),
 
     kernel(DotLongName, LongType)("vec_a" -> Longs, "vec_b" -> Longs),
     kernel(LshBucketsName, LongArray)(
@@ -295,13 +381,13 @@ object GraftFunctions {
     * ascending array of the k smallest distinct hashes.
     */
   def kmvSketch(hashed: Column, k: Int): Column =
-    call(KmvSketch.Name, hashed, lit(k))
+    call(Kmv.Name, hashed, lit(k))
 
   /** Count-min sketch aggregate: the full d x w counter matrix as
     * array<array<bigint>> — order-insensitive sums, so bit-deterministic.
     */
   def countMin(c: Column, w: Int, d: Int): Column =
-    call(CountMinSketch.Name, c, lit(w), lit(d))
+    call(CountMin.Name, c, lit(w), lit(d))
 
   /** Per-table LSH sign-bucket ids (array<long>, one per table); `planes` is
     * the flat nTables x nPlanes x dim plane concatenation (a literal).

@@ -1,18 +1,13 @@
 package graft.plans
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.io.{DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** KMV (bottom-k) distinct sketch as a `TypedImperativeAggregate`: maintains
-  * the k SMALLEST distinct values of an already-hashed long column in ONE
-  * map-side-combinable aggregate — the single-pass form of
+/** KMV (bottom-k) distinct sketch behind `graft_kmv` ([[SketchCall]]):
+  * maintains the k SMALLEST distinct values of an already-hashed long column
+  * in ONE map-side-combinable aggregate — the single-pass form of
   * `ApproxOps.kmvDistinctByKey`'s distinct + rank-window plan, and the form
   * a streaming query can hold per window in the state store (bottom-k
   * buffers merge by insertion, exactly what partial aggregation and
@@ -31,93 +26,40 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * is what lets the ax5 oracle hash-check the aggregate against the same
   * SQL as the window-based plan.
   */
-case class KmvSketch(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.TreeSet[Long]]
-  with UnaryLike[Expression] {
+case class Kmv(k: Int) extends Sketch[java.util.TreeSet[Long]] {
+  type Buf = java.util.TreeSet[Long]
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != LongType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an already-hashed long column, got ${child.dataType.simpleString}")
-    else if (k <= 1) TypeCheckResult.TypeCheckFailure(s"$prettyName requires k > 1")
-    else TypeCheckResult.TypeCheckSuccess
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
+  def empty: Buf = new java.util.TreeSet[Long]()
 
-  override def prettyName: String = "graft_kmv"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): java.util.TreeSet[Long] =
-    new java.util.TreeSet[Long]()
-
-  private def add(buf: java.util.TreeSet[Long], h: Long): Unit =
-    if (buf.size < k) { buf.add(h); () }
-    else if (h < buf.last && !buf.contains(h)) {
-      buf.pollLast(); buf.add(h); ()
-    }
-
-  override def update(buf: java.util.TreeSet[Long],
-                      input: InternalRow): java.util.TreeSet[Long] = {
-    val v = child.eval(input)
-    if (v != null) add(buf, v.asInstanceOf[Long])
+  def add(buf: Buf, v: Any): Buf = {
+    val h = v.asInstanceOf[Long]
+    if (buf.size < k) buf.add(h)
+    else if (h < buf.last && !buf.contains(h)) { buf.pollLast(); buf.add(h) }
     buf
   }
 
-  override def merge(buf: java.util.TreeSet[Long],
-                     other: java.util.TreeSet[Long]): java.util.TreeSet[Long] = {
+  def merge(buf: Buf, other: Buf): Buf = {
     val it = other.iterator()
     while (it.hasNext) add(buf, it.next())
     buf
   }
 
-  override def eval(buf: java.util.TreeSet[Long]): Any = {
-    val out = new Array[Any](buf.size)
-    val it = buf.iterator()
-    var i = 0
-    while (it.hasNext) { out(i) = it.next(); i += 1 }
-    new GenericArrayData(out)
-  }
+  def result(buf: Buf): Any = new GenericArrayData(buf.toArray)
 
-  override def serialize(buf: java.util.TreeSet[Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
+  def write(buf: Buf, out: DataOutputStream): Unit = {
     out.writeInt(buf.size)
     val it = buf.iterator()
     while (it.hasNext) out.writeLong(it.next())
-    out.flush()
-    bos.toByteArray
   }
 
-  override def deserialize(bytes: Array[Byte]): java.util.TreeSet[Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = new java.util.TreeSet[Long]()
-    var i = 0
-    while (i < n) { buf.add(in.readLong()); i += 1 }
+  def read(in: DataInputStream): Buf = {
+    val buf = empty
+    (0 until in.readInt()).foreach(_ => buf.add(in.readLong()))
     buf
   }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KmvSketch =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KmvSketch =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): KmvSketch =
-    copy(child = newChild)
 }
 
-object KmvSketch {
+object Kmv {
   val Name = "graft_kmv"
-
-  /** Builder for FunctionRegistry: (hashed long column, k literal). */
-  def fromChildren(children: Seq[Expression]): KmvSketch = {
-    val k = children(1) match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_kmv: k must be an integer literal, got $other")
-    }
-    KmvSketch(children.head, k)
-  }
 }

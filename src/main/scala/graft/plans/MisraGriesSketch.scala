@@ -1,20 +1,16 @@
 package graft.plans
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.io.{DataInputStream, DataOutputStream}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, MapType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Misra-Gries heavy-hitters sketch as a `TypedImperativeAggregate` over a
-  * MUTABLE open-hash buffer (SURVEY.md §2g "north-star" sketches).
+/** Misra-Gries heavy-hitters sketch behind `graft_misra_gries`
+  * ([[SketchCall]]) over a MUTABLE open-hash buffer (SURVEY.md §2g
+  * "north-star" sketches).
   *
   * Guarantee: any item with true frequency > n/(k+1) is IN the candidate
   * set; reported counts undercount by at most n/(k+1). The buffer is a
@@ -34,29 +30,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * sketch semantics; callers re-count candidates exactly when exact
   * frequencies matter (HeavyHitters.topTerms).
   */
-case class MisraGriesSketch(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[UTF8String, Long]]
-  with UnaryLike[Expression] {
+case class MisraGries(k: Int) extends Sketch[mutable.HashMap[UTF8String, Long]] {
+  type Buf = mutable.HashMap[UTF8String, Long]
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a string column, got ${child.dataType.simpleString}")
-    else if (k <= 0) TypeCheckResult.TypeCheckFailure(s"$prettyName requires k > 0")
-    else TypeCheckResult.TypeCheckSuccess
+  def dataType: DataType = MapType(StringType, LongType, valueContainsNull = false)
+  def empty: Buf = mutable.HashMap.empty
 
-  override def prettyName: String = "graft_misra_gries"
-  override def dataType: DataType = MapType(StringType, LongType, valueContainsNull = false)
-  override def nullable: Boolean = false
+  def add(buf: Buf, v: Any): Buf = { count(buf, v.asInstanceOf[UTF8String], 1L); buf }
 
-  override def createAggregationBuffer(): mutable.HashMap[UTF8String, Long] =
-    mutable.HashMap.empty
-
-  private def add(buf: mutable.HashMap[UTF8String, Long], item: UTF8String, cnt: Long): Unit =
+  private def count(buf: Buf, item: UTF8String, cnt: Long): Unit =
     buf.get(item) match {
       case Some(c) => buf.update(item, c + cnt) // existing key object is retained
       case None if buf.size < k => buf.update(item.clone(), cnt)
@@ -69,30 +51,17 @@ case class MisraGriesSketch(
         if (rest > 0 && buf.size < k) buf.update(item.clone(), rest)
     }
 
-  override def update(buf: mutable.HashMap[UTF8String, Long],
-                      input: InternalRow): mutable.HashMap[UTF8String, Long] = {
-    val v = child.eval(input)
-    if (v != null) add(buf, v.asInstanceOf[UTF8String], 1L)
+  def merge(buf: Buf, other: Buf): Buf = {
+    other.foreach { case (item, cnt) => count(buf, item, cnt) }
     buf
   }
 
-  override def merge(buf: mutable.HashMap[UTF8String, Long],
-                     other: mutable.HashMap[UTF8String, Long]): mutable.HashMap[UTF8String, Long] = {
-    other.foreach { case (item, cnt) => add(buf, item, cnt) }
-    buf
+  def result(buf: Buf): Any = {
+    val (items, counts) = buf.toSeq.unzip
+    new ArrayBasedMapData(new GenericArrayData(items), new GenericArrayData(counts))
   }
 
-  override def eval(buf: mutable.HashMap[UTF8String, Long]): Any = {
-    val ks = new Array[Any](buf.size)
-    val vs = new Array[Any](buf.size)
-    var i = 0
-    buf.foreach { case (item, cnt) => ks(i) = item; vs(i) = cnt; i += 1 }
-    new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(vs))
-  }
-
-  override def serialize(buf: mutable.HashMap[UTF8String, Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
+  def write(buf: Buf, out: DataOutputStream): Unit = {
     out.writeInt(buf.size)
     buf.foreach { case (item, cnt) =>
       val bytes = item.getBytes
@@ -100,41 +69,15 @@ case class MisraGriesSketch(
       out.write(bytes)
       out.writeLong(cnt)
     }
-    out.flush()
-    bos.toByteArray
   }
 
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[UTF8String, Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = mutable.HashMap.empty[UTF8String, Long]
-    var i = 0
-    while (i < n) {
-      val len = in.readInt()
-      val b = new Array[Byte](len)
-      in.readFully(b)
-      buf.update(UTF8String.fromBytes(b), in.readLong())
-      i += 1
+  def read(in: DataInputStream): Buf = {
+    val buf = empty
+    (0 until in.readInt()).foreach { _ =>
+      val bytes = new Array[Byte](in.readInt())
+      in.readFully(bytes)
+      buf.update(UTF8String.fromBytes(bytes), in.readLong())
     }
     buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): MisraGriesSketch =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): MisraGriesSketch =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): MisraGriesSketch =
-    copy(child = newChild)
-}
-
-object MisraGriesSketch {
-  /** Builder for FunctionRegistry: (column, k literal). */
-  def fromChildren(children: Seq[Expression]): MisraGriesSketch = {
-    val k = children(1) match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_misra_gries: k must be an integer literal, got $other")
-    }
-    MisraGriesSketch(children.head, k)
   }
 }

@@ -102,15 +102,19 @@ object EnvelopeJson {
   /** Envelope parse: pages -> one frame of `row`-shaped rows, in page and
     * row order, in one partition ([[driverFrame]]). Each field is read as
     * Spark's JSON reader reads a STRING: a JSON string is its text, a
-    * missing field or `null` is NULL, any other value is its JSON text. A
-    * `data` array holding a non-object adds no rows, as in Spark's reader;
-    * a malformed page (a truncated one, say) throws.
+    * missing field or `null` is NULL, any other value is its JSON text; a
+    * `null` element of `data` is a row of NULLs. A malformed page (a
+    * truncated one, say) throws; so does a page whose `response.data` is
+    * missing, is not an array or holds an element that is neither an object
+    * nor `null`, with an error naming the page's index.
     */
   def parsePages(spark: SparkSession, pages: Seq[String], row: StructType): DataFrame = {
     def text(n: JsonNode) =
       if (n.isMissingNode || n.isNull) null else if (n.isTextual) n.textValue else n.toString
-    val rows = pages.flatMap { body =>
-      elements(data(body))(r => Option.when(r.isObject || r.isNull)(r)).getOrElse(Nil)
+    val rows = pages.zipWithIndex.flatMap { case (body, p) =>
+      elements(data(body))(r => Option.when(r.isObject || r.isNull)(r)).getOrElse(
+        throw new IllegalArgumentException(
+          s"EIA page $p: `response.data` is not an array of objects"))
         .map(r => Row.fromSeq(row.fieldNames.toSeq.map(f => text(r.path(f)))))
     }
     driverFrame(spark, rows, row)

@@ -32,15 +32,19 @@ object OpenMeteoSource {
     * longitude, 30 weather-variable doubles) in one partition
     * (`EnvelopeJson.driverFrame`): one row per position of a response's
     * `time` array, whose hour starts are the reference's end-exclusive
-    * date_range (OpenMeteoWeatherPipelineHourlyData.py:67-70). As in
-    * Spark's JSON reader, a value that does not read makes its whole array
-    * NULL, so a response with no readable `time` adds no rows. A variable
-    * array shorter than `time`, and a malformed body, throw.
+    * date_range (OpenMeteoWeatherPipelineHourlyData.py:67-70); a `null`
+    * time is a NULL date. As in Spark's JSON reader, a variable value that
+    * does not read makes its whole array NULL. A malformed body throws; so
+    * do a `time` that is missing, is not an array or holds a non-integer,
+    * and a variable array shorter than `time`, with an error naming the
+    * response's index.
     */
   def parseResponses(spark: SparkSession, bodies: Seq[String]): DataFrame = {
     val rows = bodies.zipWithIndex.flatMap { case (body, b) =>
       val r = EnvelopeJson.mapper.readTree(body)
-      val time = EnvelopeJson.elements(r.path("hourly").path("time"))(long).getOrElse(Nil)
+      val time = EnvelopeJson.elements(r.path("hourly").path("time"))(long).getOrElse(
+        throw new IllegalArgumentException(
+          s"Open-Meteo response $b: `hourly.time` is not an array of integers"))
       val columns = Schemas.weatherVariables.map { v =>
         val xs = EnvelopeJson.elements(r.path("hourly").path(v))(double)
         require(xs.forall(_.size >= time.size),

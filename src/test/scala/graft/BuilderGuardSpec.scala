@@ -64,8 +64,8 @@ class BuilderGuardSpec extends SparkSpec {
       "SELECT graft_winnow_long('x', CAST(NULL AS int), 4)",
     CdcBoundariesLong.Name ->
       "SELECT graft_cdc_boundaries('x', CAST(NULL AS int), 7)",
-    KmvSketch.Name -> "SELECT graft_kmv(1L, CAST(NULL AS int))",
-    CountMinSketch.Name ->
+    Kmv.Name -> "SELECT graft_kmv(1L, CAST(NULL AS int))",
+    CountMin.Name ->
       "SELECT graft_count_min(1L, CAST(NULL AS int), 3)",
     GraftFunctions.MisraGriesName ->
       "SELECT graft_misra_gries(1L, CAST(NULL AS int))",
@@ -97,6 +97,22 @@ class BuilderGuardSpec extends SparkSpec {
     assertNamedError(WordWindowsLong.Name, "SELECT graft_word_windows('x', 9)")
     assertNamedError(PqLutLong.Name,
       "SELECT graft_pq_lut(array(1L), array(array(array(1L))), 3, 2)")
+    assertNamedError(Kmv.Name, "SELECT graft_kmv(id, 1) FROM range(3)")
+    assertNamedError(GraftFunctions.MisraGriesName,
+      "SELECT graft_misra_gries(x, 0) FROM VALUES ('a') t(x)")
+    assertNamedError(CountMin.Name,
+      "SELECT graft_count_min(x, 1, 2) FROM VALUES ('a') t(x)")
+    assertNamedError(CountMin.Name,
+      "SELECT graft_count_min(x, 8, 4) FROM VALUES ('a') t(x)")
+  }
+
+  test("sketch rows accept constant int expressions, as kernel rows do") {
+    val row = spark.sql("SELECT graft_kmv(id, 4 * 2), " +
+      "graft_count_min(x, 4 * 2, 1 + 1), graft_misra_gries(x, 2 + 2) " +
+      "FROM (SELECT id, CAST(id % 3 AS string) AS x FROM range(20))").collect()(0)
+    assert(row.getSeq[Long](0) == (0L until 8L))
+    assert(row.getSeq[scala.collection.Seq[Long]](1).map(_.sum) == Seq(20L, 20L))
+    assert(row.getMap[String, Long](2) == Map("0" -> 7L, "1" -> 7L, "2" -> 6L))
   }
 
   test("a kernel argument of the wrong type is a DATATYPE_MISMATCH naming it") {

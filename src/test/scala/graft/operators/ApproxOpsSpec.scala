@@ -112,6 +112,38 @@ class ApproxOpsSpec extends SparkSpec {
     assert(direct.forall(_.sum == 200L))
   }
 
+  test("sketches: 4 partitions merge through serialize to the 1-partition result") {
+    import graft.plans.{GraftFunctions, VectorSumLong}
+    // group 0 holds one heavy item; every item is also hashed for KMV
+    val rows = (0 until 400).map { i =>
+      val item = if (i % 4 == 0) "hot" else s"w${i % 53}"
+      (i % 2, item, (i * 7919L) % 1000L, Seq(i.toLong, 1L))
+    }
+    val (k, n) = (4, 200)
+    def run(partitions: Int) = rows.toDF("g", "item", "h", "vec")
+      .repartition(partitions).groupBy("g").agg(
+        GraftFunctions.kmvSketch(col("h"), 16),
+        GraftFunctions.countMin(col("item"), 32, 3),
+        VectorSumLong.vectorSum(col("vec")),
+        GraftFunctions.misraGries(col("item"), k))
+      .orderBy("g").collect().toSeq
+    val (one, four) = (run(1), run(4))
+    assert(one.map(r => (r.getSeq[Long](1), r.getSeq[Seq[Long]](2), r.getSeq[Long](3))) ==
+      four.map(r => (r.getSeq[Long](1), r.getSeq[Seq[Long]](2), r.getSeq[Long](3))))
+    assert(one.map(_.getSeq[Long](3)) == Seq(Seq(39800L, 200L), Seq(40000L, 200L)))
+    // Misra-Gries candidates may differ by merge order; the contract may not:
+    // an item over n/(k+1) is kept, and a count undercounts by at most that
+    (one ++ four).foreach { r =>
+      val exact = rows.filter(_._1 == r.getInt(0)).groupBy(_._2).view.mapValues(_.size.toLong)
+      val mg = r.getMap[String, Long](4)
+      exact.foreach { case (item, c) =>
+        if (c > n / (k + 1)) assert(mg.contains(item), s"$item ($c) missing from $mg")
+        mg.get(item).foreach(est => assert(est <= c && est >= c - n / (k + 1), s"$item: $est vs $c"))
+      }
+    }
+    assert(one.head.getMap[String, Long](4).contains("hot"))
+  }
+
   test("KMV sample quantiles: exact when the key fits in the sample") {
     val df = (1 to 50).map(i => ("a", i.toLong, i.toLong * 10)).toDF("k", "id", "v")
     val r = ApproxOps.kmvQuantilesByKey(df, "k", "id", "v",

@@ -8,7 +8,9 @@ import org.apache.spark.sql.Row
   * and any other value is its JSON text. Open-Meteo values are doubles: a
   * `null` element is NULL and an integer widens; any other value makes its
   * whole array NULL, as Spark's `from_json` reads it. A malformed (truncated)
-  * body, and a variable array shorter than `time`, fail the parse.
+  * body, a page whose `response.data` is not an array of objects, a
+  * response whose `hourly.time` is not an array of integers, and a variable
+  * array shorter than `time` fail the parse, naming the page or response.
   */
 class DecodeContractSpec extends SparkSpec {
 
@@ -50,6 +52,19 @@ class DecodeContractSpec extends SparkSpec {
   test("eia: a truncated page fails the parse") {
     val whole = page("""{"period": "a"}""")
     intercept[Exception](fuel(whole, whole.dropRight(5)))
+  }
+
+  Seq(
+    "a missing `response.data`" -> """{"response": {"total": "0"}}""",
+    "a `response.data` that is not an array" ->
+      """{"response": {"data": {"period": "a"}}}""",
+    "a `response.data` element that is not an object" ->
+      page("\"x\"", """{"period": "a"}""")
+  ).foreach { case (what, bad) =>
+    test(s"eia: $what fails the parse, naming the page") {
+      val e = intercept[IllegalArgumentException](fuel(page(), bad))
+      assert(e.getMessage.contains("EIA page 1"), e.getMessage)
+    }
   }
 
   private val vars = Schemas.weatherVariables
@@ -104,6 +119,20 @@ class DecodeContractSpec extends SparkSpec {
       vars.map(_ -> "[1, 2]").toMap + ("snow_depth" -> "[1]"))
     val e = intercept[IllegalArgumentException](weather(body))
     assert(e.getMessage.contains("`snow_depth` has 1 values for 2 times"), e.getMessage)
+  }
+
+  Seq(
+    "a missing `hourly.time`" -> """{"latitude": 34, "hourly": {"rain": [1]}}""",
+    "an `hourly.time` that is not an array" ->
+      """{"latitude": 34, "hourly": {"time": 1754524800}}""",
+    "an `hourly.time` holding a non-integer" ->
+      """{"latitude": 34, "hourly": {"time": [1754524800, 1.5]}}"""
+  ).foreach { case (what, bad) =>
+    test(s"openmeteo: $what fails the parse, naming the response") {
+      val good = response("34", Seq(1754524800L), vars.map(_ -> "[1]").toMap)
+      val e = intercept[IllegalArgumentException](weather(good, bad))
+      assert(e.getMessage.contains("Open-Meteo response 1"), e.getMessage)
+    }
   }
 
   test("openmeteo: a truncated response fails the parse") {
